@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.storage.GenerationLog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.expressions.Window
@@ -1929,229 +1930,216 @@ object Similarity extends QueryModule {
       base: String, withResiduals: Boolean = true,
       k: Int = K_CENTROIDS, nprobe: Int = NPROBE,
       shortlist: Int = PQ_SHORTLIST): Unit = {
-    // A rebuild is a FRESH index: wipe all maintenance state first —
-    // the MANIFEST generation pointer, committed deltas/markers, and
-    // historical generation directories. Without this, rebuilding over
-    // a compacted index writes gen-0 tables a gen-N MANIFEST never
-    // references: readCodes keeps serving the stale generation and the
-    // next compaction's GC deletes the fresh rebuild as non-current.
-    locally {
-      val b = java.nio.file.Paths.get(base)
-      if (java.nio.file.Files.exists(b)) {
-        val stale = scala.util.Using.resource(java.nio.file.Files.list(b)) { s =>
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter { p =>
-            val n = p.getFileName.toString
-            n == "MANIFEST" || n == "MANIFEST.tmp" || n == "GEOMETRY" ||
-              n == "deltas" || n == "commits" || n.startsWith("codes-g") ||
-              n.startsWith("rcodes-g")
-          }.toList
+    // A rebuild is a FRESH index: the log wipes all maintenance state
+    // first. Without this, rebuilding over a compacted index writes
+    // gen-0 tables a gen-N pointer never references: readCodes keeps
+    // serving the stale generation and the next compaction's GC deletes
+    // the fresh rebuild as non-current.
+    GenerationLog.index(base).reset {
+      // GEOMETRY is the build-complete marker: absent until the new
+      // tables pass validation below.
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(base, "GEOMETRY"))
+      val en = normalizedFrom(raw).localCheckpoint()
+      // The training sample, sized to the cell count — a production
+      // deployment builds at ivfGeometry(n)'s (k, nprobe, shortlistAt),
+      // which persist in the GEOMETRY file below and become
+      // serveFromIndex's defaults; the gates build at the fixed
+      // documented constants so their oracles replay a constant.
+      val target = trainTargetFor(k)
+      val tst = tstrideDf(en, target)
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.Future
+      // Quantizer training (r21): under [[localTrainable]] the sample
+      // collects ONCE and all three quantizers (coarse IVF, plain-PQ,
+      // residual-PQ over the sample's own residuals — bit-identical to
+      // slicing the full residual frame, the r20 equivalence) train in
+      // local memory: the training block was ~4.9 s of 1-task job
+      // cascades at bench scale (JobProbe) and becomes one collect plus
+      // milliseconds of arithmetic (LocalTrainerSpec pins the trained
+      // tables bit-equal to the distributed loops). Past the guard the
+      // r20 concurrent-futures structure runs unchanged. Under-fill
+      // counters ride the local arrays (no extra count jobs) or the
+      // frames (distributed, post-settle).
+      val local = localTrainable(target, k)
+      var sampleRows = 0L
+      var trainedCent = -1L // distributed path fills these post-settle
+      var bookFill: Seq[(String, Int, Long)] = Nil
+      val (cent, booksF, rbooksOptF): (DataFrame, Future[DataFrame],
+          Option[Future[DataFrame]]) =
+        if (local) {
+          val sample = collectedSample(trainSliceOf(en, tst))
+          val centArr = localKmeansCent(sample, k, IVF_TRAIN_ITERS)
+          val booksArr =
+            localKmeansBooks(sample.map(s => (s._1, s._2)), PQ_TRAIN_ITERS)
+          val rbooksArr = if (!withResiduals) None else
+            Some(localKmeansBooks(localResiduals(sample, centArr),
+              PQ_TRAIN_ITERS))
+          sampleRows = sample.length.toLong
+          trainedCent = centArr.length.toLong
+          bookFill = (Seq("codebooks" -> booksArr) ++
+              rbooksArr.map("rcodebooks" -> _).toSeq)
+            .flatMap { case (t, arr) =>
+              arr.groupBy(_._2).toSeq.map { case (m, es) =>
+                (t, m, es.map(_._1).distinct.length.toLong) } }
+          (centFrame(spark, centArr),
+            Future.successful(booksFrame(spark, booksArr)),
+            rbooksArr.map(a => Future.successful(booksFrame(spark, a))))
+        } else {
+          // Concurrent job chains (guide §2.6 overlap — the r20
+          // restructure): plain-PQ training needs only tr, so it starts
+          // concurrent with the IVF k-means; residual-PQ training needs
+          // only (tr, cent) — the sample's residuals are derived from
+          // the sample itself (same vectors, same frozen centroids,
+          // same rounding — bit-identical to slicing the full-corpus
+          // residual frame). The sample is checkpointed: every k-means
+          // iteration of both quantizer families re-scans it.
+          val tr = trainSliceOf(en, tst).localCheckpoint()
+          val booksTrainF = Future {
+            val tsubs = subspaces(tr, "vec_id").localCheckpoint()
+            trainedPqBooks(tsubs, pqCodebooks(tr), PQ_TRAIN_ITERS)
+          }
+          val cent0 = trainedCodebook(tr, strideCodebook(tr, k),
+            IVF_TRAIN_ITERS).localCheckpoint() // feeds assignment + writes
+          val rbooksTrainF = if (!withResiduals) None else Some(Future {
+            val trCell = nearestCells(cent0)(tr, 1)
+              .select(col("vec_id"), col("cid").as("cell"))
+            val rtr = residualFrame(tr, cent0, trCell)
+              .select(col("vec_id"), col("v")).localCheckpoint()
+            val rtsubs = subspaces(rtr, "vec_id").localCheckpoint()
+            trainedPqBooks(rtsubs, pqCodebooks(rtr), PQ_TRAIN_ITERS)
+          })
+          sampleRows = tr.count()
+          (cent0, booksTrainF, rbooksTrainF)
         }
-        stale.foreach(graft.streaming.StreamingOps.deleteRecursively)
+      // The full-corpus subspace slices for the plain encode — needed in
+      // both paths, independent of training, so its checkpoint chain
+      // overlaps whatever else is in flight.
+      val subsF = Future { subspaces(en, "vec_id").localCheckpoint() }
+      // Checkpointed because BOTH code families consume it (the plain
+      // coded join and the residual subtraction) — uncheckpointed, each
+      // re-executes the O(n·K) assignment crossJoin.
+      val cellOf = nearestCells(cent)(en, 1)
+        .select(col("vec_id"), col("cid").as("cell"))
+        .localCheckpoint()
+      val centWriteF = Future {
+        cent.write.mode("overwrite").parquet(s"$base/centroids")
       }
-    }
-    val en = normalizedFrom(raw).localCheckpoint()
-    // The training sample, sized to the cell count — a production
-    // deployment builds at ivfGeometry(n)'s (k, nprobe, shortlistAt),
-    // which persist in the GEOMETRY file below and become
-    // serveFromIndex's defaults; the gates build at the fixed
-    // documented constants so their oracles replay a constant.
-    val target = trainTargetFor(k)
-    val tst = tstrideDf(en, target)
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.Future
-    // Quantizer training (r21): under [[localTrainable]] the sample
-    // collects ONCE and all three quantizers (coarse IVF, plain-PQ,
-    // residual-PQ over the sample's own residuals — bit-identical to
-    // slicing the full residual frame, the r20 equivalence) train on
-    // the driver: the training block was ~4.9 s of 1-task job
-    // cascades at bench scale (JobProbe) and becomes one collect plus
-    // milliseconds of arithmetic (LocalTrainerSpec pins the trained
-    // tables bit-equal to the distributed loops). Past the guard the
-    // r20 concurrent-futures structure runs unchanged. Under-fill
-    // counters ride the local arrays (no extra count jobs) or the
-    // frames (distributed, post-settle).
-    val local = localTrainable(target, k)
-    var sampleRows = 0L
-    var trainedCent = -1L // distributed path fills these post-settle
-    var bookFill: Seq[(String, Int, Long)] = Nil
-    val (cent, booksF, rbooksOptF): (DataFrame, Future[DataFrame],
-        Option[Future[DataFrame]]) =
-      if (local) {
-        val sample = collectedSample(trainSliceOf(en, tst))
-        val centArr = localKmeansCent(sample, k, IVF_TRAIN_ITERS)
-        val booksArr =
-          localKmeansBooks(sample.map(s => (s._1, s._2)), PQ_TRAIN_ITERS)
-        val rbooksArr = if (!withResiduals) None else
-          Some(localKmeansBooks(localResiduals(sample, centArr),
-            PQ_TRAIN_ITERS))
-        sampleRows = sample.length.toLong
-        trainedCent = centArr.length.toLong
-        bookFill = (Seq("codebooks" -> booksArr) ++
-            rbooksArr.map("rcodebooks" -> _).toSeq)
-          .flatMap { case (t, arr) =>
-            arr.groupBy(_._2).toSeq.map { case (m, es) =>
-              (t, m, es.map(_._1).distinct.length.toLong) } }
-        (centFrame(spark, centArr),
-          Future.successful(booksFrame(spark, booksArr)),
-          rbooksArr.map(a => Future.successful(booksFrame(spark, a))))
-      } else {
-        // Concurrent job chains (guide §2.6 overlap — the r20
-        // restructure): plain-PQ training needs only tr, so it starts
-        // concurrent with the IVF k-means; residual-PQ training needs
-        // only (tr, cent) — the sample's residuals are derived from
-        // the sample itself (same vectors, same frozen centroids,
-        // same rounding — bit-identical to slicing the full-corpus
-        // residual frame). The sample is checkpointed: every k-means
-        // iteration of both quantizer families re-scans it.
-        val tr = trainSliceOf(en, tst).localCheckpoint()
-        val booksTrainF = Future {
-          val tsubs = subspaces(tr, "vec_id").localCheckpoint()
-          trainedPqBooks(tsubs, pqCodebooks(tr), PQ_TRAIN_ITERS)
+      val booksWriteF = booksF.map { books =>
+        books.write.mode("overwrite").parquet(s"$base/codebooks")
+      }
+      val rbooksWriteF = rbooksOptF.map(_.map { rbooks =>
+        rbooks.write.mode("overwrite").parquet(s"$base/rcodebooks")
+      })
+      // Cluster by cell before the partitioned writes: without it every
+      // shuffle partition emits a sliver into every cell directory
+      // (partitions × cells small files); clustered, each cell directory
+      // holds one compact file — fewer files to commit here and to list
+      // and open on every serve-path read, and the layout a 100 TB
+      // inverted file wants (large sequential runs per cell).
+      val codesF = for { subs <- subsF; books <- booksF } yield {
+        pqAssignSubs(subs, books).join(cellOf, "vec_id")
+          .repartition(col("cell")).write.partitionBy("cell")
+          .mode("overwrite").parquet(s"$base/codes")
+      }
+      // Residual-PQ artifacts (the [[annIvfPqResidual]] refinement,
+      // train-once form): residual r = v − centroid(cell(v)) per vector,
+      // residual codes laid out as the same cell-partitioned inverted
+      // file. Storing both code families costs 2·M bytes/vector and
+      // removes per-query residual retraining entirely. `withResiduals =
+      // false` builds a plain-codes index for callers that never serve
+      // the residual form (the upsert gate's slice index). The residual
+      // frame needs only (en, cent, cellOf), so its checkpoint runs
+      // concurrent with residual-PQ training instead of behind it (r21).
+      val residCkptF = if (!withResiduals) None else Some(Future {
+        residualFrame(en, cent, cellOf).localCheckpoint()
+      })
+      val rcodesF = (rbooksOptF, residCkptF) match {
+        case (Some(rbF), Some(rF)) => Some(
+          for { rbooks <- rbF; resid <- rF } yield {
+            val rsubs = subspaces(resid.select(col("vec_id"), col("v")),
+              "vec_id")
+            pqAssignSubs(rsubs, rbooks)
+              .join(resid.select(col("vec_id"), col("cell")), "vec_id")
+              .repartition(col("cell")).write.partitionBy("cell")
+              .mode("overwrite").parquet(s"$base/rcodes")
+          })
+        case _ => None
+      }
+      // Every write chain settles before anything proceeds (awaitAll's
+      // no-write-in-flight guarantee — the concurrent-write correctness
+      // idiom all three maintenance surfaces share). Awaited BY NAME
+      // (r20 ADVICE): no positional indexing into a mixed sequence.
+      graft.streaming.StreamingOps.awaitAll(
+        Seq[Future[Any]](codesF, centWriteF, booksWriteF) ++
+          rbooksWriteF.toSeq ++ rcodesF.toSeq)
+      // Fail LOUDLY on an empty code table. Since the r20 exact-fill
+      // init over the rank-re-keyed training slice, an empty codes table
+      // can only mean an empty input corpus — but a silent zero-row
+      // write would still serve nothing and break every later read with
+      // an unhelpful schema-inference error, so the tripwire stays. A
+      // cell-partitioned write of zero rows leaves no data entries at
+      // all, so the check is a free directory listing.
+      def requireNonEmpty(table: String): Unit = {
+        val entries = Option(new java.io.File(s"$base/$table").listFiles())
+          .getOrElse(Array.empty)
+        require(entries.exists(f => f.isDirectory || f.getName.endsWith(".parquet")),
+          s"index build at $base wrote an EMPTY '$table' table — with the " +
+            "exact-fill init this means the input corpus itself was empty; " +
+            "nothing was indexed")
+      }
+      requireNonEmpty("codes")
+      if (withResiduals) requireNonEmpty("rcodes")
+      // Persist the ROUTING geometry with the index (r19 ADVICE): an
+      // index built at corpus-scaled k served at the fixed NPROBE/
+      // PQ_SHORTLIST silently degrades recall; storing (k, nprobe,
+      // shortlist) makes [[serveFromIndex]]'s defaults the values the
+      // build was sized for. Written after awaitAll AND the empty-table
+      // check, so it doubles as the build-complete marker: an
+      // out-of-process reader that observes GEOMETRY observes complete,
+      // non-empty model tables. (The rebuild epoch that keeps
+      // readCodes' listing memo from serving the pre-rebuild listing is
+      // bumped by the log's reset, in a finally.)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(base, "GEOMETRY"), s"$k $nprobe $shortlist")
+      // Under-fill tripwire (r17 advice): the empty-table check above
+      // catches an init that matched NOTHING, but a quantizer can still
+      // end up smaller than its contract — a training sample smaller
+      // than k can only seed sampleRows centroids, and k-means can DRAIN
+      // an entry nothing assigns to — valid, silently degraded recall.
+      // On the local path the counters rode the in-memory arrays (zero
+      // jobs); distributed, the tiny model frames are counted here
+      // post-settle (≤ K + M·KSUB rows, already checkpointed). Since
+      // r20's exact-fill init the expected count is min(k, sampleRows)
+      // and a full suite run fires ZERO warnings. Warn, not fail: a
+      // legitimately small corpus (n < K) builds fewer cells by design,
+      // and training drain remains possible on degenerate data.
+      if (!local) {
+        trainedCent = cent.count()
+        val booksSettled = Seq("codebooks" ->
+          scala.concurrent.Await.result(booksF,
+            scala.concurrent.duration.Duration.Inf)) ++
+          rbooksOptF.map(f => "rcodebooks" ->
+            scala.concurrent.Await.result(f,
+              scala.concurrent.duration.Duration.Inf)).toSeq
+        bookFill = booksSettled.flatMap { case (table, books) =>
+          books.groupBy(col("m")).agg(countDistinct(col("cid")).as("n"))
+            .collect().map(r => (table, r.getInt(0), r.getLong(1)))
         }
-        val cent0 = trainedCodebook(tr, strideCodebook(tr, k),
-          IVF_TRAIN_ITERS).localCheckpoint() // feeds assignment + writes
-        val rbooksTrainF = if (!withResiduals) None else Some(Future {
-          val trCell = nearestCells(cent0)(tr, 1)
-            .select(col("vec_id"), col("cid").as("cell"))
-          val rtr = residualFrame(tr, cent0, trCell)
-            .select(col("vec_id"), col("v")).localCheckpoint()
-          val rtsubs = subspaces(rtr, "vec_id").localCheckpoint()
-          trainedPqBooks(rtsubs, pqCodebooks(rtr), PQ_TRAIN_ITERS)
-        })
-        sampleRows = tr.count()
-        (cent0, booksTrainF, rbooksTrainF)
       }
-    // The full-corpus subspace slices for the plain encode — needed in
-    // both paths, independent of training, so its checkpoint chain
-    // overlaps whatever else is in flight.
-    val subsF = Future { subspaces(en, "vec_id").localCheckpoint() }
-    // Checkpointed because BOTH code families consume it (the plain
-    // coded join and the residual subtraction) — uncheckpointed, each
-    // re-executes the O(n·K) assignment crossJoin.
-    val cellOf = nearestCells(cent)(en, 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-      .localCheckpoint()
-    val centWriteF = Future {
-      cent.write.mode("overwrite").parquet(s"$base/centroids")
-    }
-    val booksWriteF = booksF.map { books =>
-      books.write.mode("overwrite").parquet(s"$base/codebooks")
-    }
-    val rbooksWriteF = rbooksOptF.map(_.map { rbooks =>
-      rbooks.write.mode("overwrite").parquet(s"$base/rcodebooks")
-    })
-    // Cluster by cell before the partitioned writes: without it every
-    // shuffle partition emits a sliver into every cell directory
-    // (partitions × cells small files); clustered, each cell directory
-    // holds one compact file — fewer files to commit here and to list
-    // and open on every serve-path read, and the layout a 100 TB
-    // inverted file wants (large sequential runs per cell).
-    val codesF = for { subs <- subsF; books <- booksF } yield {
-      pqAssignSubs(subs, books).join(cellOf, "vec_id")
-        .repartition(col("cell")).write.partitionBy("cell")
-        .mode("overwrite").parquet(s"$base/codes")
-    }
-    // Residual-PQ artifacts (the [[annIvfPqResidual]] refinement,
-    // train-once form): residual r = v − centroid(cell(v)) per vector,
-    // residual codes laid out as the same cell-partitioned inverted
-    // file. Storing both code families costs 2·M bytes/vector and
-    // removes per-query residual retraining entirely. `withResiduals =
-    // false` builds a plain-codes index for callers that never serve
-    // the residual form (the upsert gate's slice index). The residual
-    // frame needs only (en, cent, cellOf), so its checkpoint runs
-    // concurrent with residual-PQ training instead of behind it (r21).
-    val residCkptF = if (!withResiduals) None else Some(Future {
-      residualFrame(en, cent, cellOf).localCheckpoint()
-    })
-    val rcodesF = (rbooksOptF, residCkptF) match {
-      case (Some(rbF), Some(rF)) => Some(
-        for { rbooks <- rbF; resid <- rF } yield {
-          val rsubs = subspaces(resid.select(col("vec_id"), col("v")),
-            "vec_id")
-          pqAssignSubs(rsubs, rbooks)
-            .join(resid.select(col("vec_id"), col("cell")), "vec_id")
-            .repartition(col("cell")).write.partitionBy("cell")
-            .mode("overwrite").parquet(s"$base/rcodes")
-        })
-      case _ => None
-    }
-    // Every write chain settles before anything proceeds (awaitAll's
-    // no-write-in-flight guarantee — the concurrent-write correctness
-    // idiom all three maintenance surfaces share). Awaited BY NAME
-    // (r20 ADVICE): no positional indexing into a mixed sequence.
-    graft.streaming.StreamingOps.awaitAll(
-      Seq[Future[Any]](codesF, centWriteF, booksWriteF) ++
-        rbooksWriteF.toSeq ++ rcodesF.toSeq)
-    // Persist the ROUTING geometry with the index (r19 ADVICE): an
-    // index built at corpus-scaled k served at the fixed NPROBE/
-    // PQ_SHORTLIST silently degrades recall; storing (k, nprobe,
-    // shortlist) makes [[serveFromIndex]]'s defaults the values the
-    // build was sized for. Written AFTER awaitAll (r20 ADVICE) so it
-    // doubles as the build-complete marker: an out-of-process reader
-    // that observes GEOMETRY observes complete model tables.
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(base, "GEOMETRY"), s"$k $nprobe $shortlist")
-    // Fail LOUDLY on an empty code table. Since the r20 exact-fill
-    // init over the rank-re-keyed training slice, an empty codes table
-    // can only mean an empty input corpus — but a silent zero-row
-    // write would still serve nothing and break every later read with
-    // an unhelpful schema-inference error, so the tripwire stays. A
-    // cell-partitioned write of zero rows leaves no data entries at
-    // all, so the check is a free directory listing.
-    def requireNonEmpty(table: String): Unit = {
-      val entries = Option(new java.io.File(s"$base/$table").listFiles())
-        .getOrElse(Array.empty)
-      require(entries.exists(f => f.isDirectory || f.getName.endsWith(".parquet")),
-        s"index build at $base wrote an EMPTY '$table' table — with the " +
-          "exact-fill init this means the input corpus itself was empty; " +
-          "nothing was indexed")
-    }
-    requireNonEmpty("codes")
-    if (withResiduals) requireNonEmpty("rcodes")
-    // A rebuild overwrites the gen-0 tables IN PLACE (same generation,
-    // empty pending set) — bump the per-base epoch so the assembled-
-    // read cache cannot serve the pre-rebuild file listing.
-    epochOf(base).incrementAndGet()
-    // Under-fill tripwire (r17 advice): the empty-table check above
-    // catches an init that matched NOTHING, but a quantizer can still
-    // end up smaller than its contract — a training sample smaller
-    // than k can only seed sampleRows centroids, and k-means can DRAIN
-    // an entry nothing assigns to — valid, silently degraded recall.
-    // On the local path the counters rode the in-memory arrays (zero
-    // jobs); distributed, the tiny model frames are counted here
-    // post-settle (≤ K + M·KSUB rows, already checkpointed). Since
-    // r20's exact-fill init the expected count is min(k, sampleRows)
-    // and a full suite run fires ZERO warnings. Warn, not fail: a
-    // legitimately small corpus (n < K) builds fewer cells by design,
-    // and training drain remains possible on degenerate data.
-    if (!local) {
-      trainedCent = cent.count()
-      val booksSettled = Seq("codebooks" ->
-        scala.concurrent.Await.result(booksF,
-          scala.concurrent.duration.Duration.Inf)) ++
-        rbooksOptF.map(f => "rcodebooks" ->
-          scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration.Inf)).toSeq
-      bookFill = booksSettled.flatMap { case (table, books) =>
-        books.groupBy(col("m")).agg(countDistinct(col("cid")).as("n"))
-          .collect().map(r => (table, r.getInt(0), r.getLong(1)))
-      }
-    }
-    locally {
-      def warn(msg: String): Unit =
-        System.err.println(s"[graft] index build at $base: $msg")
-      val wantCent = math.min(k.toLong, sampleRows)
-      if (trainedCent < wantCent)
-        warn(s"IVF codebook trained $trainedCent of $wantCent centroids — " +
-          "training drained entries nothing assigns to (recall degrades " +
-          "with the gap)")
-      val wantBooks = math.min(PQ_KSUB.toLong, sampleRows)
-      bookFill.filter(_._3 < wantBooks).foreach { case (table, m, n) =>
-        warn(s"$table subspace m=$m trained $n " +
-          s"of $wantBooks PQ entries — training-drained entries " +
-          "(recall degrades with the gap)")
+      locally {
+        def warn(msg: String): Unit =
+          System.err.println(s"[graft] index build at $base: $msg")
+        val wantCent = math.min(k.toLong, sampleRows)
+        if (trainedCent < wantCent)
+          warn(s"IVF codebook trained $trainedCent of $wantCent centroids — " +
+            "training drained entries nothing assigns to (recall degrades " +
+            "with the gap)")
+        val wantBooks = math.min(PQ_KSUB.toLong, sampleRows)
+        bookFill.filter(_._3 < wantBooks).foreach { case (table, m, n) =>
+          warn(s"$table subspace m=$m trained $n " +
+            s"of $wantBooks PQ entries — training-drained entries " +
+            "(recall degrades with the gap)")
+        }
       }
     }
   }
@@ -2260,6 +2248,25 @@ object Similarity extends QueryModule {
       .join(resid.select(col("vec_id"), col("cell")), "vec_id")
   }
 
+  /** LSM L0 auto-compaction threshold for the index delta log — the
+    * streaming accumulators' round-19 resume policy applied to the
+    * maintenance ops: every read unions one clustered table per
+    * committed-unfolded delta, so a loop that never compacts degrades
+    * without bound. Once at least this many deltas sit unfolded, the
+    * maintenance op that just committed folds them (it already holds
+    * the base's single-writer lock). Compaction is read-invisible
+    * (the spec-pinned `ann_index_compact` contract) and mirror-safe
+    * (it folds layout, not the id set); ≤ 0 disables — fully
+    * caller-driven, the pre-round-19 posture. The comparison is
+    * `>=`: threshold = 1 folds after every commit. */
+  val AUTO_COMPACT_DELTAS = 64
+
+  private[graft] def maybeAutoCompact(spark: SparkSession, base: String,
+      threshold: Int = AUTO_COMPACT_DELTAS): Unit =
+    if (threshold > 0 &&
+        GenerationLog.index(base).state().pending.size >= threshold)
+      annIndexCompact(spark, base)
+
   /** Incremental index maintenance — the production answer to "new
     * vectors arrived" that does NOT retrain: assign each new vector to
     * its nearest FROZEN centroid, encode it with the FROZEN per-subspace
@@ -2279,44 +2286,6 @@ object Similarity extends QueryModule {
     * shifts — the documented trade of every production IVF system; the
     * rebuild path is the periodic re-train. SimilaritySpec pins
     * append ≡ one-pass frozen encode of the union, bit-for-bit. */
-  /** Per-index-base upsert serialization: two concurrent upserts into
-    * one base would pick the same delta id and clobber each other's
-    * staging — a maintenance loop is single-writer by nature, and the
-    * lock makes that true within a JVM rather than assumed. */
-  private val upsertLocks = scala.collection.concurrent.TrieMap
-    .empty[String, Object]
-
-  /** Delta ids whose commit marker exists — the single source of truth
-    * for what an index read sees beyond the base build (the
-    * [[graft.streaming.StreamNearDedup]] marker protocol applied to
-    * the inverted file). */
-  /** LSM L0 auto-compaction threshold for the index delta log — the
-    * streaming accumulators' round-19 resume policy applied to the
-    * maintenance ops: every read unions one clustered table per
-    * committed-unfolded delta, so a loop that never compacts degrades
-    * without bound. Once at least this many deltas sit unfolded, the
-    * maintenance op that just committed folds them (it already holds
-    * the base's single-writer lock). Compaction is read-invisible
-    * (the spec-pinned `ann_index_compact` contract) and mirror-safe
-    * (it folds layout, not the id set); ≤ 0 disables — fully
-    * caller-driven, the pre-round-19 posture. The comparison is
-    * `>=`: threshold = 1 folds after every commit. */
-  val AUTO_COMPACT_DELTAS = 64
-
-  private[graft] def maybeAutoCompact(spark: SparkSession, base: String,
-      threshold: Int = AUTO_COMPACT_DELTAS): Unit =
-    if (threshold > 0) {
-      val (_, folded) = manifest(base)
-      if (committedDeltas(base).count(_ > folded) >= threshold)
-        annIndexCompact(spark, base)
-    }
-
-  private def committedDeltas(base: String): Seq[Long] = {
-    val dir = new java.io.File(s"$base/commits")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName.toLongOption).toSeq.sorted
-  }
-
   def annIndexUpsert(spark: SparkSession, indexBase: String,
       raw: DataFrame): Unit = {
     annIndexUpsert(spark, indexBase, raw, knownParts = None)
@@ -2356,8 +2325,9 @@ object Similarity extends QueryModule {
     * and mirror apart. Compaction between calls is fine: it folds
     * layout, not the id set. */
   private[graft] def annIndexUpsert(spark: SparkSession, indexBase: String,
-      raw: DataFrame, knownParts: Option[Seq[DataFrame]]): Option[DataFrame] =
-    upsertLocks.getOrElseUpdate(indexBase, new Object).synchronized {
+      raw: DataFrame, knownParts: Option[Seq[DataFrame]]): Option[DataFrame] = {
+    val log = GenerationLog.index(indexBase)
+    log.withLock {
       // Known = COMMITTED codes only. A bare parquet append would be
       // the corruption path here: a job-level crash mid-append can
       // leave a vector with a partial code set that a retry's
@@ -2381,17 +2351,16 @@ object Similarity extends QueryModule {
       }).localCheckpoint()
       if (fresh.isEmpty) None
       else {
-        val k = committedDeltas(indexBase).maxOption.getOrElse(0L) + 1
-        val delta = s"$indexBase/deltas/$k"
-        // Clear the WHOLE reused directory, not just the tables this op
+        val k = log.nextId
+        // Clear the WHOLE reused delta, not just the tables this op
         // writes: a crashed DELETE leaves uncommitted `tombstones`
         // debris at this id, and mode("overwrite") on `codes` alone
         // would leave it in place — the marker landed below commits the
         // whole delta directory, debris included, and stale tombstones
         // would then mask live codes (the cross-op-type twin of the
         // partial-codes corruption the marker protocol exists for).
-        clearDelta(delta)
-        writeDelta(encodeWith(spark, indexBase, fresh), s"$delta/codes")
+        log.discard(k)
+        writeDelta(encodeWith(spark, indexBase, fresh), log.payload("codes", k))
         // Both code families stay in lockstep: one marker covers both,
         // so a crash between the two writes leaves NEITHER visible. An
         // index built without residual artifacts (`withResiduals =
@@ -2405,7 +2374,8 @@ object Similarity extends QueryModule {
         // alike. Kept sequential-lazy deliberately.)
         if (java.nio.file.Files.exists(
             java.nio.file.Paths.get(indexBase, "rcodebooks")))
-          writeDelta(encodeResidWith(spark, indexBase, fresh), s"$delta/rcodes")
+          writeDelta(encodeResidWith(spark, indexBase, fresh),
+            log.payload("rcodes", k))
         // The returned fresh-id projection is materialized BEFORE the
         // marker lands (r17 advice): it is the caller's next mirror
         // part, and it is the last Spark job of the append — so every
@@ -2417,14 +2387,12 @@ object Similarity extends QueryModule {
         // fold cycle (previously the mirror re-checkpointed this
         // post-commit — the non-atomic window the advice flagged).
         val freshIds = fresh.select(col("vec_id")).localCheckpoint()
-        val commits = java.nio.file.Paths.get(indexBase, "commits")
-        java.nio.file.Files.createDirectories(commits)
-        try java.nio.file.Files.createFile(commits.resolve(k.toString))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+        log.commit(k)
         maybeAutoCompact(spark, indexBase)
         Some(freshIds)
       }
     }
+  }
 
   /** Delta code layout: plain parquet CLUSTERED by cell (one shuffle
     * partition per cell, cell a data column), NOT a cell-partitioned
@@ -2446,16 +2414,6 @@ object Similarity extends QueryModule {
     codes.repartition(col("cell")).sortWithinPartitions(col("cell"))
       .write.mode("overwrite").parquet(dest)
 
-  /** Remove an UNCOMMITTED delta directory before its id is reused —
-    * the debris from a crashed attempt of ANY op type. Both writers
-    * call this before staging their payload, so a marker can never
-    * commit another op's leftovers alongside its own tables. */
-  private def clearDelta(delta: String): Unit = {
-    val p = java.nio.file.Paths.get(delta)
-    if (java.nio.file.Files.exists(p))
-      graft.streaming.StreamingOps.deleteRecursively(p)
-  }
-
   /** Delete vectors from the index WITHOUT rewriting any code file —
     * the third LSM maintenance op. Deletes land as a TOMBSTONE delta
     * (`deltas/<k>/tombstones`, one vec_id column) under the same
@@ -2475,28 +2433,27 @@ object Similarity extends QueryModule {
     * a no-op rather than an unbounded tombstone-delta trail — the
     * delete twin of the upsert's idempotence anti-join. */
   def annIndexDelete(spark: SparkSession, indexBase: String,
-      ids: DataFrame): Unit =
-    upsertLocks.getOrElseUpdate(indexBase, new Object).synchronized {
+      ids: DataFrame): Unit = {
+    val log = GenerationLog.index(indexBase)
+    log.withLock {
       val live = readCodes(spark, indexBase).select(col("vec_id")).distinct()
       val doomed = ids.select(col("vec_id")).distinct()
         .join(live, Seq("vec_id"), "left_semi").localCheckpoint()
       if (!doomed.isEmpty) {
-        val k = committedDeltas(indexBase).maxOption.getOrElse(0L) + 1
+        val k = log.nextId
         // Same cross-op-type debris rule as the upsert: a crashed
         // UPSERT's partial codes at this id must not ride this marker
         // into visibility.
-        clearDelta(s"$indexBase/deltas/$k")
+        log.discard(k)
         // One file: a tombstone batch is ids only — megabytes at a
         // scale where the codes they mask are terabytes.
         doomed.coalesce(1).write.mode("overwrite")
-          .parquet(s"$indexBase/deltas/$k/tombstones")
-        val commits = java.nio.file.Paths.get(indexBase, "commits")
-        java.nio.file.Files.createDirectories(commits)
-        try java.nio.file.Files.createFile(commits.resolve(k.toString))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+          .parquet(log.payload("tombstones", k))
+        log.commit(k)
         maybeAutoCompact(spark, indexBase)
       }
     }
+  }
 
   /** The routing geometry an index was BUILT for — `(k, nprobe,
     * shortlist)` from the GEOMETRY file [[buildIndexAt]] writes next to
@@ -2554,135 +2511,28 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** The read-back coded corpus (plain `codes` or residual `rcodes`):
-    * the base build unioned with every COMMITTED delta directory —
-    * uncommitted (crashed) upsert debris is invisible by construction.
-    * Each root is read as its own partitioned table (partition
-    * discovery per root; pruning by cell still reaches every scan),
-    * and the partition column comes back with the inferred (int)
-    * partition type, recast to the vec_id-domain long every join
-    * expects. */
-  /** Compaction pointer: `(generation, foldedUpTo)`. Generation g > 0
-    * keeps its code tables at `codes-g<g>`/`rcodes-g<g>` and has the
-    * deltas with id ≤ foldedUpTo folded in; generation 0 (no MANIFEST
-    * file) is the base build's own `codes`/`rcodes` with nothing
-    * folded. The pointer is replaced by ATOMIC_MOVE, so readers see
-    * either the old generation (+ its deltas) or the new one — never a
-    * half-compacted mix. */
-  private def manifest(base: String): (Long, Long) = {
-    val p = java.nio.file.Paths.get(base, "MANIFEST")
-    if (java.nio.file.Files.exists(p)) {
-      // Validated parse: ATOMIC_MOVE makes a torn pointer unlikely on a
-      // POSIX local FS, but the write is not fsynced and object-store
-      // backends lack atomic rename — a corrupt pointer must fail
-      // naming the index and the bytes found, not with a bare
-      // NumberFormatException three frames down.
-      val raw = java.nio.file.Files.readString(p)
-      val parts = raw.trim.split("\\s+")
-      require(parts.length == 2 && parts.forall(_.forall(_.isDigit)),
-        s"corrupt MANIFEST at $base: expected '<generation> <foldedUpTo>', " +
-          s"got ${raw.take(80).trim} — the compaction pointer is unreadable; " +
-          "restore it or delete it to fall back to generation 0")
-      (parts(0).toLong, parts(1).toLong)
-    } else (0L, 0L)
-  }
-
-  private def codesRoot(base: String, table: String, gen: Long): String =
-    if (gen == 0L) s"$base/$table" else s"$base/$table-g$gen"
-
   /** Fold every committed delta into a new base generation — the LSM
     * compaction step of the maintenance loop. Without it the read path
-    * unions one partitioned table PER COMMITTED DELTA forever: a
-    * serving stack appending every few minutes accumulates thousands
-    * of roots, and every query pays partition discovery + a scan per
-    * root. Compaction restores O(1) read cost while the append path
-    * keeps running: stage the union as `codes-g<gen+1>` (+ rcodes in
-    * lockstep), swap the MANIFEST pointer atomically, then GC the
-    * folded delta payloads and the previous generation.
-    *
-    * Crash-safety is the delta-commit argument one level up: staging
-    * directories are invisible until the pointer swap (a crashed
-    * attempt's debris sits at the gen id the retry deterministically
-    * reuses and mode("overwrite") clobbers), the swap itself is an
-    * ATOMIC_MOVE, and a crash before GC leaves only invisible
-    * garbage a later compaction removes. Folded deltas keep their
-    * commit MARKERS (ids must stay monotonic for the next append);
-    * readCodes skips them via the manifest's foldedUpTo bound.
-    *
-    * GC is DEFERRED one fold: this call reclaims only what the
-    * manifest already stopped referencing before it ran (the previous
-    * fold's generation and folded deltas), never the generation it is
-    * replacing in this call — so a reader that built a plan against
-    * generation N just before the swap keeps its files until the
-    * NEXT compaction, and overlap between one fold and in-flight
-    * serves is safe. The single-writer posture (the per-base lock)
-    * remains required on the write side only. */
-  def annIndexCompact(spark: SparkSession, indexBase: String): Unit =
-    upsertLocks.getOrElseUpdate(indexBase, new Object).synchronized {
-      // Sweep FIRST, from current manifest state alone: everything the
-      // pointer no longer references — folded delta payloads, non-
-      // current generations — is garbage no matter which crashed or
-      // completed attempt left it, so a GC interrupted last time is
-      // finished this time (this is what makes "a later compaction
-      // removes crash debris" true rather than aspirational). Running
-      // the sweep ONLY here, before the fold, is the one-fold grace
-      // period the scaladoc promises in-flight readers.
-      gcInvisible(indexBase)
-      val (gen, folded) = manifest(indexBase)
-      val pending = committedDeltas(indexBase).filter(_ > folded)
-      if (pending.nonEmpty) {
-        val newGen = gen + 1
-        def stage(table: String): Unit =
-          if (new java.io.File(codesRoot(indexBase, table, gen)).exists())
-            readCodes(spark, indexBase, table)
-              .repartition(col("cell"))
-              .write.partitionBy("cell").mode("overwrite")
-              .parquet(codesRoot(indexBase, table, newGen))
-        stage("codes")
-        stage("rcodes")
-        val tmp = java.nio.file.Paths.get(indexBase, "MANIFEST.tmp")
-        java.nio.file.Files.writeString(tmp, s"$newGen ${pending.max}")
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(indexBase, "MANIFEST"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // Visible state is now gen+1 only. What it replaced is NOT
-        // reclaimed here — the next compaction's entry sweep does it,
-        // giving in-flight readers of the old generation a full fold
-        // of grace (see scaladoc).
+    * unions one table PER COMMITTED DELTA forever: a serving stack
+    * appending every few minutes accumulates thousands of roots, and
+    * every query pays partition discovery + a scan per root.
+    * Compaction restores O(1) read cost while the append path keeps
+    * running. The crash-safety protocol (GC, stage, atomic pointer
+    * swap, GC deferred one fold for in-flight readers) is
+    * [[GenerationLog.fold]]'s; the index stages both code families in
+    * lockstep from [[readCodes]]' assembly of the folded view, which
+    * physically drops tombstoned rows. */
+  def annIndexCompact(spark: SparkSession, indexBase: String): Unit = {
+    val log = GenerationLog.index(indexBase)
+    log.fold { (view, newGen) =>
+      Seq("codes", "rcodes").foreach { table =>
+        if (new java.io.File(log.tableRoot(table, view.generation)).exists())
+          readCodesAt(spark, log, table, view)
+            .repartition(col("cell"))
+            .write.partitionBy("cell").mode("overwrite")
+            .parquet(log.tableRoot(table, newGen))
       }
     }
-
-  /** Delete every code payload the CURRENT manifest does not
-    * reference: delta directories with id ≤ foldedUpTo and code-table
-    * generations other than the live one (including the gen-0 build
-    * tables once a later generation is live). Markers are kept — ids
-    * must stay monotonic across folds. Derived purely from on-disk
-    * pointer state, so it is safe to run at any point the compaction
-    * lock is held and idempotent across crashes. */
-  private def gcInvisible(indexBase: String): Unit = {
-    val (gen, folded) = manifest(indexBase)
-    committedDeltas(indexBase).filter(_ <= folded).foreach { k =>
-      val d = java.nio.file.Paths.get(s"$indexBase/deltas/$k")
-      if (java.nio.file.Files.exists(d))
-        graft.streaming.StreamingOps.deleteRecursively(d)
-    }
-    // Stale generations by DIRECTORY LISTING, not by probing every id
-    // in 0..gen — a long-lived maintenance loop's gen counter grows
-    // forever, and per-fold GC cost must scale with what actually
-    // exists (a handful of live entries), not with the loop's age.
-    val live = Set(codesRoot(indexBase, "codes", gen),
-      codesRoot(indexBase, "rcodes", gen))
-    val b = java.nio.file.Paths.get(indexBase)
-    val stale = scala.util.Using.resource(java.nio.file.Files.list(b)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        (n == "codes" || n == "rcodes" || n.startsWith("codes-g") ||
-          n.startsWith("rcodes-g")) && !live.contains(p.toString)
-      }.toList
-    }
-    stale.foreach(graft.streaming.StreamingOps.deleteRecursively)
   }
 
   /** The stored codes-table shape — ONE definition shared by the
@@ -2710,7 +2560,7 @@ object Similarity extends QueryModule {
     * file index) is indistinguishable from a fresh listing, while ANY
     * mutation changes the key: a new delta or tombstone set changes
     * `pending`, a compaction changes `gen`, and a full rebuild (which
-    * overwrites gen-0 tables in place) bumps the per-base epoch below.
+    * overwrites gen-0 tables in place) bumps the log's rebuild epoch.
     * Storage metadata, not memoized compute (the [[builtIndexes]]
     * posture — survives Caches.clearAll by design): every query still
     * computes from the parquet bytes; only the 64-cell partition
@@ -2719,24 +2569,33 @@ object Similarity extends QueryModule {
     * state is unchanged. */
   private val codesFrameCache =
     new graft.SessionMemo[(String, String, String), DataFrame]
-  private val buildEpochs = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.concurrent.atomic.AtomicLong]
-  private def epochOf(base: String): java.util.concurrent.atomic.AtomicLong =
-    buildEpochs.getOrElseUpdate(base, new java.util.concurrent.atomic.AtomicLong)
 
+  /** The read-back coded corpus (plain `codes` or residual `rcodes`):
+    * the base build unioned with every COMMITTED delta directory —
+    * uncommitted (crashed) upsert debris is invisible by construction.
+    * Each root is read as its own partitioned table (partition
+    * discovery per root; pruning by cell still reaches every scan),
+    * and the partition column comes back with the inferred (int)
+    * partition type, recast to the vec_id-domain long every join
+    * expects. */
   private[graft] def readCodes(spark: SparkSession, base: String,
       table: String = "codes"): DataFrame = {
-    val (gen0, folded0) = manifest(base)
-    val pending0 = committedDeltas(base).filter(_ > folded0)
-    val sig = s"$gen0|${pending0.mkString(",")}|${epochOf(base).get()}"
-    codesFrameCache.getOrElseUpdate(spark, (base, table, sig))(
-      assembleCodes(spark, base, table))
+    val log = GenerationLog.index(base)
+    readCodesAt(spark, log, table, log.state())
   }
 
-  private def assembleCodes(spark: SparkSession, base: String,
-      table: String): DataFrame = {
-    val (gen, folded) = manifest(base)
-    val pending = committedDeltas(base).filter(_ > folded)
+  /** [[readCodes]] at an explicit log state — compaction stages from
+    * the view of exactly the deltas it folds. */
+  private def readCodesAt(spark: SparkSession,
+      log: GenerationLog, table: String,
+      st: GenerationLog.State): DataFrame =
+    codesFrameCache.getOrElseUpdate(spark, (log.root, table, st.signature))(
+      assembleCodes(spark, log, table, st))
+
+  private def assembleCodes(spark: SparkSession,
+      log: GenerationLog, table: String,
+      st: GenerationLog.State): DataFrame = {
+    val (base, pending) = (log.root, st.pending)
     // Every root carries its SEQUENCE (generation tables = 0, delta k =
     // k): a tombstone in delta t masks code rows from any strictly
     // earlier sequence, and a later re-upsert (codes at j > t)
@@ -2745,8 +2604,8 @@ object Similarity extends QueryModule {
     // into it predates every pending delta (folded < k for all pending
     // k), tombstones included — compaction bakes their effect in and
     // GC reclaims them.
-    val roots = ((0L, codesRoot(base, table, gen)) +:
-      pending.map(k => (k, s"$base/deltas/$k/$table")))
+    val roots = ((0L, log.tableRoot(table, st.generation)) +:
+      pending.map(k => (k, log.payload(table, k))))
       .filter { case (_, p) => new java.io.File(p).exists() }
     require(roots.nonEmpty,
       s"index at $base has no '$table' table — built withResiduals=false? " +
@@ -2789,7 +2648,7 @@ object Similarity extends QueryModule {
           s"the shared codes schema $want; update CODES_SCHEMA and the " +
           "write path together")
     }
-    val tombRoots = pending.map(k => (k, s"$base/deltas/$k/tombstones"))
+    val tombRoots = pending.map(k => (k, log.payload("tombstones", k)))
       .filter { case (_, p) => new java.io.File(p).exists() }
     if (tombRoots.isEmpty) codes.drop("seq")
     else {

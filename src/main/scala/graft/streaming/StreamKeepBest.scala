@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
+import graft.storage.GenerationLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,14 +45,12 @@ import org.apache.spark.sql.functions._
   * with its cluster — and the per-cluster canonical `(comp, doc_id,
   * quality)`, consolidated in memory and derivable entirely from the
   * persisted event log (the winner row of a cluster's LATEST
-  * committed batch). Persistence reuses [[StreamNearDedup]]'s
-  * marker-committed per-batch parquet protocol verbatim: deltas go to
-  * `bands/batch_id=K` and `events/batch_id=K` in overwrite mode, a
-  * `commits/K` marker lands last, uncommitted partials are invisible
-  * and clobbered on replay. At 100 TB the same swap applies — the
-  * parquet pair becomes a transactional store keyed by
-  * (band_idx, band_key) and by cluster id; the per-batch dataflow
-  * below is unchanged.
+  * committed batch). Persistence is a [[graft.storage.GenerationLog]]:
+  * deltas go to `bands/batch_id=K` and `events/batch_id=K` in
+  * overwrite mode, one marker per batch commits both. At 100 TB the
+  * same swap applies — the parquet pair becomes a transactional store
+  * keyed by (band_idx, band_key) and by cluster id; the per-batch
+  * dataflow below is unchanged.
   *
   * Compaction boundary: the `bands` table is STATE and folds via
   * [[compactBands]] ([[StreamNearDedup.compactState]]'s
@@ -85,12 +84,16 @@ object StreamKeepBest {
   }
 
   /** [[emptyBands]] in its PERSISTED shape (batch_id included) — the
-    * manifest-aware read's and the fold's schema anchor. */
+    * generation-aware read's and the fold's schema anchor. */
   private def emptyBandsPersisted(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Int, Long, Long, Long)]
       .toDF("band_idx", "band_key", "comp", "batch_id")
   }
+
+  /** This accumulator's state log: only `bands` folds. */
+  private def stateLog(stateDir: String): GenerationLog =
+    GenerationLog.stream(stateDir, Seq("bands"))
 
   /** Fold this accumulator's committed band-key deltas into a
     * generation base ([[StreamNearDedup.compactState]] with bands
@@ -282,10 +285,9 @@ object StreamKeepBest {
       .select(col("comp"), col("doc_id"), col("quality"))
   }
 
-  /** Keep-best admission state EXTERNALIZED to storage under
-    * [[StreamNearDedup]]'s marker-commit protocol (same `commits/`
-    * markers, same overwrite-per-batch idempotence, same
-    * committed-only visibility): band-key deltas to
+  /** Keep-best admission state EXTERNALIZED to storage (the object
+    * scaladoc's log; overwrite-per-batch idempotence, committed-only
+    * visibility): band-key deltas to
     * `bands/batch_id=K`, the per-doc event deltas to
     * `events/batch_id=K`. A restarted query rebuilds BOTH in-memory
     * mirrors from committed storage — the band footprint directly,
@@ -296,7 +298,8 @@ object StreamKeepBest {
 
     def events: DataFrame = readEvents(spark, stateDir)
 
-    private var committedIds: Set[Long] = StreamNearDedup.readCommitted(stateDir)
+    private val log = stateLog(stateDir)
+    private var committedIds: Set[Long] = log.committed
     // Deferred auto-compaction at resume behind the same foldEvery
     // knob — the [[StreamNearDedup.PersistentAccumulator]] L0 policy
     // and deferral (r19 item 5 + ADVICE): construction builds the
@@ -307,10 +310,10 @@ object StreamKeepBest {
     // fold — the object scaladoc's compaction boundary; the canonical
     // mirror consolidates the event log either way). foldEvery <= 0
     // keeps compaction caller-driven.
-    // Bands are read through the compaction manifest (generation base
+    // Bands are read through the generation pointer (generation base
     // + unfolded tail); events below stay a plain committed-ids read —
     // the event log never folds (see the object scaladoc's compaction
-    // boundary), and readPartitioned ignores the manifest.
+    // boundary), and readPartitioned ignores the pointer.
     // Base + tail, never one unioned frame — the [[StreamNearDedup
     // .PersistentAccumulator]] mirror discipline: the clustered base's
     // probe side is exchange- and sort-free per trigger. The base also
@@ -327,8 +330,8 @@ object StreamKeepBest {
         .agg(min(col("comp")).as("comp"))
     @volatile private var bandsBase: DataFrame =
       StreamNearDedup.ckptClustered(spark, collapsedMin(
-        StreamNearDedup.readState(spark, stateDir, "bands",
-            emptyBandsPersisted(spark))
+        StreamNearDedup.readState(spark, log, log.state(committedIds),
+            "bands", emptyBandsPersisted(spark))
           .select(col("band_idx"), col("band_key"), col("comp"))))
     @volatile private var bandsTail: List[DataFrame] = Nil
     // Canonical mirror as an LSM list too — checkpointed base + one
@@ -343,9 +346,7 @@ object StreamKeepBest {
     @volatile private var canonTail: List[DataFrame] = Nil
     private var sinceMemFold = 0
     private var sinceDiskFold =
-      if (foldEvery > 0)
-        committedIds.count(_ > StreamNearDedup.manifest(stateDir)._2)
-      else 0
+      if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
     /** The foreachBatch body (serial per query; lock defensive).
       *
@@ -375,9 +376,9 @@ object StreamKeepBest {
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
       // Job labels (guide §1.5): thread-local, covers every job this
       // trigger launches on the foreachBatch thread (the concurrent
-      // write futures label their own threads). Cleared on exit so the
-      // last trigger's label cannot leak onto unrelated later jobs
-      // from the same thread (r20 ADVICE).
+      // write futures label — and clear — their own threads). Cleared
+      // on exit so the last trigger's label cannot leak onto unrelated
+      // later jobs from the same thread (r20 ADVICE).
       def label(s: String): Unit =
         spark.sparkContext.setJobDescription(s"keepbest b$batchId: $s")
       label("trigger")
@@ -418,28 +419,32 @@ object StreamKeepBest {
           import scala.concurrent.Future
           // coalesce(1): one batch's delta, sized like the first-touch
           // accumulator's — a production job sizes this to batch volume.
-          val eventsWriteF = Future {
-            label("events write")
+          // Pool threads outlive the trigger: each write labels its own
+          // thread and clears the label before the thread is returned.
+          def labeled(s: String)(write: => Unit): Future[Unit] = Future {
+            label(s)
+            try write finally spark.sparkContext.setJobDescription(null)
+          }
+          val eventsWriteF = labeled("events write") {
             events.coalesce(1).write.mode("overwrite")
-              .parquet(s"$stateDir/events/batch_id=$batchId")
+              .parquet(log.payload("events", batchId))
           }
           val bandDelta = keys
             .join(events.filter(col("action") =!= "drop")
               .select(col("doc_id"), col("comp")), Seq("doc_id"))
             .select(col("band_idx"), col("band_key"), col("comp"))
-          val bandWriteF = Future {
-            label("band delta write")
+          val bandWriteF = labeled("band delta write") {
             bandDelta.coalesce(1).write.mode("overwrite")
-              .parquet(s"$stateDir/bands/batch_id=$batchId")
+              .parquet(log.payload("bands", batchId))
           }
           StreamingOps.awaitAll(Seq(eventsWriteF, bandWriteF))
           events.unpersist(blocking = false)
-          StreamNearDedup.commit(stateDir, batchId)
+          log.commit(batchId)
           // The canonical mirror's delta layer: a lazy scan of the
           // COMMITTED events file (not the released cache above), the
           // same storage-backed posture as before.
           spark.read
-            .parquet(s"$stateDir/events/batch_id=$batchId")
+            .parquet(log.payload("events", batchId))
             .filter(col("action") =!= "drop")
             .select(col("comp"), col("doc_id"), col("quality"))
         } finally {
@@ -454,7 +459,7 @@ object StreamKeepBest {
         // broadcast regime the run is min-collapsed like the base, so
         // the routing probe's output stays ≤ batch keys × live parts.
         bandsTail = {
-          val path = s"$stateDir/bands/batch_id=$batchId"
+          val path = log.payload("bands", batchId)
           val scan = spark.read.parquet(path)
             .select(col("band_idx"), col("band_key"), col("comp"))
           if (StreamNearDedup.dirBytes(path) <= StreamNearDedup.RUN_CLUSTER_BYTES)
@@ -470,7 +475,7 @@ object StreamKeepBest {
         if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
           compactBands(spark, stateDir)
           bandsBase = StreamNearDedup.ckptClustered(spark, collapsedMin(
-            StreamNearDedup.readState(spark, stateDir, "bands",
+            StreamNearDedup.readState(spark, log, log.state(), "bands",
                 emptyBandsPersisted(spark))
               .select(col("band_idx"), col("band_key"), col("comp"))))
           bandsTail = Nil
@@ -494,7 +499,7 @@ object StreamKeepBest {
     * [[StreamNearDedup.readAdmitted]]. */
   private[graft] def readEvents(spark: SparkSession, stateDir: String): DataFrame =
     StreamNearDedup.readPartitioned(spark, s"$stateDir/events",
-      StreamNearDedup.readCommitted(stateDir), emptyEvents(spark))
+      stateLog(stateDir).committed, emptyEvents(spark))
 
   /** One live paced run against explicit checkpoint + state dirs —
     * restartable exactly like [[StreamNearDedup.runLiveAgainst]]

@@ -294,16 +294,16 @@ object ScaleProbe {
           .filter(_.getFileName.toString.endsWith(".parquet")).next()
       }
     val (bandsSeed, admSeed) = (seedFile("bands"), seedFile("admitted"))
-    val commits = java.nio.file.Paths.get(s"$histDir/commits")
-    java.nio.file.Files.createDirectories(commits)
+    val histLog = graft.storage.GenerationLog.stream(histDir.toString,
+      Seq("bands", "admitted"))
     (0 until histBatches).foreach { k =>
       Seq("bands" -> bandsSeed, "admitted" -> admSeed).foreach {
         case (table, seed) =>
-          val dest = java.nio.file.Paths.get(s"$histDir/$table/batch_id=$k")
+          val dest = java.nio.file.Paths.get(histLog.payload(table, k))
           java.nio.file.Files.createDirectories(dest)
           java.nio.file.Files.copy(seed, dest.resolve("part-0.parquet"))
       }
-      java.nio.file.Files.createFile(commits.resolve(k.toString))
+      histLog.commit(k)
     }
     def restartSec(foldEvery: Int): Double = {
       val t0 = System.nanoTime()

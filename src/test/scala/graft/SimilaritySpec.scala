@@ -511,6 +511,32 @@ class SimilaritySpec extends SparkSpecBase {
       withResiduals = true)
   }
 
+  test("failed rebuild: an empty corpus throws, leaves no GEOMETRY, and invalidates the listing memo") {
+    // A rebuild overwrites the gen-0 tables in place. When it fails
+    // validation, GEOMETRY (the build-complete marker) must not land,
+    // and readCodes must not keep serving the listing memoized before
+    // the overwrite.
+    val raw = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"))
+    val idx = java.nio.file.Files.createTempDirectory("graft_empty_rebuild_")
+      .toString
+    try {
+      Similarity.buildIndexAt(spark, raw.filter(col("vec_id") < 200), idx,
+        withResiduals = false)
+      val served = Similarity.readCodes(spark, idx)
+      assert(Similarity.readCodes(spark, idx) eq served,
+        "an unchanged index state must hit the listing memo")
+      val e = intercept[IllegalArgumentException](Similarity.buildIndexAt(
+        spark, raw.filter(lit(false)), idx, withResiduals = false))
+      assert(e.getMessage.contains("EMPTY"), e.getMessage)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "GEOMETRY")),
+        "a failed rebuild left the build-complete marker")
+      assert(!(Similarity.readCodes(spark, idx) eq served),
+        "readCodes served the listing memoized before the failed rebuild")
+    } finally graft.streaming.StreamingOps.deleteRecursively(
+      java.nio.file.Paths.get(idx))
+  }
+
   test("drained index: delete every id, compact to a zero-row generation, serve empty, refill by upsert") {
     // Deleting EVERY live id then compacting stages a generation table
     // with zero rows — a legitimate lifecycle state (unlike the

@@ -746,6 +746,41 @@ class StreamNearDedupSpec extends SparkSpecBase {
     } finally graft.streaming.StreamingOps.deleteRecursively(state)
   }
 
+  test("keep-best: write labels do not leak onto later jobs from pool threads") {
+    // The two concurrent delta writes label the ExecutionContext.global
+    // threads they run on; a pool thread that keeps the label would
+    // stamp it on every unrelated job it submits later.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    val state = java.nio.file.Files.createTempDirectory("graft_kb_labels_")
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    try {
+      runKeepBest(state, kbBatches.zipWithIndex.map {
+        case (b, i) => (b, i.toLong) })
+      spark.sparkContext.addSparkListener(listener)
+      val n = 8 * Runtime.getRuntime.availableProcessors
+      Await.result(Future.sequence((1 to n).map(_ =>
+        Future(spark.sparkContext.parallelize(1 to 2, 1).count()))), 5.minutes)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (descs.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(descs.size >= n, s"saw ${descs.size} of $n job starts")
+      val leaked = descs.asScala.filter(_.contains("keepbest")).toSet
+      assert(leaked.isEmpty, s"pool-thread jobs carried keep-best labels: $leaked")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.streaming.StreamingOps.deleteRecursively(state)
+    }
+  }
+
   test("keep-best: running argmax equals the batch keep-best argmax") {
     // The invariant the gate's `kept` flag rides on: whatever the
     // batch boundaries, each cluster's final canonical is the global
