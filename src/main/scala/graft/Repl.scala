@@ -67,15 +67,7 @@ object Repl {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     println(s"graft repl over $sfDir — " +
       "`q <postfix boolean>`, `rank <free text>`, `sim <vec_id> [k]`, " +
       "`ann <vec_id> [k]`, `near <doc_id>`, `admit <doc_id>`, `quit`")

@@ -50,14 +50,6 @@ object PageRank extends QueryModule {
 
   private def srcIdx = SOURCES.indices
 
-  /** A/B switch for the message-checkpoint eagerness settle (round-21
-    * judge item 1: the r20 driver bench contradicted the builder's
-    * stash-A/B on the lazy rewrite). Flipped ONLY by
-    * [[graft.tools.PrCkptProbe]] inside one interleaved measurement
-    * JVM; Bench/Verify never touch it, so the shipped default is the
-    * measured winner. */
-  @volatile private[graft] var eagerMsgCkpt = false
-
   // --- pagerank_graph: deterministic graph build (oracle-checked) --------
   def graphDf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.orders(spark, dir)
@@ -136,11 +128,13 @@ object PageRank extends QueryModule {
       // below is the first action over it and materializes it as a
       // side effect, so each iteration launches ONE job cascade
       // instead of an eager-checkpoint job followed by the collect
-      // (measured ~-25% on the 10-iteration loop).
+      // (measured ~-25% on the 10-iteration loop; an interleaved
+      // in-JVM eager/lazy pair in r21 confirmed lazy —
+      // plans/r21/pagerank_ckpt_pair.txt).
       val msgs = scattered.groupBy(col("dst"))
         .agg(sum(col("c0")).as("m0"),
           srcIdx.tail.map(i => sum(col(s"c$i")).as(s"m$i")): _*)
-        .localCheckpoint(eagerMsgCkpt)
+        .localCheckpoint(false)
       // Missing (dangling) mass per source: 1 − what arrived, as one
       // 1-row driver collect over the checkpointed messages — the
       // reference's driver fold (`:459-474`), O(iterations)·O(S)

@@ -2144,56 +2144,6 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** Stage-timed replay of [[buildIndexAt]]'s dataflow (sequential, so
-    * each phase's wall-clock is unshared) — the decomposition behind
-    * the ann_index_build bench number. Profiling aid only; the real
-    * build is [[buildIndexAt]]. */
-  private[graft] def profileBuild(spark: SparkSession, dir: String): Long = {
-    def t[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[profile] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val base = graft.Scratch.dir("graft_profile_idx_").toString
-    val raw = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val en = t("normalize+checkpoint")(normalizedFrom(raw).localCheckpoint())
-    val tst = tstrideDf(en)
-    val tr = t("train sample+checkpoint")(trainSliceOf(en, tst).localCheckpoint())
-    val cent = t("ivf train (2 iters, sample)")(
-      trainedCodebook(tr, strideCodebook(tr), IVF_TRAIN_ITERS).localCheckpoint())
-    val cellOf = t("ivf assign full corpus")(nearestCells(cent)(en, 1)
-      .select(col("vec_id"), col("cid").as("cell")).localCheckpoint())
-    t("centroids write")(cent.write.mode("overwrite").parquet(s"$base/centroids"))
-    val subs = t("subspace slice+checkpoint")(subspaces(en, "vec_id").localCheckpoint())
-    val tsubs = t("train-sample slice+ckpt")(
-      subspaces(tr, "vec_id").localCheckpoint())
-    val books = t("pq train (3 iters, sample)")(
-      trainedPqBooks(tsubs, pqCodebooks(tr), PQ_TRAIN_ITERS))
-    t("codebooks write")(books.write.mode("overwrite").parquet(s"$base/codebooks"))
-    t("codes encode+write")(pqAssignSubs(subs, books).join(cellOf, "vec_id")
-      .repartition(col("cell")).write.partitionBy("cell")
-      .mode("overwrite").parquet(s"$base/codes"))
-    val resid = t("residual frame+checkpoint")(
-      residualFrame(en, cent, cellOf).localCheckpoint())
-    val rsubs = t("resid slice+checkpoint")(
-      subspaces(resid.select(col("vec_id"), col("v")), "vec_id").localCheckpoint())
-    val rtr = t("resid sample+checkpoint")(
-      trainSliceOf(resid.select(col("vec_id"), col("v")), tst).localCheckpoint())
-    val rtsubs = t("resid sample slice+ckpt")(
-      subspaces(rtr, "vec_id").localCheckpoint())
-    val rbooks = t("resid pq train (3 iters, sample)")(
-      trainedPqBooks(rtsubs, pqCodebooks(rtr), PQ_TRAIN_ITERS))
-    t("rbooks write")(rbooks.write.mode("overwrite").parquet(s"$base/rcodebooks"))
-    t("rcodes encode+write")(pqAssignSubs(rsubs, rbooks)
-      .join(resid.select(col("vec_id"), col("cell")), "vec_id")
-      .repartition(col("cell")).write.partitionBy("cell")
-      .mode("overwrite").parquet(s"$base/rcodes"))
-    val n = en.count()
-    graft.streaming.StreamingOps.deleteRecursively(java.nio.file.Paths.get(base))
-    n
-  }
-
   private def buildIndex(spark: SparkSession, dir: String): String = {
     val base = indexDir(dir)
     buildIndexAt(spark,

@@ -49,55 +49,34 @@ object StreamAnnUpsert {
     }
 
   /** Known-ids mirror for a SINGLE-WRITER upsert-only maintenance
-    * loop: the committed live vec_ids as LSM parts — a clustered
-    * sorted base built ONCE from storage at loop start (vec_id-
-    * partitioned checkpoint, so every trigger's idempotence anti-join
-    * is exchange- and sort-free on this side) plus one batch-sized
-    * part per committed append, folded back into the base every
-    * [[StreamNearDedup.MEM_FOLD_EVERY]] appends (parts are disjoint
-    * by construction — each part was anti-joined against all earlier
-    * ones — so the fold is a plain union, no distinct). Without the
-    * mirror each trigger re-derived the known set from storage:
-    * a full-index codes scan plus an all-ids distinct SHUFFLE per
-    * micro-batch — per-trigger cost growing with the index, the
-    * state-read creep the admission mirrors (r17) exist to remove.
-    * Compaction between appends folds layout, not ids, so it leaves
-    * the mirror valid; interleaved DELETES would not (see the
-    * [[Similarity.annIndexUpsert]] caller contract) — this loop
-    * performs none. */
-  private[graft] final class KnownIdsMirror(spark: SparkSession,
-      indexBase: String) {
-    @volatile private var base: DataFrame = StreamNearDedup.ckptClustered(
-      spark,
-      Similarity.readCodes(spark, indexBase).select(col("vec_id")).distinct(),
-      col("vec_id"))
-    @volatile private var tail: List[DataFrame] = Nil
-    private var sinceFold = 0
-
-    def parts: Seq[DataFrame] = base :: tail
-
-    /** Fold one committed append's fresh ids in (the return value of
-      * the mirror-driven [[Similarity.annIndexUpsert]]). The incoming
-      * frame arrives ALREADY materialized — the upsert checkpoints the
-      * id projection strictly before it lands the commit marker (its
-      * contract since r17's advice: the marker must never precede the
-      * mirror part, or a failure in between would leave a committed
-      * append the retry's stale mirror re-appends) — so the prepend
-      * here runs no Spark job; only the amortized every-
-      * [[StreamNearDedup.MEM_FOLD_EVERY]] base fold does, and a fold
-      * failure leaves the un-rebased parts intact (the assignment
-      * never happens) while failing the trigger, whose rerun rebuilds
-      * the mirror from storage. */
-    def advance(freshIds: DataFrame): Unit = {
-      tail = freshIds :: tail
-      sinceFold += 1
-      if (sinceFold >= StreamNearDedup.MEM_FOLD_EVERY) {
-        base = StreamNearDedup.ckptClustered(spark,
-          (base :: tail).reduce(_ unionAll _), col("vec_id"))
-        tail = Nil
-        sinceFold = 0
-      }
-    }
+    * loop: the committed live vec_ids as a [[StateMirror]] — a
+    * vec_id-clustered checkpointed base built ONCE from storage at
+    * loop start (every trigger's idempotence anti-join is exchange-
+    * and sort-free on this side) plus one batch-sized part per
+    * committed append. Parts are disjoint by construction — each was
+    * anti-joined against all earlier ones — so the merge is a plain
+    * union, no distinct. Without the mirror each trigger re-derived
+    * the known set from storage: a full-index codes scan plus an
+    * all-ids distinct SHUFFLE per micro-batch — per-trigger cost
+    * growing with the index, the state-read creep the admission
+    * mirrors (r17) exist to remove. Compaction between appends folds
+    * layout, not ids, so it leaves the mirror valid; interleaved
+    * DELETES would not (see the [[Similarity.annIndexUpsert]] caller
+    * contract) — this loop performs none.
+    *
+    * Advance it with the mirror-driven [[Similarity.annIndexUpsert]]'s
+    * return value: that frame arrives ALREADY materialized — the
+    * upsert checkpoints the id projection strictly before it lands the
+    * commit marker (its contract since r17's advice: the marker must
+    * never precede the mirror part, or a failure in between would
+    * leave a committed append the retry's stale mirror re-appends) —
+    * so an advance runs no Spark job except the amortized fold. */
+  private[graft] def knownIds(spark: SparkSession, indexBase: String): StateMirror = {
+    def clustered(ids: DataFrame) =
+      StreamNearDedup.ckptClustered(spark, ids, col("vec_id"))
+    new StateMirror(
+      clustered(Similarity.readCodes(spark, indexBase).select(col("vec_id")).distinct()),
+      parts => clustered(parts.reduce(_ unionAll _)))
   }
 
   /** Gate/bench query: copy the cached base-slice index (immutable
@@ -124,30 +103,20 @@ object StreamAnnUpsert {
     Similarity.copyDir(Similarity.upsertSliceIndex(spark, dir), work)
     val src = stagedDeltaDir(spark, dir)
     val ckpt = graft.Scratch.dir("graft_annups_ckpt_")
-    val ss = spark.newSession()
     // The per-batch deltas are tiny; 32 shuffle partitions would be
     // pure task overhead on every window/join inside the upsert (the
-    // runLiveComplete convention).
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    try {
+    // runLive convention).
+    try StreamingOps.drain(spark, src, ckpt.toString, 8) { (ss, in) =>
       // Per-trigger idempotence runs against the in-memory known-ids
       // mirror: ONE storage read at loop start instead of a full-index
       // scan + all-ids distinct per micro-batch.
-      val known = new KnownIdsMirror(ss, work)
-      val q = ss.readStream.schema(ss.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          Similarity.annIndexUpsert(b.sparkSession, work, b,
-            Some(known.parts)).foreach(known.advance)
-          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-            Similarity.annIndexCompact(b.sparkSession, work)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+      val known = knownIds(ss, work)
+      in.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+        Similarity.annIndexUpsert(b.sparkSession, work, b,
+          Some(known.parts)).foreach(known.advance)
+        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
+          Similarity.annIndexCompact(b.sparkSession, work)
+      }
     } finally StreamingOps.deleteRecursively(ckpt)
     Similarity.readCodes(spark, work)
       .select(col("vec_id"), col("m").cast("int").as("m"), col("code"), col("cell"))

@@ -310,41 +310,39 @@ object StreamKeepBest {
     // fold — the object scaladoc's compaction boundary; the canonical
     // mirror consolidates the event log either way). foldEvery <= 0
     // keeps compaction caller-driven.
-    // Bands are read through the generation pointer (generation base
-    // + unfolded tail); events below stay a plain committed-ids read —
-    // the event log never folds (see the object scaladoc's compaction
-    // boundary), and readPartitioned ignores the pointer.
-    // Base + tail, never one unioned frame — the [[StreamNearDedup
-    // .PersistentAccumulator]] mirror discipline: the clustered base's
-    // probe side is exchange- and sort-free per trigger. The base also
-    // COLLAPSES to one row per (band_idx, band_key) holding the MIN
-    // comp: routing takes min over colliding clusters, and min over
-    // per-part minima equals min over the full rows — so the probe
-    // join emits at most one match per batch key per part instead of
-    // the state's collision multiplicity (hot band keys made it grow
-    // with state). Broadcast-regime tail scans stay raw (batch-sized,
-    // not worth a shuffle); clustered runs and every folded base
-    // collapse.
+    // Both mirrors are [[StateMirror]]s. Bands are read through the
+    // generation pointer (generation base + unfolded tail); events
+    // below stay a plain committed-ids read — the event log never
+    // folds (see the object scaladoc's compaction boundary), and
+    // readPartitioned ignores the pointer. The band base and every
+    // merged band part COLLAPSE to one row per (band_idx, band_key)
+    // holding the MIN comp: routing takes min over colliding clusters,
+    // and min over per-part minima equals min over the full rows — so
+    // the probe join emits at most one match per batch key per part
+    // instead of the state's collision multiplicity (hot band keys
+    // made it grow with state). Broadcast-regime tail scans stay raw
+    // (batch-sized, not worth a shuffle).
     private def collapsedMin(bands: DataFrame): DataFrame =
       bands.groupBy(col("band_idx"), col("band_key"))
         .agg(min(col("comp")).as("comp"))
-    @volatile private var bandsBase: DataFrame =
-      StreamNearDedup.ckptClustered(spark, collapsedMin(
-        StreamNearDedup.readState(spark, log, log.state(committedIds),
-            "bands", emptyBandsPersisted(spark))
-          .select(col("band_idx"), col("band_key"), col("comp"))))
-    @volatile private var bandsTail: List[DataFrame] = Nil
-    // Canonical mirror as an LSM list too — checkpointed base + one
-    // lazy winner-delta scan per committed batch (newest first),
-    // resolved latest-wins by [[resolveLatest]] only for the comps a
-    // trigger actually challenges. The former anti-join+union chain
-    // re-executed one shuffle PER LAYER inside every events write — a
-    // per-trigger cost growing with triggers-since-fold.
-    @volatile private var canonBase: DataFrame =
+    private def clusteredBands(bands: DataFrame): DataFrame =
+      StreamNearDedup.ckptClustered(spark, collapsedMin(bands))
+    private def bandsAt(st: GenerationLog.State): DataFrame =
+      clusteredBands(StreamNearDedup.readState(spark, log, st, "bands",
+          emptyBandsPersisted(spark))
+        .select(col("band_idx"), col("band_key"), col("comp")))
+    private val bands = new StateMirror(bandsAt(log.state(committedIds)),
+      parts => clusteredBands(parts.reduce(_ unionAll _)))
+    // The canonical mirror: checkpointed base + one lazy winner-delta
+    // scan per committed batch, resolved latest-wins by
+    // [[resolveLatest]] only for the comps a trigger actually
+    // challenges. The former anti-join+union chain re-executed one
+    // shuffle PER LAYER inside every events write — a per-trigger cost
+    // growing with triggers-since-fold.
+    private val canon = new StateMirror(
       consolidate(StreamNearDedup.readPartitioned(spark, s"$stateDir/events",
-        committedIds, emptyEvents(spark))).localCheckpoint()
-    @volatile private var canonTail: List[DataFrame] = Nil
-    private var sinceMemFold = 0
+        committedIds, emptyEvents(spark))).localCheckpoint(),
+      parts => resolveLatest(parts).localCheckpoint())
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
@@ -363,13 +361,23 @@ object StreamKeepBest {
       * lands only after BOTH delta writes, so replay visibility is
       * unchanged.
       *
-      * Mirror folds are LAZY (the [[StreamNearDedup
-      * .PersistentAccumulator]] cadence): between fold points both
-      * mirrors are plans over the checkpointed base and up to
-      * [[StreamNearDedup.MEM_FOLD_EVERY]] committed delta scans /
-      * anti-join layers, so steady-state triggers run exactly the two
-      * delta-write jobs plus [[Dedup.componentsBounded]]'s one probe
-      * fetch. Every `foldEvery` committed batches the on-disk band
+      * The persist is best-effort: an evicted or lost cached block is
+      * recomputed, independently per consumer. That is value-safe
+      * because every choice the events plan makes is a total order
+      * over its (persisted or checkpointed) inputs, so a recompute
+      * yields the same rows: [[byQuality]] ranks by (quality DESC,
+      * doc_id ASC) over unique doc_ids, challenger routing takes the
+      * min colliding comp, [[Dedup.componentsBounded]] labels each
+      * component with its min id, and [[resolveLatest]] takes the max
+      * generation index, unique per part. The events file and the
+      * band delta of one committed batch therefore always agree
+      * (StreamNearDedupSpec pins a recompute against the persist).
+      *
+      * Mirror folds are LAZY (both [[StateMirror]]s): between fold
+      * points each mirror is its checkpointed base plus up to
+      * [[StreamNearDedup.MEM_FOLD_EVERY]] committed delta scans, so
+      * steady-state triggers run exactly the two delta-write jobs plus
+      * [[Dedup.componentsBounded]]'s one probe fetch. Every `foldEvery` committed batches the on-disk band
       * layout folds too ([[compactBands]] from inside the loop — safe:
       * foreachBatch is the single writer and runs serially) and the
       * band mirror re-bases onto the new generation. */
@@ -404,8 +412,7 @@ object StreamKeepBest {
           // [[StreamNearDedup.PersistentAccumulator]] rationale).
           label("probe+components")
           val (events0, _) = keepBestWithKeys(spark, batch, keys,
-            bandsBase :: bandsTail, canonTail :+ canonBase,
-            ckptProbe = committedIds.nonEmpty)
+            bands.parts, canon.parts, ckptProbe = committedIds.nonEmpty)
           // ONE execution of the batch plan feeds BOTH delta writes:
           // persist the events rows, then run the writes as concurrent
           // job chains (guide §2.6, the awaitAll idiom). The band
@@ -452,43 +459,21 @@ object StreamKeepBest {
           batch.unpersist(blocking = false)
         }
         committedIds += batchId
-        // One tail part per committed delta — the [[StreamNearDedup
-        // .PersistentAccumulator]] L0 discipline and rationale
-        // (broadcast-regime deltas stay lazy scans; bigger ones become
-        // clustered sorted runs; never consolidated). Past the
-        // broadcast regime the run is min-collapsed like the base, so
-        // the routing probe's output stays ≤ batch keys × live parts.
-        bandsTail = {
-          val path = log.payload("bands", batchId)
-          val scan = spark.read.parquet(path)
-            .select(col("band_idx"), col("band_key"), col("comp"))
-          if (StreamNearDedup.dirBytes(path) <= StreamNearDedup.RUN_CLUSTER_BYTES)
-            scan
-          else StreamNearDedup.ckptClustered(spark, collapsedMin(scan))
-        } :: bandsTail
         // The winners delta IS the canonical update: a replacement's
         // newer row supersedes the cluster's older one at resolve
         // time, a new cluster's row introduces it. One lazy scan of
         // the just-written events file — no per-trigger join.
-        canonTail = winners :: canonTail
-        sinceMemFold += 1; sinceDiskFold += 1
+        canon.advance(winners)
+        sinceDiskFold += 1
         if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
           compactBands(spark, stateDir)
-          bandsBase = StreamNearDedup.ckptClustered(spark, collapsedMin(
-            StreamNearDedup.readState(spark, log, log.state(), "bands",
-                emptyBandsPersisted(spark))
-              .select(col("band_idx"), col("band_key"), col("comp"))))
-          bandsTail = Nil
-          canonBase = resolveLatest(canonTail :+ canonBase).localCheckpoint()
-          canonTail = Nil
-          sinceDiskFold = 0; sinceMemFold = 0
-        } else if (sinceMemFold >= StreamNearDedup.MEM_FOLD_EVERY) {
-          bandsBase = StreamNearDedup.ckptClustered(spark, collapsedMin(
-            (bandsBase :: bandsTail).reduce(_ unionAll _)))
-          bandsTail = Nil
-          canonBase = resolveLatest(canonTail :+ canonBase).localCheckpoint()
-          canonTail = Nil
-          sinceMemFold = 0
+          bands.rebase(bandsAt(log.state()))
+          canon.fold()
+          sinceDiskFold = 0
+        } else {
+          val path = log.payload("bands", batchId)
+          bands.advanceCommitted(path, spark.read.parquet(path)
+            .select(col("band_idx"), col("band_key"), col("comp")))
         }
       }
     }
@@ -507,28 +492,13 @@ object StreamKeepBest {
     * survives the restart). Isolated `newSession`. */
   private[graft] def runLiveAgainst(spark: SparkSession, path: String,
       ckpt: String, stateDir: String,
-      foldEvery: Int = StreamNearDedup.DISK_FOLD_EVERY): Unit = {
-    val schema = spark.read.parquet(path).schema
-    val ss = spark.newSession()
-    // Per-trigger shuffles move one batch's delta, not the corpus —
-    // size them to delta volume (see
-    // [[StreamNearDedup.triggerShufflePartitions]]); checkpoint
-    // retention trimmed per the live-gate convention.
-    ss.conf.set("spark.sql.shuffle.partitions",
-      StreamNearDedup.triggerShufflePartitions(spark).toString)
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    val acc = new PersistentKeepBest(ss, stateDir, foldEvery = foldEvery)
-    val q = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(path)
-      .select(col("doc_id"), col("text"))
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) => acc.onBatch(b, id))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-  }
+      foldEvery: Int = StreamNearDedup.DISK_FOLD_EVERY): Unit =
+    StreamingOps.drain(spark, path, ckpt,
+        StreamNearDedup.triggerShufflePartitions(spark)) { (ss, src) =>
+      val acc = new PersistentKeepBest(ss, stateDir, foldEvery = foldEvery)
+      src.select(col("doc_id"), col("text")).writeStream
+        .foreachBatch((b: DataFrame, id: Long) => acc.onBatch(b, id))
+    }
 
   /** Gate/bench query: keep-best admission under the live engine with
     * REAL batch boundaries — the same [[Dedup.PACED_BATCHES]]-file

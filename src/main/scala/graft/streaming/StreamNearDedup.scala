@@ -241,16 +241,14 @@ object StreamNearDedup {
     // Only COMMITTED batches' keys enter the mirror (an uncommitted
     // batch's partial directories are invisible until its replay
     // overwrites them and lands the marker), read through the
-    // generation pointer: generation base + unfolded tail. The mirror
-    // is held as BASE + TAIL parts (never unioned into one frame —
-    // see the multi-part [[admitWithKeys]]): the base a band-clustered
-    // sorted checkpoint whose per-trigger probe is exchange- and
-    // sort-free, the tail the committed deltas since the last fold.
-    @volatile private var stateBase: DataFrame =
-      ckptClustered(spark, readState(spark, log, log.state(committedIds), "bands")
+    // generation pointer: generation base + unfolded tail, checkpointed
+    // band-clustered so the per-trigger probe's state side is a sorted
+    // merge scan.
+    private def bandsAt(st: GenerationLog.State): DataFrame =
+      ckptClustered(spark, readState(spark, log, st, "bands")
         .select(col("band_idx"), col("band_key")))
-    @volatile private var stateTail: List[DataFrame] = Nil
-    private var sinceMemFold = 0
+    private val mirror = new StateMirror(bandsAt(log.state(committedIds)),
+      parts => ckptClustered(spark, parts.reduce(_ unionAll _)))
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
@@ -295,7 +293,7 @@ object StreamNearDedup {
           // the probe is trivially empty and the checkpoint job would
           // scan the whole batch's keys for nothing.
           val (kept, newKeys) =
-            admitWithKeys(spark, batch, keys, stateBase :: stateTail,
+            admitWithKeys(spark, batch, keys, mirror.parts,
               ckptProbe = committedIds.nonEmpty)
           // coalesce(1): a batch's state delta is small relative to the
           // corpus (it is one batch's keys/admissions), and writing it
@@ -324,68 +322,26 @@ object StreamNearDedup {
           if (spreadBatches) batch.unpersist(blocking = false)
         }
         committedIds += batchId
-        // Each committed delta becomes its OWN tail part (L0 of the
-        // in-memory LSM) — never consolidated: a consolidated lazy
-        // tail re-shuffled + re-sorted MEM_FOLD_EVERY batches of keys
-        // every trigger once it outgrew the broadcast threshold
-        // (measured: the 2.7→4.7 s/batch creep at scale-probe batch
-        // sizes). A delta small enough to broadcast stays a lazy
-        // parquet scan (AQE broadcasts its branch — exchange-free on
-        // the state side, no extra job); a bigger one pays ONE
-        // clustering job (batch-bounded) and probes as a sorted merge
-        // run like the base. The written file size decides for free.
-        stateTail = tailRun(spark, log.payload("bands", batchId),
-          col("band_idx"), col("band_key")) :: stateTail
-        sinceMemFold += 1; sinceDiskFold += 1
+        sinceDiskFold += 1
         if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
           compactState(spark, stateDir)
-          stateBase = ckptClustered(spark,
-            readState(spark, log, log.state(), "bands")
-              .select(col("band_idx"), col("band_key")))
-          stateTail = Nil
-          sinceDiskFold = 0; sinceMemFold = 0
-        } else if (sinceMemFold >= MEM_FOLD_EVERY) {
-          stateBase = ckptClustered(spark,
-            (stateBase :: stateTail).reduce(_ unionAll _))
-          stateTail = Nil
-          sinceMemFold = 0
+          mirror.rebase(bandsAt(log.state()))
+          sinceDiskFold = 0
+        } else {
+          val path = log.payload("bands", batchId)
+          mirror.advanceCommitted(path, spark.read.parquet(path)
+            .select(col("band_idx"), col("band_key")))
         }
       }
     }
   }
 
-  /** In-memory mirror fold cadence: between folds the mirrors stay
-    * LAZY unions over committed delta files (tiny parquet scans — the
-    * per-trigger probe re-lists them for free), capping plan depth
-    * without paying a localCheckpoint job every trigger. */
+  /** In-memory mirror fold cadence ([[StateMirror]]): between folds
+    * the mirrors stay LAZY unions over committed delta files (tiny
+    * parquet scans — the per-trigger probe re-lists them for free),
+    * capping plan depth without paying a localCheckpoint job every
+    * trigger. */
   private[graft] val MEM_FOLD_EVERY = 8
-
-  /** Parquet bytes under a directory (recursive) — the free size
-    * signal the tail-run and probe-checkpoint decisions read (the
-    * files were just written, or are being resumed from). */
-  private[streaming] def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-    walk(new java.io.File(path))
-  }
-
-  /** Broadcast-regime bound for a tail delta: below it the lazy scan's
-    * probe branch broadcasts (exchange-free on the state side, no
-    * materialization job); above it the run pays one clustering job
-    * and probes as a sorted merge. Conservatively under Spark's 10 MB
-    * autoBroadcastJoinThreshold — parquet bytes underestimate the
-    * in-memory relation. */
-  private[streaming] val RUN_CLUSTER_BYTES: Long = 4L << 20
-
-  /** One tail part for a just-committed delta directory: lazy scan in
-    * the broadcast regime, clustered sorted run past it. */
-  private def tailRun(spark: SparkSession, path: String,
-      cols: org.apache.spark.sql.Column*): DataFrame = {
-    val scan = spark.read.parquet(path).select(cols: _*)
-    if (dirBytes(path) <= RUN_CLUSTER_BYTES) scan
-    else ckptClustered(spark, scan)
-  }
 
   /** Band-state mirror checkpoint, CLUSTERED for the per-trigger
     * probe: hash-partitioned and sorted on (band_idx, band_key), so
@@ -634,29 +590,14 @@ object StreamNearDedup {
     * session state. */
   private[graft] def runLiveAgainst(spark: SparkSession, path: String,
       paced: Boolean, ckpt: String, stateDir: String,
-      foldEvery: Int = DISK_FOLD_EVERY): Unit = {
-    val schema = spark.read.parquet(path).schema
-    val ss = spark.newSession()
-    // Per-trigger shuffles move one batch's delta, not the corpus —
-    // size them to delta volume (see [[triggerShufflePartitions]]);
-    // checkpoint retention trimmed per the live-gate convention.
-    ss.conf.set("spark.sql.shuffle.partitions",
-      triggerShufflePartitions(spark).toString)
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    val acc = new PersistentAccumulator(ss, stateDir, foldEvery = foldEvery,
-      spreadBatches = paced)
-    val reader = ss.readStream.schema(schema)
-    val src = (if (paced) reader.option("maxFilesPerTrigger", 1) else reader)
-      .parquet(path)
-    val q = src
-      .select(col("doc_id"), col("text"))
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) => acc.onBatch(b, id))
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-  }
+      foldEvery: Int = DISK_FOLD_EVERY): Unit =
+    StreamingOps.drain(spark, path, ckpt, triggerShufflePartitions(spark),
+        paced = paced) { (ss, src) =>
+      val acc = new PersistentAccumulator(ss, stateDir, foldEvery = foldEvery,
+        spreadBatches = paced)
+      src.select(col("doc_id"), col("text")).writeStream
+        .foreachBatch((b: DataFrame, id: Long) => acc.onBatch(b, id))
+    }
 
   // --- stream_neardedup_paced: the cross-batch state path, live ----------
 

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Per-key trending state (the reference's `mapWithState` tuple
   * `(curCount, "%08d" time, prevCount)` — `TrendingArrivals.scala:86-98`). */
@@ -293,80 +294,93 @@ object StreamingOps extends QueryModule {
     * `event_count_hourly`'s DuckDB oracle and gives the bench a
     * wall-time number for the streaming engine itself. */
   def streamHourlyLive(spark: SparkSession, dir: String): DataFrame =
-    runLiveComplete(spark, stagedEventsDir(spark, dir),
-      "stream_hourly_live")(eventCounts)
+    runLive(spark, stagedEventsDir(spark, dir),
+      "stream_hourly_live", "complete")(eventCounts)
       .orderBy(col("window_start"))
 
-  /** The shared live-run scaffold every complete-mode gate query rides
-    * (hourly counts, session windows): file-queue source paced one
-    * file per micro-batch, `Trigger.AvailableNow`, checkpointed
-    * state, complete-mode memory sink, result re-materialized in the
-    * CALLER's session.
+  /** The shared live-run scaffold every memory-sink gate query rides
+    * (hourly counts, session windows): [[drain]] at 4 shuffle
+    * partitions, result re-materialized in the CALLER's session.
     *
     * State-partition count is fixed by the FIRST batch's shuffle
     * partitions and every micro-batch commits one store per state
     * partition: 32 partitions for a 720-window aggregate is pure
     * checkpoint-file overhead (measured 13s → ~half at 8; 4 shaves
     * another ~15% and the hundreds of windows per store are still
-    * trivial). Run in an isolated newSession() so the narrower
-    * shuffle setting (and the memory-sink temp view) never touch the
-    * caller's session — a concurrent query in the same session used
-    * to silently run at 8 partitions for the duration (round-6
-    * advice). Retention is trimmed too — the default keeps 100
-    * checkpoint versions — and non-append gates skip the terminal
-    * no-data batch: complete mode re-emits the full table every
-    * trigger, so the watermark-advance batch changes nothing but
-    * costs a full trigger's bookkeeping. Append-mode gates KEEP it —
-    * it is the terminal watermark advance that seals their final
-    * sessions.
-    *
-    * The result is collected (then re-parallelized for the caller) so
-    * the sink view and checkpoint can be reclaimed before returning:
-    * repeated bench invocations used to leak both for the session's
-    * lifetime. The collect is bounded at O(result rows) BY THE MEMORY
-    * SINK'S OWN CONTRACT (complete mode holds the result table on the
-    * driver); at 100 TB the production form is the parquet/foreachBatch
-    * sink FileStreamSpec exercises — these queries' job is to
-    * wall-clock the live engine on a driver-safe aggregate. */
-  private def runLiveComplete(spark: SparkSession, src: String,
-      namePrefix: String)(build: DataFrame => DataFrame): DataFrame =
-    runLive(spark, src, namePrefix, "complete")(build)
-
-  /** [[runLiveComplete]]'s body with the output mode as a parameter:
-    * append-mode gates ride the same scaffold — there the memory sink
-    * accumulates only what the watermark has SEALED and emitted, which
-    * is the eviction semantics under test. */
+    * trivial). Non-append gates skip the terminal no-data batch:
+    * complete mode re-emits the full table every trigger, so the
+    * watermark-advance batch changes nothing but costs a full
+    * trigger's bookkeeping. Append-mode gates KEEP it — it is the
+    * terminal watermark advance that seals their final sessions, and
+    * there the memory sink accumulates only what the watermark has
+    * SEALED and emitted, which is the eviction semantics under test. */
   private def runLive(spark: SparkSession, src: String,
       namePrefix: String, mode: String)(
-      build: DataFrame => DataFrame): DataFrame = {
+      build: DataFrame => DataFrame): DataFrame =
+    memoryRows(spark, namePrefix, src,
+      if (mode == "append") Map.empty else noDataBatchesOff)(
+      build(_).writeStream.outputMode(mode))
+
+  /** Skip the terminal no-data micro-batch (see [[runLive]]). */
+  private val noDataBatchesOff =
+    Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** [[drain]] into a memory sink at 4 shuffle partitions, then
+    * re-materialize its rows in the CALLER's session, so the sink view
+    * and the checkpoint are reclaimed before returning — repeated
+    * bench invocations used to leak both for the session's lifetime.
+    * The collect is bounded at O(result rows) BY THE MEMORY SINK'S OWN
+    * CONTRACT (it holds the result table on the driver); at 100 TB the
+    * production form is the parquet/foreachBatch sink FileStreamSpec
+    * exercises — these queries' job is to wall-clock the live engine
+    * on a driver-safe aggregate. */
+  private def memoryRows(spark: SparkSession, namePrefix: String, src: String,
+      confs: Map[String, String])(
+      sink: DataFrame => DataStreamWriter[_]): DataFrame = {
     val name = s"${namePrefix}_${liveRuns.incrementAndGet()}"
     val ckpt = graft.Scratch.dir("graft_stream_ckpt_")
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    if (mode != "append")
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val rows =
+    val (schema, rows) =
       try {
-        val q = build(
-            ss.readStream.schema(ss.read.parquet(src).schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-          .writeStream.format("memory").queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-          q.recentProgress.foreach(p => println(
-            s"DEBUG batch=${p.batchId} durs=${p.durationMs}"))
-        val out = ss.table(name)
-        (out.schema, out.collect().toSeq)
-      } finally {
-        ss.catalog.dropTempView(name)
-        deleteRecursively(ckpt)
-      }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows._2, 1), rows._1)
+        val q = drain(spark, src, ckpt.toString, 4, confs) { (_, in) =>
+          sink(in).format("memory").queryName(name)
+        }
+        val ss = q.sparkSession
+        try {
+          val out = ss.table(name)
+          (out.schema, out.collect().toSeq)
+        } finally ss.catalog.dropTempView(name)
+      } finally deleteRecursively(ckpt)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+  }
+
+  /** The one live-run scaffold: drain the parquet files under `src`
+    * through the live engine to `sink` and return the terminated
+    * query. It runs in an isolated `newSession` (the caller's session
+    * conf and catalog are never touched) with `shufflePartitions`
+    * sized to one micro-batch's delta, `confs` on top, checkpoint
+    * retention trimmed to 2 (the default keeps 100 versions), a file
+    * source with the files' parquet schema — `paced` to one file per
+    * micro-batch unless told otherwise — checkpointed at `ckpt`, under
+    * `Trigger.AvailableNow`. `sink` gets the session and the source
+    * and returns the writer; its `start` and termination wait happen
+    * here, with `stop` on every exit. */
+  private[graft] def drain(spark: SparkSession, src: String, ckpt: String,
+      shufflePartitions: Int, confs: Map[String, String] = Map.empty,
+      paced: Boolean = true)(
+      sink: (SparkSession, DataFrame) => DataStreamWriter[_]): StreamingQuery = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
+    confs.foreach { case (k, v) => ss.conf.set(k, v) }
+    val reader = ss.readStream.schema(ss.read.parquet(src).schema)
+    val in = (if (paced) reader.option("maxFilesPerTrigger", 1) else reader)
+      .parquet(src)
+    val q = sink(ss, in)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    q
   }
 
   // --- stream_sessions_live: session-window merging, live ----------------
@@ -391,8 +405,8 @@ object StreamingOps extends QueryModule {
     // batch-boundary fragments (measured: 832 of 946 sessions survive
     // watermarked at sf0.001) — eviction semantics belong to the
     // append-mode path StreamingSpec covers.
-    runLiveComplete(spark, stagedEventsDir(spark, dir),
-      "stream_sessions_live")(userSessions(_, watermarked = false))
+    runLive(spark, stagedEventsDir(spark, dir),
+      "stream_sessions_live", "complete")(userSessions(_, watermarked = false))
       .orderBy(col("user_id"), col("session_start"))
 
   // --- stream_sessions_append: watermark-evicted sessions, live ----------
@@ -580,42 +594,16 @@ object StreamingOps extends QueryModule {
     * DuckDB oracle, and the engine must reproduce the batch replay
     * bit-for-bit across [[TREND_BATCHES]]+1 batches. */
   def streamTrendingLive(spark: SparkSession, dir: String): DataFrame = {
-    val src = stagedTrendingDir(spark, dir)
-    val name = s"stream_trending_live_${liveRuns.incrementAndGet()}"
-    val ckpt = graft.Scratch.dir("graft_trend_ckpt_")
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
     // NoTimeout state machine: the terminal no-data batch has nothing
     // to time out or seal — skipping it saves one full trigger's
     // bookkeeping (the runLive convention for non-append gates).
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+    val confs = noDataBatchesOff + ("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows =
-      try {
-        import ss.implicits._
-        val events = ss.readStream.schema(ss.read.parquet(src).schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-          .as[RawEvent]
-        val q = trendingRawStateMachine(events)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        val out = ss.table(name)
-        // O(windows) on the driver by the memory sink's contract — the
-        // same bound streamHourlyLive documents.
-        (out.schema, out.collect().toSeq)
-      } finally {
-        ss.catalog.dropTempView(name)
-        deleteRecursively(ckpt)
-      }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows._2, 1), rows._1)
-      .orderBy(col("event_type"), col("window_start"))
+    memoryRows(spark, "stream_trending_live", stagedTrendingDir(spark, dir),
+        confs) { in =>
+      import in.sparkSession.implicits._
+      trendingRawStateMachine(in.as[RawEvent]).writeStream.outputMode("update")
+    }.orderBy(col("event_type"), col("window_start"))
   }
 
   /** Await EVERY future before letting any failure propagate. The

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * counts — so "where does the time go" separates executor compute
   * from scheduler/driver gaps (wall >> task-sum/cores = the job is
   * overhead-bound, not compute-bound). Profiling aid only, like
-  * [[QueryProbe]] / [[BuildProfile]]: `sbt "runMain
+  * [[QueryProbe]]: `sbt "runMain
   * graft.tools.JobProbe <query> [reps]"`. */
 object JobProbe {
   final case class JobRow(id: Int, wallMs: Long, taskMs: Long,
@@ -19,21 +19,14 @@ object JobProbe {
       sys.error("usage: JobProbe <query[,query...]> [reps]"))
     val reps = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.LocalSession.cpus
+    val spark = graft.LocalSession.build()
     names.foreach(n => probe(spark, n, reps, sfDir, cpus))
     spark.stop()
   }
 
   private def probe(spark: SparkSession, name: String, reps: Int,
-      sfDir: String, cpus: String): Unit = {
+      sfDir: String, cpus: Int): Unit = {
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'"))
 

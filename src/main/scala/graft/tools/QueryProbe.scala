@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query diagnostic probe: prints the physical-plan shape
   * counters a perf audit reads first (parquet scans, reused exchanges,
   * total exchanges, codegen spans) and a warm repeat-timing series for
@@ -21,15 +19,7 @@ object QueryProbe {
       sys.error("usage: QueryProbe <query_name> [reps] [--plan]"))
     val reps = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.build()
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; see SparkEntry.queries"))
     val df = fn(spark, sfDir)

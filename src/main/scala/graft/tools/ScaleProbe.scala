@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling probe for the dedup family (round-9 judge item): every 100 TB
   * argument so far is a plan-SHAPE argument at sf0.1 — this main makes
   * it a MEASURED one. It generates an sf1-scale documents table (10×
@@ -59,21 +57,14 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.flatMap(_.toIntOption).getOrElse(50000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.LocalSession.cpus
+    val spark = graft.LocalSession.build()
     import spark.implicits._
 
     val dir = graft.Scratch.dir("graft_sf1_probe_")
     generate(n, seed = 42L)
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // Unit-norm random embeddings at the SAME growth ratio as the
     // documents (the fixture keeps embeddings smaller than docs — 2000
@@ -91,7 +82,7 @@ object ScaleProbe {
         val nm = math.sqrt(raw.map(x => x * x).sum)
         (id, raw.map(x => (x / nm).toFloat).toSeq, rnd.nextInt(10))
       }.toDF("vec_id", "embedding", "label")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     }
 
@@ -127,7 +118,7 @@ object ScaleProbe {
           (pmod(xxhash64(col("id"), lit(4)), lit(1000000L)) / 1e6)
             .as("value"),
           lit("{}").as("props"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
     }
 
@@ -404,19 +395,14 @@ object ScaleProbe {
       val src = graft.streaming.StreamingOps.stagedSessionsDir(
         spark, dir.toString)
       val ckpt = graft.Scratch.dir("graft_sf1_sess_ckpt_")
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
       try {
-        val q = graft.streaming.StreamingOps.userSessions(
-            ss.readStream.schema(ss.read.parquet(src).schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-          .writeStream.format("memory").queryName("sf1_sessions_append")
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+        val q = graft.streaming.StreamingOps.drain(spark, src, ckpt.toString, 4) {
+          (_, in) =>
+            graft.streaming.StreamingOps.userSessions(in)
+              .writeStream.format("memory").queryName("sf1_sessions_append")
+              .outputMode("append")
+        }
+        q.sparkSession.catalog.dropTempView("sf1_sessions_append")
         val per = q.recentProgress.toSeq.map { p =>
           val st = p.stateOperators.headOption
           f"""{"batch":${p.batchId},"sec":${p.batchDuration / 1000.0}%.2f,""" +
@@ -427,10 +413,7 @@ object ScaleProbe {
         per.mkString(
           s""""sessions_append":{"batches":${per.size},"per_batch":[""",
           ",", "]}")
-      } finally {
-        ss.catalog.dropTempView("sf1_sessions_append")
-        graft.streaming.StreamingOps.deleteRecursively(ckpt)
-      }
+      } finally graft.streaming.StreamingOps.deleteRecursively(ckpt)
     }
 
     // ANN maintenance idempotence probe (round-17): the upsert loop's
@@ -464,8 +447,7 @@ object ScaleProbe {
             spark, annDir.toString, emb.filter(col("vec_id") < 200),
             knownParts = None))
           val (tMirrorBuild, mirror) = sec(
-            new graft.streaming.StreamAnnUpsert.KnownIdsMirror(
-              spark, annDir.toString))
+            graft.streaming.StreamAnnUpsert.knownIds(spark, annDir.toString))
           val (tMirror, fresh) = sec(graft.operators.Similarity.annIndexUpsert(
             spark, annDir.toString,
             emb.filter(col("vec_id") >= 200 && col("vec_id") < 400),

@@ -439,7 +439,7 @@ class SimilaritySpec extends SparkSpecBase {
     val idx = java.nio.file.Files.createTempDirectory("graft_mirror_idx_")
       .toString
     Similarity.buildIndexAt(spark, base, idx)
-    val mirror = new graft.streaming.StreamAnnUpsert.KnownIdsMirror(spark, idx)
+    val mirror = graft.streaming.StreamAnnUpsert.knownIds(spark, idx)
     (0 until 9).foreach { r =>
       val chunk = raw.filter(col("vec_id") % 4 === 3 &&
         pmod(floor(col("vec_id") / 4), lit(9)) === r)

@@ -867,4 +867,142 @@ class StreamNearDedupSpec extends SparkSpecBase {
     assert(plan.contains("ExistingRDD"),
       "the id-base side must be the checkpointed scan itself")
   }
+
+  // --- the in-memory state mirror -------------------------------------------
+
+  test("near-dedup: admission across the mem fold equals the in-memory Accumulator") {
+    // 11 batches through ONE PersistentAccumulator cross the mirror's
+    // MEM_FOLD_EVERY = 8 fold (the disk fold stays at 64): the last
+    // three batches probe a folded base plus fresh tail parts. Each
+    // batch k carries a fresh doc, a near-dup of the previous batch's
+    // fresh doc (in the tail, or in the base after the fold), a
+    // near-dup of batch 0's (always in the base) and an intra-batch
+    // near-dup pair of which only the min id may be admitted.
+    val rnd = new scala.util.Random(808L)
+    def text(): String = Seq.fill(15)(s"w${rnd.nextInt(400)}").mkString(" ")
+    val nb = 11
+    val fresh = Seq.fill(nb)(text())
+    val pair = Seq.fill(nb)(text())
+    val bs = (0 until nb).map { k =>
+      Seq(doc(1000L + k, fresh(k)), doc(4000L + k, pair(k)),
+        doc(5000L + k, pair(k) + " twin")) ++
+        (if (k == 0) Nil
+         else Seq(doc(2000L + k, fresh(k - 1) + " tail"),
+           doc(3000L + k, fresh(0) + s" again$k")))
+    }
+    assert(nb > StreamNearDedup.MEM_FOLD_EVERY + 1)
+    val state = java.nio.file.Files.createTempDirectory("graft_nd_memfold_")
+    try {
+      val persistent = new StreamNearDedup.PersistentAccumulator(spark, state.toString)
+      val inMemory = new StreamNearDedup.Accumulator(spark)
+      bs.zipWithIndex.foreach { case (b, k) =>
+        persistent.onBatch(b.toDF("doc_id", "text"), k.toLong)
+        inMemory.onBatch(b.toDF("doc_id", "text"), k.toLong)
+      }
+      def rows(df: DataFrame) =
+        df.select("doc_id", "batch_id").as[(Long, Long)].collect().toSet
+      val got = rows(persistent.admitted)
+      assert(got == rows(inMemory.admitted),
+        s"persistent ${got.toSeq.sorted} != in-memory ${rows(inMemory.admitted).toSeq.sorted}")
+      assert(got == (0 until nb).flatMap(k =>
+        Seq((1000L + k, k.toLong), (4000L + k, k.toLong))).toSet,
+        s"admitted ${got.toSeq.sorted}")
+    } finally graft.streaming.StreamingOps.deleteRecursively(state)
+  }
+
+  test("state mirror: a delta over RUN_CLUSTER_BYTES enters clustered, a small one stays a scan") {
+    // The tail-run rule: a committed delta past the broadcast regime
+    // must probe like the base — no exchange and no sort on the state
+    // side (the plan pins of the clustered-probe test below) — while
+    // a broadcast-regime delta stays the lazy parquet scan.
+    import graft.streaming.StateMirror
+    val dir = java.nio.file.Files.createTempDirectory("graft_mirror_run_")
+    try {
+      val (big, small) = (s"$dir/big", s"$dir/small")
+      spark.range(700000L)
+        .select((col("id") % 16).cast("int").as("band_idx"),
+          xxhash64(col("id")).as("band_key"))
+        .coalesce(1).write.parquet(big)
+      spark.range(100L)
+        .select((col("id") % 16).cast("int").as("band_idx"),
+          xxhash64(col("id")).as("band_key"))
+        .coalesce(1).write.parquet(small)
+      assert(StateMirror.dirBytes(big) > StateMirror.RUN_CLUSTER_BYTES,
+        s"fixture delta is only ${StateMirror.dirBytes(big)} bytes")
+      val mirror = new StateMirror(
+        StreamNearDedup.ckptClustered(spark, StreamNearDedup.emptyState(spark)),
+        parts => StreamNearDedup.ckptClustered(spark, parts.reduce(_ unionAll _)))
+      mirror.advanceCommitted(small, spark.read.parquet(small))
+      assert(mirror.parts.size == 2)
+      assert(!mirror.parts.head.queryExecution.executedPlan.toString
+        .contains("ExistingRDD"), "a small delta must stay a lazy scan")
+      mirror.advanceCommitted(big, spark.read.parquet(big))
+      assert(mirror.parts.size == 3)
+      val run = mirror.parts.head
+      val keys = (0L until 500L)
+        .map(i => ((i % 16).toInt, i * 7919L, i)).toDF("band_idx", "band_key", "doc_id")
+      val threshold = "spark.sql.autoBroadcastJoinThreshold"
+      val old = spark.conf.get(threshold)
+      val plan = try {
+        spark.conf.set(threshold, "-1")
+        val probe = keys.join(run, Seq("band_idx", "band_key"), "left_semi")
+        probe.queryExecution.toRdd.count()
+        probe.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+      } finally spark.conf.set(threshold, old)
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
+      val sorts = "Sort \\[".r.findAllIn(plan).size
+      assert(exchanges == 1, s"expected exactly the keys-side exchange, got $exchanges:\n$plan")
+      assert(sorts == 1, s"expected exactly the keys-side sort, got $sorts:\n$plan")
+      assert(plan.contains("ExistingRDD"),
+        "the big delta must be the checkpointed scan itself")
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  test("keep-best: a trigger's events recompute to the same rows after unpersist") {
+    // The per-trigger persist is best-effort; an evicted block is
+    // recomputed per consumer, which is value-safe only if every
+    // choice in the events plan is a total order. The fixture has the
+    // ties and the multi-cluster routing those orders resolve: docs
+    // 300/301 share a text (a quality tie) whose band keys hit TWO
+    // clusters (100 and 200 — routing takes the min), 400/401 share a
+    // text and form a fresh cluster (another tie), and comp 100 has
+    // two canonical parts (latest-wins must pick the newer one).
+    import graft.streaming.StreamKeepBest
+    val tied = base + " zebra"
+    val batch = Seq(doc(300, tied), doc(301, tied),
+        doc(400, other + " nightly"), doc(401, other + " nightly"))
+      .toDF("doc_id", "text").repartition(4, col("doc_id")).persist()
+    val keys = operators.Dedup.bandKeys(spark, batch).persist()
+    try {
+      val bands = keys.filter(col("doc_id") === 300L)
+        .select(col("band_idx"), col("band_key"),
+          when(col("band_idx") % 2 === 0, lit(100L)).otherwise(lit(200L)).as("comp"))
+        .localCheckpoint()
+      assert(bands.select("comp").distinct().count() == 2)
+      val canonParts = Seq(
+        Seq((100L, 150L, 0.0)).toDF("comp", "doc_id", "quality"),
+        Seq((100L, 100L, 0.99), (200L, 200L, 0.99)).toDF("comp", "doc_id", "quality"))
+      val (events0, _) = StreamKeepBest.keepBestWithKeys(spark, batch, keys,
+        Seq(bands), canonParts, ckptProbe = true)
+      val events = events0.persist()
+      def rows(): Seq[(Long, Long, Double, String)] =
+        events.as[(Long, Long, Double, String)].collect().toSeq.sortBy(_._1)
+      val cached = rows()
+      assert(events.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      events.unpersist(blocking = true)
+      keys.unpersist(blocking = true)
+      batch.unpersist(blocking = true)
+      assert(events.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      assert(rows() == cached, "recomputed events differ from the persisted rows")
+      val ev = cached.map(r => r._1 -> r).toMap
+      assert(ev(300L)._2 == 100L && ev(300L)._4 == "replace", s"${ev(300L)}")
+      assert(ev(301L)._2 == 100L && ev(301L)._4 == "drop" && ev(301L)._3 == ev(300L)._3)
+      assert(ev(400L)._2 == 400L && ev(400L)._4 == "new", s"${ev(400L)}")
+      assert(ev(401L)._2 == 400L && ev(401L)._4 == "drop" && ev(401L)._3 == ev(400L)._3)
+    } finally {
+      keys.unpersist(blocking = false)
+      batch.unpersist(blocking = false)
+    }
+  }
 }
