@@ -5,21 +5,21 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** The engine's `SparkSessionExtensions` injection point — the
-  * build-time form of what [[gfn.MinHashSignature.register]] /
-  * [[gfn.SimHashSignature.register]] do at query-construction time.
-  * A deployment that owns session creation wires it with
+/** The engine's `SparkSessionExtensions` injection point: the one name
+  * table through which plain SQL reaches the native kernels in
+  * [[graft.functions]]. A deployment that owns session creation wires
+  * it with
   *
   * {{{
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * and both native expressions are then available to plain SQL
+  * and every kernel is then available to plain SQL
   * (`SELECT graft_minhash(hs) FROM ...`) in every session of that
-  * context, with the engine's default coefficients. The runtime
-  * `register` calls remain in the operators so the library also works
-  * against sessions it did not create (and tests can re-register
-  * narrow variants); registration is idempotent either way. */
+  * context, with the engine's default arguments. The operators never
+  * look these names up: they construct the kernel expressions directly
+  * (`ColumnBridge`), so their plans analyze in any session, with or
+  * without this extension, and leave its function catalog untouched. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(ext.injectFunction)

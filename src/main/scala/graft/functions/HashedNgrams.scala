@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -150,21 +149,4 @@ object HashedNgrams {
     while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     java.lang.Long.valueOf(v)
   }
-
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotently registers both named forms. */
-  def register(spark: SparkSession): Unit =
-    registered.synchronized {
-      if (!java.lang.Boolean.TRUE.equals(registered.get(spark))) {
-        val reg = spark.sessionState.functionRegistry
-        reg.createOrReplaceTempFunction(SHINGLE_NAME,
-          exprs => HashedNgrams(exprs.head, 3), "built-in")
-        reg.createOrReplaceTempFunction(TOKHASH_NAME,
-          exprs => HashedNgrams(exprs.head, 1), "built-in")
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -22,9 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * to the fold it replaces (MinHashSpec asserts equality on both
   * paths).
   *
-  * Wired in via the session `FunctionRegistry`
-  * ([[MinHashSignature.register]]) — the runtime form of the
-  * `SparkSessionExtensions.injectFunction` extension point.
+  * Operators construct it directly (`ColumnBridge`); plain SQL reaches
+  * it as `graft_minhash` through [[graft.GraftExtensions]].
   */
 final case class MinHashSignature(child: Expression,
     a: Seq[Long], b: Seq[Long], p: Long)
@@ -99,31 +97,4 @@ final case class MinHashSignature(child: Expression,
 
 object MinHashSignature {
   val FUNC_NAME = "graft_minhash"
-
-  /** Per-session record of the last-registered coefficients — repeated
-    * registration with the SAME parameters is skipped (no re-register,
-    * no WARN spam), while different parameters (tests use narrow
-    * signatures) still replace the binding. Weak keys: sessions are
-    * not pinned. */
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, (Seq[Long], Seq[Long], Long)]())
-
-  /** Idempotently registers `graft_minhash(arr)` with the given
-    * coefficients in the session's FunctionRegistry; call before using
-    * `expr("graft_minhash(col)")`. */
-  def register(spark: SparkSession, a: Array[Long], b: Array[Long], p: Long): Unit = {
-    val key = (a.toSeq, b.toSeq, p)
-    // Single lock over check+replace (synchronizedMap alone leaves the
-    // compound get/put racy under concurrent registration).
-    registered.synchronized {
-      if (registered.get(spark) != key) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          FUNC_NAME,
-          exprs => MinHashSignature(exprs.head, a.toSeq, b.toSeq, p),
-          "built-in")
-        registered.put(spark, key)
-      }
-    }
-  }
 }

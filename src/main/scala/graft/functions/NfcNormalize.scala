@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -167,40 +166,8 @@ final case class NfkcCasefold(child: Expression) extends UnaryExpression {
 
 object NfkcCasefold {
   val FUNC_NAME = "graft_nfkc_cf"
-
-  private val registered =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Idempotently registers `graft_nfkc_cf(str)` in the session's
-    * FunctionRegistry. */
-  def register(spark: SparkSession): Unit =
-    registered.synchronized {
-      if (!registered.contains(spark)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          FUNC_NAME, exprs => NfkcCasefold(exprs.head), "built-in")
-        registered.add(spark)
-      }
-    }
 }
 
 object NfcNormalize {
   val FUNC_NAME = "graft_nfc"
-
-  private val registered =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Idempotently registers `graft_nfc(str)` in the session's
-    * FunctionRegistry. */
-  def register(spark: SparkSession): Unit =
-    registered.synchronized {
-      if (!registered.contains(spark)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          FUNC_NAME, exprs => NfcNormalize(exprs.head), "built-in")
-        registered.add(spark)
-      }
-    }
 }

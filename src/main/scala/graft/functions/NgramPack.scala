@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -109,21 +108,4 @@ final case class NgramPack(child: Expression, n: Int, bits: Int)
 
 object NgramPack {
   val FUNC_NAME = "graft_ngrampack"
-
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, (Int, Int)]())
-
-  /** Idempotently registers `graft_ngrampack(text)` with the given gram
-    * geometry in the session's FunctionRegistry. */
-  def register(spark: SparkSession, n: Int, bits: Int): Unit = {
-    val key = (n, bits)
-    registered.synchronized {
-      if (registered.get(spark) != key) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          FUNC_NAME, exprs => NgramPack(exprs.head, n, bits), "built-in")
-        registered.put(spark, key)
-      }
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -133,34 +132,4 @@ final case class SignLshSignature(child: Expression, planes: Seq[Double], dim: I
 
 object SignLshSignature {
   val FUNC_NAME = "graft_signlsh"
-
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, (Seq[Double], Int)]]())
-
-  /** Idempotently registers `graft_signlsh(arr)` with the given flattened
-    * plane matrix in the session's FunctionRegistry. */
-  def register(spark: SparkSession, planes: Array[Double], dim: Int): Unit =
-    registerNamed(spark, FUNC_NAME, planes, dim)
-
-  /** Idempotently registers a signature function under an explicit
-    * name — banded LSH (one signature word per band, each from its own
-    * plane slice) needs several live at once (`graft_signlsh_b0…`). */
-  def registerNamed(spark: SparkSession, name: String,
-                    planes: Array[Double], dim: Int): Unit = {
-    val key = (planes.toSeq, dim)
-    // Single lock over check+replace: Collections.synchronizedMap only
-    // guards individual calls, so two threads could otherwise both see
-    // a stale key and race the createOrReplaceTempFunction.
-    registered.synchronized {
-      val perName = registered.getOrDefault(spark, Map.empty)
-      if (!perName.get(name).contains(key)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name,
-          exprs => SignLshSignature(exprs.head, planes.toSeq, dim),
-          "built-in")
-        registered.put(spark, perName.updated(name, key))
-      }
-    }
-  }
 }

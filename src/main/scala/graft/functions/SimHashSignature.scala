@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -84,26 +83,4 @@ final case class SimHashSignature(child: Expression, bits: Int)
 
 object SimHashSignature {
   val FUNC_NAME = "graft_simhash"
-
-  /** Per-session record of the last-registered width — repeated
-    * registration with the SAME width is skipped (no re-register, no
-    * WARN spam); a different width still replaces the binding. */
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Integer]())
-
-  /** Idempotently registers `graft_simhash(arr)` in the session's
-    * FunctionRegistry. */
-  def register(spark: SparkSession, bits: Int): Unit =
-    // Single lock over check+replace (synchronizedMap alone leaves the
-    // compound get/put racy under concurrent registration).
-    registered.synchronized {
-      if (registered.get(spark) != Integer.valueOf(bits)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          FUNC_NAME,
-          exprs => SimHashSignature(exprs.head, bits),
-          "built-in")
-        registered.put(spark, bits)
-      }
-    }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -183,20 +182,4 @@ final case class UrlNormalize(child: Expression) extends UnaryExpression {
 
 object UrlNormalize {
   val FUNC_NAME = "graft_url_normalize"
-
-  private val registered =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Idempotently registers `graft_url_normalize(str)` in the
-    * session's FunctionRegistry. */
-  def register(spark: SparkSession): Unit =
-    registered.synchronized {
-      if (!registered.contains(spark)) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          FUNC_NAME, exprs => UrlNormalize(exprs.head), "built-in")
-        registered.add(spark)
-      }
-    }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -220,37 +219,4 @@ object VectorMath {
        |}
      """.stripMargin
   }
-
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotently registers all three kernels in the session's
-    * FunctionRegistry (the [[SignLshSignature.register]] posture —
-    * operators call this so the library works against sessions that
-    * were not built with [[graft.GraftExtensions]]). */
-  def register(spark: SparkSession): Unit =
-    registered.synchronized {
-      if (!java.lang.Boolean.TRUE.equals(registered.get(spark))) {
-        val reg = spark.sessionState.functionRegistry
-        def two(name: String, exprs: Seq[Expression]): (Expression, Expression) = {
-          if (exprs.length != 2)
-            throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-              messageParameters = Map("functionName" -> name,
-                "expectedNum" -> "2",
-                "actualNum" -> exprs.length.toString, "docroot" -> ""))
-          (exprs.head, exprs(1))
-        }
-        reg.createOrReplaceTempFunction(DOT_NAME,
-          exprs => { val (a, b) = two(DOT_NAME, exprs); ArrayDot(a, b) },
-          "built-in")
-        reg.createOrReplaceTempFunction(SQDIST_NAME,
-          exprs => { val (a, b) = two(SQDIST_NAME, exprs); ArraySqDist(a, b) },
-          "built-in")
-        reg.createOrReplaceTempFunction(SQNORM_NAME,
-          exprs => ArraySqNorm(exprs.head), "built-in")
-        registered.put(spark, java.lang.Boolean.TRUE)
-      }
-    }
 }

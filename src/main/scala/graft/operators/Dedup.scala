@@ -4,6 +4,7 @@ import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Near-duplicate detection at corpus scale (brief north star; no
   * reference counterpart). Three independent techniques, each with the
@@ -99,8 +100,8 @@ object Dedup extends QueryModule {
     * Bit-parity with that fold is pinned in HashedNgramsSpec. */
   def shinglesOf(docs: DataFrame): DataFrame = {
     val toks = TextFns.tokenize(col("text"))
-    graft.functions.HashedNgrams.register(docs.sparkSession)
-    val sh = call_function(graft.functions.HashedNgrams.SHINGLE_NAME, toks)
+    val sh = ColumnBridge.column(
+      graft.functions.HashedNgrams(ColumnBridge.expression(toks), 3))
     docs
       .select(col("doc_id"), array_distinct(sh).as("hs"))
       .filter(size(col("hs")) > 0)
@@ -127,13 +128,13 @@ object Dedup extends QueryModule {
     * Two docs share a band key iff all r minhashes of that band agree
     * — the collision predicate every LSH consumer (batch pair join,
     * streaming admission state) keys on. */
-  private def bandsOf(spark: SparkSession, sh: DataFrame): DataFrame = {
+  private def bandsOf(sh: DataFrame): DataFrame = {
     // K minhashes in ONE traversal of the shingle array via the native
     // codegen'd expression — see MinHashSignature's scaladoc for why
     // this (and only this) hot loop gets a custom Expression instead
     // of an aggregate+zip_with fold.
-    graft.functions.MinHashSignature.register(spark, MH_A, MH_B, MH_P)
-    val mhExpr = expr(s"${graft.functions.MinHashSignature.FUNC_NAME}(hs)")
+    val mhExpr = ColumnBridge.column(graft.functions.MinHashSignature(
+      ColumnBridge.expression(col("hs")), MH_A.toSeq, MH_B.toSeq, MH_P))
     // The repartition is a deliberate stage boundary: it makes `mh` a
     // physical attribute, so the 128 element_at references in the band
     // expression below read a materialized array instead of inlining
@@ -153,7 +154,7 @@ object Dedup extends QueryModule {
   /** Public band-key entry for arbitrary (doc_id, text) docs — the
     * streaming near-dedup admission path builds its state from this. */
   def bandKeys(spark: SparkSession, docs: DataFrame): DataFrame =
-    bandsOf(spark, shinglesOf(docs))
+    bandsOf(shinglesOf(docs))
 
   /** The verified near-dup pairs, unordered — shared by the pair query
     * and the connected-components clustering built on top of it. */
@@ -168,7 +169,7 @@ object Dedup extends QueryModule {
     // Same boundary as the salted variant: both candidate join sides
     // consume the band frame and per-side pruning defeats exchange
     // reuse — materialized, the minhash pipeline runs once.
-    val bands = bandsOf(spark, sh).localCheckpoint()
+    val bands = bandsOf(sh).localCheckpoint()
     val occ = occupancyMemo.getOrElseUpdate(spark, graft.Caches.pathKey(dir))(
       maxOccupancyOf(bands))
     verifiedPairs(bucketPairs(bands, knownOcc = Some(occ)), sh)
@@ -275,7 +276,7 @@ object Dedup extends QueryModule {
     * count; this makes that term measured, not asserted). */
   private[graft] def candidatePairCount(spark: SparkSession, dir: String): Long = {
     val sh = shingles(spark, dir).localCheckpoint()
-    bucketPairs(bandsOf(spark, sh).localCheckpoint()).count()
+    bucketPairs(bandsOf(sh).localCheckpoint()).count()
   }
 
   /** Exact verification within candidates only: fetch both shingle
@@ -368,7 +369,7 @@ object Dedup extends QueryModule {
     // per-branch pruning defeats exchange reuse — un-materialized, the
     // 128-minhash pipeline runs per consumer (measured ~1s of the
     // ~4.4s bench). O(docs · bands · 16B) rows — cheap to hold.
-    val bands = bandsOf(spark, sh).localCheckpoint()
+    val bands = bandsOf(sh).localCheckpoint()
     val cand = saltedBucketPairs(bands, "doc_id",
       HOT_BUCKET_THRESHOLD, SALT_FACTOR)
     verifiedPairs(cand, sh).orderBy(col("doc_a"), col("doc_b"))
@@ -438,13 +439,13 @@ object Dedup extends QueryModule {
   /** Train-vs-eval candidate-pair count for the scale probe's growth
     * decomposition ([[candidatePairCount]]'s sibling). */
   private[graft] def fuzzyCandidateCount(spark: SparkSession, dir: String): Long =
-    fuzzyCandidates(bandsOf(spark,
+    fuzzyCandidates(bandsOf(
       shingles(spark, dir).localCheckpoint()).localCheckpoint()).count()
 
   def decontaminateFuzzy(spark: SparkSession, dir: String): DataFrame = {
     val isEval = col("doc_id") % Pipeline.EVAL_MOD === Pipeline.EVAL_RES
     val sh = shingles(spark, dir).localCheckpoint()
-    val bands = bandsOf(spark, sh).localCheckpoint()
+    val bands = bandsOf(sh).localCheckpoint()
     val cand = fuzzyCandidates(bands)
     // Exact verify via the shared [[verifiedPairsSided]] block (one
     // Jaccard formula in this file); the train side reads the train
@@ -812,17 +813,15 @@ object Dedup extends QueryModule {
     * and boxes a 56-wide counter vector per token; MinHashSpec-style
     * equality with the fold is asserted in MinHashSpec's sibling
     * tests). */
-  private def simhashOf(spark: SparkSession, tokens: Column): Column = {
-    graft.functions.SimHashSignature.register(spark, SIMHASH_BITS)
-    graft.functions.HashedNgrams.register(spark)
-    call_function(graft.functions.SimHashSignature.FUNC_NAME,
-      call_function(graft.functions.HashedNgrams.TOKHASH_NAME, tokens))
-  }
+  private def simhashOf(tokens: Column): Column =
+    ColumnBridge.column(graft.functions.SimHashSignature(
+      graft.functions.HashedNgrams(ColumnBridge.expression(tokens), 1),
+      SIMHASH_BITS))
 
   def simhash(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        simhashOf(spark, TextFns.tokenize(col("text"))).as("simhash"))
+        simhashOf(TextFns.tokenize(col("text"))).as("simhash"))
       .orderBy(col("doc_id"))
 
   private val powersSqlList = POWERS.mkString("[", ", ", "]")
@@ -845,7 +844,7 @@ object Dedup extends QueryModule {
     // references it 5× and both join sides below share the exchange.
     val sims = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        simhashOf(spark, TextFns.tokenize(col("text"))).as("sim"))
+        simhashOf(TextFns.tokenize(col("text"))).as("sim"))
       .repartition(col("doc_id"))
     // 4 chunks of 14 bits; Hamming ≤3 pairs must collide on ≥1 chunk.
     val chunks = sims.select(col("doc_id"), col("sim"),
@@ -901,12 +900,11 @@ object Dedup extends QueryModule {
     // bench at sf0.1 in per-gram expression machinery alone. The
     // repartition boundary materializes the gram arrays once — every
     // consumer below reuses the same exchange.
-    graft.functions.NgramPack.register(spark, NGRAM_N, GRAM_BITS)
     val grams = Tables.documents(spark, dir)
       .filter(length(col("text")) >= NGRAM_N)
       .select(col("doc_id"), col("source"),
-        array_distinct(
-          call_function(graft.functions.NgramPack.FUNC_NAME, col("text"))).as("g"))
+        array_distinct(ColumnBridge.column(graft.functions.NgramPack(
+          ColumnBridge.expression(col("text")), NGRAM_N, GRAM_BITS))).as("g"))
       .withColumn("n", size(col("g")))
       .repartition(col("doc_id"))
     // 1024-bit one-hash bitmap of the gram set, as 16 flat long

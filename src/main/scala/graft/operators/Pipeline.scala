@@ -3,8 +3,11 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.DecimalType
 
 /** Training-data pipeline operators, tranche 1 — the per-row / single-
@@ -783,6 +786,16 @@ object Pipeline extends QueryModule {
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
     decontaminateCore(spark, dir, hashGrams = false)
 
+  /** Bloom prefilter sizing, for a fixed-small build side (an eval
+    * suite does not grow with the corpus): 2^20 expected items over
+    * 2^23 bits = 8 bits per item (1 MiB on the wire) — fpp ≈ 2% at FULL
+    * 2^20 capacity, and far below 0.1% at realistic eval gram counts
+    * (≤2^17 items leaves 64 bits each). Correctness never depends on
+    * this — the filter only PREfilters above an exact verify join; an
+    * undersized filter admits more rows to the join, nothing else. */
+  private val BLOOM_EXPECTED_ITEMS: Long = 1L << 20
+  private val BLOOM_NUM_BITS: Long = 1L << 23
+
   /** The shared decontamination dataflow; the two public variants
     * differ ONLY here, by construction: `hashGrams` swaps gram
     * identity from the plain string (oracle-transparent) to the 56-bit
@@ -822,18 +835,16 @@ object Pipeline extends QueryModule {
     val trainGrams = exploded.filter(!isEval)
     val probed =
       if (bloomPrefilter) {
-        graft.functions.BloomFns.register(spark)
-        // The filter rides a SCALAR SUBQUERY (BloomFilterMightContain
+        // Spark's own runtime-filter expressions, built directly. The
+        // filter rides a SCALAR SUBQUERY (BloomFilterMightContain
         // requires a foldable/subquery filter side — the same shape
         // InjectRuntimeFilter emits): executed once, broadcast to every
-        // task, probe codegen'd. View name is content-keyed by dataset
-        // path, the indexDir idiom, so same-session runs over different
-        // dirs cannot clobber each other.
-        val view = "graft_bloom_eval_" + graft.Caches.pathKey(dir)
-        evalGrams.createOrReplaceTempView(view)
-        trainGrams.filter(expr(
-          s"${graft.functions.BloomFns.MIGHT_NAME}(" +
-            s"(SELECT ${graft.functions.BloomFns.AGG_NAME}(g) FROM $view), g)"))
+        // task, probe codegen'd.
+        val bloom = evalGrams.agg(ColumnBridge.column(new BloomFilterAggregate(
+          ColumnBridge.expression(col("g")), Literal(BLOOM_EXPECTED_ITEMS),
+          Literal(BLOOM_NUM_BITS)).toAggregateExpression())).scalar()
+        trainGrams.filter(ColumnBridge.column(BloomFilterMightContain(
+          ColumnBridge.expression(bloom), ColumnBridge.expression(col("g")))))
       } else trainGrams
     val shared = probed
       .join(if (hashGrams) evalGrams else broadcast(evalGrams), "g")
@@ -1602,7 +1613,6 @@ object Pipeline extends QueryModule {
   private val WS_CLASS = "[ \\t\\n\\r]+"
 
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(spark)
     // The accent is planted in DECOMPOSED form (e + U+0301, as a
     // unicode escape so no tool can silently re-compose the source)
     // -- the case NFC exists to fix; the SQL replay plants chr(769).
@@ -1613,7 +1623,8 @@ object Pipeline extends QueryModule {
       when(col("doc_id") % 6 === 2, lit(" ctl x\u0007y\tz")).otherwise(""),
       when(col("doc_id") % 4 === 3, lit(" sp  a   b ")).otherwise(""))
     val cleaned = trim(regexp_replace(regexp_replace(
-      call_function(graft.functions.NfcNormalize.FUNC_NAME, planted),
+      ColumnBridge.column(
+        graft.functions.NfcNormalize(ColumnBridge.expression(planted))),
       lit(CTL_CLASS), lit("")),
       lit(WS_CLASS), lit(" ")))
     Tables.documents(spark, dir)
@@ -1665,7 +1676,6 @@ object Pipeline extends QueryModule {
     * shapes are pinned by NfcNormalizeSpec against
     * `java.text.Normalizer` ground truth. */
   def textNormalizeNfkc(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfkcCasefold.register(spark)
     // Planted (unicode escapes so no tool can silently re-compose):
     // U+FB01 fi-ligature; U+FF27/U+FF2F fullwidth G,O; U+00B2
     // superscript two; E + U+0301 combining acute (decomposed, folds
@@ -1678,8 +1688,8 @@ object Pipeline extends QueryModule {
       when(col("doc_id") % 9 === 5, lit(" Acc Éclair")).otherwise(""),
       when(col("doc_id") % 11 === 4, lit(" Eszett Straße ẞ")).otherwise(""),
       when(col("doc_id") % 13 === 6, lit(" Sigma ΛΟΓΟΣ")).otherwise(""))
-    val cleaned =
-      call_function(graft.functions.NfkcCasefold.FUNC_NAME, planted)
+    val cleaned = ColumnBridge.column(
+      graft.functions.NfkcCasefold(ColumnBridge.expression(planted)))
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         (cleaned =!= planted).as("changed"),
@@ -1801,13 +1811,16 @@ object Pipeline extends QueryModule {
        | || CASE WHEN doc_id % 8 = 5 THEN '?b=2&a=1' ELSE '' END"""
       .stripMargin.replace("\n", "")
 
+  private def urlNormalized(raw: Column): Column =
+    ColumnBridge.column(
+      graft.functions.UrlNormalize(ColumnBridge.expression(raw)))
+
   /** URL canonicalization — the first gate of a crawl pipeline (see
     * [[graft.functions.UrlNormalize]]): one map-only codegen scan, no
     * shuffle until the gate's ORDER BY. */
   def urlNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.UrlNormalize.register(spark)
     val raw = urlRawCol
-    val norm = call_function(graft.functions.UrlNormalize.FUNC_NAME, raw)
+    val norm = urlNormalized(raw)
     Tables.documents(spark, dir)
       .select(col("doc_id"), norm.as("url_norm"),
         (norm =!= raw).as("changed"))
@@ -1837,8 +1850,7 @@ object Pipeline extends QueryModule {
     * anti-join: the 100 TB shape. */
   def domainFilter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.UrlNormalize.register(spark)
-    val norm = call_function(graft.functions.UrlNormalize.FUNC_NAME, urlRawCol)
+    val norm = urlNormalized(urlRawCol)
     val host = regexp_extract(norm, "^https?://([^/?:]+)", 1)
     val domain = regexp_replace(host, "^www\\.", "")
     val block = DOMAIN_BLOCKLIST.toDF("domain")

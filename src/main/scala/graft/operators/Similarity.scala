@@ -93,7 +93,6 @@ object Similarity extends QueryModule {
 
   /** (vec_id, v double[], nrm): the normalized corpus. */
   private def corpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorMath.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
@@ -153,10 +152,9 @@ object Similarity extends QueryModule {
     * `aggregate(zip_with(...))` folds per vector (the round-3 bench
     * regression). SignLshSpec asserts bit parity with the fold form on
     * both the codegen and interpreted paths. */
-  private def signature(spark: SparkSession, v: Column): Column = {
-    graft.functions.SignLshSignature.register(spark, PLANES_FLAT, DIM)
-    call_function(graft.functions.SignLshSignature.FUNC_NAME, v)
-  }
+  private def signature(v: Column): Column =
+    ExpressionUtils.column(graft.functions.SignLshSignature(
+      ExpressionUtils.expression(v), PLANES_FLAT.toSeq, DIM))
 
   /** (sigs, chunks): the signed corpus and its per-chunk band rows —
     * the LSH index both probe strategies search. */
@@ -165,7 +163,7 @@ object Similarity extends QueryModule {
     // chunk-extraction references (CollapseProject would otherwise
     // re-run the float→double transform per derived column).
     val sigs = corpus(spark, dir).repartition(col("vec_id"))
-      .withColumn("sig", signature(spark, col("v")))
+      .withColumn("sig", signature(col("v")))
     val chunks = sigs.select(col("vec_id"), col("v"), col("nrm"),
         posexplode(array((0 until ANN_CHUNKS).map(c =>
           shiftrightunsigned(col("sig"), c * ANN_CHUNK_BITS)
@@ -1555,7 +1553,6 @@ object Similarity extends QueryModule {
     * same cast/normalize/repartition chain, so results are
     * bit-identical whichever entry built the frame). */
   private def normalizedFrom(raw: DataFrame): DataFrame = {
-    graft.functions.VectorMath.register(raw.sparkSession)
     raw.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm",
@@ -3300,16 +3297,6 @@ object Similarity extends QueryModule {
     Array.fill(nPlanes * dim)(if (rnd.nextBoolean()) 1.0 else -1.0)
   }
 
-  /** Short stable content hash of a plane slice — md5 over the IEEE
-    * bits, first 8 hex chars — for per-content function names. */
-  private def planesHash(slice: Array[Double], dim: Int): String = {
-    val bb = java.nio.ByteBuffer.allocate((slice.length + 1) * 8)
-    bb.putLong(dim.toLong)
-    slice.foreach(d => bb.putLong(java.lang.Double.doubleToLongBits(d)))
-    java.security.MessageDigest.getInstance("MD5").digest(bb.array())
-      .take(4).map(b => f"$b%02x").mkString
-  }
-
   /** Corpus-size-aware IVF geometry `(kCentroids, nProbe)` — the
     * production counterpart of the fixture-pinned [[K_CENTROIDS]]/
     * [[NPROBE]] constants, making the "production takes K ≈ √n"
@@ -3408,7 +3395,6 @@ object Similarity extends QueryModule {
       idCol: String, vecCol: String, dim: Int,
       nBands: Int, bitsPerBand: Int, planesFlat: Array[Double],
       minCosine: Double): DataFrame = {
-    graft.functions.VectorMath.register(spark)
     require(nBands >= 1 && bitsPerBand >= 1 && bitsPerBand <= 64,
       "band width is one signature word at most")
     require(planesFlat.length == nBands * bitsPerBand * dim,
@@ -3422,16 +3408,8 @@ object Similarity extends QueryModule {
       val hiBand = math.min(nBands, loBand + bandsPerWord)
       val slice = planesFlat.slice(loBand * bitsPerBand * dim,
         hiBand * bitsPerBand * dim)
-      // The name carries a content hash of (slice, dim): geometry alone
-      // is not identity — two interleaved same-session calls with equal
-      // geometry but different plane matrices would otherwise race
-      // createOrReplaceTempFunction and one plan could silently analyze
-      // against the other's planes. Per-content names keep registration
-      // idempotent per plane matrix.
-      val name = s"${graft.functions.SignLshSignature.FUNC_NAME}_w${w}_" +
-        s"${nBands}x${bitsPerBand}_${planesHash(slice, dim)}"
-      graft.functions.SignLshSignature.registerNamed(spark, name, slice, dim)
-      call_function(name, col("v")).as(s"sigw$w")
+      ExpressionUtils.column(graft.functions.SignLshSignature(
+        ExpressionUtils.expression(col("v")), slice.toSeq, dim)).as(s"sigw$w")
     }
     val sigs = base.repartition(col("vec_id"))
       .select(col("vec_id") +: wordCols: _*)

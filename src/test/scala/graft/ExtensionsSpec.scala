@@ -1,15 +1,19 @@
 package graft
 
+import graft.functions.{HashedNgrams, NgramPack}
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The SparkSessionExtensions injection point: the context is built
   * with `spark.sql.extensions=graft.GraftExtensions`, so the native
-  * expressions must be callable from PLAIN SQL without any runtime
-  * `register` having run first — and must agree with the engine's
-  * configured coefficients. Queries run through a FRESH `newSession()`
-  * (clean temp-function registry rebuilt from the extensions): other
-  * suites legitimately shadow the shared session's binding with narrow
-  * test variants, and this spec must not depend on suite order. */
+  * expressions must be callable from PLAIN SQL and must agree with the
+  * arguments the operators construct them with. Queries run through a
+  * FRESH `newSession()`, whose function registry holds exactly the
+  * built-ins plus the extension's names; the operators themselves must
+  * leave that catalog as they found it. */
 class ExtensionsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -95,5 +99,41 @@ class ExtensionsSpec extends SparkSpecBase {
       if (Similarity.PLANES(p)(0) > 0) s | (1L << p) else s
     }
     assert(sig == expected)
+  }
+
+  test("ngrampack/shingle56/tokhash56 by name equal the operators' direct construction") {
+    val texts = fresh.createDataFrame(Seq("", "abc", "abcd", "the quick brown fox",
+      "caf\u00e9 \ud83d\ude00 x").map(Tuple1(_))).toDF("x")
+    val toks = fresh.createDataFrame(Seq(Seq.empty[String], Seq("one"), Seq("a", "b", "c"),
+      Seq("alpha", "beta", "gamma", "delta", "\u03b4\u00fc")).map(Tuple1(_))).toDF("x")
+    def direct(df: DataFrame, build: Expression => Expression) =
+      df.select(ColumnBridge.column(build(ColumnBridge.expression(col("x")))))
+        .as[Seq[Long]].collect().toSeq
+    def byName(df: DataFrame, fn: String) =
+      df.selectExpr(s"$fn(x)").as[Seq[Long]].collect().toSeq
+    val ng = direct(texts, NgramPack(_, Dedup.NGRAM_N, Dedup.GRAM_BITS))
+    assert(ng.exists(_.nonEmpty))
+    assert(byName(texts, NgramPack.FUNC_NAME) == ng)
+    val sh = direct(toks, HashedNgrams(_, 3))
+    assert(sh.exists(_.nonEmpty))
+    assert(byName(toks, HashedNgrams.SHINGLE_NAME) == sh)
+    val th = direct(toks, HashedNgrams(_, 1))
+    assert(th.exists(_.nonEmpty))
+    assert(byName(toks, HashedNgrams.TOKHASH_NAME) == th)
+  }
+
+  test("kernel operators leave the session catalog as they found it") {
+    val s = spark.newSession()
+    def functions = s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    def views = s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val (fns0, views0) = (functions, views)
+    Seq("decontaminate_bloom", "embedding_dedup_auto", "near_dedup", "simhash",
+        "ngram_jaccard", "text_normalize", "url_normalize").foreach { q =>
+      SparkEntry.queries(q)(s, sfDir).collect()
+    }
+    val (fns1, views1) = (functions, views)
+    // (added, removed) per catalog, so a failure names the leaked entries.
+    assert((fns1 -- fns0, fns0 -- fns1) == ((Set.empty, Set.empty)))
+    assert((views1 -- views0, views0 -- views1) == ((Set.empty, Set.empty)))
   }
 }

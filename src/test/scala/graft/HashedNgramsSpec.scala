@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{HashedNgrams, TextFns}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The native n-gram fingerprint expression must equal the interpreted
   * column-fold forms it replaced — the trigram `zip_with` shingle
@@ -29,18 +30,18 @@ class HashedNgramsSpec extends SparkSpecBase {
       (1 to 15).map(_ => Seq.fill(3 + rnd.nextInt(40))(vocab(rnd.nextInt(vocab.size))))
 
   test("trigram form equals the zip_with fold (codegen path)") {
-    HashedNgrams.register(spark)
     val rows = cases.toDF("toks").select(
-        call_function(HashedNgrams.SHINGLE_NAME, col("toks")).as("native"),
+        ColumnBridge.column(
+          HashedNgrams(ColumnBridge.expression(col("toks")), 3)).as("native"),
         foldShingles(col("toks")).as("fold"))
       .as[(Seq[Long], Seq[Long])].collect()
     rows.foreach { case (n, f) => assert(n == f) }
   }
 
   test("per-token form equals transform(tokens, hash56) (codegen path)") {
-    HashedNgrams.register(spark)
     val rows = cases.toDF("toks").select(
-        call_function(HashedNgrams.TOKHASH_NAME, col("toks")).as("native"),
+        ColumnBridge.column(
+          HashedNgrams(ColumnBridge.expression(col("toks")), 1)).as("native"),
         transform(col("toks"), t => TextFns.hash56(t)).as("fold"))
       .as[(Seq[Long], Seq[Long])].collect()
     rows.foreach { case (n, f) => assert(n == f) }
@@ -67,13 +68,13 @@ class HashedNgramsSpec extends SparkSpecBase {
   }
 
   test("null tokens null exactly the windows containing them, like the fold") {
-    HashedNgrams.register(spark)
     val data: Seq[Seq[Option[String]]] = Seq(
       Seq(Some("a"), None, Some("c"), Some("d"), Some("e")),
       Seq(None, None, None),
       Seq(Some("a"), Some("b"), Some("c")))
     val rows = data.toDF("toks").select(
-        call_function(HashedNgrams.SHINGLE_NAME, col("toks")).as("native"),
+        ColumnBridge.column(
+          HashedNgrams(ColumnBridge.expression(col("toks")), 3)).as("native"),
         foldShingles(col("toks")).as("fold"))
       .as[(Seq[Option[Long]], Seq[Option[Long]])].collect()
     rows.foreach { case (n, f) => assert(n == f) }

@@ -23,6 +23,25 @@ class LshGeometrySpec extends SparkSpecBase {
   private def r6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
+  /** Plain-Scala replay of the identical algorithm: band b's bit j is
+    * sign(dot(v, plane[b*bits + j])); candidates share ≥1 band value;
+    * exact rounded cosine ≥ threshold within candidates only. */
+  private def replay(all: Seq[(Long, Array[Double])], planes: Array[Double],
+      dim: Int, nBands: Int, bits: Int,
+      minCosine: Double): Seq[(Long, Long, Double)] = {
+    def bandVal(v: Array[Double], b: Int): Long =
+      (0 until bits).foldLeft(0L) { (acc, j) =>
+        val row = (b * bits + j) * dim
+        val d = (0 until dim).foldLeft(0.0)((s, i) => s + planes(row + i) * v(i))
+        if (d > 0) acc | (1L << j) else acc
+      }
+    (for {
+      (ia, va) <- all; (ib, vb) <- all if ia < ib
+      if (0 until nBands).exists(b => bandVal(va, b) == bandVal(vb, b))
+      c = r6(cos(va, vb)) if c >= minCosine
+    } yield (ia, ib, c)).sorted
+  }
+
   test("4x16 geometry: planted near-dup pairs are found, output is sound") {
     val dim = 16
     val rnd = new scala.util.Random(11)
@@ -73,21 +92,37 @@ class LshGeometrySpec extends SparkSpecBase {
       .lshNearDupPairs(spark, all.toDF("vec_id", "v"),
         "vec_id", "v", dim, nBands, bits, planes, 0.8)
       .as[(Long, Long, Double)].collect().toSeq.sorted
-    // Plain-Scala replay of the identical algorithm: band b's bit j is
-    // sign(dot(v, plane[b*bits + j])); candidates share ≥1 band value;
-    // exact rounded cosine ≥ threshold within candidates only.
-    def bandVal(v: Array[Double], b: Int): Long =
-      (0 until bits).foldLeft(0L) { (acc, j) =>
-        val row = (b * bits + j) * dim
-        val d = (0 until dim).foldLeft(0.0)((s, i) => s + planes(row + i) * v(i))
-        if (d > 0) acc | (1L << j) else acc
-      }
-    val expect = (for {
-      (ia, va) <- all; (ib, vb) <- all if ia < ib
-      if (0 until nBands).exists(b => bandVal(va, b) == bandVal(vb, b))
-      c = r6(cos(va, vb)) if c >= 0.8
-    } yield (ia, ib, c)).sorted
+    val expect = replay(all, planes, dim, nBands, bits, 0.8)
     assert(got == expect)
+  }
+
+  test("interleaved plane matrices of equal geometry stay apart") {
+    // Two frames of the same 6x20 geometry whose planes differ only by
+    // seed, both built before either is collected: each plan must keep
+    // its own planes.
+    val dim = 8
+    val (nBands, bits) = (6, 20)
+    val rnd = new scala.util.Random(29)
+    val base = (0 until 40).map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian())))
+    // Near-dups at rising distance: band collisions become a coin toss
+    // that the two plane matrices call differently.
+    val planted = (0 until 20).map { i =>
+      val (id, v) = base(i)
+      (id + 500L, v.map(_ + (0.05 + 0.02 * i) * rnd.nextGaussian()))
+    }
+    val all = base ++ planted
+    val df = all.toDF("vec_id", "v")
+    val (pa, pb) = (Similarity.planesFor(seed = 17, nPlanes = nBands * bits, dim = dim),
+      Similarity.planesFor(seed = 18, nPlanes = nBands * bits, dim = dim))
+    val fa = Similarity.lshNearDupPairs(spark, df, "vec_id", "v", dim, nBands, bits, pa, 0.5)
+    val fb = Similarity.lshNearDupPairs(spark, df, "vec_id", "v", dim, nBands, bits, pb, 0.5)
+    val gotB = fb.as[(Long, Long, Double)].collect().toSeq.sorted
+    val gotA = fa.as[(Long, Long, Double)].collect().toSeq.sorted
+    val (expA, expB) = (replay(all, pa, dim, nBands, bits, 0.5),
+      replay(all, pb, dim, nBands, bits, 0.5))
+    assert(expA != expB, "the two plane matrices must select different pairs")
+    assert(gotA == expA)
+    assert(gotB == expB)
   }
 
   test("recommendedGeometry scales bits with corpus and meets the recall bound") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.MinHashSignature
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The native codegen'd MinHash expression must equal the
   * aggregate+zip_with fold it replaced, on codegen AND interpreted
@@ -29,10 +30,10 @@ class MinHashSpec extends SparkSpecBase {
     (1L to 100L).map(_ * 982451653L))
 
   test("native expression equals the fold (codegen path)") {
-    MinHashSignature.register(spark, A, B, P)
     val df = cases.toDF("hs")
     val rows = df.select(
-        expr(s"${MinHashSignature.FUNC_NAME}(hs)").as("native"),
+        ColumnBridge.column(MinHashSignature(
+          ColumnBridge.expression(col("hs")), A.toSeq, B.toSeq, P)).as("native"),
         foldForm.as("fold"))
       .as[(Seq[Long], Seq[Long])].collect()
     rows.foreach { case (n, f) => assert(n == f) }

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{NfcNormalize, NfcNormalizeUtil, NfkcCasefold, NfkcCasefoldUtil}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Pins the native NFC expression on both eval paths against
@@ -27,9 +28,9 @@ class NfcNormalizeSpec extends SparkSpecBase {
     "angstrom \u212b sign")          // U+212B -> U+00C5 under NFC
 
   test("codegen path equals java.text.Normalizer on every case") {
-    NfcNormalize.register(spark)
     val rows = cases.toDF("s")
-      .select(col("s"), call_function(NfcNormalize.FUNC_NAME, col("s")))
+      .select(col("s"),
+        ColumnBridge.column(NfcNormalize(ColumnBridge.expression(col("s")))))
       .as[(String, String)].collect()
     rows.foreach { case (in, got) =>
       val want = java.text.Normalizer.normalize(
@@ -72,7 +73,7 @@ class NfcNormalizeSpec extends SparkSpecBase {
     // no-op -- NFC, control strip, and collapse are all fixpoints.
     val probe = Seq(s"$COMP a b", "x y z").toDF("text")
       .select(trim(regexp_replace(regexp_replace(
-        call_function(NfcNormalize.FUNC_NAME, col("text")),
+        ColumnBridge.column(NfcNormalize(ColumnBridge.expression(col("text")))),
         lit("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]"), lit("")),
         lit("[ \\t\\n\\r]+"), lit(" "))).as("t2"), col("text"))
       .as[(String, String)].collect()
@@ -96,9 +97,9 @@ class NfcNormalizeSpec extends SparkSpecBase {
     "\u03c2\u03c3 mixed sigmas")    // bare final sigma folds to \u03c3
 
   test("nfkc_cf codegen path equals NFKC+lower+NFKC ground truth") {
-    NfkcCasefold.register(spark)
     val rows = nfkcCases.toDF("s")
-      .select(col("s"), call_function(NfkcCasefold.FUNC_NAME, col("s")))
+      .select(col("s"),
+        ColumnBridge.column(NfkcCasefold(ColumnBridge.expression(col("s")))))
       .as[(String, String)].collect()
     rows.foreach { case (in, got) =>
       val form = java.text.Normalizer.Form.NFKC

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.SignLshSignature
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The native codegen'd sign-LSH expression must equal the 64-fold
   * `when(dot > 0, bit)` formulation it replaced, on codegen AND
@@ -29,9 +30,9 @@ class SignLshSpec extends SparkSpecBase {
       (1 to 20).map(_ => Seq.fill(DIM)(rnd.nextGaussian()))
 
   test("native expression equals the fold (codegen path)") {
-    SignLshSignature.register(spark, FLAT, DIM)
     val rows = cases.toDF("v").select(
-        call_function(SignLshSignature.FUNC_NAME, col("v")).as("native"),
+        ColumnBridge.column(SignLshSignature(
+          ColumnBridge.expression(col("v")), FLAT.toSeq, DIM)).as("native"),
         foldForm.as("fold"))
       .as[(Long, Long)].collect()
     rows.foreach { case (n, f) => assert(n == f) }
@@ -53,7 +54,6 @@ class SignLshSpec extends SparkSpecBase {
   }
 
   test("malformed vectors follow the fold: length mismatch / null element → no bits") {
-    SignLshSignature.register(spark, FLAT, DIM)
     // zip_with null-pads a mismatched length and propagates null
     // elements, so every plane dot is null and the fold sets no bit —
     // the native expression must agree, not truncate/zero-fill.
@@ -64,7 +64,8 @@ class SignLshSpec extends SparkSpecBase {
       Seq.fill(DIM)(Some(0.5))                               // control: well-formed
     )
     val rows = malformed.toDF("v").select(
-        call_function(SignLshSignature.FUNC_NAME, col("v")).as("native"),
+        ColumnBridge.column(SignLshSignature(
+          ColumnBridge.expression(col("v")), FLAT.toSeq, DIM)).as("native"),
         foldForm.as("fold"))
       .as[(Long, Long)].collect()
     rows.zip(malformed).foreach { case ((n, f), in) =>

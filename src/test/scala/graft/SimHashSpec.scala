@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.SimHashSignature
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The native codegen'd SimHash expression must equal the original
   * HOF-fold formulation (kept here as the semantic spec) on codegen
@@ -30,9 +31,9 @@ class SimHashSpec extends SparkSpecBase {
     (1L to 200L).map(_ * 982451653L % (1L << 56)))
 
   test("native expression equals the fold (codegen path)") {
-    SimHashSignature.register(spark, BITS)
     val rows = cases.toDF("hs")
-      .select(call_function(SimHashSignature.FUNC_NAME, col("hs")).as("native"),
+      .select(ColumnBridge.column(SimHashSignature(
+          ColumnBridge.expression(col("hs")), BITS)).as("native"),
         foldForm.as("fold"))
       .as[(Long, Long)].collect()
     rows.foreach { case (n, f) => assert(n == f) }

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{UrlNormalize, UrlNormalizeUtil}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Pins the native URL canonicalizer on generic shapes beyond the
@@ -86,9 +87,8 @@ class UrlNormalizeSpec extends SparkSpecBase {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.StringType
     assert(UrlNormalize(Literal(null, StringType)).eval(null) == null)
-    UrlNormalize.register(spark)
     val got = Seq("HTTP://A.B:80/c/", "x").toDF("u")
-      .select(call_function(UrlNormalize.FUNC_NAME, col("u")))
+      .select(ColumnBridge.column(UrlNormalize(ColumnBridge.expression(col("u")))))
       .as[String].collect().toSeq
     assert(got == Seq("http://a.b/c", "x"))
   }

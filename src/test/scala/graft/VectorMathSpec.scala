@@ -1,7 +1,8 @@
 package graft
 
-import graft.functions.{ArrayDot, ArraySqDist, ArraySqNorm, VectorMath}
+import graft.functions.{ArrayDot, ArraySqDist, ArraySqNorm}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The native vector kernels must be BIT-identical to the interpreted
   * `aggregate(zip_with/transform(...))` folds they replaced, on the
@@ -28,13 +29,15 @@ class VectorMathSpec extends SparkSpecBase {
     aggregate(transform(v, x => x * x), lit(0.0), (a, x) => a + x)
 
   test("kernels equal the folds bit-for-bit (codegen path)") {
-    VectorMath.register(spark)
     val rows = pairs.toDF("a", "b").select(
-        call_function(VectorMath.DOT_NAME, col("a"), col("b")).as("nd"),
+        ColumnBridge.column(ArrayDot(ColumnBridge.expression(col("a")),
+          ColumnBridge.expression(col("b")))).as("nd"),
         foldDot(col("a"), col("b")).as("fd"),
-        call_function(VectorMath.SQDIST_NAME, col("a"), col("b")).as("ns"),
+        ColumnBridge.column(ArraySqDist(ColumnBridge.expression(col("a")),
+          ColumnBridge.expression(col("b")))).as("ns"),
         foldSqDist(col("a"), col("b")).as("fs"),
-        call_function(VectorMath.SQNORM_NAME, col("a")).as("nn"),
+        ColumnBridge.column(
+          ArraySqNorm(ColumnBridge.expression(col("a")))).as("nn"),
         foldSqNorm(col("a")).as("fn"))
       .as[(Double, Double, Double, Double, Double, Double)].collect()
     rows.foreach { case (nd, fd, ns, fs, nn, fn) =>
@@ -62,18 +65,20 @@ class VectorMathSpec extends SparkSpecBase {
   }
 
   test("null semantics follow the folds: length mismatch / null element / null array") {
-    VectorMath.register(spark)
     val rows = Seq(
         (Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(3.0)))),        // length mismatch
         (Some(Seq(Some(1.0), None)), Some(Seq(Some(3.0), Some(4.0)))),  // null element
         (None, Some(Seq(Some(1.0)))),                                   // null array
         (Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(3.0), Some(4.0))))) // control
       .toDF("a", "b").select(
-        call_function(VectorMath.DOT_NAME, col("a"), col("b")).as("nd"),
+        ColumnBridge.column(ArrayDot(ColumnBridge.expression(col("a")),
+          ColumnBridge.expression(col("b")))).as("nd"),
         foldDot(col("a"), col("b")).as("fd"),
-        call_function(VectorMath.SQDIST_NAME, col("a"), col("b")).as("ns"),
+        ColumnBridge.column(ArraySqDist(ColumnBridge.expression(col("a")),
+          ColumnBridge.expression(col("b")))).as("ns"),
         foldSqDist(col("a"), col("b")).as("fs"),
-        call_function(VectorMath.SQNORM_NAME, col("b")).as("nn"),
+        ColumnBridge.column(
+          ArraySqNorm(ColumnBridge.expression(col("b")))).as("nn"),
         foldSqNorm(col("b")).as("fn"))
       .as[(Option[Double], Option[Double], Option[Double], Option[Double],
            Option[Double], Option[Double])].collect()
