@@ -98,12 +98,9 @@ object Dedup extends QueryModule {
     * "a b c" concat string and md5-ed it through the interpreter —
     * the dominant per-trigger cost of the streaming admission gates.
     * Bit-parity with that fold is pinned in HashedNgramsSpec. */
-  def shinglesOf(docs: DataFrame): DataFrame = {
-    val toks = TextFns.tokenize(col("text"))
-    val sh = ColumnBridge.column(
-      graft.functions.HashedNgrams(ColumnBridge.expression(toks), 3))
+  def shinglesOf(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), array_distinct(sh).as("hs"))
+      .select(col("doc_id"), shingleSet(col("text")).as("hs"))
       .filter(size(col("hs")) > 0)
       // Boundary: the shingle arrays feed the minhash fold AND both
       // sides of the exact-verify join — one exchange, reused thrice.
@@ -119,7 +116,11 @@ object Dedup extends QueryModule {
       // the parallel hashing saves. On a real many-file corpus the
       // scan parallelism this chased is free at the source.
       .repartition(col("doc_id"))
-  }
+
+  /** The distinct 3-token-shingle fingerprints of one text column. */
+  private def shingleSet(text: Column): Column =
+    array_distinct(ColumnBridge.column(graft.functions.HashedNgrams(
+      ColumnBridge.expression(TextFns.tokenize(text)), 3)))
 
   def nearDedup(spark: SparkSession, dir: String): DataFrame =
     nearDedupPairs(spark, dir).orderBy(col("doc_a"), col("doc_b"))
@@ -129,31 +130,53 @@ object Dedup extends QueryModule {
     * — the collision predicate every LSH consumer (batch pair join,
     * streaming admission state) keys on. */
   private def bandsOf(sh: DataFrame): DataFrame = {
-    // K minhashes in ONE traversal of the shingle array via the native
-    // codegen'd expression — see MinHashSignature's scaladoc for why
-    // this (and only this) hot loop gets a custom Expression instead
-    // of an aggregate+zip_with fold.
-    val mhExpr = ColumnBridge.column(graft.functions.MinHashSignature(
-      ColumnBridge.expression(col("hs")), MH_A.toSeq, MH_B.toSeq, MH_P))
     // The repartition is a deliberate stage boundary: it makes `mh` a
     // physical attribute, so the 128 element_at references in the band
     // expression below read a materialized array instead of inlining
     // (and re-running) the whole minhash pipeline 128×. The extra
     // exchange is O(docs · K·8B) — same order as the band explode that
     // immediately follows.
-    val mh = sh.withColumn("mh", mhExpr).repartition(col("doc_id"))
-    // Band keys: polynomial-combine each band's r minhashes (values < 2^31,
-    // so the 31-ary polynomial stays < 2^47 — no overflow, no extra mod).
-    mh.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(LSH_BANDS - 1)), b =>
-          (0 until LSH_ROWS).map(r => element_at(col("mh"), b * LSH_ROWS + r + 1))
-            .reduce((acc, m) => acc * 31 + m))))
+    val mh = sh.withColumn("mh", minhashOf(col("hs"))).repartition(col("doc_id"))
+    mh.select(col("doc_id"), posexplode(bandArray(col("mh"))))
       .toDF("doc_id", "band_idx", "band_key")
   }
 
+  /** K minhashes of a shingle-set column in ONE traversal via the
+    * native codegen'd expression — see MinHashSignature's scaladoc for
+    * why this (and only this) hot loop gets a custom Expression instead
+    * of an aggregate+zip_with fold. */
+  private def minhashOf(hs: Column): Column =
+    ColumnBridge.column(graft.functions.MinHashSignature(
+      ColumnBridge.expression(hs), MH_A.toSeq, MH_B.toSeq, MH_P))
+
+  /** The [[LSH_BANDS]] band keys of a minhash array `mh`, band b at
+    * index b: each band's r minhashes polynomial-combined (values
+    * < 2^31, so the 31-ary polynomial stays < 2^47 — no overflow, no
+    * extra mod). The one band formula: [[bandsOf]] explodes it, the
+    * driver-side admission path ([[withBandArray]]) indexes it. */
+  private def bandArray(mh: Column): Column =
+    transform(sequence(lit(0), lit(LSH_BANDS - 1)), b =>
+      (0 until LSH_ROWS).map(r => element_at(mh, b * LSH_ROWS + r + 1))
+        .reduce((acc, m) => acc * 31 + m))
+
+  /** `docs` (doc_id, text, …) plus its band-key array `bands` (index =
+    * band_idx), null when the text has no shingle — exactly the docs
+    * [[shinglesOf]] drops. The same expressions as [[bandKeys]],
+    * projected step by step so each step reads the previous step's
+    * column: inlined, the band polynomial would re-run the minhash once
+    * per element it reads. Over a `LocalRelation`, Catalyst's
+    * `ConvertToLocalRelation` evaluates every step on the driver
+    * (interpreted eval, which MinHashSpec and HashedNgramsSpec pin
+    * equal to codegen), so no job runs. */
+  private[graft] def withBandArray(docs: DataFrame): DataFrame =
+    docs.withColumn("hs", shingleSet(col("text")))
+      .withColumn("mh", when(size(col("hs")) > 0, minhashOf(col("hs"))))
+      .withColumn("bands", when(col("mh").isNotNull, bandArray(col("mh"))))
+      .drop("hs", "mh")
+
   /** Public band-key entry for arbitrary (doc_id, text) docs — the
     * streaming near-dedup admission path builds its state from this. */
-  def bandKeys(spark: SparkSession, docs: DataFrame): DataFrame =
+  def bandKeys(docs: DataFrame): DataFrame =
     bandsOf(shinglesOf(docs))
 
   /** The verified near-dup pairs, unordered — shared by the pair query
@@ -571,6 +594,20 @@ object Dedup extends QueryModule {
     * driver ceiling, far above any micro-batch's collision graph. */
   private[graft] val SMALL_GRAPH_EDGES = 100000
 
+  /** Row bound under which a streaming admission trigger decides its
+    * micro-batch on the driver (`StreamNearDedup.PersistentAccumulator`,
+    * `StreamKeepBest.PersistentKeepBest`): one job fetches up to this
+    * many rows plus one — the size probe and the fetch at once, the
+    * [[componentsBounded]] idiom — and within the bound the batch's
+    * band keys, quality, components and actions are computed on the
+    * driver, with one probe query per state table. The driver holds
+    * the fetched rows and their keys: at bench-sized documents 4096
+    * rows are ≈ 1.2 MB of text plus 131k band keys (1 MB of longs),
+    * the same order as the 1.6 MB [[SMALL_GRAPH_EDGES]] collect. A
+    * bigger batch runs the distributed body, whose cost scales with
+    * executors instead. */
+  private[graft] val SMALL_BATCH_ROWS = 4096
+
   /** [[components]] with a small-graph fast path — the per-TRIGGER
     * clustering the streaming admission paths run. A micro-batch's
     * intra-batch collision graph is batch-bounded (O(batch duplicate
@@ -610,26 +647,35 @@ object Dedup extends QueryModule {
     val probe = canon.distinct().limit(maxCollect + 1).collect()
     if (probe.length > maxCollect) components(wide)
     else {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      probe.foreach { row =>
-        val (ru, rv) = (find(row.getLong(0)), find(row.getLong(1)))
-        // Attach the larger root under the smaller: the final root of
-        // every tree is the component minimum, matching [[components]].
-        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
-      }
-      val ids = probe.iterator
-        .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toSet
       val ss = edges.sparkSession
       import ss.implicits._
-      ids.toSeq.sorted.map(id => (id, find(id))).toDF("id", "comp")
+      minLabels(probe.map(r => (r.getLong(0), r.getLong(1))))
+        .toSeq.sorted.toDF("id", "comp")
     }
+  }
+
+  /** Driver union-find: every endpoint of `edges` → the minimum id of
+    * its connected component, the label [[components]] assigns.
+    * Duplicate edges are harmless. [[componentsBounded]]'s small-graph
+    * path and the streaming accumulators' driver-side admission share
+    * it. */
+  private[graft] def minLabels(edges: Iterable[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (u, v) =>
+      val (ru, rv) = (find(u), find(v))
+      // Attach the larger root under the smaller: the final root of
+      // every tree is the component minimum, matching [[components]].
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
+    edges.iterator.flatMap { case (u, v) => Iterator(u, v) }
+      .map(id => id -> find(id)).toMap
   }
 
   /** Large-star: for every node n with neighbourhood Γ(n) (symmetric),
@@ -1145,10 +1191,10 @@ object Dedup extends QueryModule {
     * single-candidate `admit` (a drifting copy would desynchronize
     * the interactive verdict from the oracle-checked one): count each
     * candidate's LSH bands colliding with the state, admit iff zero. */
-  private def probeVerdicts(spark: SparkSession, stateKeys: DataFrame,
+  private def probeVerdicts(stateKeys: DataFrame,
       candidates: DataFrame): DataFrame = {
     val state = stateKeys.select(col("band_idx"), col("band_key")).distinct()
-    val hits = bandKeys(spark, candidates)
+    val hits = bandKeys(candidates)
       .join(state, Seq("band_idx", "band_key"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("hits"))
     candidates.select(col("doc_id"))
@@ -1163,7 +1209,7 @@ object Dedup extends QueryModule {
     val (_, stateKeys) = graft.streaming.StreamNearDedup
       .admitBatch(spark, docs.filter(col("doc_id") % PROBE_MOD === 0),
         graft.streaming.StreamNearDedup.emptyState(spark))
-    probeVerdicts(spark, stateKeys,
+    probeVerdicts(stateKeys,
       docs.filter(col("doc_id") % PROBE_MOD =!= 0))
       .orderBy(col("doc_id"))
   }
@@ -1213,7 +1259,7 @@ object Dedup extends QueryModule {
     val (_, stateKeys) = graft.streaming.StreamNearDedup.admitBatch(spark,
       docs.filter(col("doc_id") =!= docId),
       graft.streaming.StreamNearDedup.emptyState(spark))
-    probeVerdicts(spark, stateKeys, docs.filter(col("doc_id") === docId))
+    probeVerdicts(stateKeys, docs.filter(col("doc_id") === docId))
   }
 
   /** Number of staged files (= micro-batches) for the PACED streaming

@@ -3283,7 +3283,7 @@ object Similarity extends QueryModule {
     * [[lshNearDupPairs]] (the sf-pinned geometry the DuckDB oracle
     * replays); size a real corpus with [[recommendedGeometry]]. */
   def embeddingDedup(spark: SparkSession, dir: String): DataFrame =
-    lshNearDupPairs(spark,
+    lshNearDupPairs(
       corpus(spark, dir).select(col("vec_id"), col("v")),
       "vec_id", "v", DIM, ANN_CHUNKS, ANN_CHUNK_BITS, PLANES_FLAT,
       DEDUP_COSINE)
@@ -3391,7 +3391,7 @@ object Similarity extends QueryModule {
     * the gate query. `planesFlat` must hold
     * `nBands * bitsPerBand * dim` row-major coefficients
     * ([[planesFor]]). */
-  def lshNearDupPairs(spark: SparkSession, vecs: DataFrame,
+  def lshNearDupPairs(vecs: DataFrame,
       idCol: String, vecCol: String, dim: Int,
       nBands: Int, bitsPerBand: Int, planesFlat: Array[Double],
       minCosine: Double): DataFrame = {
@@ -3463,7 +3463,7 @@ object Similarity extends QueryModule {
     val n = base.agg(count(lit(1)).as("n")).head().getLong(0)
     val (bands, bits) = autoGeometry(n)
     val planes = planesFor(AUTO_SEED, bands * bits, DIM)
-    lshNearDupPairs(spark, base, "vec_id", "v", DIM, bands, bits, planes,
+    lshNearDupPairs(base, "vec_id", "v", DIM, bands, bits, planes,
       DEDUP_COSINE)
   }
 

@@ -2,9 +2,12 @@ package graft.streaming
 
 import graft.operators.Dedup
 import graft.storage.GenerationLog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StringType, StructType}
 
 /** Quality-aware streaming admission — the streaming form of
   * [[graft.operators.Dedup.dedupKeepBest]], closing the one
@@ -39,8 +42,9 @@ import org.apache.spark.sql.functions._
   * while the per-doc `action` log preserves exactly WHEN each
   * replacement happened, which is what the paced oracle pins.
   *
-  * State is two tables, both join-shaped (never collected, never
-  * broadcast): `bands(band_idx, band_key, comp)` — the accumulated
+  * State is two tables, both join-shaped (never broadcast, never
+  * collected whole — a small batch's probes collect only its hits):
+  * `bands(band_idx, band_key, comp)` — the accumulated
   * band keys of every doc that ever held a canonical seat, tagged
   * with its cluster — and the per-cluster canonical `(comp, doc_id,
   * quality)`, consolidated in memory and derivable entirely from the
@@ -136,7 +140,7 @@ object StreamKeepBest {
     // Shingle→minhash→band once; the minhash pipeline is the expensive
     // branch and feeds BOTH per-batch actions (the events write and the
     // band-delta write) — materialize it once.
-    val keys = Dedup.bandKeys(spark, batch).localCheckpoint()
+    val keys = Dedup.bandKeys(batch).localCheckpoint()
     keepBestWithKeys(spark, batch, keys, Seq(stateBands), Seq(canon))
   }
 
@@ -260,6 +264,95 @@ object StreamKeepBest {
     (events, keys)
   }
 
+  /** The persisted deltas of one keep-best batch. */
+  private val BandsDelta = new StructType().add("band_idx", IntegerType)
+    .add("band_key", LongType).add("comp", LongType)
+  private val EventsDelta = new StructType().add("doc_id", LongType)
+    .add("comp", LongType).add("quality", DoubleType).add("action", StringType)
+
+  /** One contender for a cluster's canonical seat: a fresh-cluster
+    * member, a challenger, or the incumbent (`inc`). */
+  private final case class Contender(doc: Long, comp: Long,
+      quality: Option[Double], fresh: Boolean, inc: Boolean)
+
+  /** Column 2 of a probed or fetched row: its quality. */
+  private def qualityAt(r: Row): Option[Double] =
+    Option.unless(r.isNullAt(2))(r.getDouble(2))
+
+  /** [[byQuality]]'s order — quality DESC NULLS LAST, then doc_id ASC —
+    * with doubles compared as Spark sorts them
+    * (`SQLOrderingUtil.compareDoubles`). */
+  private val contenderOrder: Ordering[Contender] = (a, b) => {
+    val q = (a.quality, b.quality) match {
+      case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+      case (Some(_), None) => -1
+      case (None, Some(_)) => 1
+      case _ => 0
+    }
+    if (q != 0) q else java.lang.Long.compare(a.doc, b.doc)
+  }
+
+  /** [[keepBestWithKeys]] decided on the driver for a micro-batch of
+    * at most [[Dedup.SMALL_BATCH_ROWS]] rows, fetched with its quality
+    * ([[graft.operators.Pipeline.qualityCol]], the same expression).
+    * One probe query against the band parts routes each colliding doc
+    * to its min comp; one probe of the canonical parts, tagged with
+    * their index, fetches the challenged clusters' incumbents — the
+    * lowest index (the newest part) wins, the [[resolveLatest]] rule.
+    * Both probes are skipped while nothing has committed
+    * (`probeState`) or nothing collides. The rest is Scala: fresh docs
+    * cluster by [[StreamNearDedup.batchComponents]], every cluster
+    * ranks by [[contenderOrder]], and actions are new/replace/drop
+    * exactly as in [[keepBestWithKeys]]. Returns the events and band
+    * deltas as `LocalRelation`s. */
+  private def keepBestSmall(spark: SparkSession, b: StreamNearDedup.SmallBatch,
+      bandParts: Seq[DataFrame], canonParts: Seq[DataFrame],
+      probeState: Boolean): (DataFrame, DataFrame) = {
+    val keyed = b.keyed.toSeq
+    val docComp: Map[Long, Long] =
+      if (!probeState || keyed.isEmpty) Map.empty
+      else StreamNearDedup.probeParts(bandParts,
+          StreamNearDedup.keyFrame(spark, keyed), Seq("band_idx", "band_key"),
+          col("doc_id"), col("comp"))
+        .groupMapReduce(_.getLong(0))(_.getLong(1))(math.min)
+    val incumbents: Seq[Contender] =
+      if (docComp.isEmpty) Nil
+      else {
+        import spark.implicits._
+        StreamNearDedup.probeParts(
+            canonParts.zipWithIndex.map { case (p, i) => p.withColumn("part", lit(i)) },
+            docComp.values.toSeq.distinct.toDF("comp"), Seq("comp"),
+            col("comp"), col("doc_id"), col("quality"), col("part"))
+          .groupBy(_.getLong(0)).values.map(_.minBy(_.getInt(3)))
+          .map(r => Contender(r.getLong(1), r.getLong(0), qualityAt(r),
+            fresh = false, inc = true))
+          .toSeq
+      }
+    val freshComp = StreamNearDedup.batchComponents(
+      keyed.filter(k => !docComp.contains(k._1)))
+    val contenders = b.docs.toSeq.map { case (id, _, r) =>
+      docComp.get(id) match {
+        case Some(c) => Contender(id, c, qualityAt(r), fresh = false, inc = false)
+        case None => Contender(id, freshComp(id), qualityAt(r), fresh = true, inc = false)
+      }
+    } ++ incumbents
+    val winner = contenders.groupBy(_.comp).view
+      .mapValues(_.min(contenderOrder).doc).toMap
+    val events = contenders.filterNot(_.inc).map { c =>
+      val action =
+        if (winner(c.comp) != c.doc) "drop" else if (c.fresh) "new" else "replace"
+      (c, action)
+    }
+    val keysOf = keyed.toMap
+    val bands = events.filter(_._2 != "drop").flatMap { case (c, _) =>
+      keysOf.getOrElse(c.doc, Array.emptyLongArray).zipWithIndex
+        .map { case (k, i) => Row(i, k, c.comp) }
+    }
+    (StreamNearDedup.localFrame(spark, events.map { case (c, a) =>
+        Row(c.doc, c.comp, c.quality.map(Double.box).orNull, a) }, EventsDelta),
+      StreamNearDedup.localFrame(spark, bands, BandsDelta))
+  }
+
   /** Canonical table from a persisted event log: per cluster, the
     * winner row of the LATEST committed batch (one winner per cluster
     * per batch, so the window is unambiguous).
@@ -348,45 +441,50 @@ object StreamKeepBest {
 
     /** The foreachBatch body (serial per query; lock defensive).
       *
-      * Compute-once/write-concurrent per trigger (r21, guide §2.6):
-      * the events plan executes ONCE into a per-trigger persist, and
-      * the two delta writes — the events parquet and the band delta
-      * derived from the cached winner rows — run as concurrent job
-      * chains settled via awaitAll, so the band delta no longer waits
-      * behind the events write plus a parquet read-back of the file it
-      * just wrote (the r20 sequential posture; measured ~-0.4 s on the
-      * 3-trigger gate). The canonical mirror's delta layer still reads
-      * the COMMITTED file lazily — the persist is released at trigger
-      * end, so later triggers must not reference it. The marker still
-      * lands only after BOTH delta writes, so replay visibility is
-      * unchanged.
+      * A micro-batch of at most [[Dedup.SMALL_BATCH_ROWS]] rows is
+      * decided on the driver ([[StreamNearDedup.fetchSmall]],
+      * [[keepBestSmall]]): one fetch job, one probe query per state
+      * table and the two delta writes, whatever the number of mirror
+      * parts. Measured on the benchmark's 25–31-doc batches: 3 jobs on
+      * the first trigger (no probe), 7 on every later one (each probe's
+      * broadcast is its own job), against 21 growing by about 3.75 per
+      * unfolded tail part for the distributed body.
       *
-      * The persist is best-effort: an evicted or lost cached block is
-      * recomputed, independently per consumer. That is value-safe
-      * because every choice the events plan makes is a total order
-      * over its (persisted or checkpointed) inputs, so a recompute
-      * yields the same rows: [[byQuality]] ranks by (quality DESC,
-      * doc_id ASC) over unique doc_ids, challenger routing takes the
-      * min colliding comp, [[Dedup.componentsBounded]] labels each
+      * A bigger batch runs the distributed [[keepBestWithKeys]] body,
+      * compute-once/write-concurrent (r21, guide §2.6): the events plan
+      * executes ONCE into a per-trigger persist, and the band delta is
+      * derived from the cached winner rows, so it does not wait behind
+      * the events write plus a parquet read-back of the file it just
+      * wrote. The persist is best-effort: an evicted or lost cached
+      * block is recomputed, independently per consumer. That is
+      * value-safe because every choice the events plan makes is a
+      * total order over its (persisted or checkpointed) inputs, so a
+      * recompute yields the same rows: [[byQuality]] ranks by (quality
+      * DESC, doc_id ASC) over unique doc_ids, challenger routing takes
+      * the min colliding comp, [[Dedup.componentsBounded]] labels each
       * component with its min id, and [[resolveLatest]] takes the max
-      * generation index, unique per part. The events file and the
-      * band delta of one committed batch therefore always agree
+      * generation index, unique per part. The events file and the band
+      * delta of one committed batch therefore always agree
       * (StreamNearDedupSpec pins a recompute against the persist).
       *
-      * Mirror folds are LAZY (both [[StateMirror]]s): between fold
-      * points each mirror is its checkpointed base plus up to
-      * [[StreamNearDedup.MEM_FOLD_EVERY]] committed delta scans, so
-      * steady-state triggers run exactly the two delta-write jobs plus
-      * [[Dedup.componentsBounded]]'s one probe fetch. Every `foldEvery` committed batches the on-disk band
-      * layout folds too ([[compactBands]] from inside the loop — safe:
-      * foreachBatch is the single writer and runs serially) and the
-      * band mirror re-bases onto the new generation. */
+      * Either way the two delta writes run as concurrent job chains
+      * settled via awaitAll, and the marker lands only after BOTH, so
+      * replay visibility is unchanged. The canonical mirror's delta
+      * layer reads the COMMITTED events file lazily — later triggers
+      * never reference a per-trigger cache. Mirror folds are LAZY (both
+      * [[StateMirror]]s): between fold points each mirror is its
+      * checkpointed base plus up to [[StreamNearDedup.MEM_FOLD_EVERY]]
+      * committed delta scans. Every `foldEvery` committed batches the
+      * on-disk band layout folds too ([[compactBands]] from inside the
+      * loop — safe: foreachBatch is the single writer and runs
+      * serially) and the band mirror re-bases onto the new generation. */
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
-      // Job labels (guide §1.5): thread-local, covers every job this
-      // trigger launches on the foreachBatch thread (the concurrent
-      // write futures label — and clear — their own threads). Cleared
-      // on exit so the last trigger's label cannot leak onto unrelated
-      // later jobs from the same thread (r20 ADVICE).
+      // Job labels (guide §1.5): thread-local, covering every job this
+      // trigger launches on the foreachBatch thread; the write futures
+      // run under the label current when they are submitted
+      // ([[StreamingOps.inTrigger]]). Cleared on exit so the last
+      // trigger's label cannot leak onto unrelated later jobs from the
+      // same thread (r20 ADVICE).
       def label(s: String): Unit =
         spark.sparkContext.setJobDescription(s"keepbest b$batchId: $s")
       label("trigger")
@@ -397,73 +495,25 @@ object StreamKeepBest {
     private def onBatchLabeled(batch0: DataFrame, batchId: Long,
         label: String => Unit): Unit = {
       if (!committedIds(batchId)) {
-        // Spread the one-file micro-batch before minhash/quality (the
-        // [[StreamNearDedup.PersistentAccumulator.onBatch]] rationale:
-        // one row group = one scan task, and the persisted band rows
-        // would otherwise sit in a single partition). Persisted —
-        // quality is scanned by two event branches and the survivors
-        // anti-join; unpersisted each would re-scan and re-shuffle.
-        val batch = batch0.repartition(
-          StreamNearDedup.triggerShufflePartitions(spark), col("doc_id"))
-          .persist()
-        val keys = Dedup.bandKeys(spark, batch).persist()
-        val winners = try {
-          // ckptProbe whenever PRIOR state exists (the
-          // [[StreamNearDedup.PersistentAccumulator]] rationale).
-          label("probe+components")
-          val (events0, _) = keepBestWithKeys(spark, batch, keys,
-            bands.parts, canon.parts, ckptProbe = committedIds.nonEmpty)
-          // ONE execution of the batch plan feeds BOTH delta writes:
-          // persist the events rows, then run the writes as concurrent
-          // job chains (guide §2.6, the awaitAll idiom). The band
-          // delta joins keys with the CACHED winner rows instead of
-          // re-reading the just-written events parquet, so it no
-          // longer serializes behind the events write + file
-          // round-trip. Released below — later triggers read the
-          // committed file, never this cache.
-          val events = events0.persist()
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.Future
-          // coalesce(1): one batch's delta, sized like the first-touch
-          // accumulator's — a production job sizes this to batch volume.
-          // Pool threads outlive the trigger: each write labels its own
-          // thread and clears the label before the thread is returned.
-          def labeled(s: String)(write: => Unit): Future[Unit] = Future {
-            label(s)
-            try write finally spark.sparkContext.setJobDescription(null)
-          }
-          val eventsWriteF = labeled("events write") {
-            events.coalesce(1).write.mode("overwrite")
-              .parquet(log.payload("events", batchId))
-          }
-          val bandDelta = keys
-            .join(events.filter(col("action") =!= "drop")
-              .select(col("doc_id"), col("comp")), Seq("doc_id"))
-            .select(col("band_idx"), col("band_key"), col("comp"))
-          val bandWriteF = labeled("band delta write") {
-            bandDelta.coalesce(1).write.mode("overwrite")
-              .parquet(log.payload("bands", batchId))
-          }
-          StreamingOps.awaitAll(Seq(eventsWriteF, bandWriteF))
-          events.unpersist(blocking = false)
-          log.commit(batchId)
-          // The canonical mirror's delta layer: a lazy scan of the
-          // COMMITTED events file (not the released cache above), the
-          // same storage-backed posture as before.
-          spark.read
-            .parquet(log.payload("events", batchId))
-            .filter(col("action") =!= "drop")
-            .select(col("comp"), col("doc_id"), col("quality"))
-        } finally {
-          keys.unpersist(blocking = false)
-          batch.unpersist(blocking = false)
+        StreamNearDedup.fetchSmall(batch0,
+            graft.operators.Pipeline.qualityCol(col("text"))) match {
+          case Some(small) =>
+            label("probe+decide")
+            val (events, bandDelta) = keepBestSmall(spark, small, bands.parts,
+              canon.parts, probeState = committedIds.nonEmpty)
+            writeDeltas(batchId, events, bandDelta, label)
+          case None => keepBestDistributed(batch0, batchId, label)
         }
+        log.commit(batchId)
         committedIds += batchId
         // The winners delta IS the canonical update: a replacement's
         // newer row supersedes the cluster's older one at resolve
         // time, a new cluster's row introduces it. One lazy scan of
-        // the just-written events file — no per-trigger join.
-        canon.advance(winners)
+        // the just-committed events file — no per-trigger join.
+        canon.advance(spark.read.schema(EventsDelta)
+          .parquet(log.payload("events", batchId))
+          .filter(col("action") =!= "drop")
+          .select(col("comp"), col("doc_id"), col("quality")))
         sinceDiskFold += 1
         if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
           compactBands(spark, stateDir)
@@ -472,11 +522,56 @@ object StreamKeepBest {
           sinceDiskFold = 0
         } else {
           val path = log.payload("bands", batchId)
-          bands.advanceCommitted(path, spark.read.parquet(path)
-            .select(col("band_idx"), col("band_key"), col("comp")))
+          bands.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
         }
       }
     }
+
+    private def keepBestDistributed(batch0: DataFrame, batchId: Long,
+        label: String => Unit): Unit = {
+      // Spread the one-file micro-batch before minhash/quality (the
+      // [[StreamNearDedup.PersistentAccumulator.onBatch]] rationale:
+      // one row group = one scan task, and the persisted band rows
+      // would otherwise sit in a single partition). Persisted —
+      // quality is scanned by two event branches and the survivors
+      // anti-join; unpersisted each would re-scan and re-shuffle.
+      val batch = batch0.repartition(
+        StreamNearDedup.triggerShufflePartitions(spark), col("doc_id"))
+        .persist()
+      val keys = Dedup.bandKeys(batch).persist()
+      try {
+        // ckptProbe whenever PRIOR state exists (the
+        // [[StreamNearDedup.PersistentAccumulator]] rationale).
+        label("probe+components")
+        val (events0, _) = keepBestWithKeys(spark, batch, keys,
+          bands.parts, canon.parts, ckptProbe = committedIds.nonEmpty)
+        // ONE execution of the batch plan feeds BOTH delta writes:
+        // the band delta joins keys with the CACHED winner rows.
+        val events = events0.persist()
+        try writeDeltas(batchId, events, keys
+          .join(events.filter(col("action") =!= "drop")
+            .select(col("doc_id"), col("comp")), Seq("doc_id"))
+          .select(col("band_idx"), col("band_key"), col("comp")), label)
+        finally events.unpersist(blocking = false)
+      } finally {
+        keys.unpersist(blocking = false)
+        batch.unpersist(blocking = false)
+      }
+    }
+
+    /** The two delta writes as concurrent job chains, each labeled and
+      * run under the trigger's local properties; coalesce(1): one
+      * batch's delta, sized like the first-touch accumulator's — a
+      * production job sizes this to batch volume. */
+    private def writeDeltas(batchId: Long, events: DataFrame,
+        bandDelta: DataFrame, label: String => Unit): Unit =
+      StreamingOps.awaitAll(Seq(("events", "events write", events),
+          ("bands", "band delta write", bandDelta)).map {
+        case (table, what, delta) =>
+          label(what)
+          StreamingOps.inTrigger(spark)(delta.coalesce(1).write
+            .mode("overwrite").parquet(log.payload(table, batchId)))
+      })
   }
 
   /** The committed (doc_id, comp, quality, action, batch_id) event

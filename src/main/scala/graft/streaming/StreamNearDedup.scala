@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.operators.Dedup
 import graft.storage.GenerationLog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Streaming near-duplicate ingest filter — the MinHash-LSH sibling of
   * [[StreamingOps.streamingDedup]]'s exact first-touch dedup, and the
@@ -25,9 +26,10 @@ import org.apache.spark.sql.functions._
   *      batch `dedup_components` gate query performs).
   *
   * Both rules are join/aggregate shaped: admission state is a band-key
-  * table joined per micro-batch (never broadcast, never collected), so
-  * the operator scales with executors, and the per-batch component
-  * step runs on the (tiny) collision graph, not the corpus. The live
+  * table joined per micro-batch (never broadcast, never collected
+  * whole — a small batch's probe collects only its hits), so the
+  * operator scales with executors, and the per-batch component step
+  * runs on the (tiny) collision graph, not the corpus. The live
   * queries run the state as a real TABLE: [[PersistentAccumulator]]
   * appends band keys and admissions to parquet per micro-batch, so a
   * restarted query resumes admission from storage (a production
@@ -68,7 +70,7 @@ object StreamNearDedup {
     // referenced by every downstream branch (prior-hit probe, both
     // sides of the collision self-join, the new-state projection),
     // which are consumed by SEPARATE actions — materialize it once.
-    val keys = Dedup.bandKeys(spark, batch).localCheckpoint()
+    val keys = Dedup.bandKeys(batch).localCheckpoint()
     admitWithKeys(spark, batch, keys, stateBands)
   }
 
@@ -143,6 +145,112 @@ object StreamNearDedup {
     val admitted = survivors.join(nonCanonical, Seq("doc_id"), "left_anti")
     (admitted, skeys.join(nonCanonical, Seq("doc_id"), "left_anti")
       .select(col("band_idx"), col("band_key")))
+  }
+
+  // --- driver-side admission of small micro-batches -----------------------
+
+  /** The persisted band-key delta of one near-dedup batch. */
+  private val BandsDelta = new StructType()
+    .add("band_idx", IntegerType).add("band_key", LongType)
+
+  /** A micro-batch fetched to the driver: its (doc_id, text) `rows`
+    * under `schema`, and per row its doc_id, its band keys (index =
+    * band_idx; empty when the text has no shingle) and the `extra`
+    * columns [[fetchSmall]] was asked for. */
+  private[streaming] final case class SmallBatch(rows: Array[Row],
+      schema: StructType, docs: Array[(Long, Array[Long], Row)]) {
+    def keyed: Array[(Long, Array[Long])] =
+      docs.collect { case (id, ks, _) if ks.nonEmpty => (id, ks) }
+  }
+
+  /** ONE job fetches at most [[Dedup.SMALL_BATCH_ROWS]] + 1 rows of
+    * the micro-batch — the size probe and the fetch at once, the
+    * [[Dedup.componentsBounded]] idiom. None past the bound. Within it,
+    * the band keys and `extra` columns are the same Catalyst
+    * expressions the distributed path runs ([[Dedup.withBandArray]]),
+    * projected over a `LocalRelation` of the fetched rows, which
+    * `ConvertToLocalRelation` evaluates on the driver without a job. */
+  private[streaming] def fetchSmall(batch: DataFrame,
+      extra: Column*): Option[SmallBatch] = {
+    val fetch = batch.select(col("doc_id"), col("text"))
+      .limit(Dedup.SMALL_BATCH_ROWS + 1)
+    val rows = fetch.collect()
+    if (rows.length > Dedup.SMALL_BATCH_ROWS) None
+    else {
+      val xs = extra.indices.map(i => s"x$i")
+      val docs = Dedup.withBandArray(
+          localFrame(batch.sparkSession, rows, fetch.schema).select(
+            Seq(col("doc_id").cast("long").as("doc_id"), col("text")) ++
+              extra.zip(xs).map { case (c, x) => c.as(x) }: _*))
+        .select(Seq("doc_id", "bands").map(col) ++ xs.map(col): _*)
+        .collect().map { r =>
+          val ks = if (r.isNullAt(1)) Array.emptyLongArray else r.getSeq[Long](1).toArray
+          (r.getLong(0), ks, r)
+        }
+      Some(SmallBatch(rows, fetch.schema, docs))
+    }
+  }
+
+  private[streaming] def localFrame(spark: SparkSession, rows: collection.Seq[Row],
+      schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** (doc_id, band_idx, band_key) rows of driver-held band keys. */
+  private[streaming] def keyFrame(spark: SparkSession,
+      keyed: Seq[(Long, Array[Long])]): DataFrame = {
+    import spark.implicits._
+    keyed.flatMap { case (id, ks) => ks.indices.map(b => (id, b, ks(b))) }
+      .toDF("doc_id", "band_idx", "band_key")
+  }
+
+  /** ONE query over every state part: each part ⋈ broadcast(`keys`) on
+    * `on`, unioned, `cols` collected. Part-wise for the
+    * [[admitWithKeys]] reason: a clustered base keeps its layout, and
+    * the batch-sized keys are the broadcast side of every branch. */
+  private[streaming] def probeParts(parts: Seq[DataFrame], keys: DataFrame,
+      on: Seq[String], cols: Column*): Array[Row] =
+    parts.map(_.join(broadcast(keys), on).select(cols: _*))
+      .reduce(_ unionAll _).collect()
+
+  /** Intra-batch clusters on the driver: doc → min doc_id of its
+    * band-collision component ([[Dedup.minLabels]], the union-find
+    * [[Dedup.componentsBounded]] runs); a doc colliding with nothing
+    * labels itself. */
+  private[streaming] def batchComponents(
+      keyed: Seq[(Long, Array[Long])]): Long => Long = {
+    val edges = keyed
+      .flatMap { case (id, ks) => ks.indices.map(b => ((b, ks(b)), id)) }
+      .groupMap(_._1)(_._2).values
+      .flatMap { ids => val m = ids.min; ids.filter(_ != m).map(_ -> m) }
+    val labels = Dedup.minLabels(edges)
+    id => labels.getOrElse(id, id)
+  }
+
+  /** [[admitWithKeys]] decided on the driver for a [[SmallBatch]]: one
+    * probe query against `stateParts` (skipped while no batch has
+    * committed) drops the docs that collide with admitted state; the
+    * rest cluster by [[batchComponents]] and each cluster's min doc_id
+    * is admitted. Returns the same two deltas as `LocalRelation`s. */
+  private def admitSmall(spark: SparkSession, b: SmallBatch,
+      stateParts: Seq[DataFrame], probeState: Boolean): (DataFrame, DataFrame) = {
+    val keyed = b.keyed.toSeq
+    val hit =
+      if (!probeState || keyed.isEmpty) Set.empty[Long]
+      else probeParts(stateParts, keyFrame(spark, keyed),
+        Seq("band_idx", "band_key"), col("doc_id")).map(_.getLong(0)).toSet
+    val comp = batchComponents(keyed.filter(k => !hit(k._1)))
+    val admitted = b.docs.indices.filter { i =>
+      val id = b.docs(i)._1
+      !hit(id) && comp(id) == id
+    }
+    val bands = admitted.flatMap { i =>
+      val ks = b.docs(i)._2
+      ks.indices.map(j => Row(j, ks(j)))
+    }
+    (localFrame(spark, admitted.map(i => b.rows(i)), b.schema),
+      localFrame(spark, bands, BandsDelta))
   }
 
   /** Accumulates admission across micro-batches: wire [[onBatch]] as a
@@ -253,74 +361,39 @@ object StreamNearDedup {
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
     /** The foreachBatch body (serial per query; lock defensive).
-      * Write-once/read-back: the band-delta write is the one execution
-      * of its plan (keys materialize inside it via `persist`); the
-      * state mirror folds the written file back in LAZILY — between
-      * fold points the mirror is the clustered base plus up to
-      * [[MEM_FOLD_EVERY]] committed delta scans, so steady-state
-      * triggers run exactly two jobs (the two delta writes) plus the
-      * engine's own bookkeeping — and the base's share of the probe is
-      * a sorted merge scan, not a re-shuffle of the whole state. Every
-      * [[MEM_FOLD_EVERY]] triggers the tail folds into a fresh
-      * clustered base (the LSM run merge, amortized); every `foldEvery`
-      * committed batches the ON-DISK layout folds too ([[compactState]]
-      * from inside the loop — safe: foreachBatch is the single writer
-      * and runs serially) and the mirror re-bases onto the new
-      * generation. */
+      *
+      * A micro-batch of at most [[Dedup.SMALL_BATCH_ROWS]] rows is
+      * decided on the driver ([[fetchSmall]], [[admitSmall]]): the
+      * trigger runs one fetch job, one probe query against the mirror
+      * (none before the first commit) and the two delta writes,
+      * whatever the number of mirror parts. Measured on the benchmark's
+      * 25–31-doc batches: 3 jobs on the first trigger (no probe), 5 on
+      * every later one (the probe's broadcast of the batch keys is its
+      * own job), against 17–21 for the distributed body.
+      * A bigger batch runs the distributed [[admitWithKeys]] body,
+      * write-once: the band-delta write is the one execution of its
+      * plan (keys materialize inside it via `persist`).
+      *
+      * Either way the state mirror folds the written file back in
+      * LAZILY — between fold points the mirror is the clustered base
+      * plus up to [[MEM_FOLD_EVERY]] committed delta scans, and the
+      * base's share of the probe is a sorted merge scan, not a
+      * re-shuffle of the whole state. Every [[MEM_FOLD_EVERY]] triggers
+      * the tail folds into a fresh clustered base (the LSM run merge,
+      * amortized); every `foldEvery` committed batches the ON-DISK
+      * layout folds too ([[compactState]] from inside the loop — safe:
+      * foreachBatch is the single writer and runs serially) and the
+      * mirror re-bases onto the new generation. */
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
       if (!committedIds(batchId)) {
-        // Spread a paced one-file micro-batch before the shingle→
-        // minhash pipeline (see the class scaladoc). Hash-partitioning
-        // by doc_id moves only the batch's raw rows, and PERSISTING
-        // the result makes that one tiny shuffle the only one — the
-        // batch has several consumers (the keys pipeline, the admitted
-        // anti-join), and unpersisted each would re-scan the file and
-        // re-shuffle per job. Materializes inside the first consuming
-        // job, like keys.
-        val batch =
-          if (spreadBatches) batch0.repartition(
-            triggerShufflePartitions(spark), col("doc_id")).persist()
-          else batch0
-        val keys = graft.operators.Dedup.bandKeys(spark, batch).persist()
-        try {
-          // ckptProbe whenever PRIOR state exists: the probe feeds
-          // three consumers (components probe + both delta writes),
-          // and the one doc_id-sized materialization job was measured
-          // cheaper than the re-executions even while the band state
-          // still broadcasts (round-18 A/B; at scale the old
-          // byte-regime check already chose to materialize). Against
-          // EMPTY state (a first/only batch — the unpaced live gate)
-          // the probe is trivially empty and the checkpoint job would
-          // scan the whole batch's keys for nothing.
-          val (kept, newKeys) =
-            admitWithKeys(spark, batch, keys, mirror.parts,
-              ckptProbe = committedIds.nonEmpty)
-          // coalesce(1): a batch's state delta is small relative to the
-          // corpus (it is one batch's keys/admissions), and writing it
-          // as one file instead of one per shuffle partition keeps the
-          // per-trigger commit cost flat — a production job sizes this
-          // to its batch volume. The two delta writes are INDEPENDENT
-          // plans over materialized inputs (keys persisted, the probe
-          // checkpointed, the batch cached), so they run as concurrent
-          // job chains (the [[graft.operators.Similarity]] two-family
-          // build posture): disjoint directories, wall-clock ≈ the
-          // slower write instead of the sum, and the marker still
-          // lands only after BOTH — crash semantics unchanged.
-          locally {
-            import scala.concurrent.ExecutionContext.Implicits.global
-            StreamingOps.awaitAll(Seq(
-              scala.concurrent.Future(newKeys.coalesce(1).write
-                .mode("overwrite")
-                .parquet(log.payload("bands", batchId))),
-              scala.concurrent.Future(kept.coalesce(1).write
-                .mode("overwrite")
-                .parquet(log.payload("admitted", batchId)))))
-          }
-          log.commit(batchId)
-        } finally {
-          keys.unpersist(blocking = false)
-          if (spreadBatches) batch.unpersist(blocking = false)
+        fetchSmall(batch0) match {
+          case Some(small) =>
+            val (kept, newKeys) = admitSmall(spark, small, mirror.parts,
+              probeState = committedIds.nonEmpty)
+            writeDeltas(batchId, newKeys, kept)
+          case None => admitDistributed(batch0, batchId)
         }
+        log.commit(batchId)
         committedIds += batchId
         sinceDiskFold += 1
         if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
@@ -329,11 +402,62 @@ object StreamNearDedup {
           sinceDiskFold = 0
         } else {
           val path = log.payload("bands", batchId)
-          mirror.advanceCommitted(path, spark.read.parquet(path)
-            .select(col("band_idx"), col("band_key")))
+          mirror.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
         }
       }
     }
+
+    private def admitDistributed(batch0: DataFrame, batchId: Long): Unit = {
+      // Spread a paced one-file micro-batch before the shingle→
+      // minhash pipeline (see the class scaladoc). Hash-partitioning
+      // by doc_id moves only the batch's raw rows, and PERSISTING
+      // the result makes that one tiny shuffle the only one — the
+      // batch has several consumers (the keys pipeline, the admitted
+      // anti-join), and unpersisted each would re-scan the file and
+      // re-shuffle per job. Materializes inside the first consuming
+      // job, like keys.
+      val batch =
+        if (spreadBatches) batch0.repartition(
+          triggerShufflePartitions(spark), col("doc_id")).persist()
+        else batch0
+      val keys = Dedup.bandKeys(batch).persist()
+      try {
+        // ckptProbe whenever PRIOR state exists: the probe feeds
+        // three consumers (components probe + both delta writes),
+        // and the one doc_id-sized materialization job was measured
+        // cheaper than the re-executions even while the band state
+        // still broadcasts (round-18 A/B; at scale the old
+        // byte-regime check already chose to materialize). Against
+        // EMPTY state (a first/only batch — the unpaced live gate)
+        // the probe is trivially empty and the checkpoint job would
+        // scan the whole batch's keys for nothing.
+        val (kept, newKeys) =
+          admitWithKeys(spark, batch, keys, mirror.parts,
+            ckptProbe = committedIds.nonEmpty)
+        writeDeltas(batchId, newKeys, kept)
+      } finally {
+        keys.unpersist(blocking = false)
+        if (spreadBatches) batch.unpersist(blocking = false)
+      }
+    }
+
+    /** coalesce(1): a batch's state delta is small relative to the
+      * corpus (it is one batch's keys/admissions), and writing it as
+      * one file instead of one per shuffle partition keeps the
+      * per-trigger commit cost flat — a production job sizes this to
+      * its batch volume. The two delta writes are INDEPENDENT plans
+      * over materialized inputs (driver rows, or keys persisted, the
+      * probe checkpointed, the batch cached), so they run as concurrent
+      * job chains (the [[graft.operators.Similarity]] two-family build
+      * posture): disjoint directories, wall-clock ≈ the slower write
+      * instead of the sum, and the marker still lands only after BOTH
+      * — crash semantics unchanged. */
+    private def writeDeltas(batchId: Long, bands: DataFrame,
+        admitted: DataFrame): Unit =
+      StreamingOps.awaitAll(Seq("bands" -> bands, "admitted" -> admitted).map {
+        case (table, delta) => StreamingOps.inTrigger(spark)(delta.coalesce(1)
+          .write.mode("overwrite").parquet(log.payload(table, batchId)))
+      })
   }
 
   /** In-memory mirror fold cadence ([[StateMirror]]): between folds
@@ -476,9 +600,8 @@ object StreamNearDedup {
       // Independent reads, disjoint destination dirs — fold the tables
       // as concurrent job chains (the delta-write posture); the pointer
       // swap still lands only after ALL of them.
-      import scala.concurrent.ExecutionContext.Implicits.global
       StreamingOps.awaitAll(tables.map { case (table, empty) =>
-        scala.concurrent.Future(readState(spark, log, view, table, empty)
+        StreamingOps.inTrigger(spark)(readState(spark, log, view, table, empty)
           .write.mode("overwrite").parquet(log.tableRoot(table, newGen)))
       })
     }

@@ -606,6 +606,29 @@ object StreamingOps extends QueryModule {
     }.orderBy(col("event_type"), col("window_start"))
   }
 
+  /** Daemon threads for [[inTrigger]]; idle ones exit after a minute. */
+  private lazy val triggerPool = java.util.concurrent.Executors.newCachedThreadPool {
+    r =>
+      val t = new Thread(r, "graft-trigger-job")
+      t.setDaemon(true)
+      t
+  }
+
+  /** `body` on a pool thread under the SUBMITTING thread's Spark local
+    * properties (job group, description, tags) and active session, the
+    * pool thread's own restored afterwards
+    * (`SQLExecution.withThreadLocalCaptured`). A plain `Future` runs
+    * under whatever properties its pool thread inherited when it was
+    * created — a trigger's concurrent writes were attributed to an
+    * earlier trigger's job group. Settle with [[awaitAll]]. */
+  private[graft] def inTrigger[A](spark: SparkSession)(
+      body: => A): scala.concurrent.Future[A] = {
+    import scala.jdk.FutureConverters._
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      triggerPool)(body).asScala
+  }
+
   /** Await EVERY future before letting any failure propagate. The
     * concurrent-job-chain sites (delta writes, fold writes, the
     * two-family PQ training) pair this with a commit marker / MANIFEST

@@ -182,7 +182,7 @@ class InvariantSpec extends SparkSpecBase {
     val brute = jaccardPairs(
       sh.filter(!isEval).select(col("doc_id").as("doc_a"))
         .crossJoin(sh.filter(isEval).select(col("doc_id").as("doc_b"))))
-    val bands = operators.Dedup.bandKeys(spark, docs).localCheckpoint()
+    val bands = operators.Dedup.bandKeys(docs).localCheckpoint()
     val lsh = jaccardPairs(
       bands.filter(!isEval)
         .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_key"))

@@ -56,7 +56,7 @@ class LshGeometrySpec extends SparkSpecBase {
     val df = all.toDF("vec_id", "v")
     val planes = Similarity.planesFor(seed = 99, nPlanes = 4 * 16, dim = dim)
     val got = Similarity
-      .lshNearDupPairs(spark, df, "vec_id", "v", dim, 4, 16, planes, 0.95)
+      .lshNearDupPairs(df, "vec_id", "v", dim, 4, 16, planes, 0.95)
       .as[(Long, Long, Double)].collect().toSeq
     val byId = all.toMap
     val brute = (for {
@@ -89,7 +89,7 @@ class LshGeometrySpec extends SparkSpecBase {
     val all = base ++ planted
     val planes = Similarity.planesFor(seed = 17, nPlanes = nBands * bits, dim = dim)
     val got = Similarity
-      .lshNearDupPairs(spark, all.toDF("vec_id", "v"),
+      .lshNearDupPairs(all.toDF("vec_id", "v"),
         "vec_id", "v", dim, nBands, bits, planes, 0.8)
       .as[(Long, Long, Double)].collect().toSeq.sorted
     val expect = replay(all, planes, dim, nBands, bits, 0.8)
@@ -114,8 +114,8 @@ class LshGeometrySpec extends SparkSpecBase {
     val df = all.toDF("vec_id", "v")
     val (pa, pb) = (Similarity.planesFor(seed = 17, nPlanes = nBands * bits, dim = dim),
       Similarity.planesFor(seed = 18, nPlanes = nBands * bits, dim = dim))
-    val fa = Similarity.lshNearDupPairs(spark, df, "vec_id", "v", dim, nBands, bits, pa, 0.5)
-    val fb = Similarity.lshNearDupPairs(spark, df, "vec_id", "v", dim, nBands, bits, pb, 0.5)
+    val fa = Similarity.lshNearDupPairs(df, "vec_id", "v", dim, nBands, bits, pa, 0.5)
+    val fb = Similarity.lshNearDupPairs(df, "vec_id", "v", dim, nBands, bits, pb, 0.5)
     val gotB = fb.as[(Long, Long, Double)].collect().toSeq.sorted
     val gotA = fa.as[(Long, Long, Double)].collect().toSeq.sorted
     val (expA, expB) = (replay(all, pa, dim, nBands, bits, 0.5),

@@ -184,4 +184,117 @@ class PropertySpec extends SparkSpecBase {
         || w1.map(_._1).toSet == w2.map(_._1).toSet)
     }
   }
+
+  // --- streaming admission ≡ batch-mode admission -------------------------
+
+  private val vocab = Vector("spark", "shuffle", "parquet", "stream", "batch",
+    "minhash", "band", "key", "join", "broadcast", "driver", "executor",
+    "task", "stage", "state", "mirror", "fold", "delta", "commit", "marker",
+    "quality", "cluster", "replace", "probe", "union", "merge", "scan", "row")
+
+  /** A seeded corpus cut into micro-batches: random sentences plus
+    * planted near-duplicates (one token replaced, one appended), exact
+    * duplicates (quality ties), punctuation variants (equal shingles,
+    * different quality), empty, punctuation-only and null texts; ids
+    * unique and shuffled, batch cuts random (one to three batches).
+    * With `big` > 0 the corpus is cut in two and a batch of `big` docs
+    * — random sentences and re-captures of the corpus texts — is
+    * inserted at index `bigAt`. */
+  private def admissionCorpus(seed: Long, big: Int = 0,
+      bigAt: Int = 0): Seq[Seq[(Long, String)]] = {
+    val rng = new scala.util.Random(seed)
+    def sentence() =
+      Seq.fill(6 + rng.nextInt(10))(vocab(rng.nextInt(vocab.size))).mkString(" ")
+    val real = scala.collection.mutable.ArrayBuffer.fill(3 + rng.nextInt(8))(sentence())
+    val texts = scala.collection.mutable.ArrayBuffer.from[String](real)
+    (0 until 2 + rng.nextInt(8)).foreach { _ =>
+      val src = real(rng.nextInt(real.size))
+      texts += (rng.nextInt(7) match {
+        case 0 | 1 =>
+          val toks = src.split(" ")
+          toks(rng.nextInt(toks.length)) = vocab(rng.nextInt(vocab.size))
+          val dup = (toks :+ vocab(rng.nextInt(vocab.size))).mkString(" ")
+          real += dup
+          dup
+        case 2 => src
+        case 3 => if (rng.nextBoolean()) src + " !!!" else "?? " + src
+        case 4 => ""
+        case 5 => "?! ... ,"
+        case _ => null
+      })
+    }
+    val ids = rng.shuffle((1L to 100000L).toVector).take(texts.size + big)
+    val docs = rng.shuffle(ids.take(texts.size).zip(texts))
+    val cuts = (0 +: rng.shuffle((1 until docs.size).toVector)
+      .take(if (big > 0) 1 else rng.nextInt(3)).sorted :+ docs.size).distinct
+    val bs = cuts.zip(cuts.tail).map { case (a, b) => docs.slice(a, b) }
+    if (big == 0) bs
+    else bs.patch(bigAt, Seq(ids.drop(texts.size).map(id => (id,
+      if (rng.nextInt(8) == 0) real(rng.nextInt(real.size)) + " again" else sentence()))), 0)
+  }
+
+  /** Drives `bs` through both persistent accumulators and compares
+    * them with the batch-mode reference the benchmark checks against:
+    * the in-memory [[graft.streaming.StreamNearDedup.Accumulator]] and
+    * the [[graft.streaming.StreamKeepBest.keepBestBatch]] chain. */
+  private def admissionMatchesReference(bs: Seq[Seq[(Long, String)]]): Unit = {
+    import graft.streaming.{StreamKeepBest, StreamNearDedup}
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val batches = bs.map(_.toDF("doc_id", "text"))
+    def rows(df: org.apache.spark.sql.DataFrame, cs: String*) =
+      df.select(cs.map(col): _*).collect().map(_.toSeq).toSet
+    val nd = java.nio.file.Files.createTempDirectory("graft_prop_nd_")
+    val kb = java.nio.file.Files.createTempDirectory("graft_prop_kb_")
+    try {
+      val persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
+      val reference = new StreamNearDedup.Accumulator(spark)
+      batches.zipWithIndex.foreach { case (b, k) =>
+        persistent.onBatch(b, k.toLong)
+        reference.onBatch(b, k.toLong)
+      }
+      val ndCols = Seq("doc_id", "text", "batch_id")
+      assert(rows(StreamNearDedup.readAdmitted(spark, nd.toString), ndCols: _*) ==
+        rows(reference.admitted, ndCols: _*), s"near-dedup differs on $bs")
+
+      val keepBest = new StreamKeepBest.PersistentKeepBest(spark, kb.toString)
+      batches.zipWithIndex.foreach { case (b, k) => keepBest.onBatch(b, k.toLong) }
+      var bands = StreamKeepBest.emptyBands(spark)
+      var canon = StreamKeepBest.emptyCanon(spark)
+      val events = batches.zipWithIndex.map { case (b, k) =>
+        val (ev0, keys) = StreamKeepBest.keepBestBatch(spark, b, bands, canon)
+        val ev = ev0.localCheckpoint()
+        val winners = ev.filter(col("action") =!= "drop")
+          .select(col("comp"), col("doc_id"), col("quality"))
+        bands = bands.unionByName(keys
+          .join(winners.select(col("doc_id"), col("comp")), Seq("doc_id"))
+          .select(col("band_idx"), col("band_key"), col("comp"))).localCheckpoint()
+        canon = StreamKeepBest.resolveLatest(Seq(winners, canon)).localCheckpoint()
+        ev.withColumn("batch_id", lit(k.toLong))
+      }
+      val kbCols = Seq("doc_id", "comp", "quality", "action", "batch_id")
+      val got = rows(StreamKeepBest.readEvents(spark, kb.toString), kbCols: _*)
+      assert(got == rows(events.reduce(_ unionByName _), kbCols: _*),
+        s"keep-best differs on $bs")
+      assert(got.size == bs.map(_.size).sum)
+    } finally {
+      graft.streaming.StreamingOps.deleteRecursively(nd)
+      graft.streaming.StreamingOps.deleteRecursively(kb)
+    }
+  }
+
+  test("streaming admission: persistent accumulators equal the batch-mode reference") {
+    forAll(Gen.choose(Long.MinValue, Long.MaxValue), n = 20) { seed =>
+      admissionMatchesReference(admissionCorpus(seed))
+    }
+  }
+
+  test("streaming admission: a batch past SMALL_BATCH_ROWS takes the distributed path, same answers") {
+    // Batch 1 holds SMALL_BATCH_ROWS + 1 docs (some re-captures of the
+    // first batch's texts), so it runs the distributed body between two
+    // driver-decided batches: each path probes state the other wrote.
+    val bs = admissionCorpus(7L, big = operators.Dedup.SMALL_BATCH_ROWS + 1, bigAt = 1)
+    assert(bs.map(_.size > operators.Dedup.SMALL_BATCH_ROWS) == Seq(false, true, false))
+    admissionMatchesReference(bs)
+  }
 }

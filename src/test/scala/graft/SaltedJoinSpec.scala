@@ -106,7 +106,7 @@ class SaltedJoinSpec extends SparkSpecBase {
     assert(below == naive && above == naive)
     // The production default stays cold on the fixture corpus: the
     // gates bench the plain exchange-lean plan.
-    Dedup.bucketPairs(Dedup.bandKeys(spark,
+    Dedup.bucketPairs(Dedup.bandKeys(
       Tables.documents(spark, sfDir)).localCheckpoint()).count()
     assert(!Dedup.lastAutoSalted.get,
       "fixture corpus unexpectedly trips AUTO_SALT_OCCUPANCY")

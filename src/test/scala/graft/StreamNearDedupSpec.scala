@@ -29,7 +29,7 @@ class StreamNearDedupSpec extends SparkSpecBase {
       doc(23, "also short")))
 
   private def keysOf(batch: Seq[(Long, String)]): Map[Long, Set[(Int, Long)]] =
-    operators.Dedup.bandKeys(spark, batch.toDF("doc_id", "text"))
+    operators.Dedup.bandKeys(batch.toDF("doc_id", "text"))
       .as[(Long, Int, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
 
@@ -185,7 +185,7 @@ class StreamNearDedupSpec extends SparkSpecBase {
       // it if uncommitted state leaked into the resume mirror. Use a
       // real band key from an upcoming doc to make the leak observable.
       val upcoming = spark.read.parquet(files(1).toString)
-      val poisonKeys = operators.Dedup.bandKeys(spark, upcoming)
+      val poisonKeys = operators.Dedup.bandKeys(upcoming)
         .select(col("band_idx"), col("band_key"))
       poisonKeys.coalesce(1).write.mode("overwrite")
         .parquet(s"$state/bands/batch_id=1")
@@ -781,6 +781,64 @@ class StreamNearDedupSpec extends SparkSpecBase {
     }
   }
 
+  test("accumulators: every job a trigger starts carries the trigger's job group") {
+    // Each onBatch runs directly under setJobGroup(g<k>); the fetch, the
+    // probes and both concurrent delta writes must all carry g<k>. A
+    // fence job after each call cuts the (ordered) job-start events into
+    // per-call segments.
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def fence(tag: String): Unit = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+    }
+    val nd = java.nio.file.Files.createTempDirectory("graft_nd_groups_")
+    val kb = java.nio.file.Files.createTempDirectory("graft_kb_groups_")
+    try {
+      val accs = Seq[(String, (DataFrame, Long) => Unit)](
+        "nd" -> new StreamNearDedup.PersistentAccumulator(spark, nd.toString).onBatch,
+        "kb" -> new graft.streaming.StreamKeepBest.PersistentKeepBest(
+          spark, kb.toString).onBatch)
+      sc.addSparkListener(listener)
+      fence("fence-start")
+      val calls = for {
+        (b, k) <- kbBatches.zipWithIndex
+        (name, onBatch) <- accs
+      } yield {
+        val g = s"$name-g$k"
+        sc.setJobGroup(g, g)
+        try onBatch(b.toDF("doc_id", "text"), k.toLong) finally sc.clearJobGroup()
+        fence(s"fence-$g")
+        g
+      }
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(s"fence-${calls.last}") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val seen = groups.asScala.toVector.dropWhile(_ != "fence-start").drop(1)
+      val segments = calls.foldLeft((seen, Vector.empty[(String, Vector[String])])) {
+        case ((rest, acc), g) =>
+          val (seg, tail) = rest.span(_ != s"fence-$g")
+          (tail.drop(1), acc :+ (g -> seg))
+      }._2
+      segments.foreach { case (g, seg) =>
+        assert(seg.nonEmpty, s"no job seen for $g")
+        assert(seg.forall(_ == g), s"jobs of $g ran under groups ${seg.distinct}")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      graft.streaming.StreamingOps.deleteRecursively(nd)
+      graft.streaming.StreamingOps.deleteRecursively(kb)
+    }
+  }
+
   test("keep-best: running argmax equals the batch keep-best argmax") {
     // The invariant the gate's `kept` flag rides on: whatever the
     // batch boundaries, each cluster's final canonical is the global
@@ -973,7 +1031,7 @@ class StreamNearDedupSpec extends SparkSpecBase {
     val batch = Seq(doc(300, tied), doc(301, tied),
         doc(400, other + " nightly"), doc(401, other + " nightly"))
       .toDF("doc_id", "text").repartition(4, col("doc_id")).persist()
-    val keys = operators.Dedup.bandKeys(spark, batch).persist()
+    val keys = operators.Dedup.bandKeys(batch).persist()
     try {
       val bands = keys.filter(col("doc_id") === 300L)
         .select(col("band_idx"), col("band_key"),
