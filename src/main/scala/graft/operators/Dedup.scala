@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.TextFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -597,16 +597,36 @@ object Dedup extends QueryModule {
   /** Row bound under which a streaming admission trigger decides its
     * micro-batch on the driver (`StreamNearDedup.PersistentAccumulator`,
     * `StreamKeepBest.PersistentKeepBest`): one job fetches up to this
-    * many rows plus one — the size probe and the fetch at once, the
-    * [[componentsBounded]] idiom — and within the bound the batch's
-    * band keys, quality, components and actions are computed on the
-    * driver, with one probe query per state table. The driver holds
-    * the fetched rows and their keys: at bench-sized documents 4096
-    * rows are ≈ 1.2 MB of text plus 131k band keys (1 MB of longs),
-    * the same order as the 1.6 MB [[SMALL_GRAPH_EDGES]] collect. A
-    * bigger batch runs the distributed body, whose cost scales with
-    * executors instead. */
+    * many rows plus one — the size probe and the fetch at once,
+    * [[collectBounded]] — and within the bound the batch's band keys,
+    * quality, components and actions are computed on the driver,
+    * against the driver-held state while it is within
+    * [[SMALL_STATE_KEYS]], else with one probe job per state table.
+    * The driver holds the fetched rows and their keys: at bench-sized
+    * documents 4096 rows are ≈ 1.2 MB of text plus 131k band keys
+    * (1 MB of longs), the same order as the 1.6 MB
+    * [[SMALL_GRAPH_EDGES]] collect. A bigger batch runs the
+    * distributed body, whose cost scales with executors instead, and
+    * hands the state off to the distributed mirrors for good. */
   private[graft] val SMALL_BATCH_ROWS = 4096
+
+  /** Row bound under which a streaming admission store keeps its
+    * committed state on the driver (`graft.streaming.DriverBands` and
+    * keep-best's canonical map): 131,072 band rows, exactly what one
+    * [[SMALL_BATCH_ROWS]] batch already holds there — 1 MB of raw
+    * longs, a few MB as hash maps with boxed cluster ids. Within it a
+    * trigger probes the maps in Scala and starts no state query; the
+    * first committed state past it (per table), like the first batch
+    * past [[SMALL_BATCH_ROWS]], hands off to the distributed mirrors
+    * for good, rebuilt from committed storage at their first use. */
+  private[graft] val SMALL_STATE_KEYS = SMALL_BATCH_ROWS * LSH_BANDS
+
+  /** The rows of `df` if it has at most `bound`, else None — ONE job
+    * fetches `bound + 1` rows, the size probe and the fetch at once. */
+  private[graft] def collectBounded(df: DataFrame, bound: Int): Option[Array[Row]] = {
+    val rows = df.limit(bound + 1).collect()
+    Option.when(rows.length <= bound)(rows)
+  }
 
   /** [[components]] with a small-graph fast path — the per-TRIGGER
     * clustering the streaming admission paths run. A micro-batch's
@@ -644,13 +664,13 @@ object Dedup extends QueryModule {
     // distributed star loop — the exact per-trigger cost this fast
     // path exists to avoid. The collected set feeds a union-find that
     // dedups anyway, so distinct() changes cost, never the answer.
-    val probe = canon.distinct().limit(maxCollect + 1).collect()
-    if (probe.length > maxCollect) components(wide)
-    else {
-      val ss = edges.sparkSession
-      import ss.implicits._
-      minLabels(probe.map(r => (r.getLong(0), r.getLong(1))))
-        .toSeq.sorted.toDF("id", "comp")
+    collectBounded(canon.distinct(), maxCollect) match {
+      case None => components(wide)
+      case Some(probe) =>
+        val ss = edges.sparkSession
+        import ss.implicits._
+        minLabels(probe.map(r => (r.getLong(0), r.getLong(1))))
+          .toSeq.sorted.toDF("id", "comp")
     }
   }
 

@@ -1,14 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import graft.operators.Dedup
+import org.apache.spark.sql.{DataFrame, Row}
 
-/** The in-memory half of a streaming state store: an LSM list of
-  * DataFrame parts that the per-trigger probes join PART-WISE (see the
-  * multi-part [[StreamNearDedup.admitWithKeys]]), so a checkpointed
-  * base keeps its clustered layout and its side of the probe stays
-  * exchange- and sort-free. The on-disk half is the store's
-  * [[graft.storage.GenerationLog]]; the mirror is built from it once at
-  * construction and then written through, never re-read per trigger.
+/** The in-memory half of a streaming state store past
+  * [[Dedup.SMALL_STATE_KEYS]] (below it the store holds its state on
+  * the driver, [[DriverBands]]; [[DriverOrMirror]] keeps one of the
+  * two): an LSM list of DataFrame parts that the per-trigger probes
+  * read PART-WISE (see the multi-part
+  * [[StreamNearDedup.admitWithKeys]] and [[StreamNearDedup.probeParts]]),
+  * so a checkpointed base keeps its clustered layout and its side of
+  * the probe stays exchange- and sort-free. The on-disk half is the
+  * store's [[graft.storage.GenerationLog]]; the mirror is built from it
+  * once — the admission stores' at their first use past the driver
+  * bound, the ANN known ids' at construction — and then written
+  * through, never re-read per trigger.
   *
   * `parts` is NEWEST FIRST with the base last — the order
   * [[StreamKeepBest.resolveLatest]] needs; the union-shaped stores do
@@ -87,4 +93,65 @@ private[graft] object StateMirror {
       else Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
     walk(new java.io.File(path))
   }
+}
+
+/** Committed band rows held on the driver while a store is within
+  * [[Dedup.SMALL_STATE_KEYS]]: per band_idx, band_key → min comp — the
+  * keep-best `collapsedMin` rule; near-dedup's rows carry no comp and
+  * hold 0. A mirror probe's hits are matched in the same shape. */
+private[graft] final class DriverBands {
+  private val byBand = Array.fill(Dedup.LSH_BANDS)(
+    scala.collection.mutable.LongMap.empty[Long])
+  private var n = 0L
+
+  /** Rows added, duplicates included: the count a read of the same
+    * committed rows from storage sees, so a restart decides the bound
+    * as the running store did. */
+  def rows: Long = n
+
+  /** Add one (band_idx, band_key[, comp]) row. */
+  def add(r: Row): Unit = {
+    val comp = if (r.length > 2) r.getLong(2) else 0L
+    val m = byBand(r.getInt(0))
+    m(r.getLong(1)) = m.get(r.getLong(1)).fold(comp)(math.min(_, comp))
+    n += 1
+  }
+
+  /** The min comp over the rows sharing a band key with `ks` (index =
+    * band_idx); None when none collides. */
+  def minComp(ks: Array[Long]): Option[Long] =
+    ks.indices.flatMap(b => byBand(b).get(ks(b))).minOption
+}
+
+private[graft] object DriverBands {
+  def of(rows: Iterable[Row]): DriverBands = {
+    val d = new DriverBands
+    rows.foreach(d.add)
+    d
+  }
+}
+
+/** A store's committed state in ONE representation at a time: `small0`
+  * on the driver while it is within its bound, else the mirrors
+  * `build` makes from committed storage (the resume path). [[handOff]]
+  * drops the driver state for good; the mirrors are built at their
+  * first use after it, so a stream that ends right after crossing the
+  * bound never builds them. Single writer, like [[StateMirror]]. */
+private[graft] final class DriverOrMirror[S, M](small0: Option[S], build: () => M) {
+  private var held = small0
+  private var built = Option.empty[M]
+
+  /** The driver state, while it is live. */
+  def small: Option[S] = held
+
+  def handOff(): Unit = held = None
+
+  /** The mirrors, built on first use; only after the hand-off. */
+  def mirrors: M = {
+    require(held.isEmpty, "the state is still held on the driver")
+    built.getOrElse { val m = build(); built = Some(m); m }
+  }
+
+  /** The mirrors if they are built — what a commit advances. */
+  def builtMirrors: Option[M] = built
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
   StringType, StructType}
+import scala.collection.mutable
 
 /** Quality-aware streaming admission — the streaming form of
   * [[graft.operators.Dedup.dedupKeepBest]], closing the one
@@ -42,8 +43,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
   * while the per-doc `action` log preserves exactly WHEN each
   * replacement happened, which is what the paced oracle pins.
   *
-  * State is two tables, both join-shaped (never broadcast, never
-  * collected whole — a small batch's probes collect only its hits):
+  * State is two tables, both join-shaped: while each is within
+  * [[Dedup.SMALL_STATE_KEYS]] rows the persistent accumulator holds
+  * them on the driver as hash maps and probes them there; past that
+  * they are never broadcast and never collected whole — a small
+  * batch's probes collect only the rows sharing its keys or clusters.
   * `bands(band_idx, band_key, comp)` — the accumulated
   * band keys of every doc that ever held a canonical seat, tagged
   * with its cluster — and the per-cluster canonical `(comp, doc_id,
@@ -292,42 +296,40 @@ object StreamKeepBest {
     if (q != 0) q else java.lang.Long.compare(a.doc, b.doc)
   }
 
+  /** A cluster's canonical seat as [[keepBestSmall]] ranks it. */
+  private def incumbent(comp: Long, r: Row): Contender =
+    Contender(r.getLong(1), comp, qualityAt(r), fresh = false, inc = true)
+
+  /** The canonical seats of `comps` from the mirror's parts in ONE probe
+    * job: the parts tagged with their index, the lowest index (the
+    * newest part) wins — the [[resolveLatest]] rule. */
+  private def probeCanon(parts: Seq[DataFrame],
+      comps: Iterable[Long]): collection.Map[Long, Contender] =
+    StreamNearDedup.probeParts(
+        parts.zipWithIndex.map { case (p, i) => p.withColumn("part", lit(i)) },
+        "comp", comps, col("comp"), col("doc_id"), col("quality"), col("part"))
+      .groupBy(_.getLong(0))
+      .map { case (comp, rs) => comp -> incumbent(comp, rs.minBy(_.getInt(3))) }
+
   /** [[keepBestWithKeys]] decided on the driver for a micro-batch of
     * at most [[Dedup.SMALL_BATCH_ROWS]] rows, fetched with its quality
     * ([[graft.operators.Pipeline.qualityCol]], the same expression).
-    * One probe query against the band parts routes each colliding doc
-    * to its min comp; one probe of the canonical parts, tagged with
-    * their index, fetches the challenged clusters' incumbents — the
-    * lowest index (the newest part) wins, the [[resolveLatest]] rule.
-    * Both probes are skipped while nothing has committed
-    * (`probeState`) or nothing collides. The rest is Scala: fresh docs
-    * cluster by [[StreamNearDedup.batchComponents]], every cluster
-    * ranks by [[contenderOrder]], and actions are new/replace/drop
-    * exactly as in [[keepBestWithKeys]]. Returns the events and band
-    * deltas as `LocalRelation`s. */
-  private def keepBestSmall(spark: SparkSession, b: StreamNearDedup.SmallBatch,
-      bandParts: Seq[DataFrame], canonParts: Seq[DataFrame],
-      probeState: Boolean): (DataFrame, DataFrame) = {
+    * `bands` — the committed band rows that can collide with the batch
+    * — routes each colliding doc to its min comp; `canonOf` gives the
+    * challenged clusters' incumbents (asked only when a doc collides).
+    * The rest is Scala: fresh docs cluster by
+    * [[StreamNearDedup.batchComponents]], every cluster ranks by
+    * [[contenderOrder]], and actions are new/replace/drop exactly as in
+    * [[keepBestWithKeys]]. Returns the event rows ([[EventsDelta]])
+    * and the winners' band-delta rows ([[BandsDelta]]). */
+  private def keepBestSmall(b: StreamNearDedup.SmallBatch, bands: DriverBands,
+      canonOf: Iterable[Long] => collection.Map[Long, Contender]): (Seq[Row], Seq[Row]) = {
     val keyed = b.keyed.toSeq
-    val docComp: Map[Long, Long] =
-      if (!probeState || keyed.isEmpty) Map.empty
-      else StreamNearDedup.probeParts(bandParts,
-          StreamNearDedup.keyFrame(spark, keyed), Seq("band_idx", "band_key"),
-          col("doc_id"), col("comp"))
-        .groupMapReduce(_.getLong(0))(_.getLong(1))(math.min)
-    val incumbents: Seq[Contender] =
-      if (docComp.isEmpty) Nil
-      else {
-        import spark.implicits._
-        StreamNearDedup.probeParts(
-            canonParts.zipWithIndex.map { case (p, i) => p.withColumn("part", lit(i)) },
-            docComp.values.toSeq.distinct.toDF("comp"), Seq("comp"),
-            col("comp"), col("doc_id"), col("quality"), col("part"))
-          .groupBy(_.getLong(0)).values.map(_.minBy(_.getInt(3)))
-          .map(r => Contender(r.getLong(1), r.getLong(0), qualityAt(r),
-            fresh = false, inc = true))
-          .toSeq
-      }
+    val docComp = keyed.flatMap { case (id, ks) => bands.minComp(ks).map(id -> _) }.toMap
+    val challenged = docComp.values.toSet
+    val incumbents =
+      if (challenged.isEmpty) Nil
+      else { val seats = canonOf(challenged); challenged.toSeq.flatMap(seats.get) }
     val freshComp = StreamNearDedup.batchComponents(
       keyed.filter(k => !docComp.contains(k._1)))
     val contenders = b.docs.toSeq.map { case (id, _, r) =>
@@ -344,13 +346,11 @@ object StreamKeepBest {
       (c, action)
     }
     val keysOf = keyed.toMap
-    val bands = events.filter(_._2 != "drop").flatMap { case (c, _) =>
-      keysOf.getOrElse(c.doc, Array.emptyLongArray).zipWithIndex
-        .map { case (k, i) => Row(i, k, c.comp) }
-    }
-    (StreamNearDedup.localFrame(spark, events.map { case (c, a) =>
-        Row(c.doc, c.comp, c.quality.map(Double.box).orNull, a) }, EventsDelta),
-      StreamNearDedup.localFrame(spark, bands, BandsDelta))
+    (events.map { case (c, a) => Row(c.doc, c.comp, c.quality.map(Double.box).orNull, a) },
+      events.filter(_._2 != "drop").flatMap { case (c, _) =>
+        keysOf.getOrElse(c.doc, Array.emptyLongArray).zipWithIndex
+          .map { case (k, i) => Row(i, k, c.comp) }
+      })
   }
 
   /** Canonical table from a persisted event log: per cluster, the
@@ -395,18 +395,23 @@ object StreamKeepBest {
     private var committedIds: Set[Long] = log.committed
     // Deferred auto-compaction at resume behind the same foldEvery
     // knob — the [[StreamNearDedup.PersistentAccumulator]] L0 policy
-    // and deferral (r19 item 5 + ADVICE): construction builds the
-    // mirrors off the EXISTING band layout (read-only — inspecting
-    // state never rewrites it); the unfolded-history debt seeds
+    // and deferral (r19 item 5 + ADVICE): construction reads the state
+    // off the EXISTING band layout (read-only — inspecting state never
+    // rewrites it); the unfolded-history debt seeds
     // sinceDiskFold below, so the first NEW committed batch trips the
     // in-loop fold branch and compacts the bands then (events never
     // fold — the object scaladoc's compaction boundary; the canonical
     // mirror consolidates the event log either way). foldEvery <= 0
     // keeps compaction caller-driven.
-    // Both mirrors are [[StateMirror]]s. Bands are read through the
-    // generation pointer (generation base + unfolded tail); events
-    // below stay a plain committed-ids read — the event log never
-    // folds (see the object scaladoc's compaction boundary), and
+    // While each table is within SMALL_STATE_KEYS rows the state is
+    // held on the driver ([[DriverOrMirror]]): the band rows as
+    // [[DriverBands]] (band key → min comp, the collapsedMin rule
+    // below) and comp → its latest canonical seat, each read here in
+    // one bounded job. Past that, both tables are [[StateMirror]]s,
+    // built from storage at their first use. Bands are read through
+    // the generation pointer (generation base + unfolded tail); events
+    // stay a plain committed-ids read — the event log never folds (see
+    // the object scaladoc's compaction boundary), and
     // readPartitioned ignores the pointer. The band base and every
     // merged band part COLLAPSE to one row per (band_idx, band_key)
     // holding the MIN comp: routing takes min over colliding clusters,
@@ -421,21 +426,31 @@ object StreamKeepBest {
     private def clusteredBands(bands: DataFrame): DataFrame =
       StreamNearDedup.ckptClustered(spark, collapsedMin(bands))
     private def bandsAt(st: GenerationLog.State): DataFrame =
-      clusteredBands(StreamNearDedup.readState(spark, log, st, "bands",
-          emptyBandsPersisted(spark))
-        .select(col("band_idx"), col("band_key"), col("comp")))
-    private val bands = new StateMirror(bandsAt(log.state(committedIds)),
-      parts => clusteredBands(parts.reduce(_ unionAll _)))
+      StreamNearDedup.readState(spark, log, st, "bands", emptyBandsPersisted(spark))
+        .select(col("band_idx"), col("band_key"), col("comp"))
+    private def canonNow: DataFrame =
+      consolidate(StreamNearDedup.readPartitioned(spark, s"$stateDir/events",
+        committedIds, emptyEvents(spark)))
     // The canonical mirror: checkpointed base + one lazy winner-delta
     // scan per committed batch, resolved latest-wins by
     // [[resolveLatest]] only for the comps a trigger actually
     // challenges. The former anti-join+union chain re-executed one
     // shuffle PER LAYER inside every events write — a per-trigger cost
     // growing with triggers-since-fold.
-    private val canon = new StateMirror(
-      consolidate(StreamNearDedup.readPartitioned(spark, s"$stateDir/events",
-        committedIds, emptyEvents(spark))).localCheckpoint(),
-      parts => resolveLatest(parts).localCheckpoint())
+    private val state = new DriverOrMirror[
+        (DriverBands, mutable.LongMap[Contender]), (StateMirror, StateMirror)](
+      if (committedIds.isEmpty) Some((new DriverBands, mutable.LongMap.empty))
+      else for {
+        bands <- Dedup.collectBounded(bandsAt(log.state(committedIds)),
+          Dedup.SMALL_STATE_KEYS)
+        canon <- Dedup.collectBounded(canonNow, Dedup.SMALL_STATE_KEYS)
+      } yield (DriverBands.of(bands), mutable.LongMap.from(
+        canon.map(r => r.getLong(0) -> incumbent(r.getLong(0), r)))),
+      () => (
+        new StateMirror(clusteredBands(bandsAt(log.state(committedIds))),
+          parts => clusteredBands(parts.reduce(_ unionAll _))),
+        new StateMirror(canonNow.localCheckpoint(),
+          parts => resolveLatest(parts).localCheckpoint())))
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
@@ -443,12 +458,14 @@ object StreamKeepBest {
       *
       * A micro-batch of at most [[Dedup.SMALL_BATCH_ROWS]] rows is
       * decided on the driver ([[StreamNearDedup.fetchSmall]],
-      * [[keepBestSmall]]): one fetch job, one probe query per state
-      * table and the two delta writes, whatever the number of mirror
-      * parts. Measured on the benchmark's 25–31-doc batches: 3 jobs on
-      * the first trigger (no probe), 7 on every later one (each probe's
-      * broadcast is its own job), against 21 growing by about 3.75 per
-      * unfolded tail part for the distributed body.
+      * [[keepBestSmall]]). While both state tables are within
+      * [[Dedup.SMALL_STATE_KEYS]] rows they are probed in Scala, and
+      * the trigger runs exactly 3 jobs: the fetch and the two delta
+      * writes. Past that bound it adds one probe job per state table
+      * it needs ([[StreamNearDedup.probeParts]], [[probeCanon]]),
+      * whatever the number of mirror parts: 5 jobs when a doc
+      * collides, 4 when none does (the first such trigger also builds
+      * the mirrors).
       *
       * A bigger batch runs the distributed [[keepBestWithKeys]] body,
       * compute-once/write-concurrent (r21, guide §2.6): the events plan
@@ -469,15 +486,19 @@ object StreamKeepBest {
       *
       * Either way the two delta writes run as concurrent job chains
       * settled via awaitAll, and the marker lands only after BOTH, so
-      * replay visibility is unchanged. The canonical mirror's delta
-      * layer reads the COMMITTED events file lazily — later triggers
-      * never reference a per-trigger cache. Mirror folds are LAZY (both
-      * [[StateMirror]]s): between fold points each mirror is its
-      * checkpointed base plus up to [[StreamNearDedup.MEM_FOLD_EVERY]]
-      * committed delta scans. Every `foldEvery` committed batches the
-      * on-disk band layout folds too ([[compactBands]] from inside the
-      * loop — safe: foreachBatch is the single writer and runs
-      * serially) and the band mirror re-bases onto the new generation. */
+      * replay visibility is unchanged. Within the bound the trigger's
+      * own event and band-delta rows advance the driver state, after
+      * the commit and never before it; the first table past the bound,
+      * or the first bigger batch, hands off to the mirrors for good.
+      * The canonical mirror's delta layer reads the COMMITTED events
+      * file lazily — later triggers never reference a per-trigger
+      * cache. Mirror folds are LAZY (both [[StateMirror]]s): between
+      * fold points each mirror is its checkpointed base plus up to
+      * [[StreamNearDedup.MEM_FOLD_EVERY]] committed delta scans. Every
+      * `foldEvery` committed batches the on-disk band layout folds
+      * ([[compactBands]] from inside the loop — safe: foreachBatch is
+      * the single writer and runs serially) and a built band mirror
+      * re-bases onto the new generation. */
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
       // Job labels (guide §1.5): thread-local, covering every job this
       // trigger launches on the foreachBatch thread; the write futures
@@ -495,34 +516,61 @@ object StreamKeepBest {
     private def onBatchLabeled(batch0: DataFrame, batchId: Long,
         label: String => Unit): Unit = {
       if (!committedIds(batchId)) {
-        StreamNearDedup.fetchSmall(batch0,
+        val (eventRows, bandRows) = StreamNearDedup.fetchSmall(batch0,
             graft.operators.Pipeline.qualityCol(col("text"))) match {
           case Some(small) =>
-            label("probe+decide")
-            val (events, bandDelta) = keepBestSmall(spark, small, bands.parts,
-              canon.parts, probeState = committedIds.nonEmpty)
-            writeDeltas(batchId, events, bandDelta, label)
-          case None => keepBestDistributed(batch0, batchId, label)
+            val (events, bandDelta) = state.small match {
+              case Some((bands, canon)) => keepBestSmall(small, bands, _ => canon)
+              case None =>
+                label("probe+decide")
+                val (bands, canon) = state.mirrors
+                keepBestSmall(small,
+                  DriverBands.of(StreamNearDedup.probeParts(bands.parts, "band_key",
+                    small.bandKeys, col("band_idx"), col("band_key"), col("comp"))),
+                  probeCanon(canon.parts, _))
+            }
+            writeDeltas(batchId, StreamNearDedup.localFrame(spark, events, EventsDelta),
+              StreamNearDedup.localFrame(spark, bandDelta, BandsDelta), label)
+            (events, bandDelta)
+          case None =>
+            state.handOff()
+            keepBestDistributed(batch0, batchId, label)
+            (Nil, Nil)
         }
         log.commit(batchId)
         committedIds += batchId
         // The winners delta IS the canonical update: a replacement's
-        // newer row supersedes the cluster's older one at resolve
-        // time, a new cluster's row introduces it. One lazy scan of
-        // the just-committed events file — no per-trigger join.
-        canon.advance(spark.read.schema(EventsDelta)
-          .parquet(log.payload("events", batchId))
-          .filter(col("action") =!= "drop")
-          .select(col("comp"), col("doc_id"), col("quality")))
+        // newer row supersedes the cluster's older one, a new
+        // cluster's row introduces it — on the driver from the rows
+        // just written, in the mirror as one lazy scan of the
+        // just-committed events file (no per-trigger join).
+        state.small.foreach { case (bands, canon) =>
+          bandRows.foreach(bands.add)
+          eventRows.filter(_.getString(3) != "drop").foreach { r =>
+            canon(r.getLong(1)) = Contender(r.getLong(0), r.getLong(1),
+              qualityAt(r), fresh = false, inc = true)
+          }
+          if (bands.rows > Dedup.SMALL_STATE_KEYS || canon.size > Dedup.SMALL_STATE_KEYS)
+            state.handOff()
+        }
         sinceDiskFold += 1
-        if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
+        val fold = foldEvery > 0 && sinceDiskFold >= foldEvery
+        if (fold) {
           compactBands(spark, stateDir)
-          bands.rebase(bandsAt(log.state()))
-          canon.fold()
           sinceDiskFold = 0
-        } else {
-          val path = log.payload("bands", batchId)
-          bands.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
+        }
+        state.builtMirrors.foreach { case (bands, canon) =>
+          canon.advance(spark.read.schema(EventsDelta)
+            .parquet(log.payload("events", batchId))
+            .filter(col("action") =!= "drop")
+            .select(col("comp"), col("doc_id"), col("quality")))
+          if (fold) {
+            bands.rebase(clusteredBands(bandsAt(log.state())))
+            canon.fold()
+          } else {
+            val path = log.payload("bands", batchId)
+            bands.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
+          }
         }
       }
     }
@@ -543,6 +591,7 @@ object StreamKeepBest {
         // ckptProbe whenever PRIOR state exists (the
         // [[StreamNearDedup.PersistentAccumulator]] rationale).
         label("probe+components")
+        val (bands, canon) = state.mirrors
         val (events0, _) = keepBestWithKeys(spark, batch, keys,
           bands.parts, canon.parts, ckptProbe = committedIds.nonEmpty)
         // ONE execution of the batch plan feeds BOTH delta writes:

@@ -3,7 +3,9 @@ package graft.streaming
 import graft.operators.Dedup
 import graft.storage.GenerationLog
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Streaming near-duplicate ingest filter — the MinHash-LSH sibling of
@@ -26,10 +28,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   *      batch `dedup_components` gate query performs).
   *
   * Both rules are join/aggregate shaped: admission state is a band-key
-  * table joined per micro-batch (never broadcast, never collected
-  * whole — a small batch's probe collects only its hits), so the
-  * operator scales with executors, and the per-batch component step
-  * runs on the (tiny) collision graph, not the corpus. The live
+  * table joined per micro-batch, so the operator scales with
+  * executors, and the per-batch component step runs on the (tiny)
+  * collision graph, not the corpus. While the committed state is
+  * within [[Dedup.SMALL_STATE_KEYS]] rows the persistent accumulator
+  * holds it on the driver as well ([[DriverBands]]) and probes it
+  * there; past that it is never broadcast and never collected whole —
+  * a small batch's probe collects only the rows sharing its keys. The
+  * live
   * queries run the state as a real TABLE: [[PersistentAccumulator]]
   * appends band keys and admissions to parquet per micro-batch, so a
   * restarted query resumes admission from storage (a production
@@ -161,22 +167,19 @@ object StreamNearDedup {
       schema: StructType, docs: Array[(Long, Array[Long], Row)]) {
     def keyed: Array[(Long, Array[Long])] =
       docs.collect { case (id, ks, _) if ks.nonEmpty => (id, ks) }
+    def bandKeys: Seq[Long] = docs.toSeq.flatMap(_._2)
   }
 
   /** ONE job fetches at most [[Dedup.SMALL_BATCH_ROWS]] + 1 rows of
-    * the micro-batch — the size probe and the fetch at once, the
-    * [[Dedup.componentsBounded]] idiom. None past the bound. Within it,
-    * the band keys and `extra` columns are the same Catalyst
+    * the micro-batch ([[Dedup.collectBounded]]). None past the bound.
+    * Within it, the band keys and `extra` columns are the same Catalyst
     * expressions the distributed path runs ([[Dedup.withBandArray]]),
     * projected over a `LocalRelation` of the fetched rows, which
     * `ConvertToLocalRelation` evaluates on the driver without a job. */
   private[streaming] def fetchSmall(batch: DataFrame,
       extra: Column*): Option[SmallBatch] = {
     val fetch = batch.select(col("doc_id"), col("text"))
-      .limit(Dedup.SMALL_BATCH_ROWS + 1)
-    val rows = fetch.collect()
-    if (rows.length > Dedup.SMALL_BATCH_ROWS) None
-    else {
+    Dedup.collectBounded(fetch, Dedup.SMALL_BATCH_ROWS).map { rows =>
       val xs = extra.indices.map(i => s"x$i")
       val docs = Dedup.withBandArray(
           localFrame(batch.sparkSession, rows, fetch.schema).select(
@@ -187,7 +190,7 @@ object StreamNearDedup {
           val ks = if (r.isNullAt(1)) Array.emptyLongArray else r.getSeq[Long](1).toArray
           (r.getLong(0), ks, r)
         }
-      Some(SmallBatch(rows, fetch.schema, docs))
+      SmallBatch(rows, fetch.schema, docs)
     }
   }
 
@@ -197,22 +200,21 @@ object StreamNearDedup {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** (doc_id, band_idx, band_key) rows of driver-held band keys. */
-  private[streaming] def keyFrame(spark: SparkSession,
-      keyed: Seq[(Long, Array[Long])]): DataFrame = {
-    import spark.implicits._
-    keyed.flatMap { case (id, ks) => ks.indices.map(b => (id, b, ks(b))) }
-      .toDF("doc_id", "band_idx", "band_key")
-  }
-
-  /** ONE query over every state part: each part ⋈ broadcast(`keys`) on
-    * `on`, unioned, `cols` collected. Part-wise for the
-    * [[admitWithKeys]] reason: a clustered base keeps its layout, and
-    * the batch-sized keys are the broadcast side of every branch. */
-  private[streaming] def probeParts(parts: Seq[DataFrame], keys: DataFrame,
-      on: Seq[String], cols: Column*): Array[Row] =
-    parts.map(_.join(broadcast(keys), on).select(cols: _*))
-      .reduce(_ unionAll _).collect()
+  /** ONE job over every state part: the rows whose `key` column is one
+    * of `keys`, `cols` collected and unioned; no job without keys. The
+    * batch's keys travel inside the plan as an `InSet`, so no broadcast
+    * job ships them first, and the exact match — (band_idx, band_key),
+    * or the canonical parts' order — is the caller's, on the driver.
+    * Part-wise for the [[admitWithKeys]] reason: a clustered base
+    * keeps its layout. */
+  private[graft] def probeParts(parts: Seq[DataFrame], key: String,
+      keys: Iterable[Long], cols: Column*): Array[Row] =
+    if (keys.isEmpty) Array.empty
+    else {
+      val in = ColumnBridge.column(
+        InSet(ColumnBridge.expression(col(key)), keys.toSet[Any]))
+      parts.map(_.filter(in).select(cols: _*)).reduce(_ unionAll _).collect()
+    }
 
   /** Intra-batch clusters on the driver: doc → min doc_id of its
     * band-collision component ([[Dedup.minLabels]], the union-find
@@ -228,29 +230,24 @@ object StreamNearDedup {
     id => labels.getOrElse(id, id)
   }
 
-  /** [[admitWithKeys]] decided on the driver for a [[SmallBatch]]: one
-    * probe query against `stateParts` (skipped while no batch has
-    * committed) drops the docs that collide with admitted state; the
-    * rest cluster by [[batchComponents]] and each cluster's min doc_id
-    * is admitted. Returns the same two deltas as `LocalRelation`s. */
-  private def admitSmall(spark: SparkSession, b: SmallBatch,
-      stateParts: Seq[DataFrame], probeState: Boolean): (DataFrame, DataFrame) = {
+  /** [[admitWithKeys]] decided on the driver for a [[SmallBatch]]
+    * against `state`, the committed band rows that can collide with
+    * the batch: a doc sharing a band key with them is dropped; the rest
+    * cluster by [[batchComponents]] and each cluster's min doc_id is
+    * admitted. Returns the admitted rows and their band-delta rows
+    * ([[BandsDelta]]). */
+  private def admitSmall(b: SmallBatch, state: DriverBands): (Seq[Row], Seq[Row]) = {
     val keyed = b.keyed.toSeq
-    val hit =
-      if (!probeState || keyed.isEmpty) Set.empty[Long]
-      else probeParts(stateParts, keyFrame(spark, keyed),
-        Seq("band_idx", "band_key"), col("doc_id")).map(_.getLong(0)).toSet
+    val hit = keyed.collect { case (id, ks) if state.minComp(ks).isDefined => id }.toSet
     val comp = batchComponents(keyed.filter(k => !hit(k._1)))
     val admitted = b.docs.indices.filter { i =>
       val id = b.docs(i)._1
       !hit(id) && comp(id) == id
     }
-    val bands = admitted.flatMap { i =>
+    (admitted.map(b.rows), admitted.flatMap { i =>
       val ks = b.docs(i)._2
       ks.indices.map(j => Row(j, ks(j)))
-    }
-    (localFrame(spark, admitted.map(i => b.rows(i)), b.schema),
-      localFrame(spark, bands, BandsDelta))
+    })
   }
 
   /** Accumulates admission across micro-batches: wire [[onBatch]] as a
@@ -321,11 +318,12 @@ object StreamNearDedup {
 
     def admitted: DataFrame = readAdmitted(spark, stateDir)
 
-    // WRITE-THROUGH: storage is read exactly once, here at construction
-    // (the resume path — this is what a restarted query recovers from);
-    // the running query serves each batch's prior-state probe from an
-    // in-memory mirror instead of re-scanning the parquet per trigger
-    // (measured +3.5s on the 3-batch paced gate before this).
+    // WRITE-THROUGH: storage is read once, here at construction (the
+    // resume path — this is what a restarted query recovers from), and
+    // once more if the state outgrows the driver; the running query
+    // serves each batch's prior-state probe from memory instead of
+    // re-scanning the parquet per trigger (measured +3.5s on the
+    // 3-batch paced gate before the mirror).
     private val log = stateLog(stateDir)
     private var committedIds: Set[Long] = log.committed
     // DEFERRED AUTO-COMPACTION AT RESUME — the LSM L0 policy behind
@@ -346,63 +344,86 @@ object StreamNearDedup {
     // constructor-fold design reset the counter, allowing history +
     // foldEvery). foldEvery <= 0 keeps compaction fully caller-driven,
     // exactly as before.
-    // Only COMMITTED batches' keys enter the mirror (an uncommitted
+    // Only COMMITTED batches' keys enter the state (an uncommitted
     // batch's partial directories are invisible until its replay
     // overwrites them and lands the marker), read through the
-    // generation pointer: generation base + unfolded tail, checkpointed
-    // band-clustered so the per-trigger probe's state side is a sorted
-    // merge scan.
+    // generation pointer: generation base + unfolded tail. Within
+    // SMALL_STATE_KEYS rows they are held on the driver, read in one
+    // bounded job; past it in the mirror, checkpointed band-clustered
+    // so the per-trigger probe's state side is a sorted merge scan and
+    // built from storage at its first use.
     private def bandsAt(st: GenerationLog.State): DataFrame =
-      ckptClustered(spark, readState(spark, log, st, "bands")
-        .select(col("band_idx"), col("band_key")))
-    private val mirror = new StateMirror(bandsAt(log.state(committedIds)),
-      parts => ckptClustered(spark, parts.reduce(_ unionAll _)))
+      readState(spark, log, st, "bands").select(col("band_idx"), col("band_key"))
+    private val state = new DriverOrMirror[DriverBands, StateMirror](
+      if (committedIds.isEmpty) Some(new DriverBands)
+      else Dedup.collectBounded(bandsAt(log.state(committedIds)),
+        Dedup.SMALL_STATE_KEYS).map(DriverBands.of(_)),
+      () => new StateMirror(ckptClustered(spark, bandsAt(log.state(committedIds))),
+        parts => ckptClustered(spark, parts.reduce(_ unionAll _))))
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
     /** The foreachBatch body (serial per query; lock defensive).
       *
       * A micro-batch of at most [[Dedup.SMALL_BATCH_ROWS]] rows is
-      * decided on the driver ([[fetchSmall]], [[admitSmall]]): the
-      * trigger runs one fetch job, one probe query against the mirror
-      * (none before the first commit) and the two delta writes,
-      * whatever the number of mirror parts. Measured on the benchmark's
-      * 25–31-doc batches: 3 jobs on the first trigger (no probe), 5 on
-      * every later one (the probe's broadcast of the batch keys is its
-      * own job), against 17–21 for the distributed body.
+      * decided on the driver ([[fetchSmall]], [[admitSmall]]). While
+      * the committed state is within [[Dedup.SMALL_STATE_KEYS]] rows it
+      * is probed in Scala, and the trigger runs exactly 3 jobs: the
+      * fetch and the two delta writes. Past that bound the trigger adds
+      * one probe job against the mirror ([[probeParts]]), whatever the
+      * number of mirror parts: 4 jobs (the first such trigger also
+      * builds the mirror).
       * A bigger batch runs the distributed [[admitWithKeys]] body,
       * write-once: the band-delta write is the one execution of its
       * plan (keys materialize inside it via `persist`).
       *
-      * Either way the state mirror folds the written file back in
-      * LAZILY — between fold points the mirror is the clustered base
-      * plus up to [[MEM_FOLD_EVERY]] committed delta scans, and the
-      * base's share of the probe is a sorted merge scan, not a
-      * re-shuffle of the whole state. Every [[MEM_FOLD_EVERY]] triggers
-      * the tail folds into a fresh clustered base (the LSM run merge,
-      * amortized); every `foldEvery` committed batches the ON-DISK
-      * layout folds too ([[compactState]] from inside the loop — safe:
-      * foreachBatch is the single writer and runs serially) and the
-      * mirror re-bases onto the new generation. */
+      * Within the bound the trigger's own band-delta rows advance the
+      * driver state, after the commit and never before it; the first
+      * state past the bound, or the first bigger batch, hands off to
+      * the mirror for good ([[DriverOrMirror]]). Once built, the mirror
+      * folds each written file back in LAZILY — between fold points it
+      * is the clustered base plus up to [[MEM_FOLD_EVERY]] committed
+      * delta scans, and the base's share of the probe is a sorted
+      * merge scan, not a re-shuffle of the whole state. Every
+      * [[MEM_FOLD_EVERY]] triggers the tail folds into a fresh
+      * clustered base (the LSM run merge, amortized). Either way, every
+      * `foldEvery` committed batches the ON-DISK layout folds
+      * ([[compactState]] from inside the loop — safe: foreachBatch is
+      * the single writer and runs serially) and a built mirror re-bases
+      * onto the new generation. */
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
       if (!committedIds(batchId)) {
-        fetchSmall(batch0) match {
+        val bandRows = fetchSmall(batch0) match {
           case Some(small) =>
-            val (kept, newKeys) = admitSmall(spark, small, mirror.parts,
-              probeState = committedIds.nonEmpty)
-            writeDeltas(batchId, newKeys, kept)
-          case None => admitDistributed(batch0, batchId)
+            val (kept, bands) = admitSmall(small, state.small.getOrElse(
+              DriverBands.of(probeParts(state.mirrors.parts, "band_key",
+                small.bandKeys, col("band_idx"), col("band_key")))))
+            writeDeltas(batchId, localFrame(spark, bands, BandsDelta),
+              localFrame(spark, kept, small.schema))
+            bands
+          case None =>
+            state.handOff()
+            admitDistributed(batch0, batchId)
+            Nil
         }
         log.commit(batchId)
         committedIds += batchId
+        state.small.foreach { d =>
+          bandRows.foreach(d.add)
+          if (d.rows > Dedup.SMALL_STATE_KEYS) state.handOff()
+        }
         sinceDiskFold += 1
-        if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
+        val fold = foldEvery > 0 && sinceDiskFold >= foldEvery
+        if (fold) {
           compactState(spark, stateDir)
-          mirror.rebase(bandsAt(log.state()))
           sinceDiskFold = 0
-        } else {
-          val path = log.payload("bands", batchId)
-          mirror.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
+        }
+        state.builtMirrors.foreach { mirror =>
+          if (fold) mirror.rebase(ckptClustered(spark, bandsAt(log.state())))
+          else {
+            val path = log.payload("bands", batchId)
+            mirror.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
+          }
         }
       }
     }
@@ -432,7 +453,7 @@ object StreamNearDedup {
         // the probe is trivially empty and the checkpoint job would
         // scan the whole batch's keys for nothing.
         val (kept, newKeys) =
-          admitWithKeys(spark, batch, keys, mirror.parts,
+          admitWithKeys(spark, batch, keys, state.mirrors.parts,
             ckptProbe = committedIds.nonEmpty)
         writeDeltas(batchId, newKeys, kept)
       } finally {

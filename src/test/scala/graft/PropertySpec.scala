@@ -233,11 +233,38 @@ class PropertySpec extends SparkSpecBase {
       if (rng.nextInt(8) == 0) real(rng.nextInt(real.size)) + " again" else sentence()))), 0)
   }
 
+  /** Two batches of 2,100 fresh docs, whose admitted band rows cross
+    * `SMALL_STATE_KEYS`, then a small batch decided against the state
+    * past the bound: re-captures of both (appended token, or equal
+    * shingles with other punctuation, so keep-best replaces or drops)
+    * plus fresh docs. */
+  private def crossingCorpus(seed: Long): Seq[Seq[(Long, String)]] = {
+    val rng = new scala.util.Random(seed)
+    def fresh() = Seq.fill(12)(s"w${rng.nextInt(100000)}").mkString(" ")
+    val bigs = Seq.fill(2)(Vector.fill(2100)(fresh()))
+    val recaptures = Seq.fill(20) {
+      val t = bigs(rng.nextInt(2))(rng.nextInt(2100))
+      rng.nextInt(3) match {
+        case 0 => t + " again"
+        case 1 => t + " !!!"
+        case _ => t.replace(" ", ", ")
+      }
+    }
+    val ids = rng.shuffle((1L to 100000L).toVector)
+    val texts = bigs :+ rng.shuffle(recaptures ++ Seq.fill(10)(fresh()))
+    texts.foldLeft((ids, Vector.empty[Seq[(Long, String)]])) { case ((free, out), ts) =>
+      (free.drop(ts.size), out :+ free.take(ts.size).zip(ts))
+    }._2
+  }
+
   /** Drives `bs` through both persistent accumulators and compares
     * them with the batch-mode reference the benchmark checks against:
     * the in-memory [[graft.streaming.StreamNearDedup.Accumulator]] and
-    * the [[graft.streaming.StreamKeepBest.keepBestBatch]] chain. */
-  private def admissionMatchesReference(bs: Seq[Seq[(Long, String)]]): Unit = {
+    * the [[graft.streaming.StreamKeepBest.keepBestBatch]] chain. With
+    * `restartAt` ≥ 0, fresh accumulator instances over the same state
+    * dirs take over from batch `restartAt` on — the resume path. */
+  private def admissionMatchesReference(bs: Seq[Seq[(Long, String)]],
+      restartAt: Int = -1): Unit = {
     import graft.streaming.{StreamKeepBest, StreamNearDedup}
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
@@ -247,9 +274,11 @@ class PropertySpec extends SparkSpecBase {
     val nd = java.nio.file.Files.createTempDirectory("graft_prop_nd_")
     val kb = java.nio.file.Files.createTempDirectory("graft_prop_kb_")
     try {
-      val persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
+      var persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
       val reference = new StreamNearDedup.Accumulator(spark)
       batches.zipWithIndex.foreach { case (b, k) =>
+        if (k == restartAt)
+          persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
         persistent.onBatch(b, k.toLong)
         reference.onBatch(b, k.toLong)
       }
@@ -257,8 +286,12 @@ class PropertySpec extends SparkSpecBase {
       assert(rows(StreamNearDedup.readAdmitted(spark, nd.toString), ndCols: _*) ==
         rows(reference.admitted, ndCols: _*), s"near-dedup differs on $bs")
 
-      val keepBest = new StreamKeepBest.PersistentKeepBest(spark, kb.toString)
-      batches.zipWithIndex.foreach { case (b, k) => keepBest.onBatch(b, k.toLong) }
+      var keepBest = new StreamKeepBest.PersistentKeepBest(spark, kb.toString)
+      batches.zipWithIndex.foreach { case (b, k) =>
+        if (k == restartAt)
+          keepBest = new StreamKeepBest.PersistentKeepBest(spark, kb.toString)
+        keepBest.onBatch(b, k.toLong)
+      }
       var bands = StreamKeepBest.emptyBands(spark)
       var canon = StreamKeepBest.emptyCanon(spark)
       val events = batches.zipWithIndex.map { case (b, k) =>
@@ -296,5 +329,28 @@ class PropertySpec extends SparkSpecBase {
     val bs = admissionCorpus(7L, big = operators.Dedup.SMALL_BATCH_ROWS + 1, bigAt = 1)
     assert(bs.map(_.size > operators.Dedup.SMALL_BATCH_ROWS) == Seq(false, true, false))
     admissionMatchesReference(bs)
+  }
+
+  test("streaming admission: fresh accumulators over the same state dirs resume with the same answers") {
+    // A restart within SMALL_STATE_KEYS resumes with the state held on
+    // the driver, read back from committed storage at construction.
+    val gen = Gen.zip(Gen.choose(Long.MinValue, Long.MaxValue), Gen.choose(0, 1))
+    forAll(gen, n = 10) { case (seed, pick) =>
+      val bs = admissionCorpus(seed)
+      admissionMatchesReference(bs, restartAt = 1 + pick % math.max(1, bs.size - 1))
+    }
+  }
+
+  test("streaming admission: state past SMALL_STATE_KEYS hands off to the mirrors, same answers with and without a restart") {
+    // The first two batches commit 2 × 2100 × LSH_BANDS band rows, past
+    // the bound, so the third batch is decided against the mirrors:
+    // rebuilt from storage by the running instances at the hand-off,
+    // and by fresh instances' constructors on the restart run.
+    val bs = crossingCorpus(11L)
+    assert(bs.take(2).map(_.size).sum * operators.Dedup.LSH_BANDS >
+      operators.Dedup.SMALL_STATE_KEYS)
+    assert(bs.forall(_.size <= operators.Dedup.SMALL_BATCH_ROWS))
+    admissionMatchesReference(bs)
+    admissionMatchesReference(bs, restartAt = 2)
   }
 }

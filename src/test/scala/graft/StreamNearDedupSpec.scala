@@ -493,6 +493,45 @@ class StreamNearDedupSpec extends SparkSpecBase {
     } finally graft.streaming.StreamingOps.deleteRecursively(state)
   }
 
+  test("past the hand-off: admission across the mirror mem fold equals the references") {
+    // Within SMALL_STATE_KEYS the accumulators keep their state on the
+    // driver and never fold a mirror, so the two mem-fold tests above
+    // run on the driver maps. Here batch 0 has SMALL_BATCH_ROWS + 1
+    // docs: it runs the distributed body and hands the state off, and
+    // the next nine small triggers cross the mirrors' MEM_FOLD_EVERY
+    // fold. The keep-best fixture is the mem-fold one's: a post-fold
+    // challenger of middling quality must lose to the reigning
+    // canonical, not replace the deposed original. Near-dedup must
+    // equal the in-memory Accumulator.
+    val rnd = new scala.util.Random(31L)
+    val big = doc(10, base + " zebra???") +: (1 to operators.Dedup.SMALL_BATCH_ROWS)
+      .map(i => doc(100000L + i, Seq.fill(12)(s"w${rnd.nextInt(100000)}").mkString(" ")))
+    val bs = (Seq(big, Seq(doc(20, base + " zebra"))) ++
+      (2 to 8).map(k => Seq(doc(100L * k, s"filler text number$k only"))) :+
+      Seq(doc(90, base + " zebra?"))).zipWithIndex.map { case (b, i) => (b, i.toLong) }
+    assert(bs.size > StreamNearDedup.MEM_FOLD_EVERY + 1)
+    val (kb, nd) = (java.nio.file.Files.createTempDirectory("graft_kb_handoff_"),
+      java.nio.file.Files.createTempDirectory("graft_nd_handoff_"))
+    try {
+      val ev = runKeepBest(kb, bs)
+      assert(ev(20L)._1 == 10L && ev(20L)._3 == "replace" && ev(20L)._4 == 1L)
+      assert(ev(90L)._1 == 10L && ev(90L)._3 == "drop" && ev(90L)._4 == 9L,
+        s"post-fold challenge resolved wrongly: ${ev(90L)}")
+      assert(ev(90L)._2 > ev(10L)._2 && ev(90L)._2 < ev(20L)._2)
+      val persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
+      val inMemory = new StreamNearDedup.Accumulator(spark)
+      bs.foreach { case (b, k) =>
+        persistent.onBatch(b.toDF("doc_id", "text"), k)
+        inMemory.onBatch(b.toDF("doc_id", "text"), k)
+      }
+      def rows(df: DataFrame) =
+        df.select("doc_id", "batch_id").as[(Long, Long)].collect().toSet
+      val got = rows(persistent.admitted)
+      assert(got == rows(inMemory.admitted))
+      assert(!got.exists(_._1 == 90L) && got.contains((800L, 8L)))
+    } finally Seq(kb, nd).foreach(graft.streaming.StreamingOps.deleteRecursively)
+  }
+
   // --- bounded components (the per-trigger clustering fast path) ----------
 
   test("componentsBounded equals the distributed star loop on random graphs") {
@@ -1062,5 +1101,151 @@ class StreamNearDedupSpec extends SparkSpecBase {
       keys.unpersist(blocking = false)
       batch.unpersist(blocking = false)
     }
+  }
+
+  // --- per-trigger job counts -------------------------------------------------
+
+  /** The job-group ids of the jobs each call starts, per call tag: each
+    * call runs under its own job group, and a fence job after it cuts
+    * the ordered job starts into per-call segments, so a job that lost
+    * its group still lands in its call's segment. */
+  private def jobsPerCall(calls: Seq[(String, () => Any)]): Map[String, Vector[String]] = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def fence(tag: String): Unit = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("fence-start")
+      calls.foreach { case (g, call) =>
+        sc.setJobGroup(g, g)
+        try call() finally sc.clearJobGroup()
+        fence(s"fence-$g")
+      }
+      val last = s"fence-${calls.last._1}"
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(last) && System.nanoTime() < deadline) Thread.sleep(20)
+      val seen = groups.asScala.toVector.dropWhile(_ != "fence-start").drop(1)
+      calls.map(_._1).foldLeft((seen, Map.empty[String, Vector[String]])) {
+        case ((rest, acc), g) =>
+          val (seg, tail) = rest.span(_ != s"fence-$g")
+          (tail.drop(1), acc + (g -> seg))
+      }._2
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("probeParts: one job per probe, the rows of the broadcast-join probe") {
+    // The InSet probe over a clustered checkpoint, a parquet delta and a
+    // local frame must return, once the driver keeps the exact
+    // (band_idx, band_key) matches, the rows the broadcast join on both
+    // columns returns — and on the canonical form (comp) the rows of the
+    // semi-join — in exactly one job each; without keys, none.
+    import org.apache.spark.sql.Row
+    val rnd = new scala.util.Random(4242L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_probe_parts_")
+    val cols = Seq("band_idx", "band_key", "comp")
+    def sorted(rs: Seq[Row]) = rs.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted
+    try (0 until 4).foreach { round =>
+      def rows(n: Int) = Seq.fill(n)((rnd.nextInt(operators.Dedup.LSH_BANDS),
+        rnd.nextInt(400).toLong, rnd.nextInt(60).toLong))
+      val delta = s"$dir/delta$round"
+      rows(300).toDF(cols: _*).coalesce(1).write.parquet(delta)
+      val parts = Seq(
+        StreamNearDedup.ckptClustered(spark, rows(3000).toDF(cols: _*)),
+        spark.read.parquet(delta),
+        rows(40).toDF(cols: _*))
+      val keys = Seq.fill(40)((rnd.nextInt(operators.Dedup.LSH_BANDS),
+        rnd.nextInt(600).toLong)).distinct
+      val comps = Seq.fill(8)(rnd.nextInt(90).toLong).distinct
+      val joined = parts.map(_.join(broadcast(keys.toDF("band_idx", "band_key")),
+        Seq("band_idx", "band_key")).select(cols.map(col): _*)).reduce(_ unionAll _).collect()
+      val semi = parts.map(_.join(comps.toDF("comp"), Seq("comp"), "left_semi")
+        .select(cols.map(col): _*)).reduce(_ unionAll _).collect()
+      var byKey, byComp, none = Array.empty[Row]
+      val jobs = jobsPerCall(Seq(
+        s"keys$round" -> (() => byKey = StreamNearDedup.probeParts(parts, "band_key",
+          keys.map(_._2), cols.map(col): _*)),
+        s"comps$round" -> (() => byComp = StreamNearDedup.probeParts(parts, "comp",
+          comps, cols.map(col): _*)),
+        s"none$round" -> (() => none = StreamNearDedup.probeParts(parts, "comp",
+          Nil, cols.map(col): _*))))
+      assert(joined.nonEmpty && semi.nonEmpty)
+      assert(sorted(byKey.toSeq.filter(r => keys.contains((r.getInt(0), r.getLong(1))))) ==
+        sorted(joined.toSeq))
+      assert(sorted(byComp.toSeq) == sorted(semi.toSeq))
+      assert(none.isEmpty)
+      assert(jobs(s"keys$round").size == 1 && jobs(s"comps$round").size == 1,
+        s"probe jobs: $jobs")
+      assert(jobs(s"none$round").isEmpty, s"probe without keys ran ${jobs(s"none$round")}")
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  test("accumulators: 3 jobs a trigger within both bounds, one probe job per state table past them") {
+    // Each batch is a one-file parquet read with its schema, like the
+    // stream's file source: its fetch is one job. Within both bounds a
+    // trigger of either accumulator is the fetch and the two delta
+    // writes — also right after a restart, which resumes on the driver,
+    // and on the two 2100-doc triggers whose commits take the state past
+    // SMALL_STATE_KEYS. The next trigger builds the mirrors from
+    // storage; the one after it adds one probe job per state table:
+    // near-dedup 4 jobs, keep-best 5 (a doc collides, so the canonical
+    // table is probed too).
+    val rnd = new scala.util.Random(77L)
+    def fresh() = Seq.fill(12)(s"w${rnd.nextInt(100000)}").mkString(" ")
+    val bigs = Seq(Vector.tabulate(2100)(i => doc(100000L + i, fresh())),
+      Vector.tabulate(2100)(i => doc(200000L + i, fresh())))
+    val past = Seq(
+      Seq(doc(300001L, bigs(0)(5)._2 + " !!!"), doc(300002L, fresh()),
+        doc(300003L, base + " yak")),
+      Seq(doc(300011L, bigs(1)(7)._2 + " again"), doc(300012L, fresh()),
+        doc(300013L, bigs(0)(9)._2.replace(" ", ", "))))
+    val batches = kbBatches ++ Seq(Seq(doc(40, base + " emu"), doc(41, fresh()))) ++
+      bigs ++ past
+    assert(bigs.map(_.size).sum * operators.Dedup.LSH_BANDS > operators.Dedup.SMALL_STATE_KEYS)
+    val dir = java.nio.file.Files.createTempDirectory("graft_trigger_jobs_")
+    val (nd, kb) = (dir.resolve("nd").toString, dir.resolve("kb").toString)
+    try {
+      val read = batches.indices.map { k =>
+        val path = s"$dir/src/batch$k"
+        batches(k).toDF("doc_id", "text").coalesce(1).write.parquet(path)
+        spark.read.schema("doc_id LONG, text STRING").parquet(path)
+      }
+      var ndAcc = new StreamNearDedup.PersistentAccumulator(spark, nd)
+      var kbAcc = new graft.streaming.StreamKeepBest.PersistentKeepBest(spark, kb)
+      def trigger(k: Int) = Seq(
+        s"nd-g$k" -> (() => ndAcc.onBatch(read(k), k.toLong)),
+        s"kb-g$k" -> (() => kbAcc.onBatch(read(k), k.toLong)))
+      val restartAt = kbBatches.size
+      val jobs = jobsPerCall(
+        (0 until restartAt).flatMap(trigger) ++
+          Seq("restart" -> (() => {
+            ndAcc = new StreamNearDedup.PersistentAccumulator(spark, nd)
+            kbAcc = new graft.streaming.StreamKeepBest.PersistentKeepBest(spark, kb)
+          })) ++
+          (restartAt until batches.size).flatMap(trigger))
+      val within = 0 to restartAt + 2
+      val handOff = restartAt + 3
+      for (k <- within; acc <- Seq("nd", "kb")) {
+        val seg = jobs(s"$acc-g$k")
+        assert(seg.size == 3 && seg.forall(_ == s"$acc-g$k"),
+          s"$acc trigger $k within both bounds ran ${seg.size} jobs: $seg")
+      }
+      assert(jobs(s"nd-g${handOff + 1}").size == 4,
+        s"near-dedup past the bound: ${jobs(s"nd-g${handOff + 1}")}")
+      assert(jobs(s"kb-g${handOff + 1}").size == 5,
+        s"keep-best past the bound: ${jobs(s"kb-g${handOff + 1}")}")
+      assert(jobs(s"nd-g$handOff").size > 4 && jobs(s"kb-g$handOff").size > 5,
+        "the first trigger past the bound builds the mirrors")
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
   }
 }
