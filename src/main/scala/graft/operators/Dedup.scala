@@ -601,7 +601,7 @@ object Dedup extends QueryModule {
     * [[collectBounded]] — and within the bound the batch's band keys,
     * quality, components and actions are computed on the driver,
     * against the driver-held state while it is within
-    * [[SMALL_STATE_KEYS]], else with one probe job per state table.
+    * [[SMALL_STATE_KEYS]], else with one probe query per state table.
     * The driver holds the fetched rows and their keys: at bench-sized
     * documents 4096 rows are ≈ 1.2 MB of text plus 131k band keys
     * (1 MB of longs), the same order as the 1.6 MB
@@ -616,9 +616,12 @@ object Dedup extends QueryModule {
     * [[SMALL_BATCH_ROWS]] batch already holds there — 1 MB of raw
     * longs, a few MB as hash maps with boxed cluster ids. Within it a
     * trigger probes the maps in Scala and starts no state query; the
-    * first committed state past it (per table), like the first batch
+    * first commit that takes a table past it, like the first batch
     * past [[SMALL_BATCH_ROWS]], hands off to the distributed mirrors
-    * for good, rebuilt from committed storage at their first use. */
+    * for good, built from committed storage right then. The value is
+    * a driver-heap ceiling by analogy with the batch bound, not a
+    * measured crossover: the benchmark's stream never leaves it, so
+    * the per-trigger cost past it is the mirrors' as it was. */
   private[graft] val SMALL_STATE_KEYS = SMALL_BATCH_ROWS * LSH_BANDS
 
   /** The rows of `df` if it has at most `bound`, else None — ONE job

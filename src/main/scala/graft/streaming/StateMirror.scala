@@ -4,15 +4,15 @@ import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** The in-memory half of a streaming state store past
-  * [[Dedup.SMALL_STATE_KEYS]] (below it the store holds its state on
-  * the driver, [[DriverBands]]; [[DriverOrMirror]] keeps one of the
-  * two): an LSM list of DataFrame parts that the per-trigger probes
+  * [[Dedup.SMALL_STATE_KEYS]] (below it an admission store holds its
+  * state on the driver, [[DriverBands]], and keeps one of the two at a
+  * time): an LSM list of DataFrame parts that the per-trigger probes
   * read PART-WISE (see the multi-part
   * [[StreamNearDedup.admitWithKeys]] and [[StreamNearDedup.probeParts]]),
   * so a checkpointed base keeps its clustered layout and its side of
   * the probe stays exchange- and sort-free. The on-disk half is the
   * store's [[graft.storage.GenerationLog]]; the mirror is built from it
-  * once — the admission stores' at their first use past the driver
+  * once — the admission stores' when their state outgrows the driver
   * bound, the ANN known ids' at construction — and then written
   * through, never re-read per trigger.
   *
@@ -129,29 +129,4 @@ private[graft] object DriverBands {
     rows.foreach(d.add)
     d
   }
-}
-
-/** A store's committed state in ONE representation at a time: `small0`
-  * on the driver while it is within its bound, else the mirrors
-  * `build` makes from committed storage (the resume path). [[handOff]]
-  * drops the driver state for good; the mirrors are built at their
-  * first use after it, so a stream that ends right after crossing the
-  * bound never builds them. Single writer, like [[StateMirror]]. */
-private[graft] final class DriverOrMirror[S, M](small0: Option[S], build: () => M) {
-  private var held = small0
-  private var built = Option.empty[M]
-
-  /** The driver state, while it is live. */
-  def small: Option[S] = held
-
-  def handOff(): Unit = held = None
-
-  /** The mirrors, built on first use; only after the hand-off. */
-  def mirrors: M = {
-    require(held.isEmpty, "the state is still held on the driver")
-    built.getOrElse { val m = build(); built = Some(m); m }
-  }
-
-  /** The mirrors if they are built — what a commit advances. */
-  def builtMirrors: Option[M] = built
 }

@@ -301,15 +301,18 @@ object StreamKeepBest {
     Contender(r.getLong(1), comp, qualityAt(r), fresh = false, inc = true)
 
   /** The canonical seats of `comps` from the mirror's parts in ONE probe
-    * job: the parts tagged with their index, the lowest index (the
+    * query: the parts tagged with their index, the lowest index (the
     * newest part) wins — the [[resolveLatest]] rule. */
-  private def probeCanon(parts: Seq[DataFrame],
-      comps: Iterable[Long]): collection.Map[Long, Contender] =
+  private def probeCanon(spark: SparkSession, parts: Seq[DataFrame],
+      comps: Iterable[Long]): collection.Map[Long, Contender] = {
+    import spark.implicits._
     StreamNearDedup.probeParts(
         parts.zipWithIndex.map { case (p, i) => p.withColumn("part", lit(i)) },
-        "comp", comps, col("comp"), col("doc_id"), col("quality"), col("part"))
+        comps.toSeq.toDF("comp"), Seq("comp"),
+        col("comp"), col("doc_id"), col("quality"), col("part"))
       .groupBy(_.getLong(0))
       .map { case (comp, rs) => comp -> incumbent(comp, rs.minBy(_.getInt(3))) }
+  }
 
   /** [[keepBestWithKeys]] decided on the driver for a micro-batch of
     * at most [[Dedup.SMALL_BATCH_ROWS]] rows, fetched with its quality
@@ -404,11 +407,11 @@ object StreamKeepBest {
     // mirror consolidates the event log either way). foldEvery <= 0
     // keeps compaction caller-driven.
     // While each table is within SMALL_STATE_KEYS rows the state is
-    // held on the driver ([[DriverOrMirror]]): the band rows as
-    // [[DriverBands]] (band key → min comp, the collapsedMin rule
-    // below) and comp → its latest canonical seat, each read here in
-    // one bounded job. Past that, both tables are [[StateMirror]]s,
-    // built from storage at their first use. Bands are read through
+    // held on the driver (Left): the band rows as [[DriverBands]] (band
+    // key → min comp, the collapsedMin rule below) and comp → its
+    // latest canonical seat, each read here in one bounded job. Past
+    // that, both tables are [[StateMirror]]s (Right, for good), built
+    // from storage at the hand-off. Bands are read through
     // the generation pointer (generation base + unfolded tail); events
     // stay a plain committed-ids read — the event log never folds (see
     // the object scaladoc's compaction boundary), and
@@ -437,22 +440,34 @@ object StreamKeepBest {
     // challenges. The former anti-join+union chain re-executed one
     // shuffle PER LAYER inside every events write — a per-trigger cost
     // growing with triggers-since-fold.
-    private val state = new DriverOrMirror[
-        (DriverBands, mutable.LongMap[Contender]), (StateMirror, StateMirror)](
-      if (committedIds.isEmpty) Some((new DriverBands, mutable.LongMap.empty))
-      else for {
+    private def mirrorsNow(): (StateMirror, StateMirror) = (
+      new StateMirror(clusteredBands(bandsAt(log.state(committedIds))),
+        parts => clusteredBands(parts.reduce(_ unionAll _))),
+      new StateMirror(canonNow.localCheckpoint(),
+        parts => resolveLatest(parts).localCheckpoint()))
+    private var state: Either[(DriverBands, mutable.LongMap[Contender]),
+        (StateMirror, StateMirror)] =
+      if (committedIds.isEmpty) Left((new DriverBands, mutable.LongMap.empty))
+      else (for {
         bands <- Dedup.collectBounded(bandsAt(log.state(committedIds)),
           Dedup.SMALL_STATE_KEYS)
         canon <- Dedup.collectBounded(canonNow, Dedup.SMALL_STATE_KEYS)
       } yield (DriverBands.of(bands), mutable.LongMap.from(
-        canon.map(r => r.getLong(0) -> incumbent(r.getLong(0), r)))),
-      () => (
-        new StateMirror(clusteredBands(bandsAt(log.state(committedIds))),
-          parts => clusteredBands(parts.reduce(_ unionAll _))),
-        new StateMirror(canonNow.localCheckpoint(),
-          parts => resolveLatest(parts).localCheckpoint())))
+        canon.map(r => r.getLong(0) -> incumbent(r.getLong(0), r)))))
+        .toLeft(mirrorsNow())
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
+
+    /** The mirrors; the first call drops the driver state and builds
+      * both mirrors from committed storage — the hand-off, once and for
+      * good. */
+    private def handOff(): (StateMirror, StateMirror) = state match {
+      case Right(ms) => ms
+      case Left(_) =>
+        val ms = mirrorsNow()
+        state = Right(ms)
+        ms
+    }
 
     /** The foreachBatch body (serial per query; lock defensive).
       *
@@ -461,11 +476,10 @@ object StreamKeepBest {
       * [[keepBestSmall]]). While both state tables are within
       * [[Dedup.SMALL_STATE_KEYS]] rows they are probed in Scala, and
       * the trigger runs exactly 3 jobs: the fetch and the two delta
-      * writes. Past that bound it adds one probe job per state table
-      * it needs ([[StreamNearDedup.probeParts]], [[probeCanon]]),
-      * whatever the number of mirror parts: 5 jobs when a doc
-      * collides, 4 when none does (the first such trigger also builds
-      * the mirrors).
+      * writes. Past that bound it adds one probe query per state table
+      * it needs ([[StreamNearDedup.bandHits]], [[probeCanon]]),
+      * whatever the number of mirror parts, each a broadcast job and a
+      * collect job: 7 jobs when a doc collides, 5 when none does.
       *
       * A bigger batch runs the distributed [[keepBestWithKeys]] body,
       * compute-once/write-concurrent (r21, guide §2.6): the events plan
@@ -488,17 +502,17 @@ object StreamKeepBest {
       * settled via awaitAll, and the marker lands only after BOTH, so
       * replay visibility is unchanged. Within the bound the trigger's
       * own event and band-delta rows advance the driver state, after
-      * the commit and never before it; the first table past the bound,
-      * or the first bigger batch, hands off to the mirrors for good.
-      * The canonical mirror's delta layer reads the COMMITTED events
+      * the commit and never before it; a commit that takes either table
+      * past the bound, or the first bigger batch (before its body),
+      * hands off to the mirrors ([[handOff]]). The canonical mirror's delta layer reads the COMMITTED events
       * file lazily — later triggers never reference a per-trigger
       * cache. Mirror folds are LAZY (both [[StateMirror]]s): between
       * fold points each mirror is its checkpointed base plus up to
       * [[StreamNearDedup.MEM_FOLD_EVERY]] committed delta scans. Every
       * `foldEvery` committed batches the on-disk band layout folds
       * ([[compactBands]] from inside the loop — safe: foreachBatch is
-      * the single writer and runs serially) and a built band mirror
-      * re-bases onto the new generation. */
+      * the single writer and runs serially) and the band mirror, if
+      * any, re-bases onto the new generation. */
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
       // Job labels (guide §1.5): thread-local, covering every job this
       // trigger launches on the foreachBatch thread; the write futures
@@ -519,58 +533,55 @@ object StreamKeepBest {
         val (eventRows, bandRows) = StreamNearDedup.fetchSmall(batch0,
             graft.operators.Pipeline.qualityCol(col("text"))) match {
           case Some(small) =>
-            val (events, bandDelta) = state.small match {
-              case Some((bands, canon)) => keepBestSmall(small, bands, _ => canon)
-              case None =>
+            val (events, bandDelta) = state match {
+              case Left((bands, canon)) => keepBestSmall(small, bands, _ => canon)
+              case Right((bands, canon)) =>
                 label("probe+decide")
-                val (bands, canon) = state.mirrors
                 keepBestSmall(small,
-                  DriverBands.of(StreamNearDedup.probeParts(bands.parts, "band_key",
-                    small.bandKeys, col("band_idx"), col("band_key"), col("comp"))),
-                  probeCanon(canon.parts, _))
+                  StreamNearDedup.bandHits(spark, bands.parts, small, col("comp")),
+                  probeCanon(spark, canon.parts, _))
             }
             writeDeltas(batchId, StreamNearDedup.localFrame(spark, events, EventsDelta),
               StreamNearDedup.localFrame(spark, bandDelta, BandsDelta), label)
             (events, bandDelta)
           case None =>
-            state.handOff()
             keepBestDistributed(batch0, batchId, label)
             (Nil, Nil)
         }
         log.commit(batchId)
         committedIds += batchId
-        // The winners delta IS the canonical update: a replacement's
-        // newer row supersedes the cluster's older one, a new
-        // cluster's row introduces it — on the driver from the rows
-        // just written, in the mirror as one lazy scan of the
-        // just-committed events file (no per-trigger join).
-        state.small.foreach { case (bands, canon) =>
-          bandRows.foreach(bands.add)
-          eventRows.filter(_.getString(3) != "drop").foreach { r =>
-            canon(r.getLong(1)) = Contender(r.getLong(0), r.getLong(1),
-              qualityAt(r), fresh = false, inc = true)
-          }
-          if (bands.rows > Dedup.SMALL_STATE_KEYS || canon.size > Dedup.SMALL_STATE_KEYS)
-            state.handOff()
-        }
         sinceDiskFold += 1
         val fold = foldEvery > 0 && sinceDiskFold >= foldEvery
         if (fold) {
           compactBands(spark, stateDir)
           sinceDiskFold = 0
         }
-        state.builtMirrors.foreach { case (bands, canon) =>
-          canon.advance(spark.read.schema(EventsDelta)
-            .parquet(log.payload("events", batchId))
-            .filter(col("action") =!= "drop")
-            .select(col("comp"), col("doc_id"), col("quality")))
-          if (fold) {
-            bands.rebase(clusteredBands(bandsAt(log.state())))
-            canon.fold()
-          } else {
-            val path = log.payload("bands", batchId)
-            bands.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
-          }
+        // The winners delta IS the canonical update: a replacement's
+        // newer row supersedes the cluster's older one, a new
+        // cluster's row introduces it — on the driver from the rows
+        // just written, in the mirror as one lazy scan of the
+        // just-committed events file (no per-trigger join).
+        state match {
+          case Left((bands, canon)) =>
+            bandRows.foreach(bands.add)
+            eventRows.filter(_.getString(3) != "drop").foreach { r =>
+              canon(r.getLong(1)) = Contender(r.getLong(0), r.getLong(1),
+                qualityAt(r), fresh = false, inc = true)
+            }
+            if (bands.rows > Dedup.SMALL_STATE_KEYS || canon.size > Dedup.SMALL_STATE_KEYS)
+              handOff()
+          case Right((bands, canon)) =>
+            canon.advance(spark.read.schema(EventsDelta)
+              .parquet(log.payload("events", batchId))
+              .filter(col("action") =!= "drop")
+              .select(col("comp"), col("doc_id"), col("quality")))
+            if (fold) {
+              bands.rebase(clusteredBands(bandsAt(log.state())))
+              canon.fold()
+            } else {
+              val path = log.payload("bands", batchId)
+              bands.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
+            }
         }
       }
     }
@@ -591,7 +602,7 @@ object StreamKeepBest {
         // ckptProbe whenever PRIOR state exists (the
         // [[StreamNearDedup.PersistentAccumulator]] rationale).
         label("probe+components")
-        val (bands, canon) = state.mirrors
+        val (bands, canon) = handOff()
         val (events0, _) = keepBestWithKeys(spark, batch, keys,
           bands.parts, canon.parts, ckptProbe = committedIds.nonEmpty)
         // ONE execution of the batch plan feeds BOTH delta writes:

@@ -3,9 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import graft.storage.GenerationLog
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Streaming near-duplicate ingest filter — the MinHash-LSH sibling of
@@ -167,7 +165,6 @@ object StreamNearDedup {
       schema: StructType, docs: Array[(Long, Array[Long], Row)]) {
     def keyed: Array[(Long, Array[Long])] =
       docs.collect { case (id, ks, _) if ks.nonEmpty => (id, ks) }
-    def bandKeys: Seq[Long] = docs.toSeq.flatMap(_._2)
   }
 
   /** ONE job fetches at most [[Dedup.SMALL_BATCH_ROWS]] + 1 rows of
@@ -200,21 +197,33 @@ object StreamNearDedup {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** ONE job over every state part: the rows whose `key` column is one
-    * of `keys`, `cols` collected and unioned; no job without keys. The
-    * batch's keys travel inside the plan as an `InSet`, so no broadcast
-    * job ships them first, and the exact match — (band_idx, band_key),
-    * or the canonical parts' order — is the caller's, on the driver.
-    * Part-wise for the [[admitWithKeys]] reason: a clustered base
-    * keeps its layout. */
-  private[graft] def probeParts(parts: Seq[DataFrame], key: String,
-      keys: Iterable[Long], cols: Column*): Array[Row] =
-    if (keys.isEmpty) Array.empty
-    else {
-      val in = ColumnBridge.column(
-        InSet(ColumnBridge.expression(col(key)), keys.toSet[Any]))
-      parts.map(_.filter(in).select(cols: _*)).reduce(_ unionAll _).collect()
-    }
+  /** (doc_id, band_idx, band_key) rows of driver-held band keys. */
+  private[streaming] def keyFrame(spark: SparkSession,
+      keyed: Seq[(Long, Array[Long])]): DataFrame = {
+    import spark.implicits._
+    keyed.flatMap { case (id, ks) => ks.indices.map(b => (id, b, ks(b))) }
+      .toDF("doc_id", "band_idx", "band_key")
+  }
+
+  /** ONE query over every state part: each part ⋈ broadcast(`keys`) on
+    * `on`, unioned, `cols` collected. Part-wise for the
+    * [[admitWithKeys]] reason: a clustered base keeps its layout, and
+    * the batch-sized keys are the broadcast side of every branch. */
+  private[streaming] def probeParts(parts: Seq[DataFrame], keys: DataFrame,
+      on: Seq[String], cols: Column*): Array[Row] =
+    parts.map(_.join(broadcast(keys), on).select(cols: _*))
+      .reduce(_ unionAll _).collect()
+
+  /** The committed band rows of the mirror `parts` that share a
+    * (band_idx, band_key) with `b`, held as [[DriverBands]] — the state
+    * [[admitSmall]] and keep-best's small path decide against past
+    * [[Dedup.SMALL_STATE_KEYS]]: one [[probeParts]] query, none when no
+    * doc of the batch has keys. `extra` is keep-best's `comp`. */
+  private[streaming] def bandHits(spark: SparkSession, parts: Seq[DataFrame],
+      b: SmallBatch, extra: Column*): DriverBands =
+    if (b.keyed.isEmpty) new DriverBands
+    else DriverBands.of(probeParts(parts, keyFrame(spark, b.keyed.toSeq),
+      Seq("band_idx", "band_key"), col("band_idx") +: col("band_key") +: extra: _*))
 
   /** Intra-batch clusters on the driver: doc → min doc_id of its
     * band-collision component ([[Dedup.minLabels]], the union-find
@@ -348,20 +357,31 @@ object StreamNearDedup {
     // batch's partial directories are invisible until its replay
     // overwrites them and lands the marker), read through the
     // generation pointer: generation base + unfolded tail. Within
-    // SMALL_STATE_KEYS rows they are held on the driver, read in one
-    // bounded job; past it in the mirror, checkpointed band-clustered
-    // so the per-trigger probe's state side is a sorted merge scan and
-    // built from storage at its first use.
+    // SMALL_STATE_KEYS rows they are held on the driver (Left), read in
+    // one bounded job; past it in the mirror (Right, for good),
+    // checkpointed band-clustered so the per-trigger probe's state side
+    // is a sorted merge scan.
     private def bandsAt(st: GenerationLog.State): DataFrame =
       readState(spark, log, st, "bands").select(col("band_idx"), col("band_key"))
-    private val state = new DriverOrMirror[DriverBands, StateMirror](
-      if (committedIds.isEmpty) Some(new DriverBands)
-      else Dedup.collectBounded(bandsAt(log.state(committedIds)),
-        Dedup.SMALL_STATE_KEYS).map(DriverBands.of(_)),
-      () => new StateMirror(ckptClustered(spark, bandsAt(log.state(committedIds))),
-        parts => ckptClustered(spark, parts.reduce(_ unionAll _))))
+    private def mirrorNow(): StateMirror =
+      new StateMirror(ckptClustered(spark, bandsAt(log.state(committedIds))),
+        parts => ckptClustered(spark, parts.reduce(_ unionAll _)))
+    private var state: Either[DriverBands, StateMirror] =
+      if (committedIds.isEmpty) Left(new DriverBands)
+      else Dedup.collectBounded(bandsAt(log.state(committedIds)), Dedup.SMALL_STATE_KEYS)
+        .map(DriverBands.of(_)).toLeft(mirrorNow())
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
+
+    /** The mirror; the first call drops the driver state and builds the
+      * mirror from committed storage — the hand-off, once and for good. */
+    private def handOff(): StateMirror = state match {
+      case Right(m) => m
+      case Left(_) =>
+        val m = mirrorNow()
+        state = Right(m)
+        m
+    }
 
     /** The foreachBatch body (serial per query; lock defensive).
       *
@@ -369,61 +389,59 @@ object StreamNearDedup {
       * decided on the driver ([[fetchSmall]], [[admitSmall]]). While
       * the committed state is within [[Dedup.SMALL_STATE_KEYS]] rows it
       * is probed in Scala, and the trigger runs exactly 3 jobs: the
-      * fetch and the two delta writes. Past that bound the trigger adds
-      * one probe job against the mirror ([[probeParts]]), whatever the
-      * number of mirror parts: 4 jobs (the first such trigger also
-      * builds the mirror).
+      * fetch and the two delta writes. Past that bound the mirror is
+      * probed with one [[probeParts]] query, whatever the number of
+      * mirror parts: 5 jobs (its broadcast of the batch keys is its own
+      * job).
       * A bigger batch runs the distributed [[admitWithKeys]] body,
       * write-once: the band-delta write is the one execution of its
       * plan (keys materialize inside it via `persist`).
       *
       * Within the bound the trigger's own band-delta rows advance the
-      * driver state, after the commit and never before it; the first
-      * state past the bound, or the first bigger batch, hands off to
-      * the mirror for good ([[DriverOrMirror]]). Once built, the mirror
-      * folds each written file back in LAZILY — between fold points it
-      * is the clustered base plus up to [[MEM_FOLD_EVERY]] committed
-      * delta scans, and the base's share of the probe is a sorted
-      * merge scan, not a re-shuffle of the whole state. Every
-      * [[MEM_FOLD_EVERY]] triggers the tail folds into a fresh
-      * clustered base (the LSM run merge, amortized). Either way, every
-      * `foldEvery` committed batches the ON-DISK layout folds
-      * ([[compactState]] from inside the loop — safe: foreachBatch is
-      * the single writer and runs serially) and a built mirror re-bases
-      * onto the new generation. */
+      * driver state, after the commit and never before it; a commit
+      * that takes the state past the bound, or the first bigger batch
+      * (before its body), hands off to the mirror ([[handOff]]). The
+      * mirror folds each later written file back in LAZILY — between
+      * fold points it is the clustered base plus up to
+      * [[MEM_FOLD_EVERY]] committed delta scans, and the base's share
+      * of the probe is a sorted merge scan, not a re-shuffle of the
+      * whole state. Every [[MEM_FOLD_EVERY]] triggers the tail folds
+      * into a fresh clustered base (the LSM run merge, amortized).
+      * Either way, every `foldEvery` committed batches the ON-DISK
+      * layout folds ([[compactState]] from inside the loop — safe:
+      * foreachBatch is the single writer and runs serially) and the
+      * mirror, if any, re-bases onto the new generation. */
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
       if (!committedIds(batchId)) {
         val bandRows = fetchSmall(batch0) match {
           case Some(small) =>
-            val (kept, bands) = admitSmall(small, state.small.getOrElse(
-              DriverBands.of(probeParts(state.mirrors.parts, "band_key",
-                small.bandKeys, col("band_idx"), col("band_key")))))
+            val (kept, bands) = admitSmall(small,
+              state.fold(identity, m => bandHits(spark, m.parts, small)))
             writeDeltas(batchId, localFrame(spark, bands, BandsDelta),
               localFrame(spark, kept, small.schema))
             bands
           case None =>
-            state.handOff()
             admitDistributed(batch0, batchId)
             Nil
         }
         log.commit(batchId)
         committedIds += batchId
-        state.small.foreach { d =>
-          bandRows.foreach(d.add)
-          if (d.rows > Dedup.SMALL_STATE_KEYS) state.handOff()
-        }
         sinceDiskFold += 1
         val fold = foldEvery > 0 && sinceDiskFold >= foldEvery
         if (fold) {
           compactState(spark, stateDir)
           sinceDiskFold = 0
         }
-        state.builtMirrors.foreach { mirror =>
-          if (fold) mirror.rebase(ckptClustered(spark, bandsAt(log.state())))
-          else {
-            val path = log.payload("bands", batchId)
-            mirror.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
-          }
+        state match {
+          case Left(d) =>
+            bandRows.foreach(d.add)
+            if (d.rows > Dedup.SMALL_STATE_KEYS) handOff()
+          case Right(mirror) =>
+            if (fold) mirror.rebase(ckptClustered(spark, bandsAt(log.state())))
+            else {
+              val path = log.payload("bands", batchId)
+              mirror.advanceCommitted(path, spark.read.schema(BandsDelta).parquet(path))
+            }
         }
       }
     }
@@ -453,7 +471,7 @@ object StreamNearDedup {
         // the probe is trivially empty and the checkpoint job would
         // scan the whole batch's keys for nothing.
         val (kept, newKeys) =
-          admitWithKeys(spark, batch, keys, state.mirrors.parts,
+          admitWithKeys(spark, batch, keys, handOff().parts,
             ckptProbe = committedIds.nonEmpty)
         writeDeltas(batchId, newKeys, kept)
       } finally {

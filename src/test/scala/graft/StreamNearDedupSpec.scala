@@ -472,7 +472,10 @@ class StreamNearDedupSpec extends SparkSpecBase {
     // strictly between the deposed original (batch 0) and the reigning
     // canonical (batch 1) must still lose — a part-order inversion in
     // either fold would present the deposed original as the incumbent
-    // and record `replace` instead of `drop`.
+    // and record `replace` instead of `drop`. The state here stays within
+    // SMALL_STATE_KEYS, so the persistent accumulator holds it on the
+    // driver and this pins the answer on that path; "past the hand-off"
+    // runs the same fixture through the mirrors' fold.
     val state = java.nio.file.Files.createTempDirectory("graft_kb_memfold_")
     try {
       val filler = (2 to 8).map(k =>
@@ -494,41 +497,43 @@ class StreamNearDedupSpec extends SparkSpecBase {
   }
 
   test("past the hand-off: admission across the mirror mem fold equals the references") {
-    // Within SMALL_STATE_KEYS the accumulators keep their state on the
-    // driver and never fold a mirror, so the two mem-fold tests above
-    // run on the driver maps. Here batch 0 has SMALL_BATCH_ROWS + 1
-    // docs: it runs the distributed body and hands the state off, and
-    // the next nine small triggers cross the mirrors' MEM_FOLD_EVERY
-    // fold. The keep-best fixture is the mem-fold one's: a post-fold
+    // The two mem-fold fixtures, each behind a first batch padded past
+    // SMALL_BATCH_ROWS: that batch runs the distributed body and hands
+    // the state off to the mirrors, and the small triggers after it
+    // cross the mirrors' MEM_FOLD_EVERY fold. Keep-best: a post-fold
     // challenger of middling quality must lose to the reigning
-    // canonical, not replace the deposed original. Near-dedup must
-    // equal the in-memory Accumulator.
+    // canonical, not replace the deposed original. Near-dedup: tail,
+    // base and intra-batch hits must equal the in-memory Accumulator
+    // and the fixture's admitted set.
     val rnd = new scala.util.Random(31L)
-    val big = doc(10, base + " zebra???") +: (1 to operators.Dedup.SMALL_BATCH_ROWS)
+    val pad = (1 to operators.Dedup.SMALL_BATCH_ROWS)
       .map(i => doc(100000L + i, Seq.fill(12)(s"w${rnd.nextInt(100000)}").mkString(" ")))
-    val bs = (Seq(big, Seq(doc(20, base + " zebra"))) ++
+    val kbs = (Seq(doc(10, base + " zebra???") +: pad, Seq(doc(20, base + " zebra"))) ++
       (2 to 8).map(k => Seq(doc(100L * k, s"filler text number$k only"))) :+
       Seq(doc(90, base + " zebra?"))).zipWithIndex.map { case (b, i) => (b, i.toLong) }
-    assert(bs.size > StreamNearDedup.MEM_FOLD_EVERY + 1)
+    val (fixture, want) = ndMemFoldFixture
+    val nds = ((fixture.head ++ pad) +: fixture.tail).zipWithIndex
+    assert(kbs.size > StreamNearDedup.MEM_FOLD_EVERY + 1 &&
+      nds.size > StreamNearDedup.MEM_FOLD_EVERY + 1)
     val (kb, nd) = (java.nio.file.Files.createTempDirectory("graft_kb_handoff_"),
       java.nio.file.Files.createTempDirectory("graft_nd_handoff_"))
     try {
-      val ev = runKeepBest(kb, bs)
+      val ev = runKeepBest(kb, kbs)
       assert(ev(20L)._1 == 10L && ev(20L)._3 == "replace" && ev(20L)._4 == 1L)
       assert(ev(90L)._1 == 10L && ev(90L)._3 == "drop" && ev(90L)._4 == 9L,
         s"post-fold challenge resolved wrongly: ${ev(90L)}")
       assert(ev(90L)._2 > ev(10L)._2 && ev(90L)._2 < ev(20L)._2)
       val persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
       val inMemory = new StreamNearDedup.Accumulator(spark)
-      bs.foreach { case (b, k) =>
-        persistent.onBatch(b.toDF("doc_id", "text"), k)
-        inMemory.onBatch(b.toDF("doc_id", "text"), k)
+      nds.foreach { case (b, k) =>
+        persistent.onBatch(b.toDF("doc_id", "text"), k.toLong)
+        inMemory.onBatch(b.toDF("doc_id", "text"), k.toLong)
       }
       def rows(df: DataFrame) =
         df.select("doc_id", "batch_id").as[(Long, Long)].collect().toSet
       val got = rows(persistent.admitted)
       assert(got == rows(inMemory.admitted))
-      assert(!got.exists(_._1 == 90L) && got.contains((800L, 8L)))
+      assert(got.filter(_._1 < 100000L) == want, s"admitted ${got.filter(_._1 < 100000L).toSeq.sorted}")
     } finally Seq(kb, nd).foreach(graft.streaming.StreamingOps.deleteRecursively)
   }
 
@@ -822,23 +827,8 @@ class StreamNearDedupSpec extends SparkSpecBase {
 
   test("accumulators: every job a trigger starts carries the trigger's job group") {
     // Each onBatch runs directly under setJobGroup(g<k>); the fetch, the
-    // probes and both concurrent delta writes must all carry g<k>. A
-    // fence job after each call cuts the (ordered) job-start events into
-    // per-call segments.
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def fence(tag: String): Unit = {
-      sc.setJobGroup(tag, tag)
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-    }
+    // probes and both concurrent delta writes must all carry g<k>
+    // ([[jobsPerCall]] cuts the job starts into per-call segments).
     val nd = java.nio.file.Files.createTempDirectory("graft_nd_groups_")
     val kb = java.nio.file.Files.createTempDirectory("graft_kb_groups_")
     try {
@@ -846,33 +836,15 @@ class StreamNearDedupSpec extends SparkSpecBase {
         "nd" -> new StreamNearDedup.PersistentAccumulator(spark, nd.toString).onBatch,
         "kb" -> new graft.streaming.StreamKeepBest.PersistentKeepBest(
           spark, kb.toString).onBatch)
-      sc.addSparkListener(listener)
-      fence("fence-start")
       val calls = for {
         (b, k) <- kbBatches.zipWithIndex
         (name, onBatch) <- accs
-      } yield {
-        val g = s"$name-g$k"
-        sc.setJobGroup(g, g)
-        try onBatch(b.toDF("doc_id", "text"), k.toLong) finally sc.clearJobGroup()
-        fence(s"fence-$g")
-        g
-      }
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"fence-${calls.last}") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val seen = groups.asScala.toVector.dropWhile(_ != "fence-start").drop(1)
-      val segments = calls.foldLeft((seen, Vector.empty[(String, Vector[String])])) {
-        case ((rest, acc), g) =>
-          val (seg, tail) = rest.span(_ != s"fence-$g")
-          (tail.drop(1), acc :+ (g -> seg))
-      }._2
-      segments.foreach { case (g, seg) =>
+      } yield s"$name-g$k" -> (() => onBatch(b.toDF("doc_id", "text"), k.toLong))
+      jobsPerCall(calls).foreach { case (g, seg) =>
         assert(seg.nonEmpty, s"no job seen for $g")
         assert(seg.forall(_ == g), s"jobs of $g ran under groups ${seg.distinct}")
       }
     } finally {
-      sc.removeSparkListener(listener)
       graft.streaming.StreamingOps.deleteRecursively(nd)
       graft.streaming.StreamingOps.deleteRecursively(kb)
     }
@@ -967,14 +939,12 @@ class StreamNearDedupSpec extends SparkSpecBase {
 
   // --- the in-memory state mirror -------------------------------------------
 
-  test("near-dedup: admission across the mem fold equals the in-memory Accumulator") {
-    // 11 batches through ONE PersistentAccumulator cross the mirror's
-    // MEM_FOLD_EVERY = 8 fold (the disk fold stays at 64): the last
-    // three batches probe a folded base plus fresh tail parts. Each
-    // batch k carries a fresh doc, a near-dup of the previous batch's
-    // fresh doc (in the tail, or in the base after the fold), a
-    // near-dup of batch 0's (always in the base) and an intra-batch
-    // near-dup pair of which only the min id may be admitted.
+  /** The near-dedup mem-fold fixture: 11 batches, each batch k with a
+    * fresh doc (1000+k), a near-dup of the previous batch's fresh doc
+    * (2000+k), a near-dup of batch 0's (3000+k) and an intra-batch
+    * near-dup pair (4000+k, 5000+k) of which only the min id may be
+    * admitted; and the admitted (doc_id, batch_id) set. */
+  private def ndMemFoldFixture: (Seq[Seq[(Long, String)]], Set[(Long, Long)]) = {
     val rnd = new scala.util.Random(808L)
     def text(): String = Seq.fill(15)(s"w${rnd.nextInt(400)}").mkString(" ")
     val nb = 11
@@ -987,7 +957,18 @@ class StreamNearDedupSpec extends SparkSpecBase {
          else Seq(doc(2000L + k, fresh(k - 1) + " tail"),
            doc(3000L + k, fresh(0) + s" again$k")))
     }
-    assert(nb > StreamNearDedup.MEM_FOLD_EVERY + 1)
+    (bs, (0 until nb).flatMap(k =>
+      Seq((1000L + k, k.toLong), (4000L + k, k.toLong))).toSet)
+  }
+
+  test("near-dedup: admission across the mem fold equals the in-memory Accumulator") {
+    // 11 batches through ONE PersistentAccumulator ([[ndMemFoldFixture]]).
+    // Their state stays within SMALL_STATE_KEYS, so it is held on the
+    // driver and this pins the answer on that path; "past the hand-off"
+    // runs the same fixture through the mirror's MEM_FOLD_EVERY fold,
+    // where the last batches probe a folded base plus fresh tail parts.
+    val (bs, want) = ndMemFoldFixture
+    assert(bs.size > StreamNearDedup.MEM_FOLD_EVERY + 1)
     val state = java.nio.file.Files.createTempDirectory("graft_nd_memfold_")
     try {
       val persistent = new StreamNearDedup.PersistentAccumulator(spark, state.toString)
@@ -1001,9 +982,7 @@ class StreamNearDedupSpec extends SparkSpecBase {
       val got = rows(persistent.admitted)
       assert(got == rows(inMemory.admitted),
         s"persistent ${got.toSeq.sorted} != in-memory ${rows(inMemory.admitted).toSeq.sorted}")
-      assert(got == (0 until nb).flatMap(k =>
-        Seq((1000L + k, k.toLong), (4000L + k, k.toLong))).toSet,
-        s"admitted ${got.toSeq.sorted}")
+      assert(got == want, s"admitted ${got.toSeq.sorted}")
     } finally graft.streaming.StreamingOps.deleteRecursively(state)
   }
 
@@ -1144,61 +1123,16 @@ class StreamNearDedupSpec extends SparkSpecBase {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("probeParts: one job per probe, the rows of the broadcast-join probe") {
-    // The InSet probe over a clustered checkpoint, a parquet delta and a
-    // local frame must return, once the driver keeps the exact
-    // (band_idx, band_key) matches, the rows the broadcast join on both
-    // columns returns — and on the canonical form (comp) the rows of the
-    // semi-join — in exactly one job each; without keys, none.
-    import org.apache.spark.sql.Row
-    val rnd = new scala.util.Random(4242L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_probe_parts_")
-    val cols = Seq("band_idx", "band_key", "comp")
-    def sorted(rs: Seq[Row]) = rs.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted
-    try (0 until 4).foreach { round =>
-      def rows(n: Int) = Seq.fill(n)((rnd.nextInt(operators.Dedup.LSH_BANDS),
-        rnd.nextInt(400).toLong, rnd.nextInt(60).toLong))
-      val delta = s"$dir/delta$round"
-      rows(300).toDF(cols: _*).coalesce(1).write.parquet(delta)
-      val parts = Seq(
-        StreamNearDedup.ckptClustered(spark, rows(3000).toDF(cols: _*)),
-        spark.read.parquet(delta),
-        rows(40).toDF(cols: _*))
-      val keys = Seq.fill(40)((rnd.nextInt(operators.Dedup.LSH_BANDS),
-        rnd.nextInt(600).toLong)).distinct
-      val comps = Seq.fill(8)(rnd.nextInt(90).toLong).distinct
-      val joined = parts.map(_.join(broadcast(keys.toDF("band_idx", "band_key")),
-        Seq("band_idx", "band_key")).select(cols.map(col): _*)).reduce(_ unionAll _).collect()
-      val semi = parts.map(_.join(comps.toDF("comp"), Seq("comp"), "left_semi")
-        .select(cols.map(col): _*)).reduce(_ unionAll _).collect()
-      var byKey, byComp, none = Array.empty[Row]
-      val jobs = jobsPerCall(Seq(
-        s"keys$round" -> (() => byKey = StreamNearDedup.probeParts(parts, "band_key",
-          keys.map(_._2), cols.map(col): _*)),
-        s"comps$round" -> (() => byComp = StreamNearDedup.probeParts(parts, "comp",
-          comps, cols.map(col): _*)),
-        s"none$round" -> (() => none = StreamNearDedup.probeParts(parts, "comp",
-          Nil, cols.map(col): _*))))
-      assert(joined.nonEmpty && semi.nonEmpty)
-      assert(sorted(byKey.toSeq.filter(r => keys.contains((r.getInt(0), r.getLong(1))))) ==
-        sorted(joined.toSeq))
-      assert(sorted(byComp.toSeq) == sorted(semi.toSeq))
-      assert(none.isEmpty)
-      assert(jobs(s"keys$round").size == 1 && jobs(s"comps$round").size == 1,
-        s"probe jobs: $jobs")
-      assert(jobs(s"none$round").isEmpty, s"probe without keys ran ${jobs(s"none$round")}")
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
-  }
-
-  test("accumulators: 3 jobs a trigger within both bounds, one probe job per state table past them") {
+  test("accumulators: 3 jobs a trigger within both bounds, one probe query per state table past them") {
     // Each batch is a one-file parquet read with its schema, like the
     // stream's file source: its fetch is one job. Within both bounds a
     // trigger of either accumulator is the fetch and the two delta
     // writes — also right after a restart, which resumes on the driver,
-    // and on the two 2100-doc triggers whose commits take the state past
-    // SMALL_STATE_KEYS. The next trigger builds the mirrors from
-    // storage; the one after it adds one probe job per state table:
-    // near-dedup 4 jobs, keep-best 5 (a doc collides, so the canonical
+    // and on the first 2100-doc trigger. The second one's commit takes
+    // the state past SMALL_STATE_KEYS, so that trigger also builds the
+    // mirrors from storage. Every trigger after it adds one probe query
+    // per state table, a broadcast job and a collect job each:
+    // near-dedup 5 jobs, keep-best 7 (a doc collides, so the canonical
     // table is probed too).
     val rnd = new scala.util.Random(77L)
     def fresh() = Seq.fill(12)(s"w${rnd.nextInt(100000)}").mkString(" ")
@@ -1233,19 +1167,18 @@ class StreamNearDedupSpec extends SparkSpecBase {
             kbAcc = new graft.streaming.StreamKeepBest.PersistentKeepBest(spark, kb)
           })) ++
           (restartAt until batches.size).flatMap(trigger))
-      val within = 0 to restartAt + 2
-      val handOff = restartAt + 3
-      for (k <- within; acc <- Seq("nd", "kb")) {
+      val handOff = restartAt + 2
+      for (k <- 0 until handOff; acc <- Seq("nd", "kb")) {
         val seg = jobs(s"$acc-g$k")
         assert(seg.size == 3 && seg.forall(_ == s"$acc-g$k"),
           s"$acc trigger $k within both bounds ran ${seg.size} jobs: $seg")
       }
-      assert(jobs(s"nd-g${handOff + 1}").size == 4,
-        s"near-dedup past the bound: ${jobs(s"nd-g${handOff + 1}")}")
-      assert(jobs(s"kb-g${handOff + 1}").size == 5,
-        s"keep-best past the bound: ${jobs(s"kb-g${handOff + 1}")}")
-      assert(jobs(s"nd-g$handOff").size > 4 && jobs(s"kb-g$handOff").size > 5,
-        "the first trigger past the bound builds the mirrors")
+      assert(jobs(s"nd-g$handOff").size > 3 && jobs(s"kb-g$handOff").size > 3,
+        "the trigger whose commit crosses the bound builds the mirrors")
+      for (k <- handOff + 1 until batches.size) {
+        assert(jobs(s"nd-g$k").size == 5, s"near-dedup past the bound: ${jobs(s"nd-g$k")}")
+        assert(jobs(s"kb-g$k").size == 7, s"keep-best past the bound: ${jobs(s"kb-g$k")}")
+      }
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
   }
 }
