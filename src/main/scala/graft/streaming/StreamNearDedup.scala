@@ -33,8 +33,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   * holds it on the driver as well ([[DriverBands]]) and probes it
   * there; past that it is never broadcast and never collected whole —
   * a small batch's probe collects only the rows sharing its keys. The
-  * live
-  * queries run the state as a real TABLE: [[PersistentAccumulator]]
+  * live queries run the state as a real TABLE: [[PersistentAccumulator]]
   * appends band keys and admissions to parquet per micro-batch, so a
   * restarted query resumes admission from storage (a production
   * deployment swaps the parquet pair for a transactional store keyed
