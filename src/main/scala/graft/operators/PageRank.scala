@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Multi-source personalized PageRank — the reference's PageRank suite
   * (`/root/reference/MapReduce/PageRank/RunPersonalizedPageRankBasic.java:120-367`,
@@ -27,11 +28,21 @@ import org.apache.spark.sql.functions._
   *   4. teleport: sources get α + (1−α)·missing, everyone keeps
   *      (1−α)·mass (`:348-367`) — mass per source sums to 1 exactly.
   *
-  * Scale: the graph is `repartition(nodeid)` + persisted once, so every
-  * iteration's gather join reuses the same exchange; each iteration
-  * ends in an eager `localCheckpoint` to truncate lineage (the analogue
-  * of the reference's per-iteration HDFS materialization, `:481-483`;
-  * a durable `checkpoint()` would replace it on a real cluster).
+  * Two paths, chosen by the observed edge count alone. While the
+  * distinct edges fit [[Dedup.SMALL_GRAPH_EDGES]] — always, for the
+  * gate's V-node graph (at most V² = 10,000 edges at any scale) — one
+  * job fetches them and the same recurrence runs on the driver, the
+  * reference's own single-node check
+  * (`SequentialPersonalizedPageRank.java:112-134`): a 10-iteration loop
+  * on a 100-node graph is otherwise ~70 jobs of scheduler time for a
+  * few ms of arithmetic. Past the bound the loop above runs as a Spark
+  * dataflow: the graph is `repartition(nodeid)` + persisted once, so
+  * every iteration's gather join reuses the same exchange, and each
+  * iteration's messages go through a lazy `localCheckpoint` that the
+  * dangling-mass collect materializes, truncating lineage (the
+  * analogue of the reference's per-iteration HDFS materialization,
+  * `:481-483`; a durable `checkpoint()` would replace it on a real
+  * cluster). PropertySpec pins the two paths equal.
   * Rank math is linear-space `DoubleType` — SURVEY §4.12 documents the
   * deliberate departure from the reference's log-space `sumProbs`.
   *
@@ -51,13 +62,19 @@ object PageRank extends QueryModule {
   private def srcIdx = SOURCES.indices
 
   // --- pagerank_graph: deterministic graph build (oracle-checked) --------
-  def graphDf(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.orders(spark, dir)
+
+  /** The graph's `(src, dst)` edges as derived from `orders`, duplicates
+    * included: both rank paths and [[graphOf]] dedup them. */
+  private[graft] def edgesDf(spark: SparkSession, dir: String): DataFrame =
+    Tables.orders(spark, dir)
       .select((col("o_custkey") % V).as("src"), (col("o_orderkey") % V).as("dst"))
-      .distinct()
-    val adj = e.groupBy(col("src"))
+
+  /** Every node `0 until V` with its sorted distinct out-neighbours:
+    * `(nodeid, adj, outdeg)`. */
+  private def graphOf(edges: DataFrame): DataFrame = {
+    val adj = edges.distinct().groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("adj"))
-    spark.range(V).toDF("nodeid")
+    edges.sparkSession.range(V).toDF("nodeid")
       .join(adj, col("nodeid") === col("src"), "left_outer")
       .select(col("nodeid"),
         coalesce(col("adj"), array().cast("array<long>")).as("adj"))
@@ -65,7 +82,7 @@ object PageRank extends QueryModule {
   }
 
   def pagerankGraph(spark: SparkSession, dir: String): DataFrame =
-    graphDf(spark, dir).select(col("nodeid"), col("outdeg"), col("adj"))
+    graphOf(edgesDf(spark, dir)).select(col("nodeid"), col("outdeg"), col("adj"))
       .orderBy(col("nodeid"))
 
   /** Gate projection of [[pagerankGraph]]: adjacency as a csv string —
@@ -84,22 +101,75 @@ object PageRank extends QueryModule {
        |  coalesce(array_to_string(adj, ','), '') AS adj
        |FROM n LEFT JOIN a ON nodeid = src ORDER BY nodeid""".stripMargin
 
-  // --- the iterative driver ---------------------------------------------
+  // --- the iterative loop -----------------------------------------------
 
   /** Memoized final ranks per (session, sfDir): the reference runs
     * top-k extraction as a separate job over the iteration output it
     * materialized to HDFS (`ExtractTop…` reads `RunPersonalized…`'s
-    * files); the Spark-native analogue is reusing the checkpointed
-    * rank DataFrame across the `pagerank` and `pagerank_topk` queries
+    * files); the Spark-native analogue is reusing the final rank
+    * DataFrame across the `pagerank` and `pagerank_topk` queries
     * instead of re-running the 10-iteration loop. */
   private val ranksCache = new graft.SessionMemo[String, DataFrame]
   graft.Caches.register(() => ranksCache.clear())
 
   /** Unrounded final ranks: (nodeid, r0..rS-1), computed once per dir. */
   def ranksDf(spark: SparkSession, dir: String): DataFrame =
-    ranksCache.getOrElseUpdate(spark, dir)(computeRanks(spark, dir))
+    ranksCache.getOrElseUpdate(spark, dir)(
+      ranksOf(edgesDf(spark, dir), SOURCES.map(Some(_))))
 
-  private def computeRanks(spark: SparkSession, dir: String): DataFrame = {
+  /** Final ranks over `edges` — `(src, dst)` longs in `0 until V`,
+    * duplicates allowed — one column `r<i>` per prior: `Some(s)` is
+    * personalized to node s (all mass starts on s and teleports back
+    * to s), `None` is plain PageRank (mass starts at 1/V on every node
+    * and teleports uniformly). On the driver while the distinct edges
+    * fit [[Dedup.SMALL_GRAPH_EDGES]], else the distributed loop. */
+  private def ranksOf(edges: DataFrame, priors: Seq[Option[Long]]): DataFrame =
+    driverRanks(edges, priors).getOrElse(distributedRanks(edges, priors))
+
+  /** The small-graph path: one bounded fetch brings the distinct edges
+    * to the driver, the size probe and the fetch at once
+    * ([[Dedup.collectBounded]]), and within the bound the
+    * [[ITERATIONS]] power iterations run there over sorted adjacency
+    * arrays, in [[distributedRanks]]' operation order —
+    * scatter `r/outdeg`, gather the per-dst sums, `missing = 1 − Σm`,
+    * then `(1−α)·m + teleport` — so both paths agree to summation-order
+    * ulps (PropertySpec pins it). The ranks return as a local relation
+    * with the distributed path's schema. None past the bound. */
+  private[graft] def driverRanks(edges: DataFrame,
+      priors: Seq[Option[Long]]): Option[DataFrame] =
+    Dedup.collectBounded(edges.select("src", "dst").distinct(), Dedup.SMALL_GRAPH_EDGES)
+      .map { rows =>
+        val n = V.toInt
+        val es = rows.map(r => (r.getLong(0), r.getLong(1))).sorted
+        require(es.forall { case (s, d) => s >= 0 && s < V && d >= 0 && d < V },
+          s"PageRank edges must join nodes in [0, $V)")
+        val out = es.groupMap(_._1.toInt)(_._2.toInt)
+        val adj = Array.tabulate(n)(v => out.getOrElse(v, Array.emptyIntArray))
+        val ranks = priors.map { p =>
+          var r = Array.tabulate(n)(v => p.fold(1.0 / V)(s => if (v == s) 1.0 else 0.0))
+          for (_ <- 1 to ITERATIONS) {
+            val m = new Array[Double](n)
+            for (v <- 0 until n; a = adj(v); if a.nonEmpty; d <- a) m(d) += r(v) / a.length
+            val back = ALPHA + (1.0 - ALPHA) * (1.0 - m.sum)
+            r = Array.tabulate(n)(v =>
+              (1.0 - ALPHA) * m(v) + p.fold(back / V)(s => if (v == s) back else 0.0))
+          }
+          r
+        }
+        val schema = StructType(StructField("nodeid", LongType, nullable = false) +:
+          priors.indices.map(i => StructField(s"r$i", DoubleType, nullable = false)))
+        edges.sparkSession.createDataFrame(java.util.Arrays.asList(
+          Seq.tabulate(n)(v => Row.fromSeq(v.toLong +: ranks.map(_(v)))): _*), schema)
+      }
+
+  /** The scale path, and the reference [[driverRanks]] is checked
+    * against: the scatter / gather / dangling-mass loop as a Spark
+    * dataflow (steps 1–4 of the object doc), one lazy message
+    * checkpoint and one 1-row collect per iteration. */
+  private[graft] def distributedRanks(edges: DataFrame,
+      priors: Seq[Option[Long]]): DataFrame = {
+    val spark = edges.sparkSession
+    val idx = priors.indices
     // Size-aware graph partitioning: at least ~16 nodes per partition
     // (the per-iteration join/agg task overhead dominates below that),
     // capped at the session's configured parallelism. A fixed
@@ -109,15 +179,16 @@ object PageRank extends QueryModule {
     // configured parallelism.
     val parts = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions, (V / 16).toInt))
-    val g = graphDf(spark, dir).repartition(parts, col("nodeid")).persist()
-    var ranks = g.select(col("nodeid") +: SOURCES.zipWithIndex.map {
-      case (s, i) => when(col("nodeid") === s, 1.0).otherwise(0.0).as(s"r$i")
+    val g = graphOf(edges).repartition(parts, col("nodeid")).persist()
+    var ranks = g.select(col("nodeid") +: idx.map { i =>
+      priors(i).fold(lit(1.0 / V))(s =>
+        when(col("nodeid") === s, 1.0).otherwise(0.0)).as(s"r$i")
     }: _*)
     for (_ <- 1 to ITERATIONS) {
       val scattered = ranks.join(g, "nodeid")
         .filter(col("outdeg") > 0)
         .select(explode(col("adj")).as("dst") +:
-          srcIdx.map(i => (col(s"r$i") / col("outdeg")).as(s"c$i")): _*)
+          idx.map(i => (col(s"r$i") / col("outdeg")).as(s"c$i")): _*)
       // Checkpoint the MESSAGES, not the ranks: both consumers (the
       // dangling-mass collect and the rank update) then read the one
       // materialized table, so scatter+gather runs exactly once per
@@ -133,9 +204,9 @@ object PageRank extends QueryModule {
       // plans/r21/pagerank_ckpt_pair.txt).
       val msgs = scattered.groupBy(col("dst"))
         .agg(sum(col("c0")).as("m0"),
-          srcIdx.tail.map(i => sum(col(s"c$i")).as(s"m$i")): _*)
+          idx.tail.map(i => sum(col(s"c$i")).as(s"m$i")): _*)
         .localCheckpoint(false)
-      // Missing (dangling) mass per source: 1 − what arrived, as one
+      // Missing (dangling) mass per vector: 1 − what arrived, as one
       // 1-row driver collect over the checkpointed messages — the
       // reference's driver fold (`:459-474`), O(iterations)·O(S)
       // driver work. (A collect-free broadcast-cross-join variant was
@@ -143,20 +214,21 @@ object PageRank extends QueryModule {
       // adds two blocking stages inside every checkpoint job.)
       val arrived = msgs
         .agg(sum(col("m0")).as("t0"),
-          srcIdx.tail.map(i => sum(col(s"m$i")).as(s"t$i")): _*)
+          idx.tail.map(i => sum(col(s"m$i")).as(s"t$i")): _*)
         .collect()(0)
-      val missing = srcIdx.map(i =>
+      val missing = idx.map(i =>
         1.0 - (if (arrived.isNullAt(i)) 0.0 else arrived.getDouble(i)))
       ranks = g.select(col("nodeid"))
         .join(msgs, col("nodeid") === col("dst"), "left_outer")
-        .select(col("nodeid") +: SOURCES.zipWithIndex.map { case (s, i) =>
-          (lit(1.0 - ALPHA) * coalesce(col(s"m$i"), lit(0.0))
-            + when(col("nodeid") === s,
-                lit(ALPHA + (1.0 - ALPHA) * missing(i))).otherwise(0.0)).as(s"r$i")
+        .select(col("nodeid") +: idx.map { i =>
+          val back = ALPHA + (1.0 - ALPHA) * missing(i)
+          val tele = priors(i).fold(lit(back / V))(s =>
+            when(col("nodeid") === s, lit(back)).otherwise(0.0))
+          (lit(1.0 - ALPHA) * coalesce(col(s"m$i"), lit(0.0)) + tele).as(s"r$i")
         }: _*)
     }
-    // Materialize the final ranks so the memoized DataFrame no longer
-    // depends on the persisted graph, then release it.
+    // Materialize the final ranks so the result no longer depends on
+    // the persisted graph, then release it.
     val out = ranks.localCheckpoint(true)
     g.unpersist()
     out
@@ -172,36 +244,13 @@ object PageRank extends QueryModule {
     * the single-node JUNG utility (`SequentialPageRank.java:102`); its
     * distributed program is personalized-only, so the gate mirrors
     * that choice and this stays a library form (PageRankSpec pins it
-    * against a plain-Scala power iteration). Same scatter / gather /
-    * dangling-mass loop as [[ranksDf]] with init 1/V and the teleport
-    * (α + (1−α)·missing)/V spread to EVERY node instead of the source
-    * vector. */
-  def pagerankUniform(spark: SparkSession, dir: String): DataFrame = {
-    val parts = math.max(1, math.min(
-      spark.sessionState.conf.numShufflePartitions, (V / 16).toInt))
-    val g = graphDf(spark, dir).repartition(parts, col("nodeid")).persist()
-    var ranks = g.select(col("nodeid"), lit(1.0 / V).as("r"))
-    for (_ <- 1 to ITERATIONS) {
-      val msgs = ranks.join(g, "nodeid")
-        .filter(col("outdeg") > 0)
-        .select(explode(col("adj")).as("dst"), (col("r") / col("outdeg")).as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-        .localCheckpoint(true)
-      val arrived = msgs.agg(sum(col("m"))).collect()(0)
-      val missing = 1.0 - (if (arrived.isNullAt(0)) 0.0 else arrived.getDouble(0))
-      ranks = g.select(col("nodeid"))
-        .join(msgs, col("nodeid") === col("dst"), "left_outer")
-        .select(col("nodeid"),
-          (lit(1.0 - ALPHA) * coalesce(col("m"), lit(0.0))
-            + lit((ALPHA + (1.0 - ALPHA) * missing) / V)).as("r"))
-    }
-    val out = ranks
-      .select(col("nodeid"), round(col("r"), 8).as("r"))
+    * against a plain-Scala power iteration). The same two paths as
+    * [[ranksDf]] with the uniform prior: init 1/V and the teleport
+    * (α + (1−α)·missing)/V spread to EVERY node. */
+  def pagerankUniform(spark: SparkSession, dir: String): DataFrame =
+    ranksOf(edgesDf(spark, dir), Seq(None))
+      .select(col("nodeid"), round(col("r0"), 8).as("r"))
       .orderBy(col("nodeid"))
-      .localCheckpoint(true)
-    g.unpersist()
-    out
-  }
 
   /** DuckDB oracle for the iterative loop: the [[ITERATIONS]] sparse
     * linear-space updates unrolled as a CTE chain — scatter (unnest

@@ -35,11 +35,12 @@ import org.apache.spark.sql.functions._
   * explode into a map-side-combinable `groupBy(a,b).count` (shuffle
   * cardinality = pair vocabulary, not corpus) plus a `LIMIT 1` argmax;
   * the single winning pair is the only thing the driver ever holds
-  * (the PageRank dangling-mass fold pattern, `PageRank.scala:138-143` —
-  * the merge decision is inherently global and sequential, that IS the
-  * BPE algorithm). The rewrite is a pure per-row map; state stays
-  * `(doc_id, symbols)` with no growth, `localCheckpoint` per round
-  * truncates lineage exactly as the PageRank loop does.
+  * (the PageRank dangling-mass fold pattern, the 1-row collect in
+  * `PageRank.distributedRanks` — the merge decision is inherently
+  * global and sequential, that IS the BPE algorithm). The rewrite is a
+  * pure per-row map; state stays `(doc_id, symbols)` with no growth,
+  * `localCheckpoint` per round truncates lineage exactly as the
+  * distributed PageRank loop does.
   */
 object Tokenizer extends QueryModule {
 

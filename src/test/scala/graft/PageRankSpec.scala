@@ -51,18 +51,41 @@ class PageRankSpec extends SparkSpecBase {
     }
   }
 
+  /** The distributed loop's ranks for the fixture graph: the gate
+    * decides its 100-node graph on the driver, so it never reaches it. */
+  private def distributedRanks() = PageRank.distributedRanks(
+    PageRank.edgesDf(spark, sfDir), PageRank.SOURCES.map(Some(_)))
+
   test("pagerank ranks match the sequential power-iteration oracle") {
     val expected = localRanks()
-    val got = PageRank.pagerank(spark, sfDir).collect()
-    assert(got.length == V)
-    got.foreach { row =>
-      val v = row.getLong(0)
-      PageRank.SOURCES.indices.foreach { i =>
-        val e = expected(v)(i)
-        val g = row.getDouble(i + 1)
-        assert(math.abs(g - e) < 1e-7, s"node $v source $i: got $g expected $e")
+    Seq("gate" -> PageRank.pagerank(spark, sfDir),
+        "distributed loop" -> distributedRanks()).foreach { case (path, df) =>
+      val got = df.collect()
+      assert(got.length == V, path)
+      got.foreach { row =>
+        val v = row.getLong(0)
+        PageRank.SOURCES.indices.foreach { i =>
+          val e = expected(v)(i)
+          val g = row.getDouble(i + 1)
+          assert(math.abs(g - e) < 1e-7, s"$path node $v source $i: got $g expected $e")
+        }
       }
     }
+  }
+
+  test("pagerank: the gate runs at most 6 jobs, the distributed loop still its 71") {
+    // Cold cache, like every benchmark pass: within the edge bound the
+    // gate is the bounded edge fetch plus the output collect. The gate's
+    // query over the distributed loop's ranks is ~7 jobs per iteration.
+    Caches.clearAll()
+    val jobs = jobsPerCall(Seq(
+      "gate" -> (() => PageRank.pagerank(spark, sfDir).collect()),
+      "distributed" -> (() => distributedRanks()
+        .select(col("nodeid") +: PageRank.SOURCES.indices.map(i => round(col(s"r$i"), 8)): _*)
+        .orderBy(col("nodeid")).collect())))
+    assert(jobs("gate").size <= 6, s"gate ran ${jobs("gate").size} jobs")
+    assert(jobs("distributed").size == 71,
+      s"distributed loop ran ${jobs("distributed").size} jobs")
   }
 
   test("pagerankUniform matches the sequential uniform power iteration") {

@@ -171,6 +171,55 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
+  test("pagerank: driver ranks equal the distributed loop on generated edge lists") {
+    // Every personalized source plus the uniform prior in one call, so
+    // both teleport forms run through both paths. Ids stay below 21 of
+    // V = 100 (one in four edges points at V - 1), so most nodes are
+    // dangling and have no in-edges; the generator also makes
+    // self-loops, duplicate edges, sources with no out-edges and empty
+    // graphs, and the spec checks it made each. Few samples — each
+    // drives the full distributed loop.
+    import graft.operators.PageRank
+    import spark.implicits._
+    val priors = PageRank.SOURCES.map(Some(_)) :+ None
+    val edge = for {
+      a <- Gen.chooseNum(0L, 20L)
+      b <- Gen.frequency(4 -> Gen.chooseNum(0L, 20L), 1 -> Gen.const(a),
+        1 -> Gen.const(PageRank.V - 1))
+    } yield (a, b)
+    val graph = Gen.frequency(
+      1 -> Gen.const(List.empty[(Long, Long)]),
+      4 -> (for {
+        es <- Gen.listOf(edge)
+        dups <- Gen.chooseNum(0, es.size)
+        silent <- Gen.option(Gen.oneOf(PageRank.SOURCES))
+      } yield (es ++ es.take(dups)).filterNot(e => silent.contains(e._1))))
+    val seen = scala.collection.mutable.Set.empty[String]
+    forAll(graph, 8) { es =>
+      if (es.isEmpty) seen += "empty"
+      if (es.exists(e => e._1 == e._2)) seen += "self-loop"
+      if (es.distinct.size < es.size) seen += "duplicate"
+      if (es.nonEmpty && PageRank.SOURCES.exists(s => !es.exists(_._1 == s)))
+        seen += "source without out-edges"
+      val edges = es.toDF("src", "dst")
+      val driver = PageRank.driverRanks(edges, priors).get
+      val distributed = PageRank.distributedRanks(edges, priors)
+      assert(driver.schema == distributed.schema)
+      val Seq(d, r) = Seq(driver, distributed).map(df =>
+        df.collect().map(row => row.getLong(0) -> priors.indices.map(i => row.getDouble(i + 1))).toMap)
+      assert(d.keySet == (0L until PageRank.V).toSet && r.keySet == d.keySet)
+      for (v <- d.keys; i <- priors.indices)
+        assert(math.abs(d(v)(i) - r(v)(i)) <= 1e-12,
+          s"node $v prior ${priors(i)}: driver ${d(v)(i)} distributed ${r(v)(i)} on $es")
+      for (ranks <- Seq(d, r); i <- priors.indices) {
+        val mass = ranks.values.map(_(i)).sum
+        assert(math.abs(mass - 1.0) < 1e-9, s"prior ${priors(i)} mass $mass on $es")
+      }
+    }
+    assert(seen == Set("empty", "self-loop", "duplicate", "source without out-edges"),
+      s"the generator made only: $seen")
+  }
+
   test("SGD fold: permutation changes weights but not the feature set") {
     val inst = Gen.listOfN(20, for {
       id <- Gen.choose(0L, 1000L)

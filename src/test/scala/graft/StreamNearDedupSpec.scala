@@ -1084,45 +1084,6 @@ class StreamNearDedupSpec extends SparkSpecBase {
 
   // --- per-trigger job counts -------------------------------------------------
 
-  /** The job-group ids of the jobs each call starts, per call tag: each
-    * call runs under its own job group, and a fence job after it cuts
-    * the ordered job starts into per-call segments, so a job that lost
-    * its group still lands in its call's segment. */
-  private def jobsPerCall(calls: Seq[(String, () => Any)]): Map[String, Vector[String]] = {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def fence(tag: String): Unit = {
-      sc.setJobGroup(tag, tag)
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence("fence-start")
-      calls.foreach { case (g, call) =>
-        sc.setJobGroup(g, g)
-        try call() finally sc.clearJobGroup()
-        fence(s"fence-$g")
-      }
-      val last = s"fence-${calls.last._1}"
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(last) && System.nanoTime() < deadline) Thread.sleep(20)
-      val seen = groups.asScala.toVector.dropWhile(_ != "fence-start").drop(1)
-      calls.map(_._1).foldLeft((seen, Map.empty[String, Vector[String]])) {
-        case ((rest, acc), g) =>
-          val (seg, tail) = rest.span(_ != s"fence-$g")
-          (tail.drop(1), acc + (g -> seg))
-      }._2
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("accumulators: 3 jobs a trigger within both bounds, one probe query per state table past them") {
     // Each batch is a one-file parquet read with its schema, like the
     // stream's file source: its fetch is one job. Within both bounds a
