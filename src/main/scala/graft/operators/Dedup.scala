@@ -589,12 +589,9 @@ object Dedup extends QueryModule {
   private[graft] val lastComponentsRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Edge-count bound under which a graph is solved driver-side:
-    * [[componentsBounded]]' union-find, and PageRank's power iteration
-    * (`PageRank.driverRanks`; the gate's 100-node graph has at most
-    * 10,000 edges, so it always fits). 100k edges ≈ 1.6 MB collected —
-    * far below any driver ceiling, far above any micro-batch's
-    * collision graph. */
+  /** Edge-count bound under which [[componentsBounded]] solves the
+    * graph driver-side. 100k edges ≈ 1.6 MB collected — far below any
+    * driver ceiling, far above any micro-batch's collision graph. */
   private[graft] val SMALL_GRAPH_EDGES = 100000
 
   /** Row bound under which a streaming admission trigger decides its

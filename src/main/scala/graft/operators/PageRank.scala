@@ -28,21 +28,19 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *   4. teleport: sources get α + (1−α)·missing, everyone keeps
   *      (1−α)·mass (`:348-367`) — mass per source sums to 1 exactly.
   *
-  * Two paths, chosen by the observed edge count alone. While the
-  * distinct edges fit [[Dedup.SMALL_GRAPH_EDGES]] — always, for the
-  * gate's V-node graph (at most V² = 10,000 edges at any scale) — one
-  * job fetches them and the same recurrence runs on the driver, the
-  * reference's own single-node check
-  * (`SequentialPersonalizedPageRank.java:112-134`): a 10-iteration loop
-  * on a 100-node graph is otherwise ~70 jobs of scheduler time for a
-  * few ms of arithmetic. Past the bound the loop above runs as a Spark
-  * dataflow: the graph is `repartition(nodeid)` + persisted once, so
-  * every iteration's gather join reuses the same exchange, and each
-  * iteration's messages go through a lazy `localCheckpoint` that the
-  * dangling-mass collect materializes, truncating lineage (the
-  * analogue of the reference's per-iteration HDFS materialization,
-  * `:481-483`; a durable `checkpoint()` would replace it on a real
-  * cluster). PropertySpec pins the two paths equal.
+  * The gate's graph has V nodes, so at most V² = 10,000 distinct
+  * edges at any scale: one job fetches them and the recurrence runs on
+  * the driver, the reference's own single-node check
+  * (`SequentialPersonalizedPageRank.java:112-134`) — a 10-iteration
+  * loop on a 100-node graph is otherwise ~70 jobs of scheduler time for
+  * a few ms of arithmetic. The loop above also exists as a Spark
+  * dataflow, [[distributedRanks]], the reference the driver path is
+  * checked against (PropertySpec pins the two equal): the graph is
+  * `repartition(nodeid)` + persisted once, so every iteration's gather
+  * join reuses the same exchange, and each iteration's messages go
+  * through a lazy `localCheckpoint` that the dangling-mass collect
+  * materializes, truncating lineage (the analogue of the reference's
+  * per-iteration HDFS materialization, `:481-483`).
   * Rank math is linear-space `DoubleType` — SURVEY §4.12 documents the
   * deliberate departure from the reference's log-space `sumProbs`.
   *
@@ -64,7 +62,7 @@ object PageRank extends QueryModule {
   // --- pagerank_graph: deterministic graph build (oracle-checked) --------
 
   /** The graph's `(src, dst)` edges as derived from `orders`, duplicates
-    * included: both rank paths and [[graphOf]] dedup them. */
+    * included: both rank functions and [[graphOf]] dedup them. */
   private[graft] def edgesDf(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .select((col("o_custkey") % V).as("src"), (col("o_orderkey") % V).as("dst"))
@@ -115,57 +113,48 @@ object PageRank extends QueryModule {
   /** Unrounded final ranks: (nodeid, r0..rS-1), computed once per dir. */
   def ranksDf(spark: SparkSession, dir: String): DataFrame =
     ranksCache.getOrElseUpdate(spark, dir)(
-      ranksOf(edgesDf(spark, dir), SOURCES.map(Some(_))))
+      driverRanks(edgesDf(spark, dir), SOURCES.map(Some(_))))
 
   /** Final ranks over `edges` — `(src, dst)` longs in `0 until V`,
     * duplicates allowed — one column `r<i>` per prior: `Some(s)` is
     * personalized to node s (all mass starts on s and teleports back
     * to s), `None` is plain PageRank (mass starts at 1/V on every node
-    * and teleports uniformly). On the driver while the distinct edges
-    * fit [[Dedup.SMALL_GRAPH_EDGES]], else the distributed loop. */
-  private def ranksOf(edges: DataFrame, priors: Seq[Option[Long]]): DataFrame =
-    driverRanks(edges, priors).getOrElse(distributedRanks(edges, priors))
-
-  /** The small-graph path: one bounded fetch brings the distinct edges
-    * to the driver, the size probe and the fetch at once
-    * ([[Dedup.collectBounded]]), and within the bound the
-    * [[ITERATIONS]] power iterations run there over sorted adjacency
-    * arrays, in [[distributedRanks]]' operation order —
-    * scatter `r/outdeg`, gather the per-dst sums, `missing = 1 − Σm`,
-    * then `(1−α)·m + teleport` — so both paths agree to summation-order
-    * ulps (PropertySpec pins it). The ranks return as a local relation
-    * with the distributed path's schema. None past the bound. */
-  private[graft] def driverRanks(edges: DataFrame,
-      priors: Seq[Option[Long]]): Option[DataFrame] =
-    Dedup.collectBounded(edges.select("src", "dst").distinct(), Dedup.SMALL_GRAPH_EDGES)
-      .map { rows =>
-        val n = V.toInt
-        val es = rows.map(r => (r.getLong(0), r.getLong(1))).sorted
-        require(es.forall { case (s, d) => s >= 0 && s < V && d >= 0 && d < V },
-          s"PageRank edges must join nodes in [0, $V)")
-        val out = es.groupMap(_._1.toInt)(_._2.toInt)
-        val adj = Array.tabulate(n)(v => out.getOrElse(v, Array.emptyIntArray))
-        val ranks = priors.map { p =>
-          var r = Array.tabulate(n)(v => p.fold(1.0 / V)(s => if (v == s) 1.0 else 0.0))
-          for (_ <- 1 to ITERATIONS) {
-            val m = new Array[Double](n)
-            for (v <- 0 until n; a = adj(v); if a.nonEmpty; d <- a) m(d) += r(v) / a.length
-            val back = ALPHA + (1.0 - ALPHA) * (1.0 - m.sum)
-            r = Array.tabulate(n)(v =>
-              (1.0 - ALPHA) * m(v) + p.fold(back / V)(s => if (v == s) back else 0.0))
-          }
-          r
-        }
-        val schema = StructType(StructField("nodeid", LongType, nullable = false) +:
-          priors.indices.map(i => StructField(s"r$i", DoubleType, nullable = false)))
-        edges.sparkSession.createDataFrame(java.util.Arrays.asList(
-          Seq.tabulate(n)(v => Row.fromSeq(v.toLong +: ranks.map(_(v)))): _*), schema)
+    * and teleports uniformly). One job collects the distinct edges (at
+    * most V² rows) and the [[ITERATIONS]] power iterations run on the
+    * driver over sorted adjacency arrays, in [[distributedRanks]]'
+    * operation order — scatter `r/outdeg`, gather the per-dst sums,
+    * `missing = 1 − Σm`, then `(1−α)·m + teleport` — so both agree to
+    * summation-order ulps (PropertySpec pins it). The ranks return as
+    * a local relation with the distributed loop's schema. */
+  private[graft] def driverRanks(edges: DataFrame, priors: Seq[Option[Long]]): DataFrame = {
+    val n = V.toInt
+    val es = edges.select("src", "dst").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted
+    require(es.forall { case (s, d) => s >= 0 && s < V && d >= 0 && d < V },
+      s"PageRank edges must join nodes in [0, $V)")
+    val out = es.groupMap(_._1.toInt)(_._2.toInt)
+    val adj = Array.tabulate(n)(v => out.getOrElse(v, Array.emptyIntArray))
+    val ranks = priors.map { p =>
+      var r = Array.tabulate(n)(v => p.fold(1.0 / V)(s => if (v == s) 1.0 else 0.0))
+      for (_ <- 1 to ITERATIONS) {
+        val m = new Array[Double](n)
+        for (v <- 0 until n; a = adj(v); if a.nonEmpty; d <- a) m(d) += r(v) / a.length
+        val back = ALPHA + (1.0 - ALPHA) * (1.0 - m.sum)
+        r = Array.tabulate(n)(v =>
+          (1.0 - ALPHA) * m(v) + p.fold(back / V)(s => if (v == s) back else 0.0))
       }
+      r
+    }
+    val schema = StructType(StructField("nodeid", LongType, nullable = false) +:
+      priors.indices.map(i => StructField(s"r$i", DoubleType, nullable = false)))
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(
+      Seq.tabulate(n)(v => Row.fromSeq(v.toLong +: ranks.map(_(v)))): _*), schema)
+  }
 
-  /** The scale path, and the reference [[driverRanks]] is checked
-    * against: the scatter / gather / dangling-mass loop as a Spark
-    * dataflow (steps 1–4 of the object doc), one lazy message
-    * checkpoint and one 1-row collect per iteration. */
+  /** The reference [[driverRanks]] is checked against: the scatter /
+    * gather / dangling-mass loop as a Spark dataflow (steps 1–4 of the
+    * object doc), one lazy message checkpoint and one 1-row collect per
+    * iteration. */
   private[graft] def distributedRanks(edges: DataFrame,
       priors: Seq[Option[Long]]): DataFrame = {
     val spark = edges.sparkSession
@@ -244,11 +233,11 @@ object PageRank extends QueryModule {
     * the single-node JUNG utility (`SequentialPageRank.java:102`); its
     * distributed program is personalized-only, so the gate mirrors
     * that choice and this stays a library form (PageRankSpec pins it
-    * against a plain-Scala power iteration). The same two paths as
-    * [[ranksDf]] with the uniform prior: init 1/V and the teleport
-    * (α + (1−α)·missing)/V spread to EVERY node. */
+    * against a plain-Scala power iteration). [[driverRanks]] with the
+    * uniform prior: init 1/V and the teleport (α + (1−α)·missing)/V
+    * spread to EVERY node. */
   def pagerankUniform(spark: SparkSession, dir: String): DataFrame =
-    ranksOf(edgesDf(spark, dir), Seq(None))
+    driverRanks(edgesDf(spark, dir), Seq(None))
       .select(col("nodeid"), round(col("r0"), 8).as("r"))
       .orderBy(col("nodeid"))
 

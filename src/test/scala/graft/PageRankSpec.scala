@@ -52,7 +52,7 @@ class PageRankSpec extends SparkSpecBase {
   }
 
   /** The distributed loop's ranks for the fixture graph: the gate
-    * decides its 100-node graph on the driver, so it never reaches it. */
+    * ranks its 100-node graph on the driver, so it never reaches it. */
   private def distributedRanks() = PageRank.distributedRanks(
     PageRank.edgesDf(spark, sfDir), PageRank.SOURCES.map(Some(_)))
 
@@ -73,19 +73,13 @@ class PageRankSpec extends SparkSpecBase {
     }
   }
 
-  test("pagerank: the gate runs at most 6 jobs, the distributed loop still its 71") {
-    // Cold cache, like every benchmark pass: within the edge bound the
-    // gate is the bounded edge fetch plus the output collect. The gate's
-    // query over the distributed loop's ranks is ~7 jobs per iteration.
+  test("pagerank: the gate runs at most 6 jobs") {
+    // Cold cache, like every benchmark pass: the edge fetch plus the
+    // output collect. The gate's query over the distributed loop's
+    // ranks is ~7 jobs per iteration.
     Caches.clearAll()
-    val jobs = jobsPerCall(Seq(
-      "gate" -> (() => PageRank.pagerank(spark, sfDir).collect()),
-      "distributed" -> (() => distributedRanks()
-        .select(col("nodeid") +: PageRank.SOURCES.indices.map(i => round(col(s"r$i"), 8)): _*)
-        .orderBy(col("nodeid")).collect())))
+    val jobs = jobsPerCall(Seq("gate" -> (() => PageRank.pagerank(spark, sfDir).collect())))
     assert(jobs("gate").size <= 6, s"gate ran ${jobs("gate").size} jobs")
-    assert(jobs("distributed").size == 71,
-      s"distributed loop ran ${jobs("distributed").size} jobs")
   }
 
   test("pagerankUniform matches the sequential uniform power iteration") {

@@ -202,7 +202,7 @@ class PropertySpec extends SparkSpecBase {
       if (es.nonEmpty && PageRank.SOURCES.exists(s => !es.exists(_._1 == s)))
         seen += "source without out-edges"
       val edges = es.toDF("src", "dst")
-      val driver = PageRank.driverRanks(edges, priors).get
+      val driver = PageRank.driverRanks(edges, priors)
       val distributed = PageRank.distributedRanks(edges, priors)
       assert(driver.schema == distributed.schema)
       val Seq(d, r) = Seq(driver, distributed).map(df =>
