@@ -47,25 +47,11 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
+  /** Staged dirs per (session, dataset, table), one memo per staging
+    * form: SessionMemo's per-key cell runs each staging once (same-key
+    * racers share one write; different tables stage in parallel), and
+    * `Scratch.dir` registers every staged dir for delete at JVM exit. */
   private val textStaged = new SessionMemo[(String, String), String]
-
-  /** Runs `stage` at most once per key (SessionMemo's per-key cell
-    * guarantees it: same-key racers share one staging write, while
-    * first-touch stagings of DIFFERENT tables proceed in parallel).
-    * Every staged dir is also registered for recursive delete at JVM
-    * exit so test/Verify runs don't accumulate temp trees across
-    * invocations. */
-  private def stageOnce(map: SessionMemo[(String, String), String],
-      s: SparkSession, key: (String, String))(stage: => String): String =
-    map.getOrElseUpdate(s, key) {
-      val dir = stage
-      cleanupAtExit(dir)
-      dir
-    }
-
-  private def cleanupAtExit(dir: String): Unit = {
-    Scratch.deleteAtExit(dir); ()
-  }
 
   /** TEXT-MODE table access — the reference's per-query `--text` flag
     * (every Q1–Q7 main accepts `--text` | `--parquet`,
@@ -88,7 +74,7 @@ object Tables {
   def textTable(s: SparkSession, d: String, name: String): DataFrame = {
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     val src = load(s, d, name)
-    val dir = stageOnce(textStaged, s, (d, name)) {
+    val dir = textStaged.getOrElseUpdate(s, (d, name)) {
       val dest = graft.Scratch.dir(s"graft_tbl_${name}_").toString
       src.write.mode("overwrite").option("sep", "|")
         .option("timestampFormat", tsFmt).csv(dest)
@@ -115,7 +101,7 @@ object Tables {
   def jsonlTable(s: SparkSession, d: String, name: String): DataFrame = {
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     val src = load(s, d, name)
-    val dir = stageOnce(jsonlStaged, s, (d, name)) {
+    val dir = jsonlStaged.getOrElseUpdate(s, (d, name)) {
       val dest = graft.Scratch.dir(s"graft_jsonl_${name}_").toString
       src.write.mode("overwrite")
         .option("timestampFormat", tsFmt).json(dest)
@@ -167,7 +153,7 @@ object Tables {
     // plan — a pure line-level map (text in, text out).
     jsonlTable(s, d, name)
     val clean = jsonlStaged(s, (d, name))
-    val dir = stageOnce(jsonlBadStaged, s, (d, name)) {
+    val dir = jsonlBadStaged.getOrElseUpdate(s, (d, name)) {
       val dest = graft.Scratch.dir(s"graft_jsonl_bad_${name}_").toString
       val doomed = get_json_object(col("value"), "$.doc_id").cast("long")
         .%(lit(CORRUPT_MOD)) === lit(CORRUPT_RES)

@@ -45,15 +45,6 @@ object TextFns {
   def first40Distinct(tokens: Column): Column =
     array_distinct(slice(tokens, 1, 40))
 
-  /** DuckDB fragment for [[first40Distinct]] over a list expr.
-    * SET-SEMANTICS ONLY: DuckDB's `list_distinct` does not preserve
-    * first-occurrence order and drops NULLs, while Spark's
-    * `array_distinct` is order-preserving — every oracle using this
-    * fragment must consume the result as a set (explode + aggregate),
-    * never compare element order. */
-  def first40DistinctSql(listExpr: String): String =
-    s"list_distinct($listExpr[1:40])"
-
   /** Portable 56-bit fingerprint of a string expression: first 14 hex
     * digits of md5, as a long. Computable identically in DuckDB
     * ([[hash56Sql]]) and plain Scala ([[hash56Local]] — used by test

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 
 /** Similarity search over `embeddings.embedding` (ARRAY<FLOAT>, 64-d) —
   * brief north star, no reference counterpart.
@@ -411,45 +413,66 @@ object Similarity extends QueryModule {
     }
   }
 
+  /** Rows of `side` tagged with their nearest cell: (vec_id, v, nrm,
+    * cell) — the corpus side of every IVF serve, and the assignment
+    * every encode and residual derives its cell from. */
+  private def assignCells(cent: DataFrame)(side: DataFrame): DataFrame =
+    nearestCells(cent)(side, 1)
+      .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
+
   def annIvfTopk(spark: SparkSession, dir: String): DataFrame = {
     val (e, cent) = ivfParts(spark, dir)
-    ivfServe(e, cent)
+    serveCells(assignCells(cent)(e), routedProbes(queryVecs(e), cent, NPROBE),
+      excludeSelf = true)
   }
 
-  /** The IVF serving tail against an arbitrary codebook: assign the
-    * corpus (nearest cell), probe the query workload's NPROBE nearest
-    * cells, exact re-rank within probed cells. Shared by the stride
-    * codebook (`ann_ivf_topk`), the trained one (`ann_ivf_trained`),
-    * and — with `labels` supplied — the filtered form
-    * (`ann_ivf_filtered`): query labels ride the broadcast probes,
-    * candidate labels join the assigned rows, the filter lands before
-    * any dot product, and the output gains the label column. */
-  private def ivfServe(e: DataFrame, cent: DataFrame,
-      labels: Option[DataFrame] = None, nprobe: Int = NPROBE): DataFrame = {
-    val nearest = nearestCells(cent) _
-    val assigned0 = nearest(e, 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
-    val assigned = labels.fold(assigned0)(lab => assigned0.join(lab, "vec_id"))
-    val probes0 = nearest(queryWorkload(e, e), nprobe)
+  /** The query workload of a (vec_id, v, nrm) corpus as (query_id, qv,
+    * qnrm) — the query side every IVF serve probes with. */
+  private def queryVecs(e: DataFrame): DataFrame =
+    queryWorkload(e, e).select(col("vec_id").as("query_id"),
+      col("v").as("qv"), col("nrm").as("qnrm"))
+
+  /** nprobe nearest cells per query by centroid cosine — the routed
+    * probe rule, [[nearestCells]] over the (query_id, qv, qnrm) frame:
+    * (query_id, qv, qnrm, cell) rows. */
+  private def routedProbes(queries: DataFrame, cent: DataFrame,
+      nprobe: Int): DataFrame =
+    nearestCells(cent)(queries.select(col("query_id").as("vec_id"),
+        col("qv").as("v"), col("qnrm").as("nrm")), nprobe)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qnrm"), col("cid").as("cell"))
-    val probes = labels.fold(probes0)(lab => probes0.join(
+
+  /** THE IVF serving tail: exact-cosine search of the cell-`assigned`
+    * corpus (vec_id, v, nrm, cell), each query searching only the cells
+    * its `probes` rows (query_id, qv, qnrm, cell) name, top
+    * [[IVF_TOP_K]] by (rounded cosine desc, vec_id). Every IVF serve
+    * runs it — stride codebook (`ann_ivf_topk`), trained
+    * (`ann_ivf_trained`/`ann_ivf_auto`), the routed and hash-probed
+    * rows of `ann_recall`/`ann_router_gain` — and, with `labels`
+    * (vec_id, label) supplied, the filtered form (`ann_ivf_filtered`):
+    * query labels ride the broadcast probes, candidate labels join the
+    * assigned rows, the filter lands before any dot product, and the
+    * output gains the label column. A cell-bucketed equi-join, never
+    * cartesian; the probe frame is broadcast (caller-sized). */
+  private def serveCells(assigned: DataFrame, probes: DataFrame,
+      excludeSelf: Boolean, labels: Option[DataFrame] = None): DataFrame = {
+    val cand = labels.fold(assigned)(lab => assigned.join(lab, "vec_id"))
+    val probed = labels.fold(probes)(lab => probes.join(
       lab.select(col("vec_id").as("query_id"), col("label").as("qlabel")),
       "query_id"))
-    val outCols = Seq(col("query_id")) ++
-      labels.map(_ => col("label")).toSeq ++
-      Seq(col("vec_id"), col("cosine"), col("rank"))
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id") &&
+    val labelCol = labels.map(_ => col("label")).toSeq
+    val scored = cand.join(broadcast(probed), "cell")
+      .filter((if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true)) &&
         labels.fold(lit(true))(_ => col("label") === col("qlabel")))
       .select(Seq(col("query_id"), col("vec_id"),
         round(dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6).as("cosine")) ++
-        labels.map(_ => col("label")).toSeq: _*)
+        labelCol: _*)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= IVF_TOP_K)
-      .select(outCols: _*)
+      .select(Seq(col("query_id")) ++ labelCol ++
+        Seq(col("vec_id"), col("cosine"), col("rank")): _*)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -507,9 +530,7 @@ object Similarity extends QueryModule {
     * decimal sum, costs a non-codegen aggregate in the hot path). */
   def ivfKmeansStep(spark: SparkSession, dir: String): DataFrame = {
     val (e, cent) = ivfParts(spark, dir)
-    val assigned = nearestCells(cent)(e, 1)
-      .select(col("cid").as("cell"), col("v"))
-    assigned
+    assignCells(cent)(e)
       .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("cell"), col("pos"))
       .agg(count(lit(1)).as("n_members"), round(avg(col("x")), 6).as("mean_val"))
@@ -548,9 +569,7 @@ object Similarity extends QueryModule {
       iters: Int): DataFrame = {
     var cent = cent0
     for (_ <- 1 to iters) {
-      val assigned = nearestCells(cent)(e, 1)
-        .select(col("cid").as("cell"), col("v"))
-      cent = assigned
+      cent = assignCells(cent)(e)
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cell"), col("pos"))
         .agg(round(avg(col("x")), 6).as("m"))
@@ -600,8 +619,11 @@ object Similarity extends QueryModule {
     * by `ann_recall`, whose five serving chains ride ONE corpus
     * checkpoint instead of one each. */
   private def annIvfTrainedOn(spark: SparkSession, dir: String, e: DataFrame,
-      k: Int, nprobe: Int): DataFrame =
-    ivfServe(e, trainedCentAt(spark, dir, e, k), nprobe = nprobe)
+      k: Int, nprobe: Int): DataFrame = {
+    val cent = trainedCentAt(spark, dir, e, k)
+    serveCells(assignCells(cent)(e), routedProbes(queryVecs(e), cent, nprobe),
+      excludeSelf = true)
+  }
 
   /** The sample-trained k-cell IVF codebook over the normalized corpus
     * `e`, cached per (dataset, k) — the one training path behind the
@@ -610,7 +632,7 @@ object Similarity extends QueryModule {
       e: DataFrame, k: Int): DataFrame = {
     val target = trainTargetFor(k)
     cachedModel(spark, dir, s"ivf_cent_k${k}_t$target")(
-      trainedCodebookFastOn(spark, e, k, IVF_TRAIN_ITERS))
+      trainQuantizers(spark, e, k).cent)
   }
 
   /** One k-means refinement in SQL against an arbitrary (vec_id, v,
@@ -768,69 +790,30 @@ object Similarity extends QueryModule {
 
   // --- ann_recall control + ann_router_gain: routing vs hash-probing -----
   /** nprobe cells per query picked by [[probeHash]] — the equal-budget
-    * control side. Queries travel as a broadcast (the workload is
-    * caller-sized); cells are the O(K) codebook. */
+    * control side, [[routedProbes]]' (query_id, qv, qnrm, cell) shape.
+    * Queries are caller-sized; cells are the O(K) codebook. */
   private def hashProbes(queries: DataFrame, cent: DataFrame,
       nprobe: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("prk"), col("cid"))
-    queries.select(col("query_id"))
+    queries.select(col("query_id"), col("qv"), col("qnrm"))
       .crossJoin(broadcast(cent.select(col("cid"))))
       .withColumn("prk", probeHash(col("query_id"), col("cid")))
       .withColumn("crank", row_number().over(w))
       .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("cid").as("cell"))
+      .select(col("query_id"), col("qv"), col("qnrm"), col("cid").as("cell"))
   }
 
-  /** nprobe nearest cells per query by centroid cosine — the routed
-    * side, [[nearestCells]] over the (query_id, qv, qnrm) frame. */
-  private def routedProbes(queries: DataFrame, cent: DataFrame,
-      nprobe: Int): DataFrame =
-    nearestCells(cent)(queries.select(col("query_id").as("vec_id"),
-        col("qv").as("v"), col("qnrm").as("nrm")), nprobe)
-      .select(col("vec_id").as("query_id"), col("cid").as("cell"))
-
-  /** Exact-cosine serve of `queries` (query_id, qv, qnrm) against the
-    * cell-`assigned` corpus, searching only the cells `probes`
-    * (query_id, cell) names — the shared tail of the routed and
-    * hash-probed serving forms (cell-bucketed equi-join, never
-    * cartesian; probe/query frames are broadcast — caller-sized). */
-  private def serveCells(assigned: DataFrame, queries: DataFrame,
-      probes: DataFrame, excludeSelf: Boolean): DataFrame = {
-    val scored = assigned.join(broadcast(probes), "cell")
-      .join(broadcast(queries), "query_id")
-      .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= IVF_TOP_K)
-      .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The equal-budget CONTROL for `ann_ivf_auto` (r19 verdict item 1):
-    * the same trained codebook, corpus assignment, candidate search,
-    * and re-rank — but each query's nprobe cells picked by the
+  /** Oracle of the equal-budget CONTROL for `ann_ivf_auto` (r19 verdict
+    * item 1): the same trained codebook, corpus assignment, candidate
+    * search, and re-rank — but each query's nprobe cells picked by the
     * deterministic hash instead of centroid distance. `ann_recall`
-    * records its recall next to the routed row; the measured gap IS
-    * the routing value (on the near-isotropic fixture the routed path
-    * still clears it — 0.80 vs ~0.43 at sf0.01 — because trained cells
-    * concentrate whatever local structure exists; on a clustered
-    * corpus the gap widens, see `ann_router_gain`). */
-  def annIvfAutoRandom(spark: SparkSession, dir: String): DataFrame = {
-    val n = Tables.embeddings(spark, dir).count()
-    val (k, nprobe) = ivfGeometry(n)
-    val e = corpus(spark, dir).localCheckpoint()
-    val cent = trainedCentAt(spark, dir, e, k)
-    val assigned = nearestCells(cent)(e, 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
-    val qw = queryWorkload(e, e).select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qnrm"))
-    serveCells(assigned, qw, hashProbes(qw, cent, nprobe), excludeSelf = true)
-  }
-
+    * serves it inline and records its recall next to the routed row;
+    * the measured gap IS the routing value (on the near-isotropic
+    * fixture the routed path still clears it — 0.80 vs ~0.43 at
+    * sf0.01 — because trained cells concentrate whatever local
+    * structure exists; on a clustered corpus the gap widens, see
+    * `ann_router_gain`). */
   def annIvfAutoRandomSql(): String = {
     val (spark, dir) = graft.OracleContext.get
     val (k, nprobe) = ivfGeometry(Tables.embeddings(spark, dir).count())
@@ -883,9 +866,7 @@ object Similarity extends QueryModule {
     val e = corpus(spark, dir).localCheckpoint()
     val cent = trainedCentAt(spark, dir, e, k)
     // Feeds both serving branches — cut the O(n·K) assignment once.
-    val assigned = nearestCells(cent)(e, 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
-      .localCheckpoint()
+    val assigned = assignCells(cent)(e).localCheckpoint()
     val pq = plantedQueries(e).localCheckpoint()
     def row(method: String, served: DataFrame): DataFrame =
       served.filter(col("vec_id") === col("query_id"))
@@ -896,10 +877,10 @@ object Similarity extends QueryModule {
           col("total").cast("long").as("total"),
           round(col("hits").cast("double") / col("total"), 4).as("recall"))
     row("planted_random",
-        serveCells(assigned, pq, hashProbes(pq, cent, nprobe),
+        serveCells(assigned, hashProbes(pq, cent, nprobe),
           excludeSelf = false))
       .unionByName(row("planted_routed",
-        serveCells(assigned, pq, routedProbes(pq, cent, nprobe),
+        serveCells(assigned, routedProbes(pq, cent, nprobe),
           excludeSelf = false)))
       .orderBy(col("method"))
   }
@@ -990,7 +971,7 @@ object Similarity extends QueryModule {
     * chain cannot drift between the inline pipelines and the
     * index-build path. Callers `localCheckpoint` it themselves (each
     * documents why its materialization is load-bearing). */
-  private def normalizedCorpus(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def normalizedCorpus(spark: SparkSession, dir: String): DataFrame =
     normalizedFrom(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
 
@@ -1117,17 +1098,22 @@ object Similarity extends QueryModule {
     pqServe(e, books, pqAssign(e, books))
   }
 
+  /** The per-query ADC lookup table (query_id, m, code, p): each query
+    * slice of `queries` (vec_id, v) dotted with every codebook entry of
+    * its subspace — Q·M·K rows, broadcast by every ADC scorer. */
+  private def adcLut(queries: DataFrame, books: DataFrame): DataFrame =
+    subspaces(queries, "query_id").withColumnRenamed("sub", "qsub")
+      .join(broadcast(books), "m")
+      .select(col("query_id"), col("m"), col("cid").as("code"),
+        dot(col("qsub"), col("cw")).as("p"))
+
   /** The ADC serving tail against an arbitrary (books, codes) pair —
     * per-query LUT broadcast, M table lookups per corpus vector, sum
     * rounded to 6 before ranking. Shared by the stride codebooks
     * (`ann_pq_topk`) and the k-means-trained ones (`ann_pq_trained`). */
   private def pqServe(e: DataFrame, books: DataFrame, codes: DataFrame): DataFrame = {
-    val qsubs = subspaces(queryWorkload(e, e), "query_id")
-      .withColumnRenamed("sub", "qsub")
-    val lut = qsubs.join(broadcast(books), "m")
-      .select(col("query_id"), col("m"), col("cid").as("code"),
-        dot(col("qsub"), col("cw")).as("p"))
-    val scored = codes.join(broadcast(lut), Seq("m", "code"))
+    val scored = codes.join(broadcast(adcLut(queryWorkload(e, e), books)),
+        Seq("m", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(round(sum(col("p")), 6).as("score"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1333,21 +1319,20 @@ object Similarity extends QueryModule {
   private def ivfPqTrainServeOn(spark: SparkSession, dir: String,
       en: DataFrame, k: Int, nprobe: Int, shortlist: Int): DataFrame = {
     val target = trainTargetFor(k)
+    lazy val q = trainQuantizers(spark, en, k)
     val centKey =
       if (k == K_CENTROIDS) "ivf_cent_norm" else s"ivf_cent_norm_k$k"
-    val cent = cachedModel(spark, dir, centKey)(
-      trainedCodebookFastOn(spark, en, k, IVF_TRAIN_ITERS))
-    lazy val cellOf = nearestCells(cent)(en, 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    lazy val subs = subspaces(en, "vec_id").localCheckpoint()
+    val cent = cachedModel(spark, dir, centKey)(q.cent)
     val booksKey = if (target == TRAIN_SAMPLE_TARGET) "pq_books_norm"
       else s"pq_books_norm_t$target"
     val books = cachedModel(spark, dir, booksKey)(
-      trainedPqBooksFastOn(spark, en, target, PQ_TRAIN_ITERS))
+      Await.result(q.books, Duration.Inf))
     val codedKey =
       if (k == K_CENTROIDS) "ivfpq_codes_norm" else s"ivfpq_codes_norm_k$k"
     val coded = cachedModel(spark, dir, codedKey)(
-      pqAssignSubs(subs, books).join(cellOf, "vec_id"))
+      pqAssignSubs(subspaces(en, "vec_id").localCheckpoint(), books)
+        .join(assignCells(cent)(en).select(col("vec_id"), col("cell")),
+          "vec_id"))
     ivfPqServe(en, cent, books, coded, nprobe = nprobe,
       shortlist = shortlist)
   }
@@ -1405,10 +1390,6 @@ object Similarity extends QueryModule {
     val probes = labels.fold(probes0)(lab => probes0.join(
       lab.select(col("vec_id").as("query_id"), col("label").as("qlabel")),
       "query_id"))
-    val qsubs = subspaces(qw, "query_id").withColumnRenamed("sub", "qsub")
-    val lut = qsubs.join(broadcast(books), "m")
-      .select(col("query_id"), col("m"), col("cid").as("code"),
-        dot(col("qsub"), col("cw")).as("p"))
     // Candidates: each probed cell's codes stream past the broadcast
     // probe list; ADC = sum of M LUT lookups, rounded before ranking.
     val cand0 = coded.join(broadcast(probes), Seq("cell"))
@@ -1416,7 +1397,7 @@ object Similarity extends QueryModule {
     val cand = labels.fold(cand0)(lab =>
       cand0.join(lab, "vec_id").filter(col("label") === col("qlabel")))
     val adc = cand
-      .join(broadcast(lut), Seq("query_id", "m", "code"))
+      .join(broadcast(adcLut(qw, books)), Seq("query_id", "m", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(round(sum(col("p")), 6).as("adc"))
     ivfPqRerank(adc, en, qw, k, shortlist)
@@ -1654,20 +1635,25 @@ object Similarity extends QueryModule {
   // distributed loop operation-for-operation (index-order dot/sqdist
   // accumulation like [[graft.functions.VectorMath]], Spark's exact
   // HALF_UP decimal rounding, the same (score, cid) tie-breaks), so
-  // the trained tables are bit-identical on every fixture —
-  // LocalTrainerSpec pins equality against the distributed loops, and
-  // the DuckDB oracles replay training unchanged. The one documented
-  // difference is member-sum ORDER inside a mean (ascending vec_id
-  // here vs partition order there) — the same ulp class as the
-  // existing Spark-vs-DuckDB agreement, absorbed by round(·, 6)
-  // exactly as `ivf_kmeans_step`'s contract states.
+  // the trained tables are bit-identical on every fixture and on random
+  // corpora — LocalTrainerSpec pins [[driverQuantizers]] equal to
+  // [[distributedQuantizers]], and the DuckDB oracles replay training
+  // unchanged. The one documented difference is member-sum ORDER
+  // inside a mean (ascending vec_id here vs partition order there) —
+  // the same ulp class as the existing Spark-vs-DuckDB agreement,
+  // absorbed by round(·, 6) exactly as `ivf_kmeans_step`'s contract
+  // states.
 
-  /** Guard for the driver-side training path: the per-iteration work
-    * is sample·k inner products and the collect is sample·DIM doubles,
-    * so local training is a pure win while both stay trivially small
-    * and a scale hazard past it — the corpus-scaled geometry grows the
-    * sample as 8·√n and k as √n, so extreme corpora (n ≳ 5·10⁵ at the
-    * auto geometry) keep the distributed loops unchanged. */
+  /** Guard for the driver-side training path, evaluated once per
+    * training run by [[trainQuantizers]] — the one dispatch between
+    * [[driverQuantizers]] and [[distributedQuantizers]]. The
+    * per-iteration work is sample·k inner products and the collect is
+    * sample·DIM doubles, so local training is a pure win while both
+    * stay trivially small and a scale hazard past it — the
+    * corpus-scaled geometry grows the sample as 8·√n and k as √n, so
+    * extreme corpora (n ≳ 5·10⁵ at the auto geometry) keep the
+    * distributed loops. The guard at k also covers the PQ books
+    * (KSUB ≤ k, or k < KSUB with the sample at its 512 floor). */
   private def localTrainable(sampleTarget: Long, k: Int): Boolean =
     sampleTarget * k <= (1L << 22) && sampleTarget <= (1L << 20)
 
@@ -1843,78 +1829,90 @@ object Similarity extends QueryModule {
       .toDF("cid", "m", "cw").coalesce(1).localCheckpoint(false)
   }
 
-  /** A trained codebook frame's rows, collected — tiny (O(k)); the
-    * residual trainers need the centroid VALUES in memory even when
-    * the coarse codebook itself came from the model cache. */
-  private def collectedCent(cent: DataFrame): Array[(Long, Array[Double], Double)] =
-    cent.select(col("cid"), col("cv"), col("cnrm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
+  /** Under-fill counts of one training run: the sample size, the
+    * trained coarse cells, and (table, subspace m, entries) for each PQ
+    * book family counted. */
+  private[graft] final case class QuantizerFill(sampleRows: Long,
+      cells: Long, entries: Seq[(String, Int, Long)])
 
-  /** The trained-IVF chain (sample slice → init → k-means) against a
-    * corpus frame, taking the driver-side path under the
-    * [[localTrainable]] guard and the distributed loop past it. */
-  private def trainedCodebookFastOn(spark: SparkSession, e: DataFrame,
-      k: Int, iters: Int): DataFrame = {
-    val target = trainTargetFor(k)
-    if (localTrainable(target, k))
-      centFrame(spark, localKmeansCent(
-        collectedSample(trainSliceOf(e, tstrideDf(e, target))), k, iters))
-    else {
-      val tr = trainSliceOf(e, tstrideDf(e, target)).localCheckpoint()
-      trainedCodebook(tr, strideCodebook(tr, k), iters)
-    }
+  /** The three sample-trained quantizers over one (vec_id, v, nrm)
+    * frame: the coarse codebook (cid, cv, cnrm), the plain-PQ books and
+    * the residual-PQ books (cid, m, cw), the latter trained over the
+    * sample's own residuals under the coarse codebook. Every member
+    * trains on first use, so a caller that serves one model starts no
+    * job for the others. Books arrive as futures so the distributed body
+    * overlaps their training with the caller's other work; `fill` is
+    * read after everything the caller started has settled. */
+  private[graft] final class Quantizers(cent0: => DataFrame,
+      books0: => Future[DataFrame],
+      rbooks0: => Future[DataFrame],
+      fill0: Boolean => QuantizerFill) {
+    lazy val cent: DataFrame = cent0
+    lazy val books: Future[DataFrame] = books0
+    lazy val rbooks: Future[DataFrame] = rbooks0
+    /** Fill counts of the coarse codebook, the plain books and — with
+      * `withResiduals` — the residual books. */
+    def fill(withResiduals: Boolean): QuantizerFill = fill0(withResiduals)
   }
 
-  /** The trained-PQ chain (sample slice → stride books → k-means)
-    * against a corpus frame — [[trainedCodebookFastOn]]'s PQ twin. */
-  private def trainedPqBooksFastOn(spark: SparkSession, e: DataFrame,
-      target: Long, iters: Int): DataFrame =
-    if (localTrainable(target, PQ_KSUB))
-      booksFrame(spark, localKmeansBooks(
-        collectedSample(trainSliceOf(e, tstrideDf(e, target)))
-          .map(s => (s._1, s._2)), iters))
-    else {
-      val tr = trainSliceOf(e, tstrideDf(e, target)).localCheckpoint()
-      trainedPqBooks(subspaces(tr, "vec_id").localCheckpoint(),
-        pqCodebooks(tr), iters)
-    }
+  /** THE quantizer-training entry: the [[trainSliceOf]] sample of `en`
+    * at [[trainTargetFor]]`(k)`, trained by [[driverQuantizers]] under
+    * [[localTrainable]] and by [[distributedQuantizers]] past it. */
+  private def trainQuantizers(spark: SparkSession, en: DataFrame,
+      k: Int): Quantizers =
+    if (localTrainable(trainTargetFor(k), k)) driverQuantizers(spark, en, k)
+    else distributedQuantizers(spark, en, k)
 
-  /** Test hook (LocalTrainerSpec): the DISTRIBUTED trainers over the
-    * corpus at `dir` — coarse codebook, plain-PQ books, residual-PQ
-    * books over the sample's own residuals — bypassing the
-    * [[localTrainable]] guard, so the spec can pin the driver-side
-    * trainers bit-equal to the loops they replace. */
-  private[graft] def distributedTrainedModels(spark: SparkSession,
-      dir: String, k: Int): (DataFrame, DataFrame, DataFrame) = {
-    val en = normalizedCorpus(spark, dir).localCheckpoint()
-    val tr = trainSliceOf(en, tstrideDf(en, trainTargetFor(k)))
-      .localCheckpoint()
-    val cent = trainedCodebook(tr, strideCodebook(tr, k), IVF_TRAIN_ITERS)
-      .localCheckpoint()
-    val books = trainedPqBooks(subspaces(tr, "vec_id").localCheckpoint(),
-      pqCodebooks(tr), PQ_TRAIN_ITERS)
-    val trCell = nearestCells(cent)(tr, 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val rtr = residualFrame(tr, cent, trCell)
-      .select(col("vec_id"), col("v")).localCheckpoint()
-    val rbooks = trainedPqBooks(subspaces(rtr, "vec_id").localCheckpoint(),
-      pqCodebooks(rtr), PQ_TRAIN_ITERS)
-    (cent, books, rbooks)
-  }
-
-  /** Test hook: the same three models from the DRIVER-side trainers. */
-  private[graft] def localTrainedModels(spark: SparkSession,
-      dir: String, k: Int): (DataFrame, DataFrame, DataFrame) = {
-    val en = normalizedCorpus(spark, dir).localCheckpoint()
-    val sample = collectedSample(
+  /** Driver body: the sample is collected ONCE (one job) and every
+    * quantizer trains in memory; fill counts come from the arrays. */
+  private[graft] def driverQuantizers(spark: SparkSession, en: DataFrame,
+      k: Int): Quantizers = {
+    lazy val sample = collectedSample(
       trainSliceOf(en, tstrideDf(en, trainTargetFor(k))))
-    val centArr = localKmeansCent(sample, k, IVF_TRAIN_ITERS)
-    (centFrame(spark, centArr),
-      booksFrame(spark, localKmeansBooks(
-        sample.map(s => (s._1, s._2)), PQ_TRAIN_ITERS)),
-      booksFrame(spark, localKmeansBooks(
-        localResiduals(sample, centArr), PQ_TRAIN_ITERS)))
+    lazy val centArr = localKmeansCent(sample, k, IVF_TRAIN_ITERS)
+    lazy val booksArr =
+      localKmeansBooks(sample.map(s => (s._1, s._2)), PQ_TRAIN_ITERS)
+    lazy val rbooksArr =
+      localKmeansBooks(localResiduals(sample, centArr), PQ_TRAIN_ITERS)
+    def entries(table: String, arr: Array[(Long, Int, Array[Double])]) =
+      arr.groupBy(_._2).toSeq.map { case (m, es) =>
+        (table, m, es.map(_._1).distinct.length.toLong) }
+    new Quantizers(centFrame(spark, centArr),
+      Future.successful(booksFrame(spark, booksArr)),
+      Future.successful(booksFrame(spark, rbooksArr)),
+      withResiduals => QuantizerFill(sample.length.toLong,
+        centArr.length.toLong, entries("codebooks", booksArr) ++
+          (if (withResiduals) entries("rcodebooks", rbooksArr) else Nil)))
+  }
+
+  /** Distributed body — the r20 concurrent job chains: the sample is
+    * checkpointed (every k-means iteration of every family re-scans it),
+    * plain-PQ training needs only the sample so it runs concurrent with
+    * the coarse k-means, and residual-PQ training needs only (sample,
+    * codebook). Fill counts are count jobs over the settled tiny model
+    * frames. */
+  private[graft] def distributedQuantizers(spark: SparkSession,
+      en: DataFrame, k: Int): Quantizers = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    lazy val tr = trainSliceOf(en, tstrideDf(en, trainTargetFor(k)))
+      .localCheckpoint()
+    lazy val cent = trainedCodebook(tr, strideCodebook(tr, k),
+      IVF_TRAIN_ITERS).localCheckpoint() // feeds assignment + writes
+    def booksOver(frame: DataFrame): DataFrame =
+      trainedPqBooks(subspaces(frame, "vec_id").localCheckpoint(),
+        pqCodebooks(frame), PQ_TRAIN_ITERS)
+    lazy val booksF = Future(booksOver(tr))
+    lazy val rbooksF = Future(booksOver(
+      residualFrame(tr, cent, assignCells(cent)(tr))
+        .select(col("vec_id"), col("v")).localCheckpoint()))
+    def entries(table: String, f: Future[DataFrame]) =
+      Await.result(f, Duration.Inf)
+        .groupBy(col("m")).agg(countDistinct(col("cid")).as("n"))
+        .collect().map(r => (table, r.getInt(0), r.getLong(1))).toSeq
+    new Quantizers(cent, booksF, rbooksF,
+      withResiduals => QuantizerFill(tr.count(), cent.count(),
+        entries("codebooks", booksF) ++
+          (if (withResiduals) entries("rcodebooks", rbooksF) else Nil)))
   }
 
   /** Train the full IVF-PQ index over `raw` and write its model tables
@@ -1937,77 +1935,18 @@ object Similarity extends QueryModule {
       // tables pass validation below.
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(base, "GEOMETRY"))
       val en = normalizedFrom(raw).localCheckpoint()
-      // The training sample, sized to the cell count — a production
+      // The training sample is sized to the cell count — a production
       // deployment builds at ivfGeometry(n)'s (k, nprobe, shortlistAt),
       // which persist in the GEOMETRY file below and become
       // serveFromIndex's defaults; the gates build at the fixed
       // documented constants so their oracles replay a constant.
-      val target = trainTargetFor(k)
-      val tst = tstrideDf(en, target)
       import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.Future
-      // Quantizer training (r21): under [[localTrainable]] the sample
-      // collects ONCE and all three quantizers (coarse IVF, plain-PQ,
-      // residual-PQ over the sample's own residuals — bit-identical to
-      // slicing the full residual frame, the r20 equivalence) train in
-      // local memory: the training block was ~4.9 s of 1-task job
-      // cascades at bench scale (JobProbe) and becomes one collect plus
-      // milliseconds of arithmetic (LocalTrainerSpec pins the trained
-      // tables bit-equal to the distributed loops). Past the guard the
-      // r20 concurrent-futures structure runs unchanged. Under-fill
-      // counters ride the local arrays (no extra count jobs) or the
-      // frames (distributed, post-settle).
-      val local = localTrainable(target, k)
-      var sampleRows = 0L
-      var trainedCent = -1L // distributed path fills these post-settle
-      var bookFill: Seq[(String, Int, Long)] = Nil
-      val (cent, booksF, rbooksOptF): (DataFrame, Future[DataFrame],
-          Option[Future[DataFrame]]) =
-        if (local) {
-          val sample = collectedSample(trainSliceOf(en, tst))
-          val centArr = localKmeansCent(sample, k, IVF_TRAIN_ITERS)
-          val booksArr =
-            localKmeansBooks(sample.map(s => (s._1, s._2)), PQ_TRAIN_ITERS)
-          val rbooksArr = if (!withResiduals) None else
-            Some(localKmeansBooks(localResiduals(sample, centArr),
-              PQ_TRAIN_ITERS))
-          sampleRows = sample.length.toLong
-          trainedCent = centArr.length.toLong
-          bookFill = (Seq("codebooks" -> booksArr) ++
-              rbooksArr.map("rcodebooks" -> _).toSeq)
-            .flatMap { case (t, arr) =>
-              arr.groupBy(_._2).toSeq.map { case (m, es) =>
-                (t, m, es.map(_._1).distinct.length.toLong) } }
-          (centFrame(spark, centArr),
-            Future.successful(booksFrame(spark, booksArr)),
-            rbooksArr.map(a => Future.successful(booksFrame(spark, a))))
-        } else {
-          // Concurrent job chains (guide §2.6 overlap — the r20
-          // restructure): plain-PQ training needs only tr, so it starts
-          // concurrent with the IVF k-means; residual-PQ training needs
-          // only (tr, cent) — the sample's residuals are derived from
-          // the sample itself (same vectors, same frozen centroids,
-          // same rounding — bit-identical to slicing the full-corpus
-          // residual frame). The sample is checkpointed: every k-means
-          // iteration of both quantizer families re-scans it.
-          val tr = trainSliceOf(en, tst).localCheckpoint()
-          val booksTrainF = Future {
-            val tsubs = subspaces(tr, "vec_id").localCheckpoint()
-            trainedPqBooks(tsubs, pqCodebooks(tr), PQ_TRAIN_ITERS)
-          }
-          val cent0 = trainedCodebook(tr, strideCodebook(tr, k),
-            IVF_TRAIN_ITERS).localCheckpoint() // feeds assignment + writes
-          val rbooksTrainF = if (!withResiduals) None else Some(Future {
-            val trCell = nearestCells(cent0)(tr, 1)
-              .select(col("vec_id"), col("cid").as("cell"))
-            val rtr = residualFrame(tr, cent0, trCell)
-              .select(col("vec_id"), col("v")).localCheckpoint()
-            val rtsubs = subspaces(rtr, "vec_id").localCheckpoint()
-            trainedPqBooks(rtsubs, pqCodebooks(rtr), PQ_TRAIN_ITERS)
-          })
-          sampleRows = tr.count()
-          (cent0, booksTrainF, rbooksTrainF)
-        }
+      // Plain-PQ books first: past the driver guard they train
+      // concurrent with the coarse k-means.
+      val q = trainQuantizers(spark, en, k)
+      val booksF = q.books
+      val cent = q.cent
+      val rbooksOptF = if (withResiduals) Some(q.rbooks) else None
       // The full-corpus subspace slices for the plain encode — needed in
       // both paths, independent of training, so its checkpoint chain
       // overlaps whatever else is in flight.
@@ -2015,8 +1954,8 @@ object Similarity extends QueryModule {
       // Checkpointed because BOTH code families consume it (the plain
       // coded join and the residual subtraction) — uncheckpointed, each
       // re-executes the O(n·K) assignment crossJoin.
-      val cellOf = nearestCells(cent)(en, 1)
-        .select(col("vec_id"), col("cid").as("cell"))
+      val cellOf = assignCells(cent)(en)
+        .select(col("vec_id"), col("cell"))
         .localCheckpoint()
       val centWriteF = Future {
         cent.write.mode("overwrite").parquet(s"$base/centroids")
@@ -2103,36 +2042,24 @@ object Similarity extends QueryModule {
       // end up smaller than its contract — a training sample smaller
       // than k can only seed sampleRows centroids, and k-means can DRAIN
       // an entry nothing assigns to — valid, silently degraded recall.
-      // On the local path the counters rode the in-memory arrays (zero
-      // jobs); distributed, the tiny model frames are counted here
-      // post-settle (≤ K + M·KSUB rows, already checkpointed). Since
-      // r20's exact-fill init the expected count is min(k, sampleRows)
-      // and a full suite run fires ZERO warnings. Warn, not fail: a
+      // The driver body counts from its in-memory arrays (zero jobs);
+      // the distributed one counts the tiny settled model frames
+      // (≤ K + M·KSUB rows, already checkpointed). Since r20's
+      // exact-fill init the expected count is min(k, sampleRows) and a
+      // full suite run fires ZERO warnings. Warn, not fail: a
       // legitimately small corpus (n < K) builds fewer cells by design,
       // and training drain remains possible on degenerate data.
-      if (!local) {
-        trainedCent = cent.count()
-        val booksSettled = Seq("codebooks" ->
-          scala.concurrent.Await.result(booksF,
-            scala.concurrent.duration.Duration.Inf)) ++
-          rbooksOptF.map(f => "rcodebooks" ->
-            scala.concurrent.Await.result(f,
-              scala.concurrent.duration.Duration.Inf)).toSeq
-        bookFill = booksSettled.flatMap { case (table, books) =>
-          books.groupBy(col("m")).agg(countDistinct(col("cid")).as("n"))
-            .collect().map(r => (table, r.getInt(0), r.getLong(1)))
-        }
-      }
       locally {
+        val fill = q.fill(withResiduals)
         def warn(msg: String): Unit =
           System.err.println(s"[graft] index build at $base: $msg")
-        val wantCent = math.min(k.toLong, sampleRows)
-        if (trainedCent < wantCent)
-          warn(s"IVF codebook trained $trainedCent of $wantCent centroids — " +
+        val wantCent = math.min(k.toLong, fill.sampleRows)
+        if (fill.cells < wantCent)
+          warn(s"IVF codebook trained ${fill.cells} of $wantCent centroids — " +
             "training drained entries nothing assigns to (recall degrades " +
             "with the gap)")
-        val wantBooks = math.min(PQ_KSUB.toLong, sampleRows)
-        bookFill.filter(_._3 < wantBooks).foreach { case (table, m, n) =>
+        val wantBooks = math.min(PQ_KSUB.toLong, fill.sampleRows)
+        fill.entries.filter(_._3 < wantBooks).foreach { case (table, m, n) =>
           warn(s"$table subspace m=$m trained $n " +
             s"of $wantBooks PQ entries — training-drained entries " +
             "(recall degrades with the gap)")
@@ -2160,21 +2087,20 @@ object Similarity extends QueryModule {
     val cent = spark.read.parquet(s"$indexBase/centroids")
     val books = spark.read.parquet(s"$indexBase/codebooks")
     val en = normalizedFrom(raw).localCheckpoint()
-    val cellOf = nearestCells(cent)(en, 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    pqAssignSubs(subspaces(en, "vec_id"), books).join(cellOf, "vec_id")
+    pqAssignSubs(subspaces(en, "vec_id"), books)
+      .join(assignCells(cent)(en).select(col("vec_id"), col("cell")), "vec_id")
   }
 
-  /** Residual frame `r = v − centroid(cell(v))` — THE single
-    * definition of the residual convention, shared by the index build
-    * ([[buildIndexAt]]) and the frozen upsert encode
-    * ([[encodeResidWith]]) so the two can never drift apart (the
-    * append ≡ one-pass invariant rests on it; the inline
-    * [[annIvfPqResidual]] derives the same rows in one pass and is
-    * pinned equal to the served form by SimilaritySpec). */
+  /** Residual frame `r = v − centroid(cell(v))` as (vec_id, v, cell),
+    * given `cellOf`'s (vec_id, cell) — THE single definition of the
+    * residual convention, shared by the index build ([[buildIndexAt]]),
+    * the inline [[annIvfPqResidual]], the distributed residual-book
+    * training and the frozen upsert encode ([[encodeResidWith]]), so
+    * none can drift from another (the append ≡ one-pass and served ≡
+    * inline invariants rest on it). */
   private def residualFrame(en: DataFrame, cent: DataFrame,
       cellOf: DataFrame): DataFrame =
-    en.join(cellOf, "vec_id")
+    en.join(cellOf.select(col("vec_id"), col("cell")), "vec_id")
       .join(cent.select(col("cid").as("cell"), col("cv")), "cell")
       .select(col("vec_id"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"), col("cell"))
@@ -2187,9 +2113,7 @@ object Similarity extends QueryModule {
     val cent = spark.read.parquet(s"$indexBase/centroids")
     val rbooks = spark.read.parquet(s"$indexBase/rcodebooks")
     val en = normalizedFrom(raw).localCheckpoint()
-    val cellOf = nearestCells(cent)(en, 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val resid = residualFrame(en, cent, cellOf)
+    val resid = residualFrame(en, cent, assignCells(cent)(en))
     pqAssignSubs(subspaces(resid.select(col("vec_id"), col("v")), "vec_id"),
         rbooks)
       .join(resid.select(col("vec_id"), col("cell")), "vec_id")
@@ -2784,50 +2708,21 @@ object Similarity extends QueryModule {
     * 6-decimal-rounded, so the subtraction is too. */
   def annIvfPqResidual(spark: SparkSession, dir: String): DataFrame = {
     val en = normalizedCorpus(spark, dir).localCheckpoint()
-    val cent = cachedModel(spark, dir, "ivf_cent_norm")(
-      trainedCodebookFastOn(spark, en, K_CENTROIDS, IVF_TRAIN_ITERS))
-    // Corpus assignment keeping the winning centroid for the residual.
-    // All lazy: on a warm model-cache hit (centroids shared with
-    // ann_ivfpq_topk, residual books/codes cached below) none of the
-    // training-side frames are ever materialized.
-    lazy val resid = {
-      val wA = Window.partitionBy(col("vec_id"))
-        .orderBy(col("ccos").desc, col("cid"))
-      en.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("v"), col("cid"), col("cv"),
-          round(dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")), 6).as("ccos"))
-        .withColumn("crank", row_number().over(wA))
-        .filter(col("crank") === 1)
-        .select(col("vec_id"),
-          zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"),
-          col("cid").as("cell"))
-        .localCheckpoint()
-    }
-    lazy val rsubs = subspaces(resid.select(col("vec_id"), col("v")), "vec_id")
-      .localCheckpoint()
-    // Residual-book training (r21): under the guard the residual
-    // sample derives ON THE DRIVER from the collected sample and the
-    // (possibly cache-served) trained centroids — the same rows
-    // trainSliceOf picks from the full residual frame (same vectors,
-    // same frozen rounded centroids, same subtraction, rank-re-keyed
-    // ids unchanged), without materializing the corpus-wide residual
-    // checkpoint just to slice ~512 rows out of it.
+    lazy val q = trainQuantizers(spark, en, K_CENTROIDS)
+    val cent = cachedModel(spark, dir, "ivf_cent_norm")(q.cent)
+    // Residual books train over the sample's own residuals (the
+    // distributed body derives the same rows trainSliceOf would pick
+    // from the full residual frame); on a warm model-cache hit nothing
+    // below the serve is materialized.
     val books = cachedModel(spark, dir, "pq_books_resid")(
-      if (localTrainable(TRAIN_SAMPLE_TARGET, PQ_KSUB))
-        booksFrame(spark, localKmeansBooks(
-          localResiduals(
-            collectedSample(trainSliceOf(en, tstrideDf(en))),
-            collectedCent(cent)),
-          PQ_TRAIN_ITERS))
-      else {
-        val rtr = trainSliceOf(resid.select(col("vec_id"), col("v")),
-          tstrideDf(en)).localCheckpoint()
-        val rtsubs = subspaces(rtr, "vec_id").localCheckpoint()
-        trainedPqBooks(rtsubs, pqCodebooks(rtr), PQ_TRAIN_ITERS)
-      })
-    val coded = cachedModel(spark, dir, "ivfpq_codes_resid")(
-      pqAssignSubs(rsubs, books)
-        .join(resid.select(col("vec_id"), col("cell")), "vec_id"))
+      Await.result(q.rbooks, Duration.Inf))
+    val coded = cachedModel(spark, dir, "ivfpq_codes_resid")({
+      val resid = residualFrame(en, cent, assignCells(cent)(en))
+        .localCheckpoint()
+      pqAssignSubs(subspaces(resid.select(col("vec_id"), col("v")), "vec_id"),
+          books)
+        .join(resid.select(col("vec_id"), col("cell")), "vec_id")
+    })
     ivfPqResidualServe(en, cent, books, coded)
   }
 
@@ -2854,13 +2749,9 @@ object Similarity extends QueryModule {
       .select(col("query_id"), col("cell"), col("qc"))
     // The LUT's query side is the RAW query slice (q·r needs q, not
     // q − c); its codebook side is the residual codebooks.
-    val qsubs = subspaces(qw, "query_id").withColumnRenamed("sub", "qsub")
-    val lut = qsubs.join(broadcast(books), "m")
-      .select(col("query_id"), col("m"), col("cid").as("code"),
-        dot(col("qsub"), col("cw")).as("p"))
     val adc = coded.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "m", "code"))
+      .join(broadcast(adcLut(qw, books)), Seq("query_id", "m", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       // qc is constant within the group (one cell per vector): max()
       // reads the single value portably in both engines.
@@ -3583,8 +3474,9 @@ object Similarity extends QueryModule {
 
   def annIvfFiltered(spark: SparkSession, dir: String): DataFrame = {
     val (e, cent) = ivfParts(spark, dir)
-    ivfServe(e, cent, labels = Some(
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))))
+    serveCells(assignCells(cent)(e), routedProbes(queryVecs(e), cent, NPROBE),
+      excludeSelf = true, labels = Some(
+        Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))))
   }
 
   val annIvfFilteredSql =
@@ -3638,9 +3530,7 @@ object Similarity extends QueryModule {
     // assigned feeds both self-join sides AND the final keep/drop join —
     // cut the lineage once or the O(n·K) assignment runs three times.
     val e = corpus(spark, dir).localCheckpoint()
-    val assigned = nearestCells(strideCodebook(e))(e, 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
-      .localCheckpoint()
+    val assigned = assignCells(strideCodebook(e))(e).localCheckpoint()
     val lo = assigned.select(col("cell"), col("vec_id").as("i"),
       col("v").as("iv"), col("nrm").as("inrm"))
     val hi = assigned.select(col("cell"), col("vec_id").as("j"),
@@ -3725,9 +3615,9 @@ object Similarity extends QueryModule {
     // ONE O(n·K) corpus assignment + query workload — the control row
     // differs from the routed one only in its probe rule, so computing
     // the rest twice measured pure duplicate work. Row VALUES are
-    // unchanged: serveCells ∘ routedProbes is the exact ivfServe
-    // dataflow (the ann_router_gain equivalence), and the oracle's
-    // independent replay of every chain still hash-gates each row.
+    // unchanged: every IVF serve is serveCells over a probe rule, and
+    // the oracle's independent replay of every chain still hash-gates
+    // each row.
     val n = Tables.embeddings(spark, dir).count()
     val (k, nprobe) = ivfGeometry(n)
     val e = corpus(spark, dir).localCheckpoint()
@@ -3741,7 +3631,6 @@ object Similarity extends QueryModule {
     // every model build is lock-serialized, so interleaving cannot
     // change a value — awaitAll settles everything before the union.
     import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.Future
     val truthF = Future {
       cosineTopkOn(e)
         .filter(col("rank") <= IVF_TOP_K)
@@ -3750,15 +3639,10 @@ object Similarity extends QueryModule {
     }
     val routedPairF = Future {
       val cent = trainedCentAt(spark, dir, e, k)
-      val assigned = nearestCells(cent)(e, 1)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
-        .localCheckpoint()
-      val qw = queryWorkload(e, e).select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnrm"))
-      (serveCells(assigned, qw, routedProbes(qw, cent, nprobe),
-          excludeSelf = true),
-        serveCells(assigned, qw, hashProbes(qw, cent, nprobe),
-          excludeSelf = true))
+      val assigned = assignCells(cent)(e).localCheckpoint()
+      val qw = queryVecs(e)
+      (serveCells(assigned, routedProbes(qw, cent, nprobe), excludeSelf = true),
+        serveCells(assigned, hashProbes(qw, cent, nprobe), excludeSelf = true))
     }
     val fixedF = Future {
       annIvfTrainedOn(spark, dir, e, K_CENTROIDS, NPROBE)
@@ -3774,8 +3658,6 @@ object Similarity extends QueryModule {
       Seq[Future[Any]](truthF, fixedF, routedPairF, pqPairF))
     // All settled; each result is read back BY NAME (the r20 ADVICE
     // posture — no positional indexing into a mixed sequence).
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
     val truth = Await.result(truthF, Duration.Inf)
     val fixed = Await.result(fixedF, Duration.Inf)
     val (routed, control) = Await.result(routedPairF, Duration.Inf)
