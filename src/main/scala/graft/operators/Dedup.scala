@@ -607,7 +607,10 @@ object Dedup extends QueryModule {
     * (1 MB of longs), the same order as the 1.6 MB
     * [[SMALL_GRAPH_EDGES]] collect. A bigger batch runs the
     * distributed body, whose cost scales with executors instead, and
-    * hands the state off to the distributed mirrors for good. */
+    * hands the state off to the distributed mirrors for good.
+    * `Tokenizer.trainOn` uses the same bound in documents: a corpus of
+    * at most this many is fetched in one job and its BPE merges are
+    * learned on the driver; a bigger one runs the distributed loop. */
   private[graft] val SMALL_BATCH_ROWS = 4096
 
   /** Row bound under which a streaming admission store keeps its

@@ -34,8 +34,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * (`SequentialPersonalizedPageRank.java:112-134`) — a 10-iteration
   * loop on a 100-node graph is otherwise ~70 jobs of scheduler time for
   * a few ms of arithmetic. The loop above also exists as a Spark
-  * dataflow, [[distributedRanks]], the reference the driver path is
-  * checked against (PropertySpec pins the two equal): the graph is
+  * dataflow, `PageRankReference.distributedRanks` in the test tree, the
+  * reference the driver path is checked against (PropertySpec pins the
+  * two equal): the graph is
   * `repartition(nodeid)` + persisted once, so every iteration's gather
   * join reuses the same exchange, and each iteration's messages go
   * through a lazy `localCheckpoint` that the dangling-mass collect
@@ -69,7 +70,7 @@ object PageRank extends QueryModule {
 
   /** Every node `0 until V` with its sorted distinct out-neighbours:
     * `(nodeid, adj, outdeg)`. */
-  private def graphOf(edges: DataFrame): DataFrame = {
+  private[graft] def graphOf(edges: DataFrame): DataFrame = {
     val adj = edges.distinct().groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("adj"))
     edges.sparkSession.range(V).toDF("nodeid")
@@ -121,8 +122,9 @@ object PageRank extends QueryModule {
     * to s), `None` is plain PageRank (mass starts at 1/V on every node
     * and teleports uniformly). One job collects the distinct edges (at
     * most V² rows) and the [[ITERATIONS]] power iterations run on the
-    * driver over sorted adjacency arrays, in [[distributedRanks]]'
-    * operation order — scatter `r/outdeg`, gather the per-dst sums,
+    * driver over sorted adjacency arrays, in the operation order of
+    * the distributed reference (`PageRankReference.distributedRanks`)
+    * — scatter `r/outdeg`, gather the per-dst sums,
     * `missing = 1 − Σm`, then `(1−α)·m + teleport` — so both agree to
     * summation-order ulps (PropertySpec pins it). The ranks return as
     * a local relation with the distributed loop's schema. */
@@ -149,78 +151,6 @@ object PageRank extends QueryModule {
       priors.indices.map(i => StructField(s"r$i", DoubleType, nullable = false)))
     edges.sparkSession.createDataFrame(java.util.Arrays.asList(
       Seq.tabulate(n)(v => Row.fromSeq(v.toLong +: ranks.map(_(v)))): _*), schema)
-  }
-
-  /** The reference [[driverRanks]] is checked against: the scatter /
-    * gather / dangling-mass loop as a Spark dataflow (steps 1–4 of the
-    * object doc), one lazy message checkpoint and one 1-row collect per
-    * iteration. */
-  private[graft] def distributedRanks(edges: DataFrame,
-      priors: Seq[Option[Long]]): DataFrame = {
-    val spark = edges.sparkSession
-    val idx = priors.indices
-    // Size-aware graph partitioning: at least ~16 nodes per partition
-    // (the per-iteration join/agg task overhead dominates below that),
-    // capped at the session's configured parallelism. A fixed
-    // `repartition(col)` pins the shuffle-partition default onto every
-    // one of the 10 iterations' stages — measured 2× slower on a small
-    // graph; at scale V/16 exceeds the cap and this is exactly the
-    // configured parallelism.
-    val parts = math.max(1, math.min(
-      spark.sessionState.conf.numShufflePartitions, (V / 16).toInt))
-    val g = graphOf(edges).repartition(parts, col("nodeid")).persist()
-    var ranks = g.select(col("nodeid") +: idx.map { i =>
-      priors(i).fold(lit(1.0 / V))(s =>
-        when(col("nodeid") === s, 1.0).otherwise(0.0)).as(s"r$i")
-    }: _*)
-    for (_ <- 1 to ITERATIONS) {
-      val scattered = ranks.join(g, "nodeid")
-        .filter(col("outdeg") > 0)
-        .select(explode(col("adj")).as("dst") +:
-          idx.map(i => (col(s"r$i") / col("outdeg")).as(s"c$i")): _*)
-      // Checkpoint the MESSAGES, not the ranks: both consumers (the
-      // dangling-mass collect and the rank update) then read the one
-      // materialized table, so scatter+gather runs exactly once per
-      // iteration, and the next iteration's lineage is a single join
-      // over this checkpoint — bounded depth without a second
-      // materialization job per iteration. The checkpoint is LAZY
-      // (r20 optimization round): the dangling-mass collect right
-      // below is the first action over it and materializes it as a
-      // side effect, so each iteration launches ONE job cascade
-      // instead of an eager-checkpoint job followed by the collect
-      // (measured ~-25% on the 10-iteration loop; an interleaved
-      // in-JVM eager/lazy pair in r21 confirmed lazy —
-      // plans/r21/pagerank_ckpt_pair.txt).
-      val msgs = scattered.groupBy(col("dst"))
-        .agg(sum(col("c0")).as("m0"),
-          idx.tail.map(i => sum(col(s"c$i")).as(s"m$i")): _*)
-        .localCheckpoint(false)
-      // Missing (dangling) mass per vector: 1 − what arrived, as one
-      // 1-row driver collect over the checkpointed messages — the
-      // reference's driver fold (`:459-474`), O(iterations)·O(S)
-      // driver work. (A collect-free broadcast-cross-join variant was
-      // measured 5× slower: the per-iteration global-agg broadcast
-      // adds two blocking stages inside every checkpoint job.)
-      val arrived = msgs
-        .agg(sum(col("m0")).as("t0"),
-          idx.tail.map(i => sum(col(s"m$i")).as(s"t$i")): _*)
-        .collect()(0)
-      val missing = idx.map(i =>
-        1.0 - (if (arrived.isNullAt(i)) 0.0 else arrived.getDouble(i)))
-      ranks = g.select(col("nodeid"))
-        .join(msgs, col("nodeid") === col("dst"), "left_outer")
-        .select(col("nodeid") +: idx.map { i =>
-          val back = ALPHA + (1.0 - ALPHA) * missing(i)
-          val tele = priors(i).fold(lit(back / V))(s =>
-            when(col("nodeid") === s, lit(back)).otherwise(0.0))
-          (lit(1.0 - ALPHA) * coalesce(col(s"m$i"), lit(0.0)) + tele).as(s"r$i")
-        }: _*)
-    }
-    // Materialize the final ranks so the result no longer depends on
-    // the persisted graph, then release it.
-    val out = ranks.localCheckpoint(true)
-    g.unpersist()
-    out
   }
 
   /** `pagerank`: final per-source ranks, rounded for output stability. */

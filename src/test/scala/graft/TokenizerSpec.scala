@@ -310,4 +310,31 @@ class TokenizerSpec extends SparkSpecBase {
     assert(after <= before)
     assert(after > 0)
   }
+
+  // --- the driver body's bound ---------------------------------------------
+
+  test("bpe_train runs at most 2 jobs cold") {
+    // Cold, like every benchmark pass: the documents' schema inference
+    // and the bounded corpus fetch. The distributed loop runs 3 jobs per
+    // round, and a sort of the merge table 3 more.
+    Caches.clearAll()
+    val jobs = jobsPerCall(Seq("gate" -> (() => Tokenizer.bpeTrain(spark, sfDir).collect())))
+    assert(jobs("gate").size <= 2, s"bpe_train ran ${jobs("gate").size} jobs")
+  }
+
+  test("a corpus past SMALL_BATCH_ROWS trains on the distributed loop, same merges") {
+    val rnd = new scala.util.Random(41)
+    val vocab = Vector("a", "b", "c", "d")
+    val texts = Seq.fill(operators.Dedup.SMALL_BATCH_ROWS + 1)(
+      Seq.fill(1 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val df = texts.zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    var merges = Seq.empty[(Int, String, String, Long)]
+    val jobs = jobsPerCall(Seq("train" -> (() =>
+      merges = Tokenizer.trainOn(df, Tokenizer.BPE_MERGES, needState = false)._1)))
+    // The driver body runs at most the fetch; the loop 3 jobs a round.
+    assert(jobs("train").size > 2, s"trainOn ran ${jobs("train").size} jobs")
+    assert(merges === replayTrain(
+      texts.map(t => TextFns.tokenizeLocal(t).toVector), Tokenizer.BPE_MERGES)._1)
+  }
 }
