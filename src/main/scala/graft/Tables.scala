@@ -1,15 +1,56 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
-/** Fixture-table loaders (FIXTURES.md). One parquet dir per table under the
-  * scale-factor dir. Loaded as plain DataFrames so Catalyst keeps full
-  * pushdown/pruning; callers select/filter and let the optimizer reach the
-  * parquet scan.
+/** Fixture-table loaders (FIXTURES.md). One parquet file per table
+  * under the scale-factor dir, read under its DECLARED schema
+  * ([[schemas]]): the layout is fixed by the fixture generator, so no
+  * load starts a schema-inference job (one one-task Spark job per
+  * `spark.read.parquet` without a schema, only to read a footer).
+  * `TablesSpec` pins every declared schema to what Spark infers from
+  * the footers at each scale factor. Loaded as plain DataFrames so
+  * Catalyst keeps full pushdown/pruning; callers select/filter and let
+  * the optimizer reach the parquet scan.
   */
 object Tables {
+  private def table(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+
+  /** Every fixture table's schema as Spark reads its footers: all
+    * fields nullable, and the zone-less `timestamp[us]` columns as
+    * TIMESTAMP_NTZ. `events.ts` is the footer's say ([[events]]). */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> table("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> table("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "customer" -> table("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "supplier" -> table("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> table("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType,
+      "p_size" -> IntegerType, "p_retailprice" -> DoubleType),
+    "orders" -> table("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> table("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "events" -> table("event_id" -> LongType, "ts" -> TimestampNTZType,
+      "user_id" -> LongType, "event_type" -> StringType,
+      "value" -> DoubleType, "props" -> StringType),
+    "documents" -> table("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> table("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -23,22 +64,26 @@ object Tables {
     * rejects — read as long via `nanosAsLong`, then truncate ns→µs with
     * integer division; epoch-nanos exceed 2^53 so a double round-trip
     * would corrupt them) vs plain TIMESTAMP(MICROS) without timezone
-    * (read natively as TIMESTAMP_NTZ). Adapt on the observed schema so
-    * either generation loads to the same µs-precision TIMESTAMP
-    * column: NTZ is cast to the session-timezone type — value-
-    * preserving under the engine's fixed UTC session timezone, and
-    * required by everything watermark/window-shaped downstream
-    * (EventTimeWatermark rejects TIMESTAMP_NTZ outright). DuckDB reads
-    * the same column naively with the same values, so oracle parity
-    * holds either way. */
+    * (read natively as TIMESTAMP_NTZ). The generation at hand is read
+    * off ONE footer on the driver ([[ParquetFooters]], no Spark job)
+    * and declared as the `ts` type of the read; either generation then
+    * loads to the same µs-precision TIMESTAMP column: NTZ is cast to
+    * the session-timezone type — value-preserving under the engine's
+    * fixed UTC session timezone, and required by everything
+    * watermark/window-shaped downstream (EventTimeWatermark rejects
+    * TIMESTAMP_NTZ outright). DuckDB reads the same column naively
+    * with the same values, so oracle parity holds either way. */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+    val path = s"$d/events.parquet"
+    val ts = ParquetFooters.timestampType(path, "ts")
+    val raw = s.read.schema(StructType(schemas("events").map(f =>
+      if (f.name == "ts") f.copy(dataType = ts) else f))).parquet(path)
+    ts match {
+      case LongType =>
         raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
           org.apache.spark.sql.functions.expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
+      case TimestampNTZType =>
         raw.withColumn("ts",
           org.apache.spark.sql.functions.col("ts").cast("timestamp"))
       case _ => raw // already the session-timezone timestamp type

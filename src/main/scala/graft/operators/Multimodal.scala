@@ -164,7 +164,8 @@ object Multimodal extends QueryModule {
       mediaDs(spark, dir).write.mode("overwrite").parquet(dest)
       dest
     }
-    spark.read.parquet(p).as[MediaRecord]
+    spark.read.schema(org.apache.spark.sql.Encoders.product[MediaRecord].schema)
+      .parquet(p).as[MediaRecord]
   }
 
   // --- media_catalog: metadata-only scan (payload never built) -----------

@@ -115,9 +115,12 @@ object ScaleOps extends QueryModule {
       .orderBy(col("source"))
   }
 
-  /** The pruned read alone (split out for PlanSpec's assertion). */
+  /** The pruned read alone (split out for PlanSpec's assertion), under
+    * the written columns' declared schema, `lang` the partition column. */
   def partitionedScanRead(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(scratchDir("partitioned", dir))
+    spark.read.schema(org.apache.spark.sql.types.StructType(
+        Seq("doc_id", "source", "n_chars", "lang").map(Tables.schemas("documents")(_))))
+      .parquet(scratchDir("partitioned", dir))
       .filter(col("lang") === SCAN_LANG)
 
   private def CAST_BIGINT(c: org.apache.spark.sql.Column) = c.cast("long")

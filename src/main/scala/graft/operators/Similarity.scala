@@ -2084,8 +2084,8 @@ object Similarity extends QueryModule {
     * expected union one-pass). */
   private[graft] def encodeWith(spark: SparkSession, indexBase: String,
       raw: DataFrame): DataFrame = {
-    val cent = spark.read.parquet(s"$indexBase/centroids")
-    val books = spark.read.parquet(s"$indexBase/codebooks")
+    val cent = readModel(spark, indexBase, "centroids")
+    val books = readModel(spark, indexBase, "codebooks")
     val en = normalizedFrom(raw).localCheckpoint()
     pqAssignSubs(subspaces(en, "vec_id"), books)
       .join(assignCells(cent)(en).select(col("vec_id"), col("cell")), "vec_id")
@@ -2110,8 +2110,8 @@ object Similarity extends QueryModule {
     * residual codebooks — the rcodes rows an upsert appends. */
   private[graft] def encodeResidWith(spark: SparkSession, indexBase: String,
       raw: DataFrame): DataFrame = {
-    val cent = spark.read.parquet(s"$indexBase/centroids")
-    val rbooks = spark.read.parquet(s"$indexBase/rcodebooks")
+    val cent = readModel(spark, indexBase, "centroids")
+    val rbooks = readModel(spark, indexBase, "rcodebooks")
     val en = normalizedFrom(raw).localCheckpoint()
     val resid = residualFrame(en, cent, assignCells(cent)(en))
     pqAssignSubs(subspaces(resid.select(col("vec_id"), col("v")), "vec_id"),
@@ -2280,7 +2280,8 @@ object Similarity extends QueryModule {
     * `cell` by name, so both layouts (this one and the partitioned
     * generation tables) read identically. Written columns are
     * [[CODES_SCHEMA]]'s — change that constant and this writer
-    * together (the read path asserts against it). */
+    * together (the read path declares it; TablesSpec compares every
+    * written footer with it). */
   private[graft] def writeDelta(codes: DataFrame, dest: String): Unit =
     codes.repartition(col("cell")).sortWithinPartitions(col("cell"))
       .write.mode("overwrite").parquet(dest)
@@ -2356,8 +2357,8 @@ object Similarity extends QueryModule {
     val (_, storedNprobe, storedShortlist) = storedGeometry(indexBase)
     val en = normalizedFrom(raw).localCheckpoint()
     ivfPqServe(en,
-      spark.read.parquet(s"$indexBase/centroids"),
-      spark.read.parquet(s"$indexBase/codebooks"),
+      readModel(spark, indexBase, "centroids"),
+      readModel(spark, indexBase, "codebooks"),
       readCodes(spark, indexBase),
       nprobe = nprobe.getOrElse(storedNprobe),
       shortlist = shortlist.getOrElse(storedShortlist))
@@ -2406,14 +2407,15 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** The stored codes-table shape — ONE definition shared by the
-    * drained-index empty read below and, as the documented anchor, by
-    * the write path ([[writeDelta]] / the build's partitioned codes
-    * write): (vec_id long, m int, code long, cell long). The non-empty
-    * read asserts its assembled columns against this, so a future
-    * column/type drift between writer and reader fails loudly on the
-    * FIRST read instead of surfacing only when a drained index is
-    * served or compacted (r17 advice). */
+  /** The stored codes-table shape — ONE definition shared by every
+    * read of the `codes`/`rcodes` roots ([[assembleCodes]]) and, as the
+    * documented anchor, by the write path ([[writeDelta]] / the build's
+    * partitioned codes write): (vec_id long, m int, code long, cell
+    * long). A generation table carries `cell` as its partition column,
+    * a delta as a data column; declared long, both read as long.
+    * TablesSpec writes an index, upserts and deletes, then compares
+    * every written footer with this, so a writer-side column or type
+    * change fails a spec instead of being read under a stale schema. */
   private[graft] val CODES_SCHEMA: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     StructType(Seq(StructField("vec_id", LongType, nullable = false),
@@ -2421,6 +2423,26 @@ object Similarity extends QueryModule {
       StructField("code", LongType, nullable = false),
       StructField("cell", LongType, nullable = false)))
   }
+
+  /** The other stored index tables' shapes, by table name:
+    * `centroids` (cid, cv, cnrm), the two codebook families (cid, m,
+    * cw) and a delete's `tombstones` (vec_id). Pinned to the written
+    * footers by the same spec as [[CODES_SCHEMA]]. */
+  private[graft] val INDEX_SCHEMAS: Map[String, org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types._
+    val books = new StructType().add("cid", LongType).add("m", IntegerType)
+      .add("cw", ArrayType(DoubleType))
+    Map("centroids" -> new StructType().add("cid", LongType)
+        .add("cv", ArrayType(DoubleType)).add("cnrm", DoubleType),
+      "codebooks" -> books, "rcodebooks" -> books,
+      "tombstones" -> new StructType().add("vec_id", LongType))
+  }
+
+  /** Stored index table `table` under `base`, read under its declared
+    * schema ([[INDEX_SCHEMAS]]) — no schema-inference job. */
+  private def readModel(spark: SparkSession, base: String,
+      table: String): DataFrame =
+    spark.read.schema(INDEX_SCHEMAS(table)).parquet(s"$base/$table")
 
   /** Assembled-read cache for the stored code tables, keyed by the
     * index STATE (generation, pending delta set, rebuild epoch).
@@ -2444,11 +2466,10 @@ object Similarity extends QueryModule {
   /** The read-back coded corpus (plain `codes` or residual `rcodes`):
     * the base build unioned with every COMMITTED delta directory —
     * uncommitted (crashed) upsert debris is invisible by construction.
-    * Each root is read as its own partitioned table (partition
-    * discovery per root; pruning by cell still reaches every scan),
-    * and the partition column comes back with the inferred (int)
-    * partition type, recast to the vec_id-domain long every join
-    * expects. */
+    * Each root is read as its own table under [[CODES_SCHEMA]]
+    * (partition discovery per root; pruning by cell still reaches
+    * every scan), so `cell` comes back as the vec_id-domain long every
+    * join expects. */
   private[graft] def readCodes(spark: SparkSession, base: String,
       table: String = "codes"): DataFrame = {
     val log = GenerationLog.index(base)
@@ -2481,44 +2502,18 @@ object Similarity extends QueryModule {
     require(roots.nonEmpty,
       s"index at $base has no '$table' table — built withResiduals=false? " +
         "(the residual serving path needs an index that stored rcodes)")
-    // Roots with at least one data file. A root can legitimately exist
-    // with NONE: deleting every live id and compacting stages a
-    // zero-row generation (cell-partitioned writes of zero rows leave
-    // only _SUCCESS) — the DRAINED index, a valid lifecycle state that
-    // must read as the empty codes table (and refill via a later
-    // upsert), not die in parquet schema inference. The distinct
-    // missing-table case above still fails loudly: absent root =
-    // misconfigured index, dataless root = empty table.
-    def hasParquetData(p: String): Boolean =
-      scala.util.Using.resource(
-          java.nio.file.Files.walk(java.nio.file.Paths.get(p))) { s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-      }
-    val dataRoots = roots.filter { case (_, p) => hasParquetData(p) }
-    if (dataRoots.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CODES_SCHEMA)
-    val codes = dataRoots
-      .map { case (seq, p) => spark.read.parquet(p)
-        .select(col("vec_id"), col("m"), col("code"),
-          col("cell").cast("long").as("cell"), lit(seq).as("seq")) }
+    // A root can legitimately hold NO data file: deleting every live id
+    // and compacting stages a zero-row generation (cell-partitioned
+    // writes of zero rows leave only _SUCCESS) — the DRAINED index, a
+    // valid lifecycle state that reads as the empty codes table under
+    // the declared schema (and refills via a later upsert). The
+    // distinct missing-table case above still fails loudly: absent
+    // root = misconfigured index, dataless root = empty table.
+    val codes = roots
+      .map { case (seq, p) => spark.read.schema(CODES_SCHEMA).parquet(p)
+        .select(col("vec_id"), col("m"), col("code"), col("cell"),
+          lit(seq).as("seq")) }
       .reduce(_ unionByName _)
-    // Drift tripwire (see [[CODES_SCHEMA]]): the assembled read's
-    // (name, type) pairs must match the shared schema, so a
-    // writer-side TYPE change (the select above passes any integral
-    // re-typing straight through) cannot silently diverge from the
-    // drained-index empty frame — it fails on the first read of any
-    // index instead. Nullability excluded: parquet reads relax it.
-    locally {
-      val got = codes.schema.take(CODES_SCHEMA.length)
-        .map(f => (f.name, f.dataType))
-      val want = CODES_SCHEMA.map(f => (f.name, f.dataType))
-      require(got == want,
-        s"stored '$table' table at $base reads as $got — drifted from " +
-          s"the shared codes schema $want; update CODES_SCHEMA and the " +
-          "write path together")
-    }
     val tombRoots = pending.map(k => (k, log.payload("tombstones", k)))
       .filter { case (_, p) => new java.io.File(p).exists() }
     if (tombRoots.isEmpty) codes.drop("seq")
@@ -2529,8 +2524,9 @@ object Similarity extends QueryModule {
       // outgrew that, the same plan degrades to a shuffled join, not a
       // rewrite.
       val tombs = tombRoots
-        .map { case (seq, p) => spark.read.parquet(p)
-          .select(col("vec_id"), lit(seq).as("tseq")) }
+        .map { case (seq, p) =>
+          spark.read.schema(INDEX_SCHEMAS("tombstones")).parquet(p)
+            .select(col("vec_id"), lit(seq).as("tseq")) }
         .reduce(_ unionByName _)
         .groupBy(col("vec_id")).agg(max(col("tseq")).as("tseq"))
       codes.join(tombs, Seq("vec_id"), "left")
@@ -2571,8 +2567,8 @@ object Similarity extends QueryModule {
       en: DataFrame): DataFrame = {
     val base = ensureIndex(spark, dir)
     ivfPqServe(en,
-      spark.read.parquet(s"$base/centroids"),
-      spark.read.parquet(s"$base/codebooks"),
+      readModel(spark, base, "centroids"),
+      readModel(spark, base, "codebooks"),
       readCodes(spark, base))
   }
 
@@ -2617,8 +2613,8 @@ object Similarity extends QueryModule {
     val base = ensureIndex(spark, dir)
     val en = normalizedCorpus(spark, dir).localCheckpoint()
     ivfPqServeFor(en,
-      spark.read.parquet(s"$base/centroids"),
-      spark.read.parquet(s"$base/codebooks"),
+      readModel(spark, base, "centroids"),
+      readModel(spark, base, "codebooks"),
       readCodes(spark, base),
       en.filter(col("vec_id") === vecId), k)
       .select(col("vec_id"), col("cosine"), col("rank"))
@@ -2639,8 +2635,8 @@ object Similarity extends QueryModule {
     val en = normalizedCorpus(spark, dir).localCheckpoint()
     val qw = queryWorkload(en, en)
     ivfPqServeFor(en,
-      spark.read.parquet(s"$base/centroids"),
-      spark.read.parquet(s"$base/codebooks"),
+      readModel(spark, base, "centroids"),
+      readModel(spark, base, "codebooks"),
       readCodes(spark, base), qw, IVF_TOP_K, labels = Some(lab))
       .join(broadcast(lab.select(col("vec_id").as("query_id"), col("label"))),
         "query_id")
@@ -2772,8 +2768,8 @@ object Similarity extends QueryModule {
     val base = ensureIndex(spark, dir)
     val en = normalizedCorpus(spark, dir).localCheckpoint()
     ivfPqResidualServe(en,
-      spark.read.parquet(s"$base/centroids"),
-      spark.read.parquet(s"$base/rcodebooks"),
+      readModel(spark, base, "centroids"),
+      readModel(spark, base, "rcodebooks"),
       readCodes(spark, base, "rcodes"))
   }
 

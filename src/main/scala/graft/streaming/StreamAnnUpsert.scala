@@ -4,6 +4,7 @@ import graft.Tables
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming ANN index maintenance — the serving tier's ingest loop
   * under the LIVE engine: embeddings arrive as a paced file stream and
@@ -47,6 +48,11 @@ object StreamAnnUpsert {
           "residue class would collapse a micro-batch")
       dest.toString
     }
+
+  /** [[stagedDeltaDir]]'s files: the embeddings fixture's (vec_id,
+    * embedding), the [[StreamingOps.drain]] source schema. */
+  private[graft] val DeltaSource = StructType(
+    Seq("vec_id", "embedding").map(Tables.schemas("embeddings")(_)))
 
   /** Known-ids mirror for a SINGLE-WRITER upsert-only maintenance
     * loop: the committed live vec_ids as a [[StateMirror]] — a
@@ -106,7 +112,7 @@ object StreamAnnUpsert {
     // The per-batch deltas are tiny; 32 shuffle partitions would be
     // pure task overhead on every window/join inside the upsert (the
     // runLive convention).
-    try StreamingOps.drain(spark, src, ckpt.toString, 8) { (ss, in) =>
+    try StreamingOps.drain(spark, src, DeltaSource, ckpt.toString, 8) { (ss, in) =>
       // Per-trigger idempotence runs against the in-memory known-ids
       // mirror: ONE storage read at loop start instead of a full-index
       // scan + all-ids distinct per micro-batch.

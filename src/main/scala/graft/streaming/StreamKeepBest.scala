@@ -85,7 +85,7 @@ object StreamKeepBest {
 
   /** Empty event log in its PERSISTED shape (batch_id included — the
     * partition-discovery column of the `events/batch_id=K` layout). */
-  private def emptyEvents(spark: SparkSession): DataFrame = {
+  private[graft] def emptyEvents(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long, Double, String, Long)]
       .toDF("doc_id", "comp", "quality", "action", "batch_id")
@@ -93,7 +93,7 @@ object StreamKeepBest {
 
   /** [[emptyBands]] in its PERSISTED shape (batch_id included) — the
     * generation-aware read's and the fold's schema anchor. */
-  private def emptyBandsPersisted(spark: SparkSession): DataFrame = {
+  private[graft] def emptyBandsPersisted(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Int, Long, Long, Long)]
       .toDF("band_idx", "band_key", "comp", "batch_id")
@@ -409,13 +409,16 @@ object StreamKeepBest {
     // While each table is within SMALL_STATE_KEYS rows the state is
     // held on the driver (Left): the band rows as [[DriverBands]] (band
     // key → min comp, the collapsedMin rule below) and comp → its
-    // latest canonical seat, each read here in one bounded job. Past
-    // that, both tables are [[StateMirror]]s (Right, for good), built
-    // from storage at the hand-off. Bands are read through
-    // the generation pointer (generation base + unfolded tail); events
-    // stay a plain committed-ids read — the event log never folds (see
-    // the object scaladoc's compaction boundary), and
-    // readPartitioned ignores the pointer. The band base and every
+    // latest canonical seat, each read here in one job. Past that,
+    // both tables are [[StateMirror]]s (Right, for good), built from
+    // storage at the hand-off. At construction the side of the bound
+    // is read off the parquet footers, with no fetch: the band rows
+    // exactly ([[StreamNearDedup.stateRows]]), the canonical seats
+    // bounded above by the committed event rows they consolidate.
+    // Bands are read through the generation pointer (generation base +
+    // unfolded tail); events stay a plain committed-ids read — the
+    // event log never folds (see the object scaladoc's compaction
+    // boundary), and readPartitioned ignores the pointer. The band base and every
     // merged band part COLLAPSE to one row per (band_idx, band_key)
     // holding the MIN comp: routing takes min over colliding clusters,
     // and min over per-part minima equals min over the full rows — so
@@ -448,13 +451,13 @@ object StreamKeepBest {
     private var state: Either[(DriverBands, mutable.LongMap[Contender]),
         (StateMirror, StateMirror)] =
       if (committedIds.isEmpty) Left((new DriverBands, mutable.LongMap.empty))
-      else (for {
-        bands <- Dedup.collectBounded(bandsAt(log.state(committedIds)),
-          Dedup.SMALL_STATE_KEYS)
-        canon <- Dedup.collectBounded(canonNow, Dedup.SMALL_STATE_KEYS)
-      } yield (DriverBands.of(bands), mutable.LongMap.from(
-        canon.map(r => r.getLong(0) -> incumbent(r.getLong(0), r)))))
-        .toLeft(mirrorsNow())
+      else if (StreamNearDedup.stateRows(log, log.state(committedIds), "bands") >
+          Dedup.SMALL_STATE_KEYS || graft.ParquetFooters.rowCount(
+            committedIds.toSeq.map(log.payload("events", _))) > Dedup.SMALL_STATE_KEYS)
+        Right(mirrorsNow())
+      else Left((DriverBands.of(bandsAt(log.state(committedIds)).collect()),
+        mutable.LongMap.from(canonNow.collect()
+          .map(r => r.getLong(0) -> incumbent(r.getLong(0), r)))))
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
@@ -648,7 +651,7 @@ object StreamKeepBest {
   private[graft] def runLiveAgainst(spark: SparkSession, path: String,
       ckpt: String, stateDir: String,
       foldEvery: Int = StreamNearDedup.DISK_FOLD_EVERY): Unit =
-    StreamingOps.drain(spark, path, ckpt,
+    StreamingOps.drain(spark, path, StreamNearDedup.DocsSource, ckpt,
         StreamNearDedup.triggerShufflePartitions(spark)) { (ss, src) =>
       val acc = new PersistentKeepBest(ss, stateDir, foldEvery = foldEvery)
       src.select(col("doc_id"), col("text")).writeStream

@@ -4,7 +4,7 @@ import graft.operators.Dedup
 import graft.storage.GenerationLog
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 /** Streaming near-duplicate ingest filter — the MinHash-LSH sibling of
   * [[StreamingOps.streamingDedup]]'s exact first-touch dedup, and the
@@ -151,6 +151,12 @@ object StreamNearDedup {
   }
 
   // --- driver-side admission of small micro-batches -----------------------
+
+  /** The (doc_id, text) columns the admission streams read from their
+    * staged documents files — the [[StreamingOps.drain]] source schema
+    * of both accumulators' live runs. */
+  private[graft] val DocsSource = new StructType()
+    .add("doc_id", LongType).add("text", StringType)
 
   /** The persisted band-key delta of one near-dedup batch. */
   private val BandsDelta = new StructType()
@@ -357,9 +363,11 @@ object StreamNearDedup {
     // overwrites them and lands the marker), read through the
     // generation pointer: generation base + unfolded tail. Within
     // SMALL_STATE_KEYS rows they are held on the driver (Left), read in
-    // one bounded job; past it in the mirror (Right, for good),
-    // checkpointed band-clustered so the per-trigger probe's state side
-    // is a sorted merge scan.
+    // one job; past it in the mirror (Right, for good), checkpointed
+    // band-clustered so the per-trigger probe's state side is a sorted
+    // merge scan. Which side of the bound the state is on is read off
+    // the parquet footers ([[stateRows]]), so a restart past it
+    // fetches nothing.
     private def bandsAt(st: GenerationLog.State): DataFrame =
       readState(spark, log, st, "bands").select(col("band_idx"), col("band_key"))
     private def mirrorNow(): StateMirror =
@@ -367,8 +375,9 @@ object StreamNearDedup {
         parts => ckptClustered(spark, parts.reduce(_ unionAll _)))
     private var state: Either[DriverBands, StateMirror] =
       if (committedIds.isEmpty) Left(new DriverBands)
-      else Dedup.collectBounded(bandsAt(log.state(committedIds)), Dedup.SMALL_STATE_KEYS)
-        .map(DriverBands.of(_)).toLeft(mirrorNow())
+      else if (stateRows(log, log.state(committedIds), "bands") >
+        Dedup.SMALL_STATE_KEYS) Right(mirrorNow())
+      else Left(DriverBands.of(bandsAt(log.state(committedIds)).collect()))
     private var sinceDiskFold =
       if (foldEvery > 0) log.state(committedIds).pending.size else 0
 
@@ -561,7 +570,7 @@ object StreamNearDedup {
     * per-batch read's fallback when every committed dir wrote zero
     * rows must union cleanly with a generation base, so it carries
     * batch_id). */
-  private def emptyTable(spark: SparkSession, table: String): DataFrame = {
+  private[graft] def emptyTable(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     table match {
       case "bands" => Seq.empty[(Int, Long, Long)]
@@ -602,13 +611,22 @@ object StreamNearDedup {
           s"but its base $baseDir is missing — state storage is corrupt; " +
           "restore the base or delete the MANIFEST to fall back to " +
           "per-batch layout")
-      spark.read.parquet(baseDir).unionByName(fresh)
+      spark.read.schema(empty.schema).parquet(baseDir).unionByName(fresh)
     }
   }
 
   private def readState(spark: SparkSession, log: GenerationLog,
       st: GenerationLog.State, table: String): DataFrame =
     readState(spark, log, st, table, emptyTable(spark, table))
+
+  /** The rows [[readState]] returns for `table` at `st`, summed from
+    * the parquet footers of the same files on the driver — no Spark
+    * job, exact (the read filters nothing beyond the ids it covers). */
+  private[graft] def stateRows(log: GenerationLog,
+      st: GenerationLog.State, table: String): Long =
+    graft.ParquetFooters.rowCount(
+      Option.when(st.generation != 0L)(log.tableRoot(table, st.generation))
+        .toSeq ++ st.pending.map(log.payload(table, _)))
 
   /** Fold the committed per-batch state dirs into a new generation
     * base — the LSM compaction step of a long-lived ingest. Without it
@@ -646,28 +664,16 @@ object StreamNearDedup {
   }
 
   /** Read a per-batch partitioned state table restricted to COMMITTED
-    * batches. The `batch_id=K` directory layout makes `batch_id` a
-    * discovered partition column (int-inferred — recast to long). */
+    * batches, under `empty`'s schema: the `batch_id=K` directory layout
+    * makes `batch_id` a discovered partition column, declared long. A
+    * table whose committed batches all wrote ZERO rows (partition dirs
+    * with no data files) reads as empty under that schema. */
   private[streaming] def readPartitioned(spark: SparkSession, path: String,
-      committed: Set[Long], empty: => DataFrame): DataFrame = {
-    val root = java.nio.file.Paths.get(path)
-    // Batches that wrote ZERO rows leave partition dirs with no data
-    // files; if every committed batch did, schema inference has nothing
-    // to read — that degenerate table IS empty. The no-data-file check
-    // is explicit (not a broad AnalysisException catch): any OTHER
-    // analysis failure is state-layout corruption and must fail loudly,
-    // not silently resume from empty state and re-admit near-dups.
-    def hasDataFile = scala.util.Using.resource(java.nio.file.Files.walk(root)) {
-      s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-    }
-    if (!java.nio.file.Files.exists(root) || committed.isEmpty || !hasDataFile)
-      empty
-    else spark.read.parquet(path)
-      .withColumn("batch_id", col("batch_id").cast("long"))
+      committed: Set[Long], empty: => DataFrame): DataFrame =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)) ||
+        committed.isEmpty) empty
+    else spark.read.schema(empty.schema).parquet(path)
       .filter(col("batch_id").isInCollection(committed))
-  }
 
   /** The committed admitted rows (doc_id, text, batch_id) under a
     * state dir — shared by the accumulator and the gate queries'
@@ -685,8 +691,7 @@ object StreamNearDedup {
     * [[StreamingOps.stageOnce]]). */
   private def stagedDocsDir(spark: SparkSession, dir: String): String =
     StreamingOps.stageOnce(spark, dir, "graft_neardedup_src_") {
-      spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
+      graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     }
 
   /** Gate/bench query: the admission filter executed by the LIVE
@@ -752,7 +757,7 @@ object StreamNearDedup {
   private[graft] def runLiveAgainst(spark: SparkSession, path: String,
       paced: Boolean, ckpt: String, stateDir: String,
       foldEvery: Int = DISK_FOLD_EVERY): Unit =
-    StreamingOps.drain(spark, path, ckpt, triggerShufflePartitions(spark),
+    StreamingOps.drain(spark, path, DocsSource, ckpt, triggerShufflePartitions(spark),
         paced = paced) { (ss, src) =>
       val acc = new PersistentAccumulator(ss, stateDir, foldEvery = foldEvery,
         spreadBatches = paced)
@@ -774,7 +779,7 @@ object StreamNearDedup {
     pacedStaged.getOrElseUpdate(spark, dir) {
       val nb = Dedup.PACED_BATCHES
       val dest = graft.Scratch.dir("graft_neardedup_paced_")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
       // The paced ORACLE replays batch k = residue class k, so unlike
       // the range-sliced trending stage an empty residue class may not

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** Per-key trending state (the reference's `mapWithState` tuple
   * `(curCount, "%08d" time, prevCount)` — `TrendingArrivals.scala:86-98`). */
@@ -277,10 +278,22 @@ object StreamingOps extends QueryModule {
       dest
     }
 
-  private def stagedEventsDir(spark: SparkSession, dir: String): String =
+  private[graft] def stagedEventsDir(spark: SparkSession, dir: String): String =
     stageOnce(spark, dir, "graft_stream_src_") {
       Tables.events(spark, dir).repartitionByRange(8, col("ts"))
     }
+
+  /** The events as [[Tables.events]] loads them (`ts` the
+    * session-timezone TIMESTAMP): [[stagedEventsDir]]'s files, and the
+    * declared schema each events-staged live query hands [[drain]]. */
+  private[graft] val EventsSource = StructType(Tables.schemas("events").map(f =>
+    if (f.name == "ts") f.copy(dataType = TimestampType) else f))
+  /** [[stagedSessionsDir]]'s files. */
+  private[graft] val SessionsSource =
+    StructType(Seq("user_id", "ts").map(EventsSource(_)))
+  /** [[stagedTrendingDir]]'s files. */
+  private[graft] val TrendingSource =
+    StructType(Seq("event_id", "event_type", "ts").map(EventsSource(_)))
 
   private val liveRuns = new java.util.concurrent.atomic.AtomicLong()
 
@@ -294,7 +307,7 @@ object StreamingOps extends QueryModule {
     * `event_count_hourly`'s DuckDB oracle and gives the bench a
     * wall-time number for the streaming engine itself. */
   def streamHourlyLive(spark: SparkSession, dir: String): DataFrame =
-    runLive(spark, stagedEventsDir(spark, dir),
+    runLive(spark, stagedEventsDir(spark, dir), EventsSource,
       "stream_hourly_live", "complete")(eventCounts)
       .orderBy(col("window_start"))
 
@@ -314,10 +327,10 @@ object StreamingOps extends QueryModule {
     * terminal watermark advance that seals their final sessions, and
     * there the memory sink accumulates only what the watermark has
     * SEALED and emitted, which is the eviction semantics under test. */
-  private def runLive(spark: SparkSession, src: String,
+  private def runLive(spark: SparkSession, src: String, schema: StructType,
       namePrefix: String, mode: String)(
       build: DataFrame => DataFrame): DataFrame =
-    memoryRows(spark, namePrefix, src,
+    memoryRows(spark, namePrefix, src, schema,
       if (mode == "append") Map.empty else noDataBatchesOff)(
       build(_).writeStream.outputMode(mode))
 
@@ -335,13 +348,13 @@ object StreamingOps extends QueryModule {
     * exercises — these queries' job is to wall-clock the live engine
     * on a driver-safe aggregate. */
   private def memoryRows(spark: SparkSession, namePrefix: String, src: String,
-      confs: Map[String, String])(
+      schema: StructType, confs: Map[String, String])(
       sink: DataFrame => DataStreamWriter[_]): DataFrame = {
     val name = s"${namePrefix}_${liveRuns.incrementAndGet()}"
     val ckpt = graft.Scratch.dir("graft_stream_ckpt_")
-    val (schema, rows) =
+    val (outSchema, rows) =
       try {
-        val q = drain(spark, src, ckpt.toString, 4, confs) { (_, in) =>
+        val q = drain(spark, src, schema, ckpt.toString, 4, confs) { (_, in) =>
           sink(in).format("memory").queryName(name)
         }
         val ss = q.sparkSession
@@ -350,7 +363,7 @@ object StreamingOps extends QueryModule {
           (out.schema, out.collect().toSeq)
         } finally ss.catalog.dropTempView(name)
       } finally deleteRecursively(ckpt)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), outSchema)
   }
 
   /** The one live-run scaffold: drain the parquet files under `src`
@@ -359,12 +372,14 @@ object StreamingOps extends QueryModule {
     * conf and catalog are never touched) with `shufflePartitions`
     * sized to one micro-batch's delta, `confs` on top, checkpoint
     * retention trimmed to 2 (the default keeps 100 versions), a file
-    * source with the files' parquet schema — `paced` to one file per
-    * micro-batch unless told otherwise — checkpointed at `ckpt`, under
-    * `Trigger.AvailableNow`. `sink` gets the session and the source
-    * and returns the writer; its `start` and termination wait happen
-    * here, with `stop` on every exit. */
-  private[graft] def drain(spark: SparkSession, src: String, ckpt: String,
+    * source under `schema` — the caller staged the files, so it
+    * declares their schema and no inference job runs; `paced` to one
+    * file per micro-batch unless told otherwise — checkpointed at
+    * `ckpt`, under `Trigger.AvailableNow`. `sink` gets the session and
+    * the source and returns the writer; its `start` and termination
+    * wait happen here, with `stop` on every exit. */
+  private[graft] def drain(spark: SparkSession, src: String,
+      schema: StructType, ckpt: String,
       shufflePartitions: Int, confs: Map[String, String] = Map.empty,
       paced: Boolean = true)(
       sink: (SparkSession, DataFrame) => DataStreamWriter[_]): StreamingQuery = {
@@ -372,7 +387,7 @@ object StreamingOps extends QueryModule {
     ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
     confs.foreach { case (k, v) => ss.conf.set(k, v) }
-    val reader = ss.readStream.schema(ss.read.parquet(src).schema)
+    val reader = ss.readStream.schema(schema)
     val in = (if (paced) reader.option("maxFilesPerTrigger", 1) else reader)
       .parquet(src)
     val q = sink(ss, in)
@@ -405,7 +420,7 @@ object StreamingOps extends QueryModule {
     // batch-boundary fragments (measured: 832 of 946 sessions survive
     // watermarked at sf0.001) — eviction semantics belong to the
     // append-mode path StreamingSpec covers.
-    runLive(spark, stagedEventsDir(spark, dir),
+    runLive(spark, stagedEventsDir(spark, dir), EventsSource,
       "stream_sessions_live", "complete")(userSessions(_, watermarked = false))
       .orderBy(col("user_id"), col("session_start"))
 
@@ -465,7 +480,7 @@ object StreamingOps extends QueryModule {
     * exercised because sessions straddle slice boundaries while the
     * 2-hour watermark lag keeps their fragments unsealed until merged. */
   def streamSessionsAppend(spark: SparkSession, dir: String): DataFrame =
-    runLive(spark, stagedSessionsDir(spark, dir),
+    runLive(spark, stagedSessionsDir(spark, dir), SessionsSource,
       "stream_sessions_append", "append")(userSessions(_))
       .orderBy(col("user_id"), col("session_start"))
 
@@ -600,7 +615,7 @@ object StreamingOps extends QueryModule {
     val confs = noDataBatchesOff + ("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     memoryRows(spark, "stream_trending_live", stagedTrendingDir(spark, dir),
-        confs) { in =>
+        TrendingSource, confs) { in =>
       import in.sparkSession.implicits._
       trendingRawStateMachine(in.as[RawEvent]).writeStream.outputMode("update")
     }.orderBy(col("event_type"), col("window_start"))

@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
   * query launches, its wall-clock, summed task time, stage and task
   * counts — so "where does the time go" separates executor compute
   * from scheduler/driver gaps (wall >> task-sum/cores = the job is
-  * overhead-bound, not compute-bound). Profiling aid only, like
+  * overhead-bound, not compute-bound). A job with no description is
+  * named by its final stage's call site (`parquet at <file>:<line>`),
+  * so schema-inference and write jobs show where they come from.
+  * Profiling aid only, like
   * [[QueryProbe]]: `sbt "runMain
   * graft.tools.JobProbe <query> [reps]"`. */
 object JobProbe {
@@ -38,8 +41,9 @@ object JobProbe {
         jobStart.put(e.jobId, e.time)
         e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
         jobs.put(e.jobId, JobRow(e.jobId, 0, 0, e.stageIds.size, 0,
-          Option(e.properties).map(_.getProperty("spark.job.description"))
-            .flatMap(Option(_)).getOrElse("").take(60)))
+          Option(e.properties).flatMap(p =>
+              Option(p.getProperty("spark.job.description")))
+            .getOrElse(e.stageInfos.maxBy(_.stageId).name).take(60)))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val r = jobs.get(e.jobId)

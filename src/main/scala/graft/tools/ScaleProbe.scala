@@ -396,7 +396,8 @@ object ScaleProbe {
         spark, dir.toString)
       val ckpt = graft.Scratch.dir("graft_sf1_sess_ckpt_")
       try {
-        val q = graft.streaming.StreamingOps.drain(spark, src, ckpt.toString, 4) {
+        val q = graft.streaming.StreamingOps.drain(spark, src,
+          graft.streaming.StreamingOps.SessionsSource, ckpt.toString, 4) {
           (_, in) =>
             graft.streaming.StreamingOps.userSessions(in)
               .writeStream.format("memory").queryName("sf1_sessions_append")

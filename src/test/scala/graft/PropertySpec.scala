@@ -358,9 +358,10 @@ class PropertySpec extends SparkSpecBase {
     * the in-memory [[graft.streaming.StreamNearDedup.Accumulator]] and
     * the [[graft.streaming.StreamKeepBest.keepBestBatch]] chain. With
     * `restartAt` ≥ 0, fresh accumulator instances over the same state
-    * dirs take over from batch `restartAt` on — the resume path. */
+    * dirs take over from batch `restartAt` on — the resume path — and
+    * the call sites of the jobs their constructors start are returned. */
   private def admissionMatchesReference(bs: Seq[Seq[(Long, String)]],
-      restartAt: Int = -1): Unit = {
+      restartAt: Int = -1): Seq[String] = {
     import graft.streaming.{StreamKeepBest, StreamNearDedup}
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
@@ -369,12 +370,19 @@ class PropertySpec extends SparkSpecBase {
       df.select(cs.map(col): _*).collect().map(_.toSeq).toSet
     val nd = java.nio.file.Files.createTempDirectory("graft_prop_nd_")
     val kb = java.nio.file.Files.createTempDirectory("graft_prop_kb_")
+    var restartSites = Seq.empty[String]
+    def restarted[A](tag: String)(make: => A): A = {
+      var made: Option[A] = None
+      restartSites ++= callSitesPerCall(Seq(tag -> (() => made = Some(make))))(tag)
+      made.get
+    }
     try {
       var persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
       val reference = new StreamNearDedup.Accumulator(spark)
       batches.zipWithIndex.foreach { case (b, k) =>
         if (k == restartAt)
-          persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
+          persistent = restarted("near-dedup restart")(
+            new StreamNearDedup.PersistentAccumulator(spark, nd.toString))
         persistent.onBatch(b, k.toLong)
         reference.onBatch(b, k.toLong)
       }
@@ -385,7 +393,8 @@ class PropertySpec extends SparkSpecBase {
       var keepBest = new StreamKeepBest.PersistentKeepBest(spark, kb.toString)
       batches.zipWithIndex.foreach { case (b, k) =>
         if (k == restartAt)
-          keepBest = new StreamKeepBest.PersistentKeepBest(spark, kb.toString)
+          keepBest = restarted("keep-best restart")(
+            new StreamKeepBest.PersistentKeepBest(spark, kb.toString))
         keepBest.onBatch(b, k.toLong)
       }
       var bands = StreamKeepBest.emptyBands(spark)
@@ -406,6 +415,7 @@ class PropertySpec extends SparkSpecBase {
       assert(got == rows(events.reduce(_ unionByName _), kbCols: _*),
         s"keep-best differs on $bs")
       assert(got.size == bs.map(_.size).sum)
+      restartSites
     } finally {
       graft.streaming.StreamingOps.deleteRecursively(nd)
       graft.streaming.StreamingOps.deleteRecursively(kb)
@@ -447,6 +457,11 @@ class PropertySpec extends SparkSpecBase {
       operators.Dedup.SMALL_STATE_KEYS)
     assert(bs.forall(_.size <= operators.Dedup.SMALL_BATCH_ROWS))
     admissionMatchesReference(bs)
-    admissionMatchesReference(bs, restartAt = 2)
+    // The restart learns from the parquet footers that the state is
+    // past the bound and builds the mirrors with no fetch of the state
+    // to the driver.
+    val sites = admissionMatchesReference(bs, restartAt = 2)
+    assert(sites.nonEmpty && !sites.exists(_.startsWith("collect at")),
+      s"restart constructors started: $sites")
   }
 }

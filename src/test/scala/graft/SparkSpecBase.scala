@@ -32,16 +32,26 @@ abstract class SparkSpecBase extends AnyFunSuite {
     * call runs under its own job group, and a fence job after it cuts
     * the ordered job starts into per-call segments, so a job that lost
     * its group still lands in its call's segment. */
-  protected def jobsPerCall(calls: Seq[(String, () => Any)]): Map[String, Vector[String]] = {
+  protected def jobsPerCall(calls: Seq[(String, () => Any)]): Map[String, Vector[String]] =
+    jobStartsPerCall(calls).map { case (g, jobs) => g -> jobs.map(_._1) }
+
+  /** [[jobsPerCall]]'s jobs named instead by their final stage's call
+    * site (`collect at <file>:<line>`). */
+  protected def callSitesPerCall(calls: Seq[(String, () => Any)]): Map[String, Vector[String]] =
+    jobStartsPerCall(calls).map { case (g, jobs) => g -> jobs.map(_._2) }
+
+  /** (job-group id, final-stage call site) of each job each call starts. */
+  private def jobStartsPerCall(calls: Seq[(String, () => Any)])
+      : Map[String, Vector[(String, String)]] = {
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
+        jobs.add((Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
+          .getOrElse(""), e.stageInfos.maxBy(_.stageId).name))
     }
     def fence(tag: String): Unit = {
       sc.setJobGroup(tag, tag)
@@ -57,11 +67,12 @@ abstract class SparkSpecBase extends AnyFunSuite {
       }
       val last = s"fence-${calls.last._1}"
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(last) && System.nanoTime() < deadline) Thread.sleep(20)
-      val seen = groups.asScala.toVector.dropWhile(_ != "fence-start").drop(1)
-      calls.map(_._1).foldLeft((seen, Map.empty[String, Vector[String]])) {
+      while (!jobs.asScala.exists(_._1 == last) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val seen = jobs.asScala.toVector.dropWhile(_._1 != "fence-start").drop(1)
+      calls.map(_._1).foldLeft((seen, Map.empty[String, Vector[(String, String)]])) {
         case ((rest, acc), g) =>
-          val (seg, tail) = rest.span(_ != s"fence-$g")
+          val (seg, tail) = rest.span(_._1 != s"fence-$g")
           (tail.drop(1), acc + (g -> seg))
       }._2
     } finally sc.removeSparkListener(listener)

@@ -3,7 +3,8 @@ package graft
 import graft.functions.TextFns
 import graft.operators.Tokenizer
 
-/** Pins [[graft.operators.Tokenizer]]'s distributed BPE loop to a
+/** Pins both of [[graft.operators.Tokenizer]]'s BPE training bodies —
+  * the distributed loop and the driver body small corpora take — to a
   * plain sequential replay of Sennrich-style merge training: same
   * pair counts (overlapping occurrences included), same deterministic
   * argmax tie-break, same greedy left-to-right rewrite — including the
@@ -49,15 +50,25 @@ class TokenizerSpec extends SparkSpecBase {
     (ms.result(), st)
   }
 
+  /** Both training bodies over `texts`, each as (body, merges, final
+    * state in doc_id order): [[Tokenizer.driverTrain]] on the fetched
+    * rows and [[Tokenizer.distributedTrain]] on the frame, whatever
+    * `trainOn` would pick for a corpus this size. Plus the sequential
+    * replay's merges and state. */
   private def runBoth(texts: Seq[String], rounds: Int) = {
     val df = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val (merges, state) = Tokenizer.trainOn(df, rounds)
-    val got = state.orderBy("doc_id")
-      .collect().map(r => r.getSeq[String](1).toVector).toSeq
+    val rows = df.select($"doc_id", TextFns.tokenize($"text").as("ts")).collect()
+    val bodies = Seq(
+      "driver" -> Tokenizer.driverTrain(spark, rows, rounds),
+      "distributed" -> Tokenizer.distributedTrain(df, rounds, needState = true))
+      .map { case (body, (merges, state)) =>
+        (body, merges, state.orderBy("doc_id")
+          .collect().map(r => r.getSeq[String](1).toVector).toSeq)
+      }
     val (expM, expSt) =
       replayTrain(texts.map(t => TextFns.tokenizeLocal(t).toVector), rounds)
-    (merges, got, expM, expSt)
+    (bodies, expM, expSt)
   }
 
   test("distributed loop matches the sequential replay on a crafted corpus") {
@@ -69,15 +80,19 @@ class TokenizerSpec extends SparkSpecBase {
       "solo",                 // single token: no pairs, must survive
       "",                     // empty doc: must survive as an empty state
       "the big the big the")
-    val (merges, got, expM, expSt) = runBoth(texts, 6)
-    assert(merges === expM)
-    assert(got === expSt)
+    val (bodies, expM, expSt) = runBoth(texts, 6)
+    bodies.foreach { case (body, merges, got) =>
+      assert(merges === expM, body)
+      assert(got === expSt, body)
+    }
   }
 
   test("a==b runs merge alternately (greedy left-to-right)") {
-    val (merges, got, _, _) = runBoth(Seq("b b b b b"), 1)
-    assert(merges.head._2 === "b" && merges.head._3 === "b")
-    assert(got.head === Vector("b_b", "b_b", "b"))
+    val (bodies, _, _) = runBoth(Seq("b b b b b"), 1)
+    bodies.foreach { case (body, merges, got) =>
+      assert(merges.head._2 === "b" && merges.head._3 === "b", body)
+      assert(got.head === Vector("b_b", "b_b", "b"), body)
+    }
   }
 
   test("fuzz: random corpora agree with the replay round for round") {
@@ -87,9 +102,11 @@ class TokenizerSpec extends SparkSpecBase {
       val texts = Seq.fill(12)(
         Seq.fill(1 + rnd.nextInt(14))(vocab(rnd.nextInt(vocab.size)))
           .mkString(" "))
-      val (merges, got, expM, expSt) = runBoth(texts, 4)
-      assert(merges === expM, s"merge table diverged on trial $trial")
-      assert(got === expSt, s"final state diverged on trial $trial")
+      val (bodies, expM, expSt) = runBoth(texts, 4)
+      bodies.foreach { case (body, merges, got) =>
+        assert(merges === expM, s"$body merge table diverged on trial $trial")
+        assert(got === expSt, s"$body final state diverged on trial $trial")
+      }
     }
   }
 
@@ -98,10 +115,12 @@ class TokenizerSpec extends SparkSpecBase {
       "the big cat sat on the big mat",
       "b b b b the the the",
       "one two one two one two")
-    val (_, got, _, _) = runBoth(texts, 5)
-    got.zip(texts).foreach { case (syms, t) =>
-      assert(syms.mkString(" ").replace(Tokenizer.JOIN, " ").trim ===
-        TextFns.tokenizeLocal(t).mkString(" "))
+    val (bodies, _, _) = runBoth(texts, 5)
+    bodies.foreach { case (body, _, got) =>
+      got.zip(texts).foreach { case (syms, t) =>
+        assert(syms.mkString(" ").replace(Tokenizer.JOIN, " ").trim ===
+          TextFns.tokenizeLocal(t).mkString(" "), body)
+      }
     }
   }
 
