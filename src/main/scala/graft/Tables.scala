@@ -65,7 +65,7 @@ object Tables {
     * integer division; epoch-nanos exceed 2^53 so a double round-trip
     * would corrupt them) vs plain TIMESTAMP(MICROS) without timezone
     * (read natively as TIMESTAMP_NTZ). The generation at hand is read
-    * off ONE footer on the driver ([[ParquetFooters]], no Spark job)
+    * off ONE footer on the driver ([[LocalParquet]], no Spark job)
     * and declared as the `ts` type of the read; either generation then
     * loads to the same µs-precision TIMESTAMP column: NTZ is cast to
     * the session-timezone type — value-preserving under the engine's
@@ -76,7 +76,7 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$d/events.parquet"
-    val ts = ParquetFooters.timestampType(path, "ts")
+    val ts = LocalParquet.timestampType(path, "ts")
     val raw = s.read.schema(StructType(schemas("events").map(f =>
       if (f.name == "ts") f.copy(dataType = ts) else f))).parquet(path)
     ts match {

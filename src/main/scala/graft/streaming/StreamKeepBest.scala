@@ -269,9 +269,9 @@ object StreamKeepBest {
   }
 
   /** The persisted deltas of one keep-best batch. */
-  private val BandsDelta = new StructType().add("band_idx", IntegerType)
+  private[graft] val BandsDelta = new StructType().add("band_idx", IntegerType)
     .add("band_key", LongType).add("comp", LongType)
-  private val EventsDelta = new StructType().add("doc_id", LongType)
+  private[graft] val EventsDelta = new StructType().add("doc_id", LongType)
     .add("comp", LongType).add("quality", DoubleType).add("action", StringType)
 
   /** One contender for a cluster's canonical seat: a fresh-cluster
@@ -383,9 +383,10 @@ object StreamKeepBest {
 
   /** Keep-best admission state EXTERNALIZED to storage (the object
     * scaladoc's log; overwrite-per-batch idempotence, committed-only
-    * visibility): band-key deltas to
-    * `bands/batch_id=K`, the per-doc event deltas to
-    * `events/batch_id=K`. A restarted query rebuilds BOTH in-memory
+    * visibility): band-key deltas to `bands/batch_id=K`, the per-doc
+    * event deltas to `events/batch_id=K` — a small batch's written on
+    * the driver ([[StreamNearDedup.writeLocalDeltas]]), a bigger one's
+    * as Spark writes. A restarted query rebuilds BOTH in-memory
     * mirrors from committed storage — the band footprint directly,
     * the canonical table by [[consolidate]]-ing the event log — so
     * canonical replacements survive a crash without a third table. */
@@ -452,7 +453,7 @@ object StreamKeepBest {
         (StateMirror, StateMirror)] =
       if (committedIds.isEmpty) Left((new DriverBands, mutable.LongMap.empty))
       else if (StreamNearDedup.stateRows(log, log.state(committedIds), "bands") >
-          Dedup.SMALL_STATE_KEYS || graft.ParquetFooters.rowCount(
+          Dedup.SMALL_STATE_KEYS || graft.LocalParquet.rowCount(
             committedIds.toSeq.map(log.payload("events", _))) > Dedup.SMALL_STATE_KEYS)
         Right(mirrorsNow())
       else Left((DriverBands.of(bandsAt(log.state(committedIds)).collect()),
@@ -476,13 +477,14 @@ object StreamKeepBest {
       *
       * A micro-batch of at most [[Dedup.SMALL_BATCH_ROWS]] rows is
       * decided on the driver ([[StreamNearDedup.fetchSmall]],
-      * [[keepBestSmall]]). While both state tables are within
-      * [[Dedup.SMALL_STATE_KEYS]] rows they are probed in Scala, and
-      * the trigger runs exactly 3 jobs: the fetch and the two delta
-      * writes. Past that bound it adds one probe query per state table
-      * it needs ([[StreamNearDedup.bandHits]], [[probeCanon]]),
-      * whatever the number of mirror parts, each a broadcast job and a
-      * collect job: 7 jobs when a doc collides, 5 when none does.
+      * [[keepBestSmall]]) and its two deltas are written there too
+      * ([[StreamNearDedup.writeLocalDeltas]]). While both state tables
+      * are within [[Dedup.SMALL_STATE_KEYS]] rows they are probed in
+      * Scala, and the trigger runs exactly 1 job: the fetch. Past that
+      * bound it adds one probe query per state table it needs
+      * ([[StreamNearDedup.bandHits]], [[probeCanon]]), whatever the
+      * number of mirror parts, each a broadcast job and a collect job:
+      * 5 jobs when a doc collides, 3 when none does.
       *
       * A bigger batch runs the distributed [[keepBestWithKeys]] body,
       * compute-once/write-concurrent (r21, guide §2.6): the events plan
@@ -501,15 +503,16 @@ object StreamKeepBest {
       * delta of one committed batch therefore always agree
       * (StreamNearDedupSpec pins a recompute against the persist).
       *
-      * Either way the two delta writes run as concurrent job chains
-      * settled via awaitAll, and the marker lands only after BOTH, so
-      * replay visibility is unchanged. Within the bound the trigger's
-      * own event and band-delta rows advance the driver state, after
-      * the commit and never before it; a commit that takes either table
-      * past the bound, or the first bigger batch (before its body),
-      * hands off to the mirrors ([[handOff]]). The canonical mirror's delta layer reads the COMMITTED events
-      * file lazily — later triggers never reference a per-trigger
-      * cache. Mirror folds are LAZY (both [[StateMirror]]s): between
+      * Either way the marker lands only after BOTH delta writes (the
+      * distributed body's run as concurrent job chains settled via
+      * awaitAll), so replay visibility is unchanged. Within the bound
+      * the trigger's own event and band-delta rows advance the driver
+      * state, after the commit and never before it; a commit that takes
+      * either table past the bound, or the first bigger batch (before
+      * its body), hands off to the mirrors ([[handOff]]). The canonical
+      * mirror's delta layer reads the COMMITTED events file lazily —
+      * later triggers never reference a per-trigger cache. Mirror folds
+      * are LAZY (both [[StateMirror]]s): between
       * fold points each mirror is its checkpointed base plus up to
       * [[StreamNearDedup.MEM_FOLD_EVERY]] committed delta scans. Every
       * `foldEvery` committed batches the on-disk band layout folds
@@ -544,8 +547,8 @@ object StreamKeepBest {
                   StreamNearDedup.bandHits(spark, bands.parts, small, col("comp")),
                   probeCanon(spark, canon.parts, _))
             }
-            writeDeltas(batchId, StreamNearDedup.localFrame(spark, events, EventsDelta),
-              StreamNearDedup.localFrame(spark, bandDelta, BandsDelta), label)
+            StreamNearDedup.writeLocalDeltas(spark, log, batchId,
+              Seq(("events", events, EventsDelta), ("bands", bandDelta, BandsDelta)))
             (events, bandDelta)
           case None =>
             keepBestDistributed(batch0, batchId, label)
@@ -622,10 +625,11 @@ object StreamKeepBest {
       }
     }
 
-    /** The two delta writes as concurrent job chains, each labeled and
-      * run under the trigger's local properties; coalesce(1): one
-      * batch's delta, sized like the first-touch accumulator's — a
-      * production job sizes this to batch volume. */
+    /** The distributed body's two delta writes as concurrent job
+      * chains, each labeled and run under the trigger's local
+      * properties; coalesce(1): one batch's delta, sized like the
+      * first-touch accumulator's — a production job sizes this to batch
+      * volume. */
     private def writeDeltas(batchId: Long, events: DataFrame,
         bandDelta: DataFrame, label: String => Unit): Unit =
       StreamingOps.awaitAll(Seq(("events", "events write", events),

@@ -159,7 +159,7 @@ object StreamNearDedup {
     .add("doc_id", LongType).add("text", StringType)
 
   /** The persisted band-key delta of one near-dedup batch. */
-  private val BandsDelta = new StructType()
+  private[graft] val BandsDelta = new StructType()
     .add("band_idx", IntegerType).add("band_key", LongType)
 
   /** A micro-batch fetched to the driver: its (doc_id, text) `rows`
@@ -182,9 +182,10 @@ object StreamNearDedup {
       extra: Column*): Option[SmallBatch] = {
     val fetch = batch.select(col("doc_id"), col("text"))
     Dedup.collectBounded(fetch, Dedup.SMALL_BATCH_ROWS).map { rows =>
+      import scala.jdk.CollectionConverters._
       val xs = extra.indices.map(i => s"x$i")
       val docs = Dedup.withBandArray(
-          localFrame(batch.sparkSession, rows, fetch.schema).select(
+          batch.sparkSession.createDataFrame(rows.toSeq.asJava, fetch.schema).select(
             Seq(col("doc_id").cast("long").as("doc_id"), col("text")) ++
               extra.zip(xs).map { case (c, x) => c.as(x) }: _*))
         .select(Seq("doc_id", "bands").map(col) ++ xs.map(col): _*)
@@ -196,11 +197,20 @@ object StreamNearDedup {
     }
   }
 
-  private[streaming] def localFrame(spark: SparkSession, rows: collection.Seq[Row],
-      schema: StructType): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-  }
+  /** A small batch's deltas — (table, rows, schema) — written on the
+    * driver ([[graft.LocalParquet.write]], no Spark job) in the
+    * overwrite posture of the distributed writes: each payload
+    * directory is deleted, then written, so a replay of an uncommitted
+    * batch replaces whatever a crashed attempt left there. The caller
+    * lands the marker after the last one. */
+  private[streaming] def writeLocalDeltas(spark: SparkSession, log: GenerationLog,
+      batchId: Long, deltas: Seq[(String, Seq[Row], StructType)]): Unit =
+    deltas.foreach { case (table, rows, schema) =>
+      val dir = log.payload(table, batchId)
+      val path = java.nio.file.Paths.get(dir)
+      if (java.nio.file.Files.exists(path)) StreamingOps.deleteRecursively(path)
+      graft.LocalParquet.write(spark, rows, schema, dir)
+    }
 
   /** (doc_id, band_idx, band_key) rows of driver-held band keys. */
   private[streaming] def keyFrame(spark: SparkSession,
@@ -309,7 +319,9 @@ object StreamNearDedup {
     * tables are a [[graft.storage.GenerationLog]] (nothing is inferred
     * from data rows, so a batch admitting zero docs commits exactly
     * like any other). Each batch's writes go to its own directories in
-    * OVERWRITE mode, its marker lands last, only marker-bearing batches
+    * OVERWRITE mode — a small batch's on the driver
+    * ([[writeLocalDeltas]]), a bigger one's as Spark writes — its
+    * marker lands last, only marker-bearing batches
     * are visible — to the resume-time state mirror, to [[readAdmitted]]
     * and to the skip check — and a batch whose marker exists is skipped
     * outright on redelivery. At 100 TB the parquet pair becomes a keyed
@@ -394,13 +406,13 @@ object StreamNearDedup {
     /** The foreachBatch body (serial per query; lock defensive).
       *
       * A micro-batch of at most [[Dedup.SMALL_BATCH_ROWS]] rows is
-      * decided on the driver ([[fetchSmall]], [[admitSmall]]). While
+      * decided on the driver ([[fetchSmall]], [[admitSmall]]) and its
+      * two deltas are written there too ([[writeLocalDeltas]]). While
       * the committed state is within [[Dedup.SMALL_STATE_KEYS]] rows it
-      * is probed in Scala, and the trigger runs exactly 3 jobs: the
-      * fetch and the two delta writes. Past that bound the mirror is
-      * probed with one [[probeParts]] query, whatever the number of
-      * mirror parts: 5 jobs (its broadcast of the batch keys is its own
-      * job).
+      * is probed in Scala, and the trigger runs exactly 1 job: the
+      * fetch. Past that bound the mirror is probed with one
+      * [[probeParts]] query, whatever the number of mirror parts: 3
+      * jobs (its broadcast of the batch keys is its own job).
       * A bigger batch runs the distributed [[admitWithKeys]] body,
       * write-once: the band-delta write is the one execution of its
       * plan (keys materialize inside it via `persist`).
@@ -425,8 +437,8 @@ object StreamNearDedup {
           case Some(small) =>
             val (kept, bands) = admitSmall(small,
               state.fold(identity, m => bandHits(spark, m.parts, small)))
-            writeDeltas(batchId, localFrame(spark, bands, BandsDelta),
-              localFrame(spark, kept, small.schema))
+            writeLocalDeltas(spark, log, batchId,
+              Seq(("bands", bands, BandsDelta), ("admitted", kept, small.schema)))
             bands
           case None =>
             admitDistributed(batch0, batchId)
@@ -488,17 +500,17 @@ object StreamNearDedup {
       }
     }
 
-    /** coalesce(1): a batch's state delta is small relative to the
-      * corpus (it is one batch's keys/admissions), and writing it as
-      * one file instead of one per shuffle partition keeps the
-      * per-trigger commit cost flat — a production job sizes this to
-      * its batch volume. The two delta writes are INDEPENDENT plans
-      * over materialized inputs (driver rows, or keys persisted, the
-      * probe checkpointed, the batch cached), so they run as concurrent
-      * job chains (the [[graft.operators.Similarity]] two-family build
-      * posture): disjoint directories, wall-clock ≈ the slower write
-      * instead of the sum, and the marker still lands only after BOTH
-      * — crash semantics unchanged. */
+    /** The distributed body's delta writes. coalesce(1): a batch's
+      * state delta is small relative to the corpus (it is one batch's
+      * keys/admissions), and writing it as one file instead of one per
+      * shuffle partition keeps the per-trigger commit cost flat — a
+      * production job sizes this to its batch volume. The two delta
+      * writes are INDEPENDENT plans over materialized inputs (keys
+      * persisted, the probe checkpointed, the batch cached), so they
+      * run as concurrent job chains (the [[graft.operators.Similarity]]
+      * two-family build posture): disjoint directories, wall-clock ≈
+      * the slower write instead of the sum, and the marker still lands
+      * only after BOTH — crash semantics unchanged. */
     private def writeDeltas(batchId: Long, bands: DataFrame,
         admitted: DataFrame): Unit =
       StreamingOps.awaitAll(Seq("bands" -> bands, "admitted" -> admitted).map {
@@ -624,7 +636,7 @@ object StreamNearDedup {
     * job, exact (the read filters nothing beyond the ids it covers). */
   private[graft] def stateRows(log: GenerationLog,
       st: GenerationLog.State, table: String): Long =
-    graft.ParquetFooters.rowCount(
+    graft.LocalParquet.rowCount(
       Option.when(st.generation != 0L)(log.tableRoot(table, st.generation))
         .toSeq ++ st.pending.map(log.payload(table, _)))
 

@@ -353,16 +353,61 @@ class PropertySpec extends SparkSpecBase {
     }._2
   }
 
+  /** What a trigger that died between its delta writes and its marker
+    * can leave in batch `id`'s payload directories of the store at
+    * `dir`, per (table, schema, row): a stale file holding `row` and a
+    * truncated copy of it, both named `*debris*`. */
+  private def plantDebris(dir: String, id: Long,
+      tables: Seq[(String, org.apache.spark.sql.types.StructType,
+        org.apache.spark.sql.Row)]): Unit =
+    tables.foreach { case (table, schema, row) =>
+      val payload = storage.GenerationLog.stream(dir, Nil).payload(table, id)
+      LocalParquet.write(spark, Seq(row), schema, payload)
+      val file = LocalParquet.dataFiles(payload).head
+      val bytes = java.nio.file.Files.readAllBytes(file)
+      java.nio.file.Files.write(file.resolveSibling("part-00001-debris-truncated.parquet"),
+        bytes.take(bytes.length / 2))
+      java.nio.file.Files.move(file, file.resolveSibling("part-00000-debris-stale.parquet"))
+    }
+
+  /** [[storage.GenerationLog]]'s invariants on the stream store at `dir`
+    * after a clean run of batches `ids`: a marker per batch and no
+    * other, every table holding one payload directory per marker and
+    * no other, no fold begun; and batch `replayed`'s payloads each
+    * replaced by the one file its replay wrote. */
+  private def assertStore(dir: String, tables: Seq[String], ids: Set[Long],
+      replayed: Long): Unit = {
+    import scala.jdk.CollectionConverters._
+    val log = storage.GenerationLog.stream(dir, Nil)
+    assert(log.committed == ids, s"$dir: markers ${log.committed}, batches $ids")
+    assert(log.pointer == (0L, -1L) &&
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "MANIFEST.tmp")))
+    tables.foreach { t =>
+      val parts = scala.util.Using.resource(
+          java.nio.file.Files.list(java.nio.file.Paths.get(dir, t)))(
+        _.iterator().asScala.map(_.getFileName.toString).toSet)
+      assert(parts == ids.map(k => s"batch_id=$k"), s"$dir/$t: payloads $parts")
+      val files = LocalParquet.dataFiles(log.payload(t, replayed))
+      assert(files.size == 1 && !files.head.getFileName.toString.contains("debris"),
+        s"$dir/$t: batch $replayed's payload holds $files")
+    }
+  }
+
   /** Drives `bs` through both persistent accumulators and compares
     * them with the batch-mode reference the benchmark checks against:
     * the in-memory [[graft.streaming.StreamNearDedup.Accumulator]] and
     * the [[graft.streaming.StreamKeepBest.keepBestBatch]] chain. With
     * `restartAt` ≥ 0, fresh accumulator instances over the same state
     * dirs take over from batch `restartAt` on — the resume path — and
-    * the call sites of the jobs their constructors start are returned. */
+    * the call sites of the jobs their constructors start are returned.
+    * With `debris`, crash debris is planted in batch `restartAt`'s
+    * payload directories before the restart ([[plantDebris]]), so the
+    * batch replays over it, and both stores are checked by
+    * [[assertStore]]. */
   private def admissionMatchesReference(bs: Seq[Seq[(Long, String)]],
-      restartAt: Int = -1): Seq[String] = {
+      restartAt: Int = -1, debris: Boolean = false): Seq[String] = {
     import graft.streaming.{StreamKeepBest, StreamNearDedup}
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
     val batches = bs.map(_.toDF("doc_id", "text"))
@@ -380,9 +425,13 @@ class PropertySpec extends SparkSpecBase {
       var persistent = new StreamNearDedup.PersistentAccumulator(spark, nd.toString)
       val reference = new StreamNearDedup.Accumulator(spark)
       batches.zipWithIndex.foreach { case (b, k) =>
-        if (k == restartAt)
+        if (k == restartAt) {
+          if (debris) plantDebris(nd.toString, k, Seq(
+            ("bands", StreamNearDedup.BandsDelta, Row(0, 0L)),
+            ("admitted", StreamNearDedup.DocsSource, Row(999999L, "stale row"))))
           persistent = restarted("near-dedup restart")(
             new StreamNearDedup.PersistentAccumulator(spark, nd.toString))
+        }
         persistent.onBatch(b, k.toLong)
         reference.onBatch(b, k.toLong)
       }
@@ -392,9 +441,13 @@ class PropertySpec extends SparkSpecBase {
 
       var keepBest = new StreamKeepBest.PersistentKeepBest(spark, kb.toString)
       batches.zipWithIndex.foreach { case (b, k) =>
-        if (k == restartAt)
+        if (k == restartAt) {
+          if (debris) plantDebris(kb.toString, k, Seq(
+            ("events", StreamKeepBest.EventsDelta, Row(999999L, 999999L, 1.0, "new")),
+            ("bands", StreamKeepBest.BandsDelta, Row(0, 0L, 999999L))))
           keepBest = restarted("keep-best restart")(
             new StreamKeepBest.PersistentKeepBest(spark, kb.toString))
+        }
         keepBest.onBatch(b, k.toLong)
       }
       var bands = StreamKeepBest.emptyBands(spark)
@@ -415,6 +468,12 @@ class PropertySpec extends SparkSpecBase {
       assert(got == rows(events.reduce(_ unionByName _), kbCols: _*),
         s"keep-best differs on $bs")
       assert(got.size == bs.map(_.size).sum)
+      if (debris) {
+        assertStore(nd.toString, Seq("bands", "admitted"), bs.indices.map(_.toLong).toSet,
+          restartAt.toLong)
+        assertStore(kb.toString, Seq("events", "bands"), bs.indices.map(_.toLong).toSet,
+          restartAt.toLong)
+      }
       restartSites
     } finally {
       graft.streaming.StreamingOps.deleteRecursively(nd)
@@ -444,6 +503,21 @@ class PropertySpec extends SparkSpecBase {
     forAll(gen, n = 10) { case (seed, pick) =>
       val bs = admissionCorpus(seed)
       admissionMatchesReference(bs, restartAt = 1 + pick % math.max(1, bs.size - 1))
+    }
+  }
+
+  test("streaming admission: a batch replayed over crash debris in its payload directories replaces it, same answers") {
+    // A small trigger writes its deltas on the driver, not as Spark
+    // jobs, so no fail-the-Nth-job harness reaches the window between
+    // those writes and the marker. Its debris is planted instead: a
+    // truncated file (which fails any read that does not skip it) and a
+    // stale file of other rows, in every payload directory of the
+    // uncommitted batch. The restarted stores replay the batch and must
+    // still equal the references, with the debris gone.
+    val gen = Gen.zip(Gen.choose(Long.MinValue, Long.MaxValue), Gen.choose(0, 2))
+    forAll(gen, n = 4) { case (seed, pick) =>
+      val bs = admissionCorpus(seed)
+      admissionMatchesReference(bs, restartAt = pick % bs.size, debris = true)
     }
   }
 

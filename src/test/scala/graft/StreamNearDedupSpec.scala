@@ -379,6 +379,11 @@ class StreamNearDedupSpec extends SparkSpecBase {
     Seq(doc(20, base + " zebra"), doc(21, "fresh unrelated catalyst text")),
     Seq(doc(30, base + " zebra!!!!!!!")))
 
+  /** One batch of SMALL_BATCH_ROWS + 1 docs: the distributed body. */
+  private lazy val pastSmallBatch: Seq[(Long, String)] =
+    (0 to operators.Dedup.SMALL_BATCH_ROWS).map(i =>
+      doc(1000L + i, s"document $i about topic ${i % 97} and detail ${i % 13}"))
+
   private def runKeepBest(stateDir: java.nio.file.Path,
       bs: Seq[(Seq[(Long, String)], Long)]): Map[Long, (Long, Double, String, Long)] = {
     val acc = new graft.streaming.StreamKeepBest.PersistentKeepBest(
@@ -793,7 +798,10 @@ class StreamNearDedupSpec extends SparkSpecBase {
   test("keep-best: write labels do not leak onto later jobs from pool threads") {
     // The two concurrent delta writes label the ExecutionContext.global
     // threads they run on; a pool thread that keeps the label would
-    // stamp it on every unrelated job it submits later.
+    // stamp it on every unrelated job it submits later. Only the
+    // distributed body writes through Spark jobs (a small batch's deltas
+    // are written on the driver), so the trigger is one batch past
+    // SMALL_BATCH_ROWS, and its labeled write jobs are seen first.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
@@ -807,16 +815,21 @@ class StreamNearDedupSpec extends SparkSpecBase {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse(""))
     }
+    def await(n: Int, what: String)(p: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!p && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(p, s"saw ${descs.size} of $n job starts ($what)")
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
-      runKeepBest(state, kbBatches.zipWithIndex.map {
-        case (b, i) => (b, i.toLong) })
-      spark.sparkContext.addSparkListener(listener)
+      runKeepBest(state, Seq((pastSmallBatch, 0L)))
+      val writes = Seq("keepbest b0: events write", "keepbest b0: band delta write")
+      await(writes.size, "write labels")(writes.forall(w => descs.asScala.exists(_ == w)))
+      descs.clear()
       val n = 8 * Runtime.getRuntime.availableProcessors
       Await.result(Future.sequence((1 to n).map(_ =>
         Future(spark.sparkContext.parallelize(1 to 2, 1).count()))), 5.minutes)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (descs.size < n && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(descs.size >= n, s"saw ${descs.size} of $n job starts")
+      await(n, "pool jobs")(descs.size >= n)
       val leaked = descs.asScala.filter(_.contains("keepbest")).toSet
       assert(leaked.isEmpty, s"pool-thread jobs carried keep-best labels: $leaked")
     } finally {
@@ -826,28 +839,37 @@ class StreamNearDedupSpec extends SparkSpecBase {
   }
 
   test("accumulators: every job a trigger starts carries the trigger's job group") {
-    // Each onBatch runs directly under setJobGroup(g<k>); the fetch, the
-    // probes and both concurrent delta writes must all carry g<k>
-    // ([[jobsPerCall]] cuts the job starts into per-call segments).
+    // Each onBatch runs directly under setJobGroup(g<k>); every job it
+    // starts — the fetch and, for the distributed body, the probes and
+    // both concurrent delta writes — must carry g<k> ([[jobsPerCall]]
+    // cuts the job starts into per-call segments). Each batch is a
+    // parquet read, so even a small trigger starts its fetch job; the
+    // last batch is past SMALL_BATCH_ROWS, so the concurrent writes run.
     val nd = java.nio.file.Files.createTempDirectory("graft_nd_groups_")
     val kb = java.nio.file.Files.createTempDirectory("graft_kb_groups_")
+    val src = java.nio.file.Files.createTempDirectory("graft_groups_src_")
     try {
       val accs = Seq[(String, (DataFrame, Long) => Unit)](
         "nd" -> new StreamNearDedup.PersistentAccumulator(spark, nd.toString).onBatch,
         "kb" -> new graft.streaming.StreamKeepBest.PersistentKeepBest(
           spark, kb.toString).onBatch)
+      val bs = (kbBatches :+ pastSmallBatch).zipWithIndex.map { case (b, k) =>
+        val path = s"$src/batch$k"
+        b.toDF("doc_id", "text").coalesce(1).write.parquet(path)
+        spark.read.schema(StreamNearDedup.DocsSource).parquet(path)
+      }
       val calls = for {
-        (b, k) <- kbBatches.zipWithIndex
+        (b, k) <- bs.zipWithIndex
         (name, onBatch) <- accs
-      } yield s"$name-g$k" -> (() => onBatch(b.toDF("doc_id", "text"), k.toLong))
-      jobsPerCall(calls).foreach { case (g, seg) =>
+      } yield s"$name-g$k" -> (() => onBatch(b, k.toLong))
+      val jobs = jobsPerCall(calls)
+      jobs.foreach { case (g, seg) =>
         assert(seg.nonEmpty, s"no job seen for $g")
         assert(seg.forall(_ == g), s"jobs of $g ran under groups ${seg.distinct}")
       }
-    } finally {
-      graft.streaming.StreamingOps.deleteRecursively(nd)
-      graft.streaming.StreamingOps.deleteRecursively(kb)
-    }
+      Seq("nd", "kb").foreach(name => assert(jobs(s"$name-g${bs.size - 1}").size > 2,
+        s"$name: the distributed trigger wrote no delta through Spark"))
+    } finally Seq(nd, kb, src).foreach(graft.streaming.StreamingOps.deleteRecursively)
   }
 
   test("keep-best: running argmax equals the batch keep-best argmax") {
@@ -1084,17 +1106,17 @@ class StreamNearDedupSpec extends SparkSpecBase {
 
   // --- per-trigger job counts -------------------------------------------------
 
-  test("accumulators: 3 jobs a trigger within both bounds, one probe query per state table past them") {
+  test("accumulators: 1 job a trigger within both bounds, 3 or 5 past them") {
     // Each batch is a one-file parquet read with its schema, like the
     // stream's file source: its fetch is one job. Within both bounds a
-    // trigger of either accumulator is the fetch and the two delta
-    // writes — also right after a restart, which resumes on the driver,
-    // and on the first 2100-doc trigger. The second one's commit takes
-    // the state past SMALL_STATE_KEYS, so that trigger also builds the
-    // mirrors from storage. Every trigger after it adds one probe query
-    // per state table, a broadcast job and a collect job each:
-    // near-dedup 5 jobs, keep-best 7 (a doc collides, so the canonical
-    // table is probed too).
+    // trigger of either accumulator is that fetch alone, its two deltas
+    // written on the driver — also right after a restart, which resumes
+    // on the driver, and on the first 2100-doc trigger. The second
+    // one's commit takes the state past SMALL_STATE_KEYS, so that
+    // trigger also builds the mirrors from storage. Every trigger after
+    // it adds one probe query per state table, a broadcast job and a
+    // collect job each: near-dedup 3 jobs, keep-best 5 (a doc collides,
+    // so the canonical table is probed too).
     val rnd = new scala.util.Random(77L)
     def fresh() = Seq.fill(12)(s"w${rnd.nextInt(100000)}").mkString(" ")
     val bigs = Seq(Vector.tabulate(2100)(i => doc(100000L + i, fresh())),
@@ -1131,14 +1153,14 @@ class StreamNearDedupSpec extends SparkSpecBase {
       val handOff = restartAt + 2
       for (k <- 0 until handOff; acc <- Seq("nd", "kb")) {
         val seg = jobs(s"$acc-g$k")
-        assert(seg.size == 3 && seg.forall(_ == s"$acc-g$k"),
+        assert(seg.size == 1 && seg.forall(_ == s"$acc-g$k"),
           s"$acc trigger $k within both bounds ran ${seg.size} jobs: $seg")
       }
-      assert(jobs(s"nd-g$handOff").size > 3 && jobs(s"kb-g$handOff").size > 3,
+      assert(jobs(s"nd-g$handOff").size > 1 && jobs(s"kb-g$handOff").size > 1,
         "the trigger whose commit crosses the bound builds the mirrors")
       for (k <- handOff + 1 until batches.size) {
-        assert(jobs(s"nd-g$k").size == 5, s"near-dedup past the bound: ${jobs(s"nd-g$k")}")
-        assert(jobs(s"kb-g$k").size == 7, s"keep-best past the bound: ${jobs(s"kb-g$k")}")
+        assert(jobs(s"nd-g$k").size == 3, s"near-dedup past the bound: ${jobs(s"nd-g$k")}")
+        assert(jobs(s"kb-g$k").size == 5, s"keep-best past the bound: ${jobs(s"kb-g$k")}")
       }
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
   }

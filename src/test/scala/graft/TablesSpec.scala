@@ -3,6 +3,7 @@ package graft
 import graft.operators.{Dedup, Similarity}
 import graft.storage.GenerationLog
 import graft.streaming.{StreamAnnUpsert, StreamKeepBest, StreamNearDedup, StreamingOps}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -26,7 +27,7 @@ class TablesSpec extends SparkSpecBase {
       val inferred = spark.read.parquet(path).schema
       assert(declared == inferred, s"$path: declared $declared, footer $inferred")
       if (name == "events")
-        assert(ParquetFooters.timestampType(path, "ts") == inferred("ts").dataType)
+        assert(LocalParquet.timestampType(path, "ts") == inferred("ts").dataType)
     }
   }
 
@@ -61,7 +62,7 @@ class TablesSpec extends SparkSpecBase {
           .append("user_id", 7L).append("event_type", "click")
           .append("value", 1.5).append("props", "{}"))
       } finally w.close()
-      assert(ParquetFooters.timestampType(path.toString, "ts") == LongType)
+      assert(LocalParquet.timestampType(path.toString, "ts") == LongType)
       val loaded = Tables.events(spark, dir.toString)
       assert(loaded.schema("ts").dataType == TimestampType)
       // The inferring read (under the loader's nanosAsLong) sees the same
@@ -84,7 +85,7 @@ class TablesSpec extends SparkSpecBase {
     * columns its directory names carry (`cell=7`), which must be
     * declared columns. */
   private def assertWritten(root: String, declared: StructType): Unit = {
-    val files = ParquetFooters.dataFiles(root)
+    val files = LocalParquet.dataFiles(root)
     assert(files.nonEmpty, s"no data file under $root")
     files.foreach { f =>
       val parts = java.nio.file.Paths.get(root).relativize(f.getParent)
@@ -164,5 +165,50 @@ class TablesSpec extends SparkSpecBase {
     assertWritten(StreamingOps.stagedEventsDir(spark, sfDir), StreamingOps.EventsSource)
     assertWritten(StreamingOps.stagedSessionsDir(spark, sfDir), StreamingOps.SessionsSource)
     assertWritten(StreamingOps.stagedTrendingDir(spark, sfDir), StreamingOps.TrendingSource)
+  }
+
+  test("the admission stores' driver-written deltas equal Spark's writes, footer for footer") {
+    // assertWritten relaxes nullability, so it would miss a required →
+    // optional drift. Here each small-path delta schema is written twice
+    // with the same rows — a one-partition DataFrame write and
+    // LocalParquet.write — and the footers compare exactly: the parquet
+    // schema with its repetitions and Spark's key-value metadata, the
+    // row schema included. The admitted delta takes the fetched batch's
+    // schema: the live source's, or a non-nullable doc_id.
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.io.LocalInputFile
+    val required = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType)))
+    val cases = Seq[(String, StructType, Seq[Row])](
+      ("near-dedup bands", StreamNearDedup.BandsDelta, Seq(Row(0, 7L), Row(3, -1L))),
+      ("near-dedup admitted", StreamNearDedup.DocsSource,
+        Seq(Row(1L, "a b c"), Row(2L, null))),
+      ("near-dedup admitted, doc_id required", required,
+        Seq(Row(1L, "a b c"), Row(2L, null))),
+      ("keep-best events", StreamKeepBest.EventsDelta,
+        Seq(Row(1L, 1L, 0.5, "new"), Row(2L, 1L, null, "drop"), Row(3L, 1L, 0.75, "replace"))),
+      ("keep-best bands", StreamKeepBest.BandsDelta, Seq(Row(0, 5L, 1L), Row(1, -9L, 1L))))
+    assert(cases.exists(_._2.exists(!_.nullable)))
+    val dir = tmp("graft_local_parquet_")
+    def footer(d: String) = {
+      val files = LocalParquet.dataFiles(d)
+      assert(files.size == 1, s"$d: $files")
+      scala.util.Using.resource(ParquetFileReader.open(new LocalInputFile(files.head))) { r =>
+        val meta = r.getFooter.getFileMetaData
+        (meta.getSchema, meta.getKeyValueMetaData.asScala.toMap, r.getRecordCount)
+      }
+    }
+    try for (((name, schema, rows), i) <- cases.zipWithIndex; n <- Seq(rows.size, 0)) {
+      val (viaSpark, viaDriver) = (s"$dir/$i-$n/spark", s"$dir/$i-$n/driver")
+      spark.createDataFrame(rows.take(n).asJava, schema).coalesce(1).write.parquet(viaSpark)
+      LocalParquet.write(spark, rows.take(n), schema, viaDriver)
+      val (want, got) = (footer(viaSpark), footer(viaDriver))
+      assert(got._1 == want._1, s"$name, $n rows: parquet schema ${got._1}, Spark's ${want._1}")
+      assert(got._2.contains("org.apache.spark.sql.parquet.row.metadata"))
+      assert(got._2 == want._2, s"$name, $n rows: metadata ${got._2}, Spark's ${want._2}")
+      assert(got._3 == n)
+      assert(spark.read.parquet(viaDriver).collect().toSet ==
+        spark.read.parquet(viaSpark).collect().toSet, s"$name, $n rows: rows differ")
+    } finally StreamingOps.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 }
